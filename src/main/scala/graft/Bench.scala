@@ -359,19 +359,15 @@ object Bench {
     // 3 decimals (a tail-line convenience copy; full precision lives in
     // the summary file and the jsonl record)
     val topQs = {
-      val sorted = results.collect { case (k, Right(t)) => (k, t) }
-        .sortBy(-_._2)
-      val sb = new StringBuilder
-      var taken = 0
-      val budget = 1300
-      sorted.foreach { case (k, t) =>
-        val entry = jstr(k) + ":" + f"$t%.3f"
-        if (sb.length + entry.length + 1 <= budget) {
-          if (taken > 0) sb.append(',')
-          sb.append(entry); taken += 1
-        }
-      }
-      s"{${sb.toString}}"
+      val entries = results.collect { case (k, Right(t)) => (k, t) }
+        .sortBy(-_._2).map { case (k, t) => jstr(k) + ":" + f"$t%.3f" }
+      // an honest top-N: the slowest entries up to the first one that
+      // overflows the 1300-char budget — never a shorter, faster entry
+      // from further down in its place. Running sums of length + 1 are
+      // each prefix's joined length plus one.
+      val fit = entries.scanLeft(0)(_ + _.length + 1).tail
+        .takeWhile(_ - 1 <= 1300).size
+      s"{${entries.take(fit).mkString(",")}}"
     }
     println(s"""{"metric":"total_tail","value":$total,"unit":"sec","calibration":$calibration,"calibration_shuffle":$calibrationShuffle,"cpus":$cpus,"n_queries":${results.size},"n_errors":${errs.size},"n_retimed":${retimes.size},"queries":$topQs$summaryField$suiteField$recordField,"sf":"$sfDir"}""")
     spark.stop()

@@ -152,7 +152,7 @@ object Main {
 
   /** dbt `build` — the daily driver: seeds, models, snapshots and ALL
     * their data tests interleaved in one DAG-ordered invocation (they
-    * are all graph nodes here, so the engine's wave executor already
+    * are all graph nodes here, so the engine's DAG scheduler already
     * orders them); a node whose error-severity test fails forces `SKIP
     * upstream failed` on its downstream, warn severity reports without
     * gating, and every declared test runs and prints its own

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import java.util.concurrent.{Executor, LinkedBlockingQueue}
 import scala.collection.mutable
 
 /** Driver-side DAG scheduling over model nodes.
@@ -85,10 +86,10 @@ object Dag {
     None
   }
 
-  /** Independent "waves": nodes whose deps are satisfied by prior waves.
-    * The reference runs strictly sequentially; waves let the Spark scheduler
-    * run independent DAG branches concurrently (thread-safe driver) while
-    * preserving dependency order — the scale path for wide pipelines.
+  /** Dependency levels: level 0 has no upstreams, level k+1 depends on
+    * level k. Execution does not run level by level (see [[execute]]);
+    * the levels lay out `viz` columns and give the benchmark its wave
+    * counts.
     */
   def waves(g: Graph): Seq[Seq[String]] = {
     val order = topoSort(g)
@@ -98,5 +99,48 @@ object Dag {
       level(id) = if (ps.isEmpty) 0 else ps.map(p => level.getOrElse(p, 0)).max + 1
     }
     order.groupBy(level).toSeq.sortBy(_._1).map(_._2.toSeq)
+  }
+
+  /** Runs each node of `order` (a topological order of nodes of `g`) once
+    * its last upstream in `order` completes — no barrier between levels —
+    * on at most `slots` threads of `pool`, lowest `order` index first (one
+    * slot: inline, in `order`). Callbacks run on the calling thread, so
+    * they need no locking: `start(id)`, once every upstream completed,
+    * returns the work for a slot; `done(result)` true aborts — running
+    * nodes finish, and `skipped(id)` stands in for each undispatched one.
+    * Results come in `order`; a throwable from a node's work rethrows here.
+    */
+  def execute[R](g: Graph, order: Seq[String], slots: Int, pool: Executor)(
+      start: String => () => R, done: R => Boolean,
+      skipped: String => R): Seq[R] = {
+    val idx = order.zipWithIndex.toMap
+    def inRun(ids: Option[Set[String]]) = ids.toSeq.flatten.flatMap(idx.get)
+    val waitingOn = order.map(id => inRun(g.prevs.get(id)).size).toArray
+    val ready = mutable.PriorityQueue(
+      order.indices.filter(waitingOn(_) == 0): _*)(Ordering.Int.reverse)
+    val results = Array.fill[Option[R]](order.size)(None)
+    val completed = new LinkedBlockingQueue[(Int, Either[Throwable, R])]()
+    val run: Executor = if (slots == 1) _.run() else pool
+    var (running, aborted) = (0, false)
+    while ((!aborted && ready.nonEmpty) || running > 0) {
+      while (!aborted && ready.nonEmpty && running < slots) {
+        val i = ready.dequeue()
+        val work = start(order(i))
+        running += 1
+        // fatal throwables too: a lost completion would hang take()
+        run.execute(() => completed.put(i ->
+          (try Right(work()) catch { case t: Throwable => Left(t) })))
+      }
+      val (i, outcome) = completed.take()
+      running -= 1
+      val r = outcome.toTry.get
+      results(i) = Some(r)
+      aborted |= done(r)
+      inRun(g.nexts.get(order(i))).foreach { j =>
+        waitingOn(j) -= 1
+        if (waitingOn(j) == 0) ready += j
+      }
+    }
+    order.indices.map(i => results(i).getOrElse(skipped(order(i))))
   }
 }

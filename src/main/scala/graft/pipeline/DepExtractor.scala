@@ -41,7 +41,7 @@ object DepExtractor {
     * the WITH's own subtree (threaded via `bound`), so a CTE `x` inside a
     * nested subquery does NOT swallow a genuine outer reference to model
     * `x` elsewhere in the statement (a statement-global `refs -- cteNames`
-    * did, silently dropping the edge and letting --parallel waves run the
+    * did, silently dropping the edge and letting --parallel run the
     * referencer before the model). Multipart names (`db.x`) are never
     * CTE-shadowed. CTE definitions hang off UnresolvedWith.cteRelations,
     * which are innerChildren, not children — and subqueries hang off

@@ -18,9 +18,10 @@ import org.apache.spark.sql.SparkSession
   *   table → DROP + saveAsTable (pipeline-breaking materialization; written
   *           to the warehouse dir ≙ db_path)
   *
-  * Execution is sequential in the reference; `parallel=true` runs
-  * independent DAG waves concurrently on the (thread-safe) Spark scheduler —
-  * the scale path for wide pipelines on a real cluster.
+  * Execution is sequential in the reference and by default here (one
+  * slot of [[Dag.execute]]); `parallel=true` starts each model once its
+  * last upstream finishes, so independent branches run concurrently on
+  * the thread-safe Spark scheduler.
   */
 final class PipelineSession(
     spark0: => SparkSession,
@@ -65,7 +66,7 @@ final class PipelineSession(
     * error, warn-only), appended as nodes execute — the dbt-build
     * contract that EVERY declared test of a node runs and reports, not
     * just the first violation. Only populated under `buildMode`;
-    * synchronized because parallel waves append from pool threads.
+    * synchronized because --parallel appends from pool threads.
     */
   private val testLedger =
     scala.collection.mutable.ArrayBuffer
@@ -259,7 +260,7 @@ final class PipelineSession(
     // A model calling a SQL macro (CREATE MACRO) DEFINED in another model
     // must run after the definer: macros register in the session registry
     // when the defining model EXECUTES, so under DAG scheduling —
-    // especially parallel waves — an unordered caller races the definition
+    // especially --parallel — an unordered caller races the definition
     // and fails with an unresolved function. Catalyst's relation walk
     // can't see this (the call site is an unresolvable TVF/expression), so
     // wire the edge lexically: macro name → defining model, then
@@ -682,51 +683,24 @@ final class PipelineSession(
     // error list stays exactly the real failures, and the fingerprint
     // base already drops failed closures so everything skipped here
     // re-executes next run.
-    val failedIds = mutable.Set[String]()
-    def forcedStatusOf(id: String, aborted: Boolean): Option[String] =
-      if (aborted) Some("SKIP fail-fast")
-      else if (nodeMap(id).prevs.exists(failedIds.contains))
-        Some("SKIP upstream failed")
-      else None
-    def note(r: NodeResult, forced: Option[String]): NodeResult = {
-      if (r.error.nonEmpty || forced.contains("SKIP upstream failed")) {
-        failedIds += r.id; ()
-      }
-      r
-    }
-    val results =
-      if (!parallel) {
-        var aborted = false
-        runOrder.zipWithIndex.map { case (id, i) =>
-          val forced = forcedStatusOf(id, aborted)
-          val r = note(executeReported(nodeMap(id), i + 1, runOrder.size,
-            skip = skip(id), forcedStatus = forced), forced)
-          if (failFast && r.error.nonEmpty) aborted = true
-          r
-        }
-      }
-      else {
-        val inRun = runOrder.toSet
-        val graph = Dag.Graph(nodeMap.collect {
-          case (id, n) if inRun(id) =>
-            id -> n.prevs.filter(p => inRun(p) && nodeMap.contains(p)) })
-        val idx = runOrder.zipWithIndex.toMap
-        var aborted = false
-        Dag.waves(graph).flatMap { wave =>
-          val valid = wave.filter(idx.contains)
-          // the skip decision is wave-boundary-safe: every upstream ran
-          // in an earlier wave, so failedIds is complete for this wave
-          val decided = valid.map(id => id -> forcedStatusOf(id, aborted))
-          val rs = decided.par.map { case (id, forced) =>
-            (executeReported(nodeMap(id), idx(id) + 1, runOrder.size,
-              buffered = true, skip = skip(id), forcedStatus = forced),
-              forced)
-          }.toList
-          rs.foreach { case (r, forced) => note(r, forced); () }
-          if (failFast && rs.exists(_._1.error.nonEmpty)) aborted = true
-          rs.map(_._1).sortBy(r => idx(r.id))
-        }
-      }
+    // completed results by id; a node fail-fast never dispatched has none
+    val resultOf = mutable.Map[String, NodeResult]()
+    val idx = runOrder.zipWithIndex.toMap
+    def reported(id: String, forced: Option[String]): NodeResult =
+      executeReported(nodeMap(id), idx(id) + 1, runOrder.size, skip(id),
+        forced)
+    val results = Dag.execute[NodeResult](
+      Dag.Graph(nodeMap.map { case (id, n) => id -> n.prevs }), runOrder,
+      if (parallel) PipelineSession.poolSlots else 1,
+      PipelineSession.wavePool)(
+      // every prev has completed by now, so its result is final
+      start = { id =>
+        val upFailed = nodeMap(id).prevs.flatMap(resultOf.get).exists(r =>
+          r.error.nonEmpty || r.status == "SKIP upstream failed")
+        () => reported(id, Option.when(upFailed)("SKIP upstream failed"))
+      },
+      done = { r => resultOf(r.id) = r; failFast && r.error.nonEmpty },
+      skipped = reported(_, Some("SKIP fail-fast")))
     val report = RunReport(results, (System.nanoTime() - t0) / 1000000)
     // record the base for the next --changed-only run: models that ran
     // (or verified-skipped) successfully THIS run AND whose every
@@ -739,7 +713,7 @@ final class PipelineSession(
     val failedClosure: Set[String] = {
       val acc = mutable.Set[String]()
       order.foreach { id =>
-        val ownFailed = results.exists(r => r.id == id && r.error.nonEmpty)
+        val ownFailed = resultOf.get(id).exists(_.error.nonEmpty)
         if (ownFailed ||
             nodeMap(id).prevs.exists(acc.contains)) { acc += id; () }
       }
@@ -760,7 +734,7 @@ final class PipelineSession(
       // drop failures, then fold in this run's successes
       (storedBase.view.filterKeys(nodeMap.contains).toMap -- failedClosure)
         ++ closureFps.view.filterKeys(id =>
-          results.exists(r => r.id == id && r.error.isEmpty &&
+          resultOf.get(id).exists(r => r.error.isEmpty &&
             // forced skips never ran: recording their fingerprint would
             // let the next --changed-only treat unexecuted work as done
             // (a changed-only "SKIP unchanged" IS a verified skip and
@@ -806,39 +780,17 @@ final class PipelineSession(
     report
   }
 
-  private implicit class ParSeq[A](s: Seq[A]) {
-    // minimal .par shim: scala-parallel-collections isn't on the classpath.
-    // A bounded shared pool, not a thread per wave member: a 500-model
-    // pipeline with a wide wave must queue work, not spawn 500 driver
-    // threads. Submission threads only block on Spark job completion, so
-    // a modest pool keeps the scheduler saturated.
-    def par: ParOps[A] = new ParOps(s)
-  }
-  private def wavePool = PipelineSession.wavePool
-  private class ParOps[A](s: Seq[A]) {
-    def map[B](f: A => B): Seq[B] = {
-      if (s.lengthCompare(1) <= 0) s.map(f)
-      else s.map { a =>
-        val task: java.util.concurrent.Callable[B] = () => f(a)
-        wavePool.submit(task)
-      }.map(_.get())
-    }
-  }
-
   private def executeReported(node: ModelNode, nth: Int, total: Int,
-                              buffered: Boolean = false,
-                              skip: Boolean = false,
-                              forcedStatus: Option[String] = None)
-      : NodeResult = {
+      skip: Boolean, forcedStatus: Option[String]): NodeResult = {
     val ts = LocalDateTime.now.format(DateTimeFormatter.ofPattern("HH:mm:ss"))
     val mat = node.materialize.getOrElse("view").toLowerCase
     val info = s"$ts  $nth of $total: creating ${node.id} $mat model"
     val header = info + "." * math.max(0, 80 - info.length)
-    // buffered: parallel waves run this from pool threads; a split
+    // --parallel runs this from pool threads; a split
     // print(header)/println(status) pair interleaves across threads and
     // pairs statuses with the wrong model's header. Emit one atomic line
     // per node instead (println of a single String is synchronized).
-    if (!buffered) print(header)
+    if (!parallel) print(header)
     val t0 = System.nanoTime()
     val (status, err) = forcedStatus match {
       // a forced skip (failed upstream / fail-fast abort) executes
@@ -858,7 +810,7 @@ final class PipelineSession(
     }
     val ms = (System.nanoTime() - t0) / 1000000
     val tail = s"[$status in ${formatElapsed(ms)}]"
-    if (buffered) println(header + tail) else println(tail)
+    if (parallel) println(header + tail) else println(tail)
     NodeResult(node.id, status, ms, err)
   }
 
@@ -2419,9 +2371,11 @@ object PipelineSession {
     else bd.stripTrailingZeros.toPlainString
 
   // shared across sessions (a long-lived driver may build many): daemon
-  // threads, so JVM exit is never held up
+  // threads, so JVM exit is never held up. They only wait on Spark jobs,
+  // so a few keep the scheduler busy; a wide pipeline queues its models.
+  private val poolSlots = math.max(4, Runtime.getRuntime.availableProcessors / 2)
   private lazy val wavePool = java.util.concurrent.Executors.newFixedThreadPool(
-    math.max(4, Runtime.getRuntime.availableProcessors / 2),
+    poolSlots,
     (r: Runnable) => {
       val t = new Thread(r, "graft-wave"); t.setDaemon(true); t
     })

@@ -110,7 +110,7 @@ object ViewStore {
   // keeps replay dependency-safe even when a later run adds a NEW
   // dependency in front of an existing model (keeping the old position
   // would restore the dependent before its new dependency and lose it).
-  // Synchronized: --parallel waves persist concurrently, and an
+  // Synchronized: --parallel models persist concurrently, and an
   // unsynchronized read-modify-write would drop a sibling's entry.
   private def appendEntry(dbPath: String, kind: String, id: String,
                           extra: String = ""): Unit = this.synchronized {

@@ -2319,15 +2319,9 @@ object ExtensionQueries {
       // both compared configs fuse the SAME two legs — pay each leg's
       // corpus-touching retrieval once (r19): without this the BM25 and
       // exact-cosine legs re-ran per config per permutation branch
-      // (ExecDump: 28 executed scans, 75 shuffles). Legs are
-      // top-5-bounded; materialized per invocation, and CONCURRENTLY
-      // (r20, guide §2.6): the legs scan different tables with no
-      // dependency, so the two eager checkpoint jobs overlap — wall
-      // time ≈ max(lex, vec) instead of the r19 sum, which is what kept
-      // q196 flat at fixture scale (VERDICT r19 item 2). A lazy
-      // checkpoint was A/B-rejected first (4.28 s vs eager 3.38 s on a
-      // faster window: the two consumer stages race to compute the same
-      // blocks and serialize on block locks).
+      // (ExecDump: 28 executed scans, 75 shuffles). hybridLegs returns
+      // both legs lazily (top-5-bounded); only the vec leg is
+      // materialized, by the one eager localCheckpoint below.
       val (lex0, vec) = hybridLegs(s, dir)
       // Both configs fused and judged in ONE pass (r20, the q176 grid
       // discipline): composite query key qid·2+cfg makes the two

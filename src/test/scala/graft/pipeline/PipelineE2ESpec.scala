@@ -241,6 +241,53 @@ class PipelineE2ESpec extends AnyFunSuite {
     val report = new PipelineSession(spark, config, parallel = true).runNodes()
     assert(report.errors.isEmpty)
     assert(spark.table("joined").count() == 25)
+
+    // a diamond, an independent chain, a failing model with a
+    // downstream, and data tests (one passing, one failing and gating
+    // its downstream): sequential and --parallel report the same
+    // statuses in the same order and persist the same run ledger and
+    // fingerprint base
+    val (_, cfg) = fixture(models = Map(
+      "pe_src" -> s"SELECT * FROM read_parquet('$sfDir/nation.parquet')",
+      "pe_left" -> "SELECT n_nationkey, n_regionkey FROM pe_src",
+      "pe_right" -> "SELECT n_nationkey, n_name FROM pe_src",
+      "pe_join" -> ("SELECT l.n_nationkey, l.n_regionkey, r.n_name " +
+        "FROM pe_left l JOIN pe_right r ON l.n_nationkey = r.n_nationkey"),
+      "pe_c1" -> "SELECT * FROM VALUES (1), (1), (2) AS t(k)",
+      "pe_c2" -> "SELECT k FROM pe_c1",
+      "pe_c3" -> "SELECT count(*) AS n FROM pe_c2",
+      "pe_bad" -> "SELECT no_col FROM graft_no_such_table",
+      "pe_bad_down" -> "SELECT * FROM pe_bad"),
+      configExtra =
+        """models:
+          |  pe_src:
+          |    materialize: table
+          |  pe_join:
+          |    materialize: table
+          |    tests:
+          |      - not_null: n_name
+          |  pe_c2:
+          |    tests:
+          |      - unique: k""".stripMargin)
+    def runWith(par: Boolean) = {
+      val db = Files.createTempDirectory("graft-par-eq").toString
+      val r = new PipelineSession(spark, cfg.copy(dbPath = Some(db)),
+        parallel = par).runNodes()
+      val nodeRows = ViewStore.loadRunLedger(db).get._1
+      (r.results.map(x => x.id -> x.status), nodeRows,
+        ViewStore.loadFingerprints(db))
+    }
+    val (seqRes, seqRows, seqFps) = runWith(par = false)
+    val (parRes, parRows, parFps) = runWith(par = true)
+    val st = seqRes.toMap
+    assert(st("pe_join").startsWith("SELECT "), st)
+    assert(st("pe_bad") == "ERROR" && st("pe_c2") == "ERROR", st)
+    assert(st("pe_bad_down") == "SKIP upstream failed" &&
+      st("pe_c3") == "SKIP upstream failed", st)
+    assert(parRes == seqRes)
+    assert(parRows == seqRows)
+    assert(parFps == seqFps && parFps.contains("pe_join") &&
+      !parFps.contains("pe_c3"), parFps)
   }
 
   test("views persist across sessions via db_path (reference .duckdb parity)") {
@@ -1255,7 +1302,7 @@ class PipelineE2ESpec extends AnyFunSuite {
     }
     assert(e.render.contains("unknown model 'nope'"))
 
-    // --parallel composes: waves are built over the RESTRICTED graph
+    // --parallel composes: the scheduler runs the RESTRICTED graph
     // (an edge from an unselected upstream must not deadlock or reorder
     // the selected subgraph)
     val (_, pconfig) = fixture(models)
