@@ -661,11 +661,12 @@ object SimilarityOps {
     * dotted once, not b times, and the distinct's shuffle rows are two
     * longs, not two longs + a double scored b times), and the unit
     * vectors join back once per side afterwards. The trade is two extra
-    * narrow joins — and for THIS operator the trade loses (tools/KnnAb:
-    * 0.45× at 10×): lshNearDupPairs filters `sim >= minSim` before its
-    * distinct, so the per-collision form only shuffles the few surviving
-    * pairs, while score-once drags EVERY candidate pair through distinct
-    * and two joins before the filter can run. Kept as the measured
+    * narrow joins — and for THIS operator the trade loses (SCALING.md
+    * "r9 (second pass)": 0.45× at 10×): lshNearDupPairs filters
+    * `sim >= minSim` before its distinct, so the per-collision form only
+    * shuffles the few surviving pairs, while score-once drags EVERY
+    * candidate pair through distinct and two joins before the filter can
+    * run. Kept as the measured
     * counter-example (and A/B baseline); [[knnGraph]], which has no
     * pre-distinct filter, defaults to score-once for the mirrored
     * reason. Emits exactly [[lshNearDupPairs]]'s rows.
@@ -744,15 +745,16 @@ object SimilarityOps {
     * work is Σ(bucket²) like every bucketed self-join here, and the
     * per-source top-k is a WindowGroupLimit, not a global sort.
     *
-    * Default form is SCORE-ONCE (tools/KnnAb, measured interleaved in one
-    * JVM: 2.45× at 1×, 1.51× at 10× over the per-collision form kept as
-    * [[knnGraphPerCollision]]): the band join shuffles ids only, the
-    * UNDIRECTED pair set de-duplicates before any dot is computed, unit
-    * vectors join back once per side, then both orientations are restored
-    * for the top-k. knnGraph has no pre-distinct filter to exploit —
-    * every bucket-mate's sim is ranking input — so paying the two narrow
-    * join shuffles beats scoring per collision and shuffling scored
-    * duplicates into distinct. [[lshNearDupPairs]] keeps the opposite
+    * Default form is SCORE-ONCE (SCALING.md "r9 (second pass)", measured
+    * interleaved in one JVM: 2.45× at 1×, 1.51× at 10× over the
+    * per-collision form kept as [[knnGraphPerCollision]]): the band join
+    * shuffles ids only, the UNDIRECTED pair set de-duplicates before any
+    * dot is computed, unit vectors join back once per side, then both
+    * orientations are restored for the top-k. knnGraph has no
+    * pre-distinct filter to exploit — every bucket-mate's sim is ranking
+    * input — so paying the two narrow join shuffles beats scoring per
+    * collision and shuffling scored duplicates into distinct.
+    * [[lshNearDupPairs]] keeps the opposite
     * default for the mirrored reason: its `sim >= minSim` filter runs
     * BEFORE its distinct, collapsing the shuffle to the few survivors
     * (score-once measured 0.45× THERE — slower — at 10×).
@@ -762,7 +764,8 @@ object SimilarityOps {
     knnGraphScoreOnce(vecs, k, nBands, bitsPerBand, seed)
 
   /** The score-per-collision [[knnGraph]] formulation — kept as the
-    * tools/KnnAb baseline; emits exactly the same rows as the default.
+    * baseline of the SCALING.md "r9 (second pass)" rows; emits exactly the
+    * same rows as the default.
     */
   private[graft] def knnGraphPerCollision(vecs: DataFrame, k: Int,
       nBands: Int = 8, bitsPerBand: Int = 4, seed: Long = 42L): DataFrame = {
@@ -843,8 +846,8 @@ object SimilarityOps {
 
   /** [[ivfTopK]] with a prebuilt quantizer (from [[fitCentroids]] or
     * [[loadCentroids]]) — the steady-state query path: zero fit jobs,
-    * single-stage exact scoring. The r9 controlled A/B (tools/IvfAb;
-    * SCALING.md "r9: the scoring join was running interpreted") kept this
+    * single-stage exact scoring. The r9 controlled A/B (SCALING.md "r9:
+    * the IVF scoring join was running interpreted") kept this
     * form as the default over the two-stage int8 variant below: once the
     * cell-assignment kernel was fused ([[cellOf]]), the exact scoring
     * join compiles and the measured bottleneck vanished (13.9 s → 0.35 s
@@ -886,7 +889,7 @@ object SimilarityOps {
     * When to use it: the coarse pass trades an extra window pass and a
     * second (map-only) candidate scan for 8× less pairwise memory
     * traffic. At dim 64 on the local A/B it LOSES (0.35 s vs 0.76 s at
-    * 600k pairs; 2.2 s vs 3.6 s at 12M — tools/IvfAb), so the default
+    * 600k pairs; 2.2 s vs 3.6 s at 12M — SCALING.md r9), so the default
     * path stays single-stage; it pays where the scoring join is genuinely
     * bandwidth-bound — high dim (≥ 512), pairs ≫ corpus — which is a
     * deployment-time measurement, not a guess this library should bake in.
@@ -1279,7 +1282,7 @@ object SimilarityOps {
     * same swap. Cost: one map-only [[cellOf]] pass over the corpus, one
     * id-keyed exchange of narrow (id, codes)/(id, cell) rows, PQ encode
     * of the missing batch only — vs the full path's m NearestCell codes
-    * per corpus row. MEASURED (SCALING.md r14, `ReencodeAb` 1×→30×):
+    * per corpus row. MEASURED (SCALING.md "r14: ANN migration A/B", 1×→30×):
     * at the committed fixture geometry (m·ksub·dsub = 1,024 multiplies
     * per vector) this path LOSES to [[reencodeAnnIndex]] — the skipped
     * encode is cheaper than the reconcile join it buys. Use it when the
@@ -1628,7 +1631,8 @@ object SimilarityOps {
     * ≤ k·refineFactor·|probes| buckets the shortlist ids hash into —
     * at 100 TB the exact re-rank becomes a point FETCH, not a
     * scan-and-filter of the whole raw corpus (the residual
-    * `graft.tools.AnnStoreAb` measured growing with corpus size).
+    * SCALING.md "r13: persisted ANN index store" measured growing with
+    * corpus size).
     * `nBuckets` must match between build, append, and query — version it
     * into the path like the centroid/codebook fits.
     *

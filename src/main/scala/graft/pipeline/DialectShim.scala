@@ -1,11 +1,17 @@
 package graft.pipeline
 
+import java.util.regex.MatchResult
+
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.SparkSession
+
+import SqlText.{BQuoted, Comment, Str, Token, Word, lex}
 
 /** DuckDB → Spark SQL dialect shim (SURVEY.md §2.D).
   *
   * Model SQL in the reference is DuckDB dialect; the examples exercise two
-  * DuckDB-isms Spark rejects (/root/reference/examples/basic SQL models):
+  * DuckDB-isms Spark rejects (reference examples/basic SQL models):
   *   1. zero-arg count()            → count with star argument
   *   2. read_parquet('path')        → parquet.`path` file-format table
   *      (likewise read_csv / read_csv_auto / read_json / read_json_auto)
@@ -22,11 +28,185 @@ import org.apache.spark.sql.SparkSession
   *      is left verbatim, failing at execution with the SQL + model path
   *      attached, matching the reference (src/node.rs:198-202).
   *
-  * Token-aware (string literals preserved); a parser-injection seam
+  * Every rewrite reads the statement through one lexer ([[SqlText.lex]]):
+  * bytes inside '…', "…" and `…` tokens and comments are data and are
+  * never rewritten. A parser-injection seam
   * (SparkSessionExtensions.injectParser) is the upgrade path if the shim
   * grows beyond these rewrites.
   */
 object DialectShim {
+
+  // --- token queries shared by every rewrite ------------------------------
+
+  /** Index of the token starting at `pos`, or -1. */
+  private def tokenAt(toks: IndexedSeq[Token], pos: Int): Int =
+    toks.view.map(_.start).search(pos) match {
+      case scala.collection.Searching.Found(i) => i
+      case _                                   => -1
+    }
+
+  /** Index of the closer of the group token `i` opens; -1 when unclosed. */
+  private def closeOf(toks: IndexedSeq[Token], i: Int): Int =
+    toks.indexWhere(_.depth <= toks(i).depth, i + 1)
+
+  /** Index of the opener of the group around token `i` (for a closer: of
+    * the group it closes); -1 at the top level.
+    */
+  private def openOf(toks: IndexedSeq[Token], i: Int): Int = {
+    val t = toks(i)
+    val inner = if (t.closes) t.depth + 1 else t.depth
+    toks.lastIndexWhere(_.depth < inner, i - 1)
+  }
+
+  /** Offsets of the innermost group around the token at `pos`: (opener,
+    * closer), (-1, length) at the top level; the closer is `length` when
+    * the group is unclosed.
+    */
+  private def group(sql: String, pos: Int): (Int, Int) = {
+    val toks = lex(sql)
+    val o = openOf(toks, tokenAt(toks, pos))
+    if (o < 0) (-1, sql.length)
+    else closeOf(toks, o) match {
+      case -1 => (toks(o).start, sql.length)
+      case c  => (toks(o).start, toks(c).start)
+    }
+  }
+
+  /** Rewrite every code match of a clause pattern, innermost first: `f`
+    * gets the content of the group around the first match (the whole
+    * statement at the top level) and removes that occurrence; each round
+    * handles one. Malformed nesting fails through `fail`.
+    */
+  private def rewriteInGroups(sql: String, re: Regex, fail: String => Nothing)(
+      f: String => String): String = {
+    var cur = sql
+    var guard = 0
+    var m = codeMatches(cur, re).headOption
+    while (m.isDefined) {
+      guard += 1
+      if (guard > 20) fail("rewrite did not converge")
+      val (open, close) = group(cur, m.get._1.start)
+      if (open >= 0 && close >= cur.length) fail("unbalanced parentheses")
+      cur = cur.substring(0, open + 1) + f(cur.substring(open + 1, close)) + cur.substring(close)
+      m = codeMatches(cur, re).headOption
+    }
+    cur
+  }
+
+  /** `text` cut at its depth-0 commas, each piece trimmed (empties kept). */
+  private def splitItems(text: String): Seq[String] =
+    SqlText.splitAt(text)(t => t.depth == 0 && t.is(','))
+
+  /** Arguments of the call whose `(` token starts at `open`: the trimmed
+    * top-level items (none for `f()`) and the offset after the closer;
+    * None when the call is unclosed.
+    */
+  private def callArgs(sql: String, open: Int): Option[(Seq[String], Int)] = {
+    val toks = lex(sql.substring(open))
+    closeOf(toks, 0) match {
+      case -1 => None
+      case c =>
+        val all = splitItems(sql.substring(open + 1, open + toks(c).start))
+        Some((if (all == Seq("")) Seq.empty else all, open + toks(c).end))
+    }
+  }
+
+  /** Word tokens spelling `word` (case-insensitive), at any depth. */
+  private def words(sql: String, word: String): IndexedSeq[Token] =
+    lex(sql).filter(_.isWord(word))
+
+  /** Offsets of `word` at depth 0. */
+  private def topWords(sql: String, word: String): IndexedSeq[Int] =
+    words(sql, word).collect { case t if t.depth == 0 => t.start }
+
+  /** The last non-comment token before `pos`. */
+  private def tokenBefore(sql: String, pos: Int): Option[Token] =
+    lex(sql).takeWhile(_.start < pos).filter(_.kind != Comment).lastOption
+
+  /** Length of the possibly qualified name (adjacent words, `.` and
+    * backtick-quoted parts) starting at token `k`; 0 when there is none.
+    */
+  private def nameLength(toks: IndexedSeq[Token], k: Int): Int = {
+    def part(t: Token) = t.kind == Word || t.kind == BQuoted || t.is('.')
+    var n = 0
+    while (k + n < toks.length && part(toks(k + n)) &&
+        (n == 0 || toks(k + n - 1).end == toks(k + n).start)) n += 1
+    n
+  }
+
+  /** Matches of `re` that start on a word or punctuation token, with that
+    * token's depth. A match starting inside a quoted token or comment is
+    * skipped and the search resumes one character later, so it cannot hide
+    * a real occurrence behind it.
+    */
+  private def codeMatches(sql: String, re: Regex): Seq[(MatchResult, Int)] = {
+    lazy val toks = lex(sql)
+    val mt = re.pattern.matcher(sql)
+    val out = Seq.newBuilder[(MatchResult, Int)]
+    var from = 0
+    while (from <= sql.length && mt.find(from)) {
+      val k = tokenAt(toks, mt.start)
+      if (k >= 0 && toks(k).isCode) {
+        out += ((mt.toMatchResult, toks(k).depth))
+        from = math.max(mt.end, mt.start + 1)
+      } else from = mt.start + 1
+    }
+    out.result()
+  }
+
+  /** Every code-position match of `re` replaced by `f(match)`. */
+  private def replaceInCode(sql: String, re: Regex)(f: MatchResult => String): String = {
+    val out = new StringBuilder
+    var last = 0
+    codeMatches(sql, re).foreach { case (m, _) =>
+      out.append(sql.substring(last, m.start)).append(f(m)); last = m.end
+    }
+    out.append(sql.substring(last)).toString
+  }
+
+  /** `f` applied to each run of text between quoted tokens and comments. */
+  private def mapCode(sql: String)(f: String => String): String = {
+    val out = new StringBuilder
+    var last = 0
+    lex(sql).foreach { t =>
+      if (!t.isCode) {
+        out.append(f(sql.substring(last, t.start))).append(t.text); last = t.end
+      }
+    }
+    out.append(f(sql.substring(last))).toString
+  }
+
+  /** Rewrite each code-position call `fn` matches (a pattern ending at the
+    * call's `(`) whose trimmed arguments `f` maps. The scan resumes AT a
+    * replacement, so a nested same-function call riding verbatim inside the
+    * arguments gets its own rewrite (skipping past it once left the inner
+    * call on a colliding Spark builtin); no replacement re-emits its own
+    * matchable name, and the guard bounds pathology.
+    */
+  private def rewriteCalls(sql: String, fn: Regex)(f: Seq[String] => Option[String]): String = {
+    var cur = sql
+    var search = 0
+    var guard = 0
+    while (guard < 50) {
+      guard += 1
+      val m = codeMatches(cur, fn).map(_._1).find(_.start >= search).getOrElse(return cur)
+      callArgs(cur, m.end - 1).flatMap { case (args, after) => f(args).map((_, after)) } match {
+        case Some((text, after)) =>
+          cur = cur.substring(0, m.start) + text + cur.substring(after)
+          search = m.start
+        case None => search = m.end
+      }
+    }
+    cur
+  }
+
+  private val strLitRe = """(?s)'((?:[^']|'')*)'""".r
+
+  /** The value of `s` when it is exactly one closed '…' literal. */
+  private def strLiteral(s: String): Option[String] = s.trim match {
+    case strLitRe(body) => Some(body.replace("''", "'"))
+    case _              => None
+  }
 
   private val fnNames = "read_parquet|read_csv_auto|read_csv|read_json_auto|read_json"
   private val readFn =
@@ -80,9 +260,8 @@ object DialectShim {
     "array_length" -> "array_size",
     // both join a list with a separator, skipping NULL elements
     "array_to_string" -> "array_join",
-    // C-style %-formatting in both (DuckDB's {}-style `format` is NOT
-    // mapped and fails with its name visible)
-    "printf" -> "format_string",
+    // (printf needs no rename: Spark 4 has it natively, as its alias of
+    // format_string)
     "starts_with" -> "startswith",
     "ends_with" -> "endswith",
     // DuckDB list_sort defaults to ASC NULLS LAST — exactly Spark's
@@ -178,30 +357,14 @@ object DialectShim {
   private val literalRe =
     """(?i)^(?:-?\d+(?:\.\d+)?|'[^']*(?:''[^']*)*'|true|false|null)$""".r
 
-  /** Comma split outside single quotes: a string-literal default may
-    * itself contain commas (`s := 'x,y'`), which String.split would cut.
-    */
-  private def splitParamList(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var inQ = false
-    s.foreach { c =>
-      if (inQ) { cur.append(c); if (c == '\'') inQ = false }
-      else if (c == '\'') { inQ = true; cur.append(c) }
-      else if (c == ',') { out += cur.toString; cur.clear() }
-      else cur.append(c)
-    }
-    out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
-
   /** Full macro parse: positional params, ordered literal defaults, body.
     * None for non-literal defaults, a positional param after a defaulted
     * one, or anything else malformed — the statement then stays verbatim.
     */
   private def macroDefinitionFull(st: String): Option[SqlMacro] = st match {
     case macroDefRe(name, params, body) =>
-      val raw = splitParamList(params)
+      // a string-literal default may itself contain commas (`s := 'x,y'`)
+      val raw = splitItems(params).filter(_.nonEmpty)
       val parsed: Seq[Either[String, (String, String)]] = raw.map {
         case p if identRe.findFirstIn(p).isDefined => Left(p)
         case defaultParamRe(n, v) if literalRe.findFirstIn(v.trim).isDefined =>
@@ -259,8 +422,9 @@ object DialectShim {
     }
 
   /** Inline registered macro calls (repeatedly, so macros may call macros;
-    * bounded in case of accidental self-reference). Literal-aware; a call
-    * only rewrites when its arg count matches the definition.
+    * bounded in case of accidental self-reference). Only an unqualified
+    * word directly followed by `(` is a call, and it only rewrites when its
+    * arguments bind to the definition.
     */
   private def inlineMacros(sql: String,
       macros: scala.collection.Map[String, SqlMacro]): String = {
@@ -270,66 +434,31 @@ object DialectShim {
     var changed = true
     while (changed && rounds < 10) {
       changed = false; rounds += 1
+      val toks = lex(out)
       val sb = new StringBuilder
+      var last = 0
       var i = 0
-      while (i < out.length) {
-        val c = out.charAt(i)
-        if (c == '\'') {
-          val j = out.indexOf('\'', i + 1)
-          val end = if (j < 0) out.length else j + 1
-          sb.append(out.substring(i, end)); i = end
-        } else if (Character.isJavaIdentifierStart(c)) {
-          var j = i
-          while (j < out.length && Character.isJavaIdentifierPart(out.charAt(j))) j += 1
-          val word = out.substring(i, j)
-          var k = j
-          while (k < out.length && Character.isWhitespace(out.charAt(k))) k += 1
-          val qualified = sb.nonEmpty && sb.charAt(sb.length - 1) == '.'
-          macros.get(word.toLowerCase) match {
-            case Some(m) if !qualified && k < out.length && out.charAt(k) == '(' =>
-              parseArgs(out, k).flatMap { case (args, end) =>
-                bindMacroArgs(m, args).map(bound => (bound, end))
-              } match {
-                case Some((bound, end)) =>
-                  sb.append(expandMacro(m, bound)); i = end; changed = true
-                case None => sb.append(word); i = j
-              }
-            case _ => sb.append(word); i = j
+      while (i < toks.length) {
+        val t = toks(i)
+        val qualified = i > 0 && toks(i - 1).is('.') && toks(i - 1).end == t.start
+        val call =
+          if (t.kind != Word || qualified || !toks.lift(i + 1).exists(_.is('('))) None
+          else macros.get(t.text.toLowerCase).flatMap { m =>
+            callArgs(out, toks(i + 1).start).flatMap { case (args, end) =>
+              bindMacroArgs(m, args).map(bound => (expandMacro(m, bound), end))
+            }
           }
-        } else { sb.append(c); i += 1 }
+        call match {
+          case Some((text, end)) =>
+            sb.append(out.substring(last, t.start)).append(text)
+            last = end; changed = true
+            while (i < toks.length && toks(i).start < end) i += 1
+          case None => i += 1
+        }
       }
-      out = sb.toString
+      out = sb.append(out.substring(last)).toString
     }
     out
-  }
-
-  /** Balanced-paren, literal-aware argument scan starting at `open` (which
-    * must index a '('): Some((topLevelArgs, indexAfterCloser)).
-    */
-  private def parseArgs(s: String, open: Int): Option[(Seq[String], Int)] = {
-    var i = open + 1; var depth = 1; var inLit = false
-    val args = Seq.newBuilder[String]; val cur = new StringBuilder
-    while (i < s.length && depth > 0) {
-      val c = s.charAt(i)
-      if (inLit) { cur.append(c); if (c == '\'') inLit = false }
-      else c match {
-        case '\''              => inLit = true; cur.append(c)
-        case '('               => depth += 1; cur.append(c)
-        case ')'               => depth -= 1; if (depth > 0) cur.append(c)
-        // bracket list literals ride inside a single argument — their
-        // commas must not split it
-        case '['               => depth += 1; cur.append(c)
-        case ']'               => depth -= 1; cur.append(c)
-        case ',' if depth == 1 => args += cur.toString; cur.clear()
-        case _                 => cur.append(c)
-      }
-      i += 1
-    }
-    if (depth != 0) None
-    else {
-      val all = (args.result() :+ cur.toString).map(_.trim)
-      Some((if (all == Seq("")) Seq.empty else all, i))
-    }
   }
 
   /** DuckDB's binder rules for a call's argument list: positional args
@@ -368,36 +497,27 @@ object DialectShim {
       m.defaults ++ overrides).toMap) // later overrides win over defaults
   }
 
-  /** Body expansion is a SINGLE literal-aware pass with all parameters
-    * substituted simultaneously: sequential replaceAll would re-substitute
-    * an argument whose text matches a later parameter name (classic
-    * capture bug — `diff(a, b) AS a - b` called as `diff(b, 10)` must
-    * yield `(b) - (10)`, not `((10)) - (10)`), and a regex pass would also
-    * rewrite parameter names inside the body's string literals.
+  /** Body expansion is a SINGLE pass over the body's tokens with all
+    * parameters substituted simultaneously: sequential replaceAll would
+    * re-substitute an argument whose text matches a later parameter name
+    * (classic capture bug — `diff(a, b) AS a - b` called as `diff(b, 10)`
+    * must yield `(b) - (10)`, not `((10)) - (10)`), and a regex pass would
+    * also rewrite parameter names inside the body's quoted tokens.
     */
   private def expandMacro(m: SqlMacro, byParam: Map[String, String]): String = {
     val b = m.body
+    val toks = lex(b)
     val sb = new StringBuilder("(")
-    var i = 0
-    while (i < b.length) {
-      val c = b.charAt(i)
-      if (c == '\'') {
-        val j = b.indexOf('\'', i + 1)
-        val end = if (j < 0) b.length else j + 1
-        sb.append(b.substring(i, end)); i = end
-      } else if (Character.isJavaIdentifierStart(c)) {
-        var j = i
-        while (j < b.length && Character.isJavaIdentifierPart(b.charAt(j))) j += 1
-        val w = b.substring(i, j)
-        val qualified = sb.length > 1 && sb.charAt(sb.length - 1) == '.'
-        byParam.get(w.toLowerCase) match {
-          case Some(a) if !qualified => sb.append('(').append(a).append(')')
-          case _                     => sb.append(w)
-        }
-        i = j
-      } else { sb.append(c); i += 1 }
+    var last = 0
+    toks.indices.foreach { i =>
+      val t = toks(i)
+      val qualified = i > 0 && toks(i - 1).is('.') && toks(i - 1).end == t.start
+      if (t.kind == Word && !qualified) byParam.get(t.text.toLowerCase).foreach { a =>
+        sb.append(b.substring(last, t.start)).append('(').append(a).append(')')
+        last = t.end
+      }
     }
-    sb.append(')').toString
+    sb.append(b.substring(last)).append(')').toString
   }
 
   // --- DuckDB SUMMARIZE ---------------------------------------------------
@@ -476,65 +596,31 @@ object DialectShim {
     */
   def copyToTarget(st: String): Option[CopyToSpec] = {
     val head = copyHead.findFirstMatchIn(st).getOrElse(return None)
-    val n = st.length
-    var i = head.end
-    def skipWs(): Unit = { while (i < n && st.charAt(i).isWhitespace) i += 1 }
-    skipWs()
-    if (i >= n) unsupportedCopy("missing source")
-    val source: Either[String, String] =
-      if (st.charAt(i) == '(') {
-        // balanced-paren, literal-aware scan for the inner query
-        val start = i
-        var depth = 0; var close = -1; var j = i
-        while (j < n && close < 0) {
-          st.charAt(j) match {
-            case '\'' => j += 1; while (j < n && st.charAt(j) != '\'') j += 1
-            case '('  => depth += 1
-            case ')'  => depth -= 1; if (depth == 0) close = j
-            case _    => ()
-          }
-          j += 1
-        }
-        if (close < 0) unsupportedCopy("unbalanced parentheses")
-        i = close + 1
-        Right(st.substring(start + 1, close).trim)
-      } else {
-        val start = i
-        while (i < n && (st.charAt(i).isLetterOrDigit ||
-          st.charAt(i) == '_' || st.charAt(i) == '.')) i += 1
-        if (i == start) unsupportedCopy("missing source")
-        Left(st.substring(start, i))
-      }
-    skipWs()
+    val toks = lex(st).filter(t => t.start >= head.end && t.kind != Comment)
+    val (source, afterSrc) = sourceAt(st, toks, 0, unsupportedCopy)
+    var k = afterSrc
     // DuckDB also has COPY FROM (import); only TO is shimmed
-    if (i + 2 > n || !st.regionMatches(true, i, "TO", 0, 2))
+    if (!toks.lift(k).exists(_.isWord("TO")))
       unsupportedCopy("expected TO (COPY FROM import is not supported)")
-    i += 2
-    skipWs()
-    if (i >= n || st.charAt(i) != '\'') unsupportedCopy("expected quoted path")
-    val pEnd = st.indexOf('\'', i + 1)
-    if (pEnd < 0) unsupportedCopy("unterminated path literal")
-    val path = st.substring(i + 1, pEnd)
-    i = pEnd + 1
-    skipWs()
+    k += 1
+    val pathTok = toks.lift(k).filter(_.kind == Str)
+      .getOrElse(unsupportedCopy("expected quoted path"))
+    val path = strLiteral(pathTok.text).getOrElse(unsupportedCopy("unterminated path literal"))
+    k += 1
     // optional [WITH] (opt [value], …)
     var raw = Map.empty[String, String]
-    if (i + 4 <= n && st.regionMatches(true, i, "WITH", 0, 4)) { i += 4; skipWs() }
-    if (i < n && st.charAt(i) == '(') {
-      val close = st.lastIndexOf(')')
-      if (close < i) unsupportedCopy("unbalanced option list")
-      splitTopLevel(st.substring(i + 1, close)).foreach { item =>
-        val t = item.trim
-        if (t.nonEmpty) {
-          val sp = t.indexWhere(_.isWhitespace)
-          val (k, v) = if (sp < 0) (t, "") else (t.substring(0, sp), t.substring(sp).trim)
-          raw += k.toLowerCase -> stripQuotes(v)
-        }
+    if (toks.lift(k).exists(_.isWord("WITH"))) k += 1
+    if (toks.lift(k).exists(_.is('('))) {
+      val close = closeOf(toks, k)
+      if (close < 0) unsupportedCopy("unbalanced option list")
+      splitItems(st.substring(toks(k).end, toks(close).start)).filter(_.nonEmpty).foreach { t =>
+        val sp = t.indexWhere(_.isWhitespace)
+        val (key, v) = if (sp < 0) (t, "") else (t.substring(0, sp), t.substring(sp).trim)
+        raw += key.toLowerCase -> strLiteral(v).getOrElse(v)
       }
-      i = close + 1
+      k = close + 1
     }
-    skipWs()
-    if (i < n) unsupportedCopy("trailing text after option list")
+    if (k < toks.length) unsupportedCopy("trailing text after option list")
     val fmt = raw.get("format").map(_.toLowerCase).getOrElse {
       val ext = path.substring(path.lastIndexOf('.') + 1).toLowerCase
       ext match {
@@ -559,10 +645,21 @@ object DialectShim {
     Some(CopyToSpec(source, path, fmt, opts))
   }
 
-  private def stripQuotes(s: String): String =
-    if (s.length >= 2 && s.head == '\'' && s.last == '\'')
-      s.substring(1, s.length - 1)
-    else s
+  /** A (qualified) table name or parenthesized query at token `k` of a
+    * statement's comment-free tokens: the source and the index of the
+    * token after it.
+    */
+  private def sourceAt(st: String, toks: IndexedSeq[Token], k: Int,
+      fail: String => Nothing): (Either[String, String], Int) =
+    if (toks.lift(k).exists(_.is('('))) {
+      val close = closeOf(toks, k)
+      if (close < 0) fail("unbalanced parentheses")
+      (Right(st.substring(toks(k).end, toks(close).start).trim), close + 1)
+    } else {
+      val n = nameLength(toks, k)
+      if (n == 0) fail("missing source")
+      (Left(st.substring(toks(k).start, toks(k + n - 1).end)), k + n)
+    }
 
   // --- DuckDB PIVOT / UNPIVOT statements ---------------------------------
   // DuckDB's statement forms (pass-through in the reference,
@@ -601,58 +698,6 @@ object DialectShim {
         "supported: `PIVOT <src> ON <col> [IN (…)] USING agg(x) [AS a][, …] " +
         "[GROUP BY …]`, `UNPIVOT <src> ON c1, c2 [INTO NAME n VALUE v]`")
 
-  /** Identifier or balanced-paren subquery starting at `from`; returns the
-    * parsed source and the index just past it.
-    */
-  private def parseSourceAt(st: String, from: Int): (Either[String, String], Int) = {
-    val n = st.length
-    var i = from
-    while (i < n && st.charAt(i).isWhitespace) i += 1
-    if (i >= n) unsupportedPivot("missing source")
-    if (st.charAt(i) == '(') {
-      val start = i
-      var depth = 0; var close = -1; var j = i
-      while (j < n && close < 0) {
-        st.charAt(j) match {
-          case '\'' => j += 1; while (j < n && st.charAt(j) != '\'') j += 1
-          case '('  => depth += 1
-          case ')'  => depth -= 1; if (depth == 0) close = j
-          case _    => ()
-        }
-        j += 1
-      }
-      if (close < 0) unsupportedPivot("unbalanced parentheses")
-      (Right(st.substring(start + 1, close).trim), close + 1)
-    } else {
-      val start = i
-      while (i < n && (st.charAt(i).isLetterOrDigit ||
-        st.charAt(i) == '_' || st.charAt(i) == '.')) i += 1
-      if (i == start) unsupportedPivot("missing source")
-      (Left(st.substring(start, i)), i)
-    }
-  }
-
-  /** First word-bounded, depth-0, quote-free occurrence of `word` at or
-    * after `from`; -1 when absent.
-    */
-  private def topLevelKeyword(st: String, word: String, from: Int): Int = {
-    val n = st.length
-    var i = from; var depth = 0
-    while (i < n) {
-      val c = st.charAt(i)
-      if (c == '\'') { i += 1; while (i < n && st.charAt(i) != '\'') i += 1; i += 1 }
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (depth == 0 && st.regionMatches(true, i, word, 0, word.length) &&
-        (i == 0 || !Character.isJavaIdentifierPart(st.charAt(i - 1))) &&
-        (i + word.length >= n ||
-          !Character.isJavaIdentifierPart(st.charAt(i + word.length))))
-        return i
-      else i += 1
-    }
-    -1
-  }
-
   /** Parse a statement-level PIVOT/UNPIVOT; None if `st` is neither.
     * Malformed PIVOT forms throw with the operator named (same contract as
     * the COPY shim).
@@ -660,18 +705,14 @@ object DialectShim {
   def pivotStatement(st: String): Option[Either[PivotStmt, UnpivotStmt]] = {
     val head = pivotHead.findFirstMatchIn(st).getOrElse(return None)
     val isUnpivot = head.group(1) != null
-    val (source, afterSrc) = parseSourceAt(st, head.end)
-    val n = st.length
-    var i = afterSrc
-    def skipWs(): Unit = { while (i < n && st.charAt(i).isWhitespace) i += 1 }
-    skipWs()
-    if (i + 2 > n || !st.regionMatches(true, i, "ON", 0, 2))
-      unsupportedPivot("expected ON")
-    i += 2
+    val toks = lex(st).filter(t => t.start >= head.end && t.kind != Comment)
+    val (source, afterSrc) = sourceAt(st, toks, 0, unsupportedPivot)
+    if (!toks.lift(afterSrc).exists(_.isWord("ON"))) unsupportedPivot("expected ON")
+    val i = toks(afterSrc).end
     if (isUnpivot) {
-      val intoIdx = topLevelKeyword(st, "INTO", i)
+      val intoIdx = topWords(st, "INTO").find(_ >= i).getOrElse(-1)
       val colsText = if (intoIdx < 0) st.substring(i) else st.substring(i, intoIdx)
-      val cols = splitTopLevel(colsText).map(_.trim).filter(_.nonEmpty)
+      val cols = splitItems(colsText).filter(_.nonEmpty)
       if (cols.isEmpty) unsupportedPivot("UNPIVOT needs ON columns")
       if (!cols.forall(c => identRe.findFirstIn(c).isDefined))
         unsupportedPivot("UNPIVOT ON items must be plain columns")
@@ -686,11 +727,11 @@ object DialectShim {
       }
       Some(Right(UnpivotStmt(source, cols, nameCol, valueCol)))
     } else {
-      val usingIdx = topLevelKeyword(st, "USING", i)
-      if (usingIdx < 0) unsupportedPivot("PIVOT without USING")
+      val usingIdx = topWords(st, "USING").find(_ >= i)
+        .getOrElse(unsupportedPivot("PIVOT without USING"))
       // between ON and USING: `<col> [IN (values)]`
       val onPart = st.substring(i, usingIdx).trim
-      val inIdx = topLevelKeyword(onPart, "IN", 0)
+      val inIdx = topWords(onPart, "IN").headOption.getOrElse(-1)
       val (onCol, inVals) =
         if (inIdx < 0) (onPart, None)
         else {
@@ -698,12 +739,12 @@ object DialectShim {
           if (!(valsText.startsWith("(") && valsText.endsWith(")")))
             unsupportedPivot("IN needs a parenthesized value list")
           (onPart.substring(0, inIdx).trim,
-            Some(splitTopLevel(valsText.substring(1, valsText.length - 1))
-              .map(_.trim).filter(_.nonEmpty)))
+            Some(splitItems(valsText.substring(1, valsText.length - 1))
+              .filter(_.nonEmpty)))
         }
       if (identRe.findFirstIn(onCol).isEmpty)
         unsupportedPivot("ON must name a single plain column")
-      val groupIdx = topLevelKeyword(st, "GROUP", usingIdx + 5)
+      val groupIdx = topWords(st, "GROUP").find(_ >= usingIdx + 5).getOrElse(-1)
       val aggsText =
         if (groupIdx < 0) st.substring(usingIdx + 5)
         else st.substring(usingIdx + 5, groupIdx)
@@ -715,7 +756,7 @@ object DialectShim {
         }
       }
       val asRe = """(?is)^(.*?)\s+AS\s+([A-Za-z_]\w*)\s*$""".r
-      val usings = splitTopLevel(aggsText).map(_.trim).filter(_.nonEmpty).map {
+      val usings = splitItems(aggsText).filter(_.nonEmpty).map {
         case asRe(e, a) => (e.trim, Some(a))
         case e          => (e, None)
       }
@@ -746,78 +787,40 @@ object DialectShim {
     cur
   }
 
-  /** Word-bounded `word` at bracket/paren depth 0 outside quotes; -1 if
-    * absent. (Unlike topLevelKeyword this also tracks square brackets —
-    * comprehension parts may nest lists.)
-    */
-  private def topLevelWord(text: String, word: String): Int = {
-    val n = text.length
-    var i = 0; var depth = 0
-    while (i < n) {
-      val c = text.charAt(i)
-      if (c == '\'') { i += 1; while (i < n && text.charAt(i) != '\'') i += 1; i += 1 }
-      else if (c == '(' || c == '[') { depth += 1; i += 1 }
-      else if (c == ')' || c == ']') { depth -= 1; i += 1 }
-      else if (depth == 0 && text.regionMatches(true, i, word, 0, word.length) &&
-        (i == 0 || !Character.isJavaIdentifierPart(text.charAt(i - 1))) &&
-        (i + word.length >= n ||
-          !Character.isJavaIdentifierPart(text.charAt(i + word.length))))
-        return i
-      else i += 1
-    }
-    -1
-  }
-
   /** Rewrite the first comprehension found (leftmost opening bracket whose
     * content has a top-level `for`); identity when none remain.
     */
   private def rewriteOneComprehension(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'') { i += 1; while (i < n && sql.charAt(i) != '\'') i += 1; i += 1 }
-      else if (c == '[') {
-        // matching close bracket, quote/paren/bracket aware
-        var depth = 0; var close = -1; var j = i
-        while (j < n && close < 0) {
-          sql.charAt(j) match {
-            case '\'' => j += 1; while (j < n && sql.charAt(j) != '\'') j += 1
-            case '[' | '(' => depth += 1
-            case ']' | ')' => depth -= 1; if (depth == 0) close = j
-            case _ => ()
-          }
-          j += 1
+    val toks = lex(sql)
+    for (i <- toks.indices if toks(i).is('[')) {
+      val close = closeOf(toks, i)
+      if (close < 0) return sql // unbalanced; leave for execution to report
+      val inner = sql.substring(toks(i).end, toks(close).start)
+      val forIdx = topWords(inner, "for").headOption.getOrElse(-1)
+      if (forIdx >= 0) {
+        val expr = inner.substring(0, forIdx).trim
+        val after = inner.substring(forIdx + 3)
+        // no top-level `in`: not a comprehension after all
+        val inIdx = topWords(after, "in").headOption.getOrElse(return sql)
+        val v = after.substring(0, inIdx).trim
+        if (identRe.findFirstIn(v).isEmpty) return sql
+        val rest = after.substring(inIdx + 2)
+        val (iterRaw, cond) = topWords(rest, "if").headOption match {
+          case None        => (rest.trim, None)
+          case Some(ifIdx) => (rest.substring(0, ifIdx).trim, Some(rest.substring(ifIdx + 2).trim))
         }
-        if (close < 0) return sql // unbalanced; leave for execution to report
-        val inner = sql.substring(i + 1, close)
-        val forIdx = topLevelWord(inner, "for")
-        if (forIdx >= 0) {
-          val expr = inner.substring(0, forIdx).trim
-          val after = inner.substring(forIdx + 3)
-          val inIdx = topLevelWord(after, "in")
-          if (inIdx < 0) return sql // not a comprehension after all
-          val v = after.substring(0, inIdx).trim
-          if (identRe.findFirstIn(v).isEmpty) return sql
-          val rest = after.substring(inIdx + 2)
-          val ifIdx = topLevelWord(rest, "if")
-          val (iterRaw, cond) =
-            if (ifIdx < 0) (rest.trim, None)
-            else (rest.substring(0, ifIdx).trim,
-              Some(rest.substring(ifIdx + 2).trim))
-          val iter =
-            if (iterRaw.startsWith("[") && iterRaw.endsWith("]") &&
-                topLevelWord(iterRaw.substring(1, iterRaw.length - 1), "for") < 0)
-              s"array(${iterRaw.substring(1, iterRaw.length - 1).trim})"
-            else iterRaw
-          val replacement = cond match {
-            case Some(p) => s"transform(filter($iter, $v -> $p), $v -> $expr)"
-            case None    => s"transform($iter, $v -> $expr)"
-          }
-          return sql.substring(0, i) + replacement + sql.substring(close + 1)
+        val iter =
+          if (iterRaw.startsWith("[") && iterRaw.endsWith("]") &&
+              topWords(iterRaw.substring(1, iterRaw.length - 1), "for").isEmpty)
+            s"array(${iterRaw.substring(1, iterRaw.length - 1).trim})"
+          else iterRaw
+        val replacement = cond match {
+          case Some(p) => s"transform(filter($iter, $v -> $p), $v -> $expr)"
+          case None    => s"transform($iter, $v -> $expr)"
         }
-        i += 1 // plain bracket: keep scanning inside (it may hold one)
-      } else i += 1
+        return sql.substring(0, toks(i).start) + replacement + sql.substring(toks(close).end)
+      }
+      // a plain bracket: the scan goes on inside it (it may hold one)
     }
     sql
   }
@@ -869,7 +872,7 @@ object DialectShim {
         // aliases each IN value to `<value>_<alias>` instead
         val (aggsSql, valsSql) = p.usings match {
           case Seq((e, Some(a))) =>
-            (e, vals.map(v => s"$v AS `${stripQuotes(v)}_$a`").mkString(", "))
+            (e, vals.map(v => s"$v AS `${strLiteral(v).getOrElse(v)}_$a`").mkString(", "))
           case us =>
             (us.map { case (e, a) => e + a.map(x => s" AS $x").getOrElse("") }
               .mkString(", "),
@@ -921,13 +924,12 @@ object DialectShim {
 
   private def rewriteUnionByName(sql: String,
       spark: Option[SparkSession]): Option[String] = {
-    val seps = unionByNameRe.findAllMatchIn(sql)
-      .filter(m => depthAt(sql, m.start).contains(0)).toSeq
+    val seps = codeMatches(sql, unionByNameRe).collect { case (m, 0) => m }
     if (seps.isEmpty) return None
     val s = spark.getOrElse(return None) // lexical pass: leave verbatim
     // a positional UNION mixed into the same chain would need per-operator
     // alignment semantics — refuse loudly rather than misalign columns
-    if (keywordPositions(sql, "UNION").count(_._2 == 0) != seps.size)
+    if (topWords(sql, "UNION").size != seps.size)
       unsupportedUnionByName("mix of BY NAME and positional UNION")
     if (seps.map(_.group(1) != null).distinct.size > 1)
       unsupportedUnionByName("mixed UNION ALL BY NAME and UNION BY NAME")
@@ -945,9 +947,7 @@ object DialectShim {
     // a trailing top-level ORDER BY / LIMIT / OFFSET on the LAST arm
     // scopes to the whole union
     val lastArm = arms.last
-    val tailPos = Seq("ORDER", "LIMIT", "OFFSET")
-      .flatMap(k => keywordPositions(lastArm, k).collect { case (p, 0) => p })
-      .minOption
+    val tailPos = Seq("ORDER", "LIMIT", "OFFSET").flatMap(topWords(lastArm, _)).minOption
     val coreArms =
       arms.init :+ tailPos.map(lastArm.substring(0, _)).getOrElse(lastArm)
     val tail = tailPos.map(p => " " + lastArm.substring(p).trim).getOrElse("")
@@ -995,27 +995,20 @@ object DialectShim {
 
   private def rewriteColumnsExpr(sql: String,
       spark: Option[SparkSession]): String = {
-    if (columnsCallRe.findAllMatchIn(sql)
-        .forall(m => depthAt(sql, m.start).isEmpty)) return sql
+    if (codeMatches(sql, columnsCallRe).isEmpty) return sql
     val s = spark.getOrElse(return sql) // lexical pass: leave verbatim
-    val selectPos = topLevelKeyword(sql, "SELECT", 0)
-    if (selectPos < 0) return sql
+    val selectPos = topWords(sql, "SELECT").headOption.getOrElse(return sql)
     // the probe must be a pure query: only an empty or WITH prefix before
     // the main SELECT (never DDL — s.sql would execute it)
     val prefix = sql.substring(0, selectPos)
     if (prefix.trim.nonEmpty &&
         """(?is)^\s*WITH\b""".r.findFirstIn(prefix).isEmpty) return sql
-    val fromPos = keywordPositions(sql, "FROM")
-      .collectFirst { case (p, 0) if p > selectPos => p }
-      .getOrElse(return sql)
+    val fromPos = topWords(sql, "FROM").find(_ > selectPos).getOrElse(return sql)
     val selList = sql.substring(selectPos + "SELECT".length, fromPos)
-    if (columnsCallRe.findAllMatchIn(selList)
-        .forall(m => depthAt(selList, m.start).isEmpty)) return sql
+    if (codeMatches(selList, columnsCallRe).isEmpty) return sql
     val tailEnd = Seq("WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW",
       "ORDER", "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT")
-      .flatMap(k => keywordPositions(sql, k).collect {
-        case (p, 0) if p > fromPos => p
-      }).minOption.getOrElse(sql.length)
+      .flatMap(topWords(sql, _).filter(_ > fromPos)).minOption.getOrElse(sql.length)
     val probe = prefix + "SELECT * " + sql.substring(fromPos, tailEnd)
     val allCols = s.sql(rewriteImpl(probe, spark)).schema.fieldNames.toSeq
     val bareRe = """(?is)^\s*COLUMNS\s*\((.*)\)\s*$""".r
@@ -1028,23 +1021,24 @@ object DialectShim {
           val exclParen = """(?is)^\*\s*EXCLUDE\s*\((.*)\)\s*$""".r
           val exclBare = """(?is)^\*\s*EXCLUDE\s+([A-Za-z_]\w*)\s*$""".r
           val names = st match {
-            case exclParen(list) => splitTopLevel(list).map(_.trim)
+            case exclParen(list) => splitItems(list).filter(_.nonEmpty)
             case exclBare(n)     => Seq(n)
             case other => unsupportedColumns(s"argument `$other`")
           }
           val lower = names.map(_.toLowerCase).toSet
           allCols.filterNot(c => lower(c.toLowerCase))
-        case lit if lit.length >= 2 && lit.startsWith("'") && lit.endsWith("'") =>
-          val re = java.util.regex.Pattern.compile(lit.substring(1, lit.length - 1))
-          allCols.filter(c => re.matcher(c).find())
-        case other => unsupportedColumns(s"argument `$other`")
+        case other => strLiteral(other) match {
+          case Some(lit) =>
+            val re = java.util.regex.Pattern.compile(lit)
+            allCols.filter(c => re.matcher(c).find())
+          case None => unsupportedColumns(s"argument `$other`")
+        }
       }
       if (matched.isEmpty) unsupportedColumns("no columns matched")
       matched
     }
-    val newItems = splitTopLevel(selList).map { item =>
-      if (columnsCallRe.findFirstMatchIn(item)
-          .flatMap(m => depthAt(item, m.start)).isEmpty) item
+    val newItems = splitItems(selList).filter(_.nonEmpty).map { item =>
+      if (codeMatches(item, columnsCallRe).isEmpty) item
       else item match {
         case bareRe(spec) => expand(spec).map(c => s"`$c`").mkString(", ")
         case wrappedRe(fn, spec) =>
@@ -1090,6 +1084,7 @@ object DialectShim {
   // column name (un-referenceable in practice) — left verbatim.
 
   private val tableFnRe = """(?i)\b(generate_series|range|unnest)\s*\(""".r
+  private val unnestRe = """(?i)\bunnest\s*\(""".r
   private val intLitRe = """^-?\d+$""".r
   private val fnClauseKeywords = Seq("WHERE", "GROUP", "HAVING", "QUALIFY",
     "WINDOW", "ORDER", "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT",
@@ -1099,22 +1094,12 @@ object DialectShim {
     * same-depth FROM before it with no intervening clause keyword)?
     */
   private def inFromClause(sql: String, pos: Int): Boolean = {
-    val (lo, p) =
-      if (depthAt(sql, pos).contains(0)) (0, pos)
-      else { val (open, _) = innermostSpan(sql, pos); (open + 1, pos - open - 1) }
+    val lo = group(sql, pos)._1 + 1
     val span = sql.substring(lo)
-    val fromPos = keywordPositions(span, "FROM")
-      .collect { case (q, 0) if q < p => q }.maxOption.getOrElse(return false)
-    !fnClauseKeywords.exists(k => keywordPositions(span, k)
-      .exists { case (q, d) => d == 0 && q > fromPos && q < p })
+    val p = pos - lo
+    val fromPos = topWords(span, "FROM").filter(_ < p).maxOption.getOrElse(return false)
+    !fnClauseKeywords.exists(k => topWords(span, k).exists(q => q > fromPos && q < p))
   }
-
-  /** Inside a backtick-quoted identifier? Rewrites must skip those — a
-    * derived alias like `unnest(l)` must not re-trigger the rewrite that
-    * produced it.
-    */
-  private def insideBackticks(s: String, pos: Int): Boolean =
-    s.substring(0, pos).count(_ == '`') % 2 == 1
 
   /** A DuckDB bracket list literal becomes array(…); anything else passes
     * through (comprehensions were already rewritten by this point).
@@ -1135,13 +1120,13 @@ object DialectShim {
     var guard = 0
     while (guard < 50) {
       guard += 1
-      val mOpt = tableFnRe.findAllMatchIn(cur)
-        .find(mm => mm.start >= search && depthAt(cur, mm.start).isDefined &&
-          !insideBackticks(cur, mm.start))
-      val m = mOpt.getOrElse(return cur)
+      // a derived alias like `unnest(l)` is a quoted token, so it never
+      // re-triggers the rewrite that produced it
+      val m = codeMatches(cur, tableFnRe).map(_._1).find(_.start >= search)
+        .getOrElse(return cur)
       val fn = m.group(1).toLowerCase
       val open = m.end - 1
-      parseArgs(cur, open) match {
+      callArgs(cur, open) match {
         case None => search = m.end // unbalanced; leave for execution
         case Some((args, after)) =>
           val repl: Option[(Int, Int, String)] = // (start, end, text)
@@ -1175,8 +1160,7 @@ object DialectShim {
                     s"(SELECT explode(sequence($a, $endAdj, ${s.trim})) AS range)"))
                 case _ => None
               }
-              case _ => // unnest: one argument, but a bracket list literal
-                // contains commas parseArgs would split on — take raw text
+              case _ => // unnest: one argument, taken as raw text
                 if (args.isEmpty) None
                 else {
                   val raw = cur.substring(open + 1, after - 1)
@@ -1187,33 +1171,28 @@ object DialectShim {
                     val arg = bracketToArray(raw)
                     // comma before the call → correlated lateral; FROM
                     // directly before → uncorrelated subquery
-                    var i = m.start - 1
-                    while (i >= 0 && cur.charAt(i).isWhitespace) i -= 1
-                    if (i >= 0 && cur.charAt(i) == ',')
-                      Some((i, aliasEnd, s" LATERAL VIEW explode($arg) $z AS $u"))
-                    else if (i >= 3 && cur.regionMatches(true, i - 3, "FROM", 0, 4) &&
-                        (i == 3 || !Character.isJavaIdentifierPart(cur.charAt(i - 4))))
-                      Some((m.start, aliasEnd,
-                        s"(SELECT explode($arg) AS $u) AS $z"))
-                    else None
+                    tokenBefore(cur, m.start) match {
+                      case Some(t) if t.is(',') =>
+                        Some((t.start, aliasEnd, s" LATERAL VIEW explode($arg) $z AS $u"))
+                      case Some(t) if t.isWord("FROM") =>
+                        Some((m.start, aliasEnd, s"(SELECT explode($arg) AS $u) AS $z"))
+                      case _ => None
+                    }
                   }
                 }
             } else if (fn == "unnest") {
               // select-list position: a single unnest explodes; several
               // zip via one generated index (see the comment block above)
-              val (lo, hi) =
-                if (depthAt(cur, m.start).contains(0)) (0, cur.length)
-                else { val (o, c) = innermostSpan(cur, m.start); (o + 1, c) }
+              val (o, hi) = group(cur, m.start)
+              val lo = o + 1
               val span = cur.substring(lo, hi)
-              val nUnnest = """(?i)\bunnest\s*\(""".r.findAllMatchIn(span)
-                .count(mm => !inFromClause(span, mm.start) &&
-                  depthAt(span, mm.start).isDefined &&
-                  !insideBackticks(span, mm.start))
+              val nUnnest = codeMatches(span, unnestRe)
+                .count { case (mm, _) => !inFromClause(span, mm.start) }
               // the innermost span must BE a query block — when it's a
               // function-call paren (`upper(unnest(x))`), leave the call
               // verbatim so the failure names unnest, instead of planting
               // an invalid nested explode
-              if (args.isEmpty || topLevelKeyword(span, "SELECT", 0) < 0) None
+              if (args.isEmpty || topWords(span, "SELECT").isEmpty) None
               else if (nUnnest > 1)
                 rewriteZipUnnests(span).map(ns => (lo, hi, ns))
               else {
@@ -1238,7 +1217,7 @@ object DialectShim {
               // a zip rewrite (marked by its generated __graft_uz alias)
               // resumes at the span start: a FROM-clause unnest inside the
               // same span still needs its own rewrite (zip output cannot
-              // re-trigger — its derived aliases are backtick-quoted)
+              // re-trigger — its derived aliases are quoted tokens)
               search = if (text.contains("__graft_uz")) a else a + text.length
             case None => search = m.end
           }
@@ -1253,21 +1232,17 @@ object DialectShim {
     * statement stays verbatim (failing with unnest named, as before).
     */
   private def rewriteZipUnnests(span: String): Option[String] = {
-    if (topLevelKeyword(span, "SELECT", 0) < 0) return None
+    if (topWords(span, "SELECT").isEmpty) return None
     // (start, afterClose, rawArg) per site, in order
-    val sites = """(?i)\bunnest\s*\(""".r.findAllMatchIn(span).flatMap { mm =>
-      if (inFromClause(span, mm.start) || insideBackticks(span, mm.start))
-        None
-      else depthAt(span, mm.start) match {
-        case Some(0) => parseArgs(span, mm.end - 1) match {
-          case Some((as, after)) if as.nonEmpty =>
-            Some(Right((mm.start, after, span.substring(mm.end, after - 1))))
-          case _ => Some(Left(())) // malformed call: bail
-        }
-        case Some(_) => Some(Left(())) // nested (function arg / subquery)
-        case None    => None           // inside a string literal
+    val sites = codeMatches(span, unnestRe).flatMap { case (mm, depth) =>
+      if (inFromClause(span, mm.start)) None
+      else if (depth != 0) Some(Left(())) // nested (function arg / subquery)
+      else callArgs(span, mm.end - 1) match {
+        case Some((as, after)) if as.nonEmpty =>
+          Some(Right((mm.start, after, span.substring(mm.end, after - 1))))
+        case _ => Some(Left(())) // malformed call: bail
       }
-    }.toSeq
+    }
     if (sites.exists(_.isLeft)) return None
     val zip = sites.collect { case Right(s) => s }
     if (zip.size < 2) return None
@@ -1280,10 +1255,9 @@ object DialectShim {
     // `unnest` named (the documented error shape).
     val lastSite = zip.map(_._1).max
     val setOpPos = Seq("UNION", "INTERSECT", "EXCEPT")
-      .map(k => topLevelKeyword(span, k, 0)).filter(_ >= 0)
-      .minOption.getOrElse(-1)
+      .flatMap(topWords(span, _).headOption).minOption.getOrElse(-1)
     if (setOpPos >= 0) {
-      val fromPos = topLevelKeyword(span, "FROM", 0)
+      val fromPos = topWords(span, "FROM").headOption.getOrElse(-1)
       if (setOpPos < lastSite || fromPos < 0 || fromPos > setOpPos)
         return None
     }
@@ -1321,10 +1295,10 @@ object DialectShim {
     // gets a one-row scaffold
     val terminators = Seq("WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW",
       "ORDER", "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT")
-    val fromPos = topLevelKeyword(out, "FROM", 0)
+    val fromPos = topWords(out, "FROM").headOption.getOrElse(-1)
     val searchFrom = if (fromPos >= 0) fromPos else 0
     val cut = terminators
-      .map(k => topLevelKeyword(out, k, searchFrom)).filter(_ >= 0)
+      .flatMap(topWords(out, _).find(_ >= searchFrom))
       .minOption.getOrElse(out.length)
     val scaffold = if (fromPos >= 0) "" else " FROM (SELECT 1 AS __graft_uzd)"
     Some(out.substring(0, cut).stripTrailing() + scaffold + lateral +
@@ -1339,31 +1313,10 @@ object DialectShim {
   // (list_distinct stays unmapped: DuckDB's result order is arbitrary
   // where Spark's array_distinct preserves first occurrence.)
   private def rewriteListFnTemplates(sql: String): String = {
-    def nary(cur0: String, fnName: String, arity: Int,
-        tmpl: Seq[String] => String): String = {
-      val re = s"(?i)\\b$fnName\\s*\\(".r
-      var cur = cur0
-      var search = 0
-      var guard = 0
-      while (guard < 50) {
-        guard += 1
-        val m = re.findAllMatchIn(cur)
-          .find(mm => mm.start >= search && depthAt(cur, mm.start).isDefined &&
-            !insideBackticks(cur, mm.start))
-          .getOrElse(return cur)
-        parseArgs(cur, m.end - 1) match {
-          case Some((args, after)) if args.size == arity =>
-            val text = tmpl(args.map(_.trim))
-            cur = cur.substring(0, m.start) + text + cur.substring(after)
-            // re-scan FROM the replacement so a nested same-function call
-            // inside the args rewrites too (no template emits its own
-            // matchable name, so this terminates)
-            search = m.start
-          case _ => search = m.end
-        }
-      }
-      cur
-    }
+    def nary(cur: String, fnName: String, arity: Int,
+        tmpl: Seq[String] => String): String =
+      rewriteCalls(cur, s"(?i)\\b$fnName\\s*\\(".r)(args =>
+        Option.when(args.size == arity)(tmpl(args)))
     def one(cur0: String, fnName: String, tmpl: String => String): String =
       nary(cur0, fnName, 1, args => tmpl(args.head))
     val a = one(sql, "list_reverse_sort", x => s"sort_array($x, false)")
@@ -1402,7 +1355,6 @@ object DialectShim {
   // with `format` visible (Spark has no such function). Bounded
   // divergence: extreme doubles render engine-style (1e+20 vs 1.0E20).
   private val formatCallRe = """(?i)\bformat\s*\(""".r
-  private val litTemplateRe = """(?s)^\s*'([^']*(?:''[^']*)*)'\s*$""".r
 
   /** Parse `tpl` into literal segments and argument indices; None when any
     * construct outside the mapped subset appears.
@@ -1438,49 +1390,24 @@ object DialectShim {
     Some(parts.result())
   }
 
-  private def rewriteFormat(sql: String): String = {
-    var cur = sql
-    var search = 0
-    var guard = 0
-    while (guard < 50) {
-      guard += 1
-      val m = formatCallRe.findAllMatchIn(cur)
-        .find(mm => mm.start >= search && depthAt(cur, mm.start).isDefined &&
-          !insideBackticks(cur, mm.start))
-        .getOrElse(return cur)
-      parseArgs(cur, m.end - 1) match {
-        case Some((args, after)) if args.nonEmpty =>
-          val rewritten = for {
-            tplLit <- litTemplateRe.findFirstMatchIn(args.head)
-              .map(_.group(1).replace("''", "'"))
-            parts <- parseFormatTemplate(tplLit)
-            vals = args.tail
-            if parts.collect { case Right(ix) => ix }.forall(_ < vals.length)
-          } yield {
-            def lit(s: String) = "'" + s.replace("'", "''") + "'"
-            val pieces = parts.map {
-              case Left(s)   => lit(s)
-              case Right(ix) => s"CAST((${vals(ix)}) AS STRING)"
-            }
-            if (pieces.isEmpty) "''"
-            else if (pieces.size == 1) pieces.head
-            else pieces.mkString("concat(", ", ", ")")
-          }
-          rewritten match {
-            case Some(text) =>
-              cur = cur.substring(0, m.start) + text + cur.substring(after)
-              // re-scan FROM the replacement: the argument text rides into
-              // the CAST(...) pieces verbatim, so a nested format() call
-              // must get its own rewrite on the next iteration (the outer
-              // call is gone, so this cannot loop; guard bounds pathology)
-              search = m.start
-            case None => search = m.end
-          }
-        case _ => search = m.end
+  private def rewriteFormat(sql: String): String =
+    rewriteCalls(sql, formatCallRe) { args =>
+      for {
+        tplLit <- args.headOption.flatMap(strLiteral)
+        parts <- parseFormatTemplate(tplLit)
+        vals = args.tail
+        if parts.collect { case Right(ix) => ix }.forall(_ < vals.length)
+      } yield {
+        def lit(s: String) = "'" + s.replace("'", "''") + "'"
+        val pieces = parts.map {
+          case Left(s)   => lit(s)
+          case Right(ix) => s"CAST((${vals(ix)}) AS STRING)"
+        }
+        if (pieces.isEmpty) "''"
+        else if (pieces.size == 1) pieces.head
+        else pieces.mkString("concat(", ", ", ")")
       }
     }
-    cur
-  }
 
   // strptime's %-codes reuse strftime's translation table; only fully
   // translatable formats rewrite (same contract as strftime)
@@ -1496,34 +1423,14 @@ object DialectShim {
   // Spark equivalent) and fails with the original name.
   private val jsonExtractStrRe = """(?i)\bjson_extract_string\s*\(""".r
   private val bareJsonKeyRe = """(?s)^'([A-Za-z_][\w.]*|\d+)'$""".r
-  private def rewriteJsonExtract(sql: String): String = {
-    var cur = sql
-    var search = 0
-    var guard = 0
-    while (guard < 50) {
-      guard += 1
-      val m = jsonExtractStrRe.findAllMatchIn(cur)
-        .find(mm => mm.start >= search && depthAt(cur, mm.start).isDefined &&
-          !insideBackticks(cur, mm.start))
-        .getOrElse(return cur)
-      parseArgs(cur, m.end - 1) match {
-        case Some((Seq(j, p), after)) if p.trim.startsWith("'$") =>
-          val text = s"get_json_object(${j.trim}, ${p.trim})"
-          cur = cur.substring(0, m.start) + text + cur.substring(after)
-          search = m.start // re-scan: nested calls inside the args
-        case Some((Seq(j, p), after))
-            if bareJsonKeyRe.findFirstMatchIn(p.trim).isDefined =>
-          val key = bareJsonKeyRe.findFirstMatchIn(p.trim).get.group(1)
-          val path =
-            if (key.forall(_.isDigit)) s"'$$[$key]'" else s"'$$[''$key'']'"
-          val text = s"get_json_object(${j.trim}, $path)"
-          cur = cur.substring(0, m.start) + text + cur.substring(after)
-          search = m.start // re-scan: nested calls inside the args
-        case _ => search = m.end
-      }
+  private def rewriteJsonExtract(sql: String): String =
+    rewriteCalls(sql, jsonExtractStrRe) {
+      case Seq(j, p) if p.startsWith("'$") => Some(s"get_json_object($j, $p)")
+      case Seq(j, bareJsonKeyRe(key)) =>
+        val path = if (key.forall(_.isDigit)) s"'$$[$key]'" else s"'$$[''$key'']'"
+        Some(s"get_json_object($j, $path)")
+      case _ => None
     }
-    cur
-  }
 
   // DuckDB regexp_replace replaces the FIRST match unless the 'g' flag is
   // given; Spark's builtin of the same name is always global — a silent
@@ -1533,43 +1440,19 @@ object DialectShim {
   // Other flag sets are left verbatim. Backreference syntax in the
   // replacement follows Spark/Java ($1) either way.
   private val regexpReplaceRe = """(?i)\bregexp_replace\s*\(""".r
-  private def rewriteRegexpReplace(sql: String): String = {
-    var cur = sql
-    var search = 0
-    var guard = 0
-    while (guard < 50) {
-      guard += 1
-      val m = regexpReplaceRe.findAllMatchIn(cur)
-        .find(mm => mm.start >= search && depthAt(cur, mm.start).isDefined &&
-          !insideBackticks(cur, mm.start))
-        .getOrElse(return cur)
-      parseArgs(cur, m.end - 1) match {
-        case Some((Seq(s, re, r), after)) =>
-          val text = s"regexp_replace_first(${s.trim}, ${re.trim}, ${r.trim})"
-          cur = cur.substring(0, m.start) + text + cur.substring(after)
-          // re-scan FROM the replacement: a nested regexp_replace rides
-          // verbatim inside the args and must get its own first-match
-          // mapping (skipping past left it on Spark's global builtin)
-          search = m.start
-        case Some((Seq(s, re, r, f), after))
-            if f.trim.length >= 2 && f.trim.startsWith("'") && f.trim.endsWith("'") &&
-              f.trim.substring(1, f.trim.length - 1).forall("gic".contains(_)) =>
-          val flags = f.trim.substring(1, f.trim.length - 1)
-          val pat =
-            if (flags.contains('i')) s"concat('(?i)', ${re.trim})" else re.trim
-          // the global form emits Spark's explicit 4-arg position-1 variant
-          // (same semantics): the 3-arg shape would re-match this very rule
-          // when a union arm's output flows through the outer pass chain
-          val text =
-            if (flags.contains('g')) s"regexp_replace(${s.trim}, $pat, ${r.trim}, 1)"
-            else s"regexp_replace_first(${s.trim}, $pat, ${r.trim})"
-          cur = cur.substring(0, m.start) + text + cur.substring(after)
-          search = m.start // re-scan: nested calls inside the args
-        case _ => search = m.end
-      }
+  private def rewriteRegexpReplace(sql: String): String =
+    rewriteCalls(sql, regexpReplaceRe) {
+      case Seq(s, re, r) => Some(s"regexp_replace_first($s, $re, $r)")
+      case Seq(s, re, r, f) if strLiteral(f).exists(_.forall("gic".contains(_))) =>
+        val flags = strLiteral(f).get
+        val pat = if (flags.contains('i')) s"concat('(?i)', $re)" else re
+        // the global form emits Spark's explicit 4-arg position-1 variant
+        // (same semantics): the 3-arg shape would re-match this very rule
+        // when a union arm's output flows through the outer pass chain
+        Some(if (flags.contains('g')) s"regexp_replace($s, $pat, $r, 1)"
+          else s"regexp_replace_first($s, $pat, $r)")
+      case _ => None
     }
-    cur
-  }
 
   // --- DuckDB struct constructors ----------------------------------------
   // `struct_pack(a := 1, b := x)` and the literal form `{'a': 1, 'b': x}`
@@ -1585,60 +1468,36 @@ object DialectShim {
 
   private def rewriteStructs(sql: String): String = {
     // struct_pack(name := expr, …)
-    var cur = sql
-    var search = 0
-    var guard = 0
-    while (guard < 50) {
-      guard += 1
-      val mOpt = structPackRe.findAllMatchIn(cur)
-        .find(mm => mm.start >= search && depthAt(cur, mm.start).isDefined &&
-          !insideBackticks(cur, mm.start))
-      mOpt match {
-        case None => guard = 50
-        case Some(m) =>
-          parseArgs(cur, m.end - 1) match {
-            case Some((args, after)) if args.nonEmpty &&
-                args.forall(namedArgRe.findFirstIn(_).isDefined) =>
-              val fields = args.map { a =>
-                val am = namedArgRe.findFirstMatchIn(a).get
-                s"'${am.group(1)}', ${am.group(2).trim}"
-              }
-              val text = s"named_struct(${fields.mkString(", ")})"
-              cur = cur.substring(0, m.start) + text + cur.substring(after)
-              search = m.start // re-scan: nested struct_pack in the args
-            case _ => search = m.end
-          }
+    var cur = rewriteCalls(sql, structPackRe) { args =>
+      Option.when(args.nonEmpty && args.forall(namedArgRe.findFirstIn(_).isDefined)) {
+        val fields = args.map { a =>
+          val am = namedArgRe.findFirstMatchIn(a).get
+          s"'${am.group(1)}', ${am.group(2).trim}"
+        }
+        s"named_struct(${fields.mkString(", ")})"
       }
     }
-    // {'k': v, …} literals, innermost first
+    // {'k': v, …} literals, innermost first: the last '{' before the first
+    // '}' that follows one
     var changed = true
-    guard = 0
+    var guard = 0
     while (changed && guard < 20) {
       guard += 1
       changed = false
-      var i = 0
-      var found = -1
-      // innermost open brace: the last '{' before the first '}' (both
-      // outside string literals)
-      var close = -1
-      while (i < cur.length && close < 0) {
-        val c = cur.charAt(i)
-        if (c == '\'') { i += 1; while (i < cur.length && cur.charAt(i) != '\'') i += 1 }
-        else if (c == '{') found = i
-        else if (c == '}' && found >= 0) close = i
-        i += 1
-      }
-      if (close > 0) {
-        val inner = cur.substring(found + 1, close)
-        val parts = splitTopLevel(inner)
+      val toks = lex(cur)
+      val first = toks.indexWhere(_.is('{'))
+      val c = if (first < 0) -1 else toks.indexWhere(_.is('}'), first)
+      if (c >= 0) {
+        val open = toks.lastIndexWhere(_.is('{'), c)
+        val parts = splitItems(cur.substring(toks(open).end, toks(c).start)).filter(_.nonEmpty)
         if (parts.nonEmpty &&
             parts.forall(p => structFieldRe.findFirstIn(p).isDefined)) {
           val fields = parts.map { p =>
             val fm = structFieldRe.findFirstMatchIn(p).get
             s"'${fm.group(1)}', ${fm.group(2).trim}"
           }
-          cur = cur.substring(0, found) +
-            s"named_struct(${fields.mkString(", ")})" + cur.substring(close + 1)
+          cur = cur.substring(0, toks(open).start) +
+            s"named_struct(${fields.mkString(", ")})" + cur.substring(toks(c).end)
           changed = true
         }
       }
@@ -1659,12 +1518,11 @@ object DialectShim {
   //     1 / size(l).
   //   - `[1, 2]` / `ARRAY[1, 2]` list literals → `array(1, 2)`.
   // Classification is lexical: a bracket after a value (identifier, `)`,
-  // `]`, or a quoted identifier) subscripts it; after anything else —
-  // comma, operator, `(`, statement start, or a keyword like THEN/SELECT —
-  // it opens a literal. Runs AFTER the read_* rewrites (their list-path
-  // form owns its brackets) and after comprehensions (their `for`-bearing
-  // brackets are gone by now). Backtick-quoted identifiers containing `[`
-  // are not supported.
+  // `]`, or a backtick-quoted identifier) subscripts it; after anything
+  // else — comma, operator, `(`, statement start, or a keyword like
+  // THEN/SELECT — it opens a literal. Runs AFTER the read_* rewrites (their
+  // list-path form owns its brackets) and after comprehensions (their
+  // `for`-bearing brackets are gone by now).
 
   private val bracketKeywords = Set("SELECT", "WHERE", "AND", "OR", "NOT",
     "WHEN", "THEN", "ELSE", "END", "IN", "IS", "BETWEEN", "LIKE", "ILIKE",
@@ -1680,124 +1538,78 @@ object DialectShim {
       """DECIMAL\s*\(\s*\d+\s*,\s*\d+\s*\)|ARRAY<[^\[\]]*>)\s*\[\s*\]""").r
 
   private def rewriteBrackets(sql: String): String = {
-    var cur0 = sql
+    // type syntax first, one code match per pass: a bulk replaceAllIn would
+    // also rewrite type syntax inside quoted data
+    var cur = sql
     var tGuard = 0
-    var tChanged = true
-    while (tChanged && tGuard < 200) {
+    var typeMatch = codeMatches(cur, arrayTypeRe).headOption
+    while (typeMatch.isDefined && tGuard < 200) {
       tGuard += 1
-      // literal-aware, one match per pass: a raw replaceAllIn would also
-      // rewrite type syntax INSIDE quoted strings/backticks — data
-      // corruption, not dialect mapping
-      val next = arrayTypeRe.findAllMatchIn(cur0)
-        .find(m => depthAt(cur0, m.start).isDefined &&
-          !insideBackticks(cur0, m.start))
-        .map(m => cur0.substring(0, m.start) + s"ARRAY<${m.group(1)}>" +
-          cur0.substring(m.end))
-        .getOrElse(cur0)
-      tChanged = next != cur0
-      cur0 = next
+      val m = typeMatch.get._1
+      cur = cur.substring(0, m.start) + s"ARRAY<${m.group(1)}>" + cur.substring(m.end)
+      typeMatch = codeMatches(cur, arrayTypeRe).headOption
     }
-    var cur = cur0
-    var i = 0
+    def isValue(t: Token) = t.kind == Word || t.kind == BQuoted || t.is(')') || t.is(']')
+    def isNamePart(t: Token) = t.kind == Word || t.kind == BQuoted || t.is('.')
+    var toks = lex(cur)
+    var k = 0
     // guard counts REWRITES (each consumes a bracket pair, so this only
     // bounds pathology) — counting scanned CHARACTERS here once silently
     // stopped rewriting past ~5000 chars, leaving 1-based subscripts to
     // parse as Spark's 0-based ones in long macro-inlined statements
     var guard = 0
-    while (i < cur.length && guard < 5000) {
-      val c = cur.charAt(i)
-      if (c == '\'') { i += 1; while (i < cur.length && cur.charAt(i) != '\'') i += 1; i += 1 }
-      else if (c == '`') { i += 1; while (i < cur.length && cur.charAt(i) != '`') i += 1; i += 1 }
-      else if (c != '[') i += 1
+    def splice(from: Int, to: Int, text: String, resume: Int): Unit = {
+      cur = cur.substring(0, from) + text + cur.substring(to)
+      toks = lex(cur)
+      k = toks.indexWhere(_.start >= resume) match { case -1 => toks.length; case i => i }
+      guard += 1
+    }
+    while (k < toks.length && guard < 5000) {
+      val close = if (toks(k).is('[')) closeOf(toks, k) else -1
+      if (close < 0) k += 1 // not a bracket, or unbalanced: leave it alone
       else {
-        // matching close bracket (literal-aware, nesting-aware)
-        var j = i + 1; var depth = 1
-        var colonPos = -1
-        var subDepth = 0 // parens+brackets inside
-        while (j < cur.length && depth > 0) {
-          val cj = cur.charAt(j)
-          if (cj == '\'') { j += 1; while (j < cur.length && cur.charAt(j) != '\'') j += 1 }
-          else if (cj == '[' || cj == '(') { depth += (if (cj == '[') 1 else 0); subDepth += 1 }
-          else if (cj == ']') { depth -= 1; if (depth > 0) subDepth -= 1 }
-          else if (cj == ')') subDepth -= 1
-          else if (cj == ':' && depth == 1 && subDepth == 0 && colonPos < 0) colonPos = j
-          j += 1
-        }
-        if (depth != 0) i += 1 // unbalanced; leave the rest alone
-        else {
-          val close = j - 1
-          val content = cur.substring(i + 1, close)
-          // classify by the preceding token
-          var p = i - 1
-          while (p >= 0 && cur.charAt(p).isWhitespace) p -= 1
-          val prevC = if (p >= 0) cur.charAt(p) else ' '
-          val isValueChar = prevC == ')' || prevC == ']' || prevC == '`' ||
-            Character.isJavaIdentifierPart(prevC)
-          // a bare identifier that is a keyword opens a literal, not a
-          // subscript; ARRAY additionally gets consumed
-          var primaryStart = -1
-          if (isValueChar) {
-            var s = p
-            if (prevC == ')' || prevC == ']') {
-              // balanced backward scan over the group (quote-aware)
-              val openCh = if (prevC == ')') '(' else '['
-              val closeCh = prevC
-              var d = 0
-              var k = p
-              var done = false
-              while (k >= 0 && !done) {
-                val ck = cur.charAt(k)
-                if (ck == '\'') { k -= 1; while (k >= 0 && cur.charAt(k) != '\'') k -= 1 }
-                else if (ck == closeCh) d += 1
-                else if (ck == openCh) { d -= 1; if (d == 0) done = true }
-                k -= 1
-              }
-              s = k
-              // function name / qualifier chain before the group
-              while (s >= 0 && (Character.isJavaIdentifierPart(cur.charAt(s)) ||
-                cur.charAt(s) == '.')) s -= 1
-              primaryStart = s + 1
-            } else {
-              while (s >= 0 && (Character.isJavaIdentifierPart(cur.charAt(s)) ||
-                cur.charAt(s) == '.' || cur.charAt(s) == '`')) s -= 1
-              primaryStart = s + 1
-            }
-            val primary = cur.substring(primaryStart, p + 1)
+        val open = toks(k)
+        val content = cur.substring(open.end, toks(close).start)
+        val colon = (k + 1 until close)
+          .find(j => toks(j).depth == open.depth + 1 && toks(j).is(':'))
+        // classify by the preceding token: a value's first token (a group
+        // plus the function name / qualifier chain before it) subscripts;
+        // a bare keyword, like anything else, opens a literal
+        val prev = toks.lastIndexWhere(_.kind != Comment, k - 1)
+        val primaryStart =
+          if (prev < 0 || !isValue(toks(prev))) None
+          else {
+            var s = if (toks(prev).is(')') || toks(prev).is(']')) math.max(openOf(toks, prev), 0)
+              else prev
+            while (s > 0 && isNamePart(toks(s - 1)) && toks(s - 1).end == toks(s).start) s -= 1
+            val primary = cur.substring(toks(s).start, toks(prev).end)
             if (identRe.findFirstIn(primary).isDefined &&
-                bracketKeywords.contains(primary.toUpperCase))
-              primaryStart = -1 // keyword → literal
+                bracketKeywords.contains(primary.toUpperCase)) None
+            else Some(toks(s).start)
           }
-          if (primaryStart >= 0 && content.trim.isEmpty && colonPos < 0) {
-            i = close + 1 // `x[]`: not a subscript (unmapped type syntax etc.)
-          } else if (primaryStart >= 0) {
-            val primary = cur.substring(primaryStart, p + 1)
-            val text =
-              if (colonPos < 0)
-                s"try_element_at($primary, ${content.trim})"
-              else {
-                val a = cur.substring(i + 1, colonPos).trim
-                val b = cur.substring(colonPos + 1, close).trim
+        primaryStart match {
+          case Some(_) if content.trim.isEmpty && colon.isEmpty =>
+            k = close + 1 // `x[]`: not a subscript (unmapped type syntax etc.)
+          case Some(ps) =>
+            val primary = cur.substring(ps, toks(prev).end)
+            val text = colon match {
+              case None => s"try_element_at($primary, ${content.trim})"
+              case Some(c) =>
+                val a = cur.substring(open.end, toks(c).start).trim
+                val b = cur.substring(toks(c).end, toks(close).start).trim
                 (a.nonEmpty, b.nonEmpty) match {
                   case (true, true)  => s"slice($primary, $a, ($b) - ($a) + 1)"
                   case (true, false) => s"slice($primary, $a, size($primary))"
                   case (false, true) => s"slice($primary, 1, $b)"
                   case _             => primary
                 }
-              }
-            cur = cur.substring(0, primaryStart) + text + cur.substring(close + 1)
-            i = primaryStart + text.length
-            guard += 1
-          } else {
-            // literal: consume a preceding ARRAY keyword if present
-            var litStart = i
-            if (p >= 4 && cur.regionMatches(true, p - 4, "ARRAY", 0, 5) &&
-                (p == 4 || !Character.isJavaIdentifierPart(cur.charAt(p - 5))))
-              litStart = p - 4
-            cur = cur.substring(0, litStart) + "array(" + content + ")" +
-              cur.substring(close + 1)
-            i = litStart + "array(".length // re-scan content for nesting
-            guard += 1
-          }
+            }
+            splice(ps, toks(close).end, text, ps + text.length)
+          case None =>
+            // literal: consume a preceding ARRAY keyword if present, then
+            // re-scan the content for nesting
+            val litStart = if (prev >= 0 && toks(prev).isWord("ARRAY")) toks(prev).start else open.start
+            splice(litStart, toks(close).end, "array(" + content + ")", litStart + "array(".length)
         }
       }
     }
@@ -1810,19 +1622,17 @@ object DialectShim {
     * semantics — `UNION [ALL] BY NAME` → `UNION ALL`, `COLUMNS(…)` → `*`.
     */
   def parseNormalize(st: String): String = {
-    val noByName = unionByNameRe.replaceAllIn(st, "UNION ALL")
-    var cur = noByName
+    var cur = replaceInCode(st, unionByNameRe)(_ => "UNION ALL")
     var guard = 0
-    var m = columnsCallRe.findFirstMatchIn(cur)
+    var m = codeMatches(cur, columnsCallRe).headOption.map(_._1)
     while (m.isDefined && guard < 20) {
-      val open = m.get.end - 1
-      cur = parseArgs(cur, open) match {
+      cur = callArgs(cur, m.get.end - 1) match {
         case Some((_, after)) =>
           cur.substring(0, m.get.start) + "*" + cur.substring(after)
         case None => return cur // unbalanced; let the parse fail as-is
       }
       guard += 1
-      m = columnsCallRe.findFirstMatchIn(cur)
+      m = codeMatches(cur, columnsCallRe).headOption.map(_._1)
     }
     cur
   }
@@ -1856,7 +1666,7 @@ object DialectShim {
     // FROM-statements as record-producing — reference prefix-rule parity.
     val afterFromFirst =
       if (fromFirstRe.findFirstIn(afterMacros).isDefined &&
-          topLevelKeyword(afterMacros, "SELECT", 0) < 0)
+          topWords(afterMacros, "SELECT").isEmpty)
         "SELECT * " + afterMacros.trim
       else afterMacros
     // UNION BY NAME next: each arm re-enters the full shim recursively, so
@@ -1881,27 +1691,20 @@ object DialectShim {
     // FROM-clause scan on original text)
     val afterTableFns = rewriteTableFns(afterComp)
     val afterListFns = rewriteListFnTemplates(afterTableFns)
-    val afterList = readFnList.replaceAllIn(afterListFns, m => {
+    val afterList = replaceInCode(afterListFns, readFnList) { m =>
       val fmt = fmtOf(m.group(1))
       val paths = pathLit.findAllMatchIn(m.group(2)).map(_.group(1)).toSeq
-      val rewritten =
-        if (paths.isEmpty) m.matched // malformed; let execution report it
-        else if (paths.size == 1) s"$fmt.`${paths.head}`"
-        else paths.map(p => s"SELECT * FROM $fmt.`$p`")
-          .mkString("(", " UNION ALL ", ")")
-      java.util.regex.Matcher.quoteReplacement(rewritten)
-    })
+      if (paths.isEmpty) m.group // malformed; let execution report it
+      else if (paths.size == 1) s"$fmt.`${paths.head}`"
+      else paths.map(p => s"SELECT * FROM $fmt.`$p`").mkString("(", " UNION ALL ", ")")
+    }
     val afterKwargs = spark match {
       case None => afterList
-      case Some(s) => readFnKwargs.replaceAllIn(afterList, m => {
-        java.util.regex.Matcher.quoteReplacement(
-          rewriteKwargCall(s, m.group(1), m.group(2), m.group(3))
-            .getOrElse(m.matched))
-      })
+      case Some(s) => replaceInCode(afterList, readFnKwargs)(m =>
+        rewriteKwargCall(s, m.group(1), m.group(2), m.group(3)).getOrElse(m.group))
     }
-    val afterRead = readFn.replaceAllIn(afterKwargs, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"${fmtOf(m.group(1))}.`${m.group(2)}`"))
+    val afterRead = replaceInCode(afterKwargs, readFn)(m =>
+      s"${fmtOf(m.group(1))}.`${m.group(2)}`")
     // structs AFTER read_* so a columns={…} schema dict reaches the kwarg
     // rewriter intact; brackets after both (the read list-path form and
     // names=[…] own their brackets, comprehension `for` brackets are gone)
@@ -1909,119 +1712,17 @@ object DialectShim {
     val afterBrackets = rewriteBrackets(afterStructs)
     // string_split/strftime carry their own quoted literal, so (like
     // read_*) they anchor on it and run against the full statement
-    val afterSplit = stringSplitFn.replaceAllIn(afterBrackets, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        s"split(${m.group(1)}, '${regexEscapeForSqlLiteral(m.group(2))}')"))
-    val afterStrftime = strftimeFn.replaceAllIn(afterSplit, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        translateStrftime(m.group(2))
-          .map(p => s"date_format(${m.group(1)}, '$p')")
-          .getOrElse(m.matched)))
+    val afterSplit = replaceInCode(afterBrackets, stringSplitFn)(m =>
+      s"split(${m.group(1)}, '${regexEscapeForSqlLiteral(m.group(2))}')")
+    val afterStrftime = replaceInCode(afterSplit, strftimeFn)(m =>
+      translateStrftime(m.group(2)).map(p => s"date_format(${m.group(1)}, '$p')")
+        .getOrElse(m.group))
     // strptime is strftime's parse-direction twin: same %-code table,
     // same only-fully-translatable contract
-    val afterStrptime = strptimeFn.replaceAllIn(afterStrftime, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        translateStrftime(m.group(2))
-          .map(p => s"to_timestamp(${m.group(1)}, '$p')")
-          .getOrElse(m.matched)))
-    replaceOutsideLiterals(afterStrptime)
-  }
-
-  // --- DuckDB QUALIFY ----------------------------------------------------
-  // `SELECT <sel> FROM <mid> QUALIFY <pred> [<tail>]` — Spark has no
-  // QUALIFY clause, so it rewrites to a subquery + WHERE:
-  //   - pred contains a raw window fn (`OVER`): the predicate is injected
-  //     as a boolean column INSIDE the subquery (windows are legal in a
-  //     select list, never in WHERE) and filtered outside —
-  //       SELECT * EXCEPT (__qualify) FROM
-  //         (SELECT <sel>, (<pred>) AS __qualify FROM <mid>) __graft_q
-  //       WHERE __qualify [<tail>]
-  //   - otherwise pred references select-list aliases: plain wrap —
-  //       SELECT * FROM (SELECT <sel> FROM <mid>) __graft_q
-  //       WHERE <pred> [<tail>]
-  // Catalyst collapses the adjacent projections, and a filter on a
-  // non-window alias is pushed back below the subquery boundary — the
-  // rewritten plan is the plan QUALIFY describes, with no extra exchange.
-  // Nested occurrences (in subqueries/CTEs) are handled innermost-span
-  // first; each pass eliminates one QUALIFY.
-
-  /** Depth-0 positions of word-bounded, case-insensitive `word` in `sql`,
-    * ignoring single-quoted literals. Depth is measured from `sql`'s start.
-    */
-  private def keywordPositions(sql: String, word: String): Seq[(Int, Int)] = {
-    val out = Seq.newBuilder[(Int, Int)]
-    var i = 0; var depth = 0
-    val n = sql.length; val w = word.length
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        var j = i + 1
-        while (j < n && sql.charAt(j) != '\'') j += 1
-        i = j + 1
-      } else if (c == '`') {
-        // a backtick-quoted identifier named after a keyword (`qualify`,
-        // `order`, …) is DATA, not clause structure
-        var j = i + 1
-        while (j < n && sql.charAt(j) != '`') j += 1
-        i = j + 1
-      } else {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (sql.regionMatches(true, i, word, 0, w) &&
-            (i == 0 || !Character.isJavaIdentifierPart(sql.charAt(i - 1))) &&
-            (i + w >= n || !Character.isJavaIdentifierPart(sql.charAt(i + w)))) {
-          out += ((i, depth)); i += w - 1
-        }
-        i += 1
-      }
-    }
-    out.result()
-  }
-
-  /** Paren depth at `pos`, literal-aware, measured from `sql`'s start;
-    * None when `pos` sits INSIDE a string literal (rewrites must skip it).
-    */
-  private def depthAt(sql: String, pos: Int): Option[Int] = {
-    var i = 0; var depth = 0
-    while (i < pos) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        val litEnd = {
-          var j = i + 1
-          while (j < sql.length && sql.charAt(j) != '\'') j += 1
-          j
-        }
-        if (pos <= litEnd) return None
-        i = litEnd
-      }
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      i += 1
-    }
-    Some(depth)
-  }
-
-  /** Innermost paren span strictly containing `pos`: (openIdx, closeIdx). */
-  private def innermostSpan(sql: String, pos: Int): (Int, Int) = {
-    var i = 0; var stack = List.empty[Int]
-    while (i < pos) {
-      val c = sql.charAt(i)
-      if (c == '\'') { i += 1; while (i < sql.length && sql.charAt(i) != '\'') i += 1 }
-      else if (c == '(') stack ::= i
-      else if (c == ')') stack = stack.tail
-      i += 1
-    }
-    val open = stack.head
-    var d = 0; var close = open
-    var found = false
-    while (!found && close < sql.length) {
-      val c = sql.charAt(close)
-      if (c == '\'') { close += 1; while (close < sql.length && sql.charAt(close) != '\'') close += 1 }
-      else if (c == '(') d += 1
-      else if (c == ')') { d -= 1; if (d == 0) found = true }
-      if (!found) close += 1
-    }
-    (open, close)
+    val afterStrptime = replaceInCode(afterStrftime, strptimeFn)(m =>
+      translateStrftime(m.group(2)).map(p => s"to_timestamp(${m.group(1)}, '$p')")
+        .getOrElse(m.group))
+    mapCode(afterStrptime)(rewriteFunctions)
   }
 
   // --- DuckDB SELECT DISTINCT ON ----------------------------------------
@@ -2042,73 +1743,27 @@ object DialectShim {
       "DISTINCT ON: unsupported form (" + detail + "); supported: " +
         "`SELECT DISTINCT ON (keys) cols FROM … [ORDER BY …] [LIMIT …]`")
 
-  private def rewriteDistinctOn(sql: String): String = {
-    var cur = sql
-    var guard = 0
-    var go = true
-    while (go) {
-      guard += 1
-      if (guard > 20) unsupportedDistinctOn("rewrite did not converge")
-      // literal-aware: a match inside a string literal is not a clause
-      distinctOnRe.findAllMatchIn(cur)
-        .flatMap(m => depthAt(cur, m.start).map(d => (m, d)))
-        .to(LazyList).headOption match {
-        case None => go = false
-        case Some((_, 0)) => cur = transformDistinctOn(cur)
-        case Some((m, _)) =>
-          val (open, close) = innermostSpan(cur, m.start)
-          cur = cur.substring(0, open + 1) +
-            transformDistinctOn(cur.substring(open + 1, close)) +
-            cur.substring(close)
-      }
-    }
-    cur
-  }
-
-  /** Split on commas at paren depth 0, literal-aware. */
-  private def splitTopLevel(text: String): Seq[String] = {
-    val out = Seq.newBuilder[String]; val cur = new StringBuilder
-    var i = 0; var depth = 0; var inLit = false
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (inLit) { cur.append(c); if (c == '\'') inLit = false }
-      else c match {
-        case '\''              => inLit = true; cur.append(c)
-        case '('               => depth += 1; cur.append(c)
-        case ')'               => depth -= 1; cur.append(c)
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case _                 => cur.append(c)
-      }
-      i += 1
-    }
-    out += cur.toString
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
+  private def rewriteDistinctOn(sql: String): String =
+    rewriteInGroups(sql, distinctOnRe, unsupportedDistinctOn)(transformDistinctOn)
 
   /** Rewrite the (single) depth-0 DISTINCT ON in `text`. */
   private def transformDistinctOn(text: String): String = {
-    val m = distinctOnRe.findAllMatchIn(text)
-      .find(mm => depthAt(text, mm.start).contains(0))
+    val m = codeMatches(text, distinctOnRe).collectFirst { case (mm, 0) => mm }
       .getOrElse(return text)
-    val open = m.end - 1
-    val (keys, afterKeys) = parseArgs(text, open) match {
+    val (keys, afterKeys) = callArgs(text, m.end - 1) match {
       case Some((args, idx)) if args.nonEmpty => (args.mkString(", "), idx)
       case _ => unsupportedDistinctOn("unparseable key list")
     }
     val rest = text.substring(afterKeys)
-    val fromPos = keywordPositions(rest, "FROM")
-      .collectFirst { case (p, 0) => p }
+    val fromPos = topWords(rest, "FROM").headOption
       .getOrElse(unsupportedDistinctOn("no FROM clause"))
     val sel = rest.substring(0, fromPos).trim
     val afterFrom = rest.substring(fromPos)
     for (kw <- Seq("UNION", "INTERSECT", "EXCEPT"))
-      if (keywordPositions(afterFrom, kw).exists(_._2 == 0))
+      if (topWords(afterFrom, kw).nonEmpty)
         unsupportedDistinctOn(s"set operator $kw after DISTINCT ON")
-    val ordPos = keywordPositions(afterFrom, "ORDER")
-      .collectFirst { case (p, 0) => p }
-    val tailPos = Seq("LIMIT", "OFFSET")
-      .flatMap(k => keywordPositions(afterFrom, k).collect { case (p, 0) => p })
-      .minOption
+    val ordPos = topWords(afterFrom, "ORDER").headOption
+    val tailPos = Seq("LIMIT", "OFFSET").flatMap(topWords(afterFrom, _)).minOption
     val midEnd = Seq(ordPos, tailPos).flatten.minOption.getOrElse(afterFrom.length)
     val mid = afterFrom.substring(0, midEnd)
     val ordClause = ordPos.map(o =>
@@ -2119,7 +1774,7 @@ object DialectShim {
     // neither ordinals (they become constant literals — silently wrong
     // order) nor select-list aliases (no lateral-alias resolution inside
     // windows). Substitute both from the select list before splicing.
-    val selItems = splitTopLevel(sel)
+    val selItems = splitItems(sel).filter(_.nonEmpty)
     val aliasMap: Map[String, String] = selItems.flatMap(_.trim match {
       case replaceItemRe(e, n) => Some(n.toLowerCase -> e.trim)
       case _                   => None
@@ -2142,7 +1797,7 @@ object DialectShim {
     }
     val winOrder =
       if (ordClause.nonEmpty)
-        splitTopLevel(ordClause.trim.replaceFirst("(?i)^ORDER\\s+BY", "").trim)
+        splitItems(ordClause.trim.replaceFirst("(?i)^ORDER\\s+BY", "").trim).filter(_.nonEmpty)
           .map(resolveOrderItem).mkString(", ")
       else keys
     text.substring(0, m.start) +
@@ -2163,26 +1818,15 @@ object DialectShim {
     * DISTINCT / ',' / '(' / '.'), not multiplication by the replace()
     * FUNCTION (`price * replace(s, ',', '')` must be left alone).
     */
-  private def isProjectionStar(sql: String, starPos: Int): Boolean = {
-    val before = sql.substring(0, starPos).reverse.dropWhile(_.isWhitespace)
-    if (before.isEmpty) return false
-    before.head match {
-      case ',' | '(' | '.' => true
-      case c if Character.isJavaIdentifierPart(c) =>
-        val word = before.takeWhile(Character.isJavaIdentifierPart).reverse
-        Set("SELECT", "DISTINCT", "ALL")(word.toUpperCase)
-      case _ => false
-    }
-  }
+  private def isProjectionStar(sql: String, starPos: Int): Boolean =
+    tokenBefore(sql, starPos).exists(t => t.is(',') || t.is('(') || t.is('.') ||
+      t.kind == Word && Set("SELECT", "DISTINCT", "ALL")(t.text.toUpperCase))
 
   private def rewriteStarReplace(sql: String): String =
-    starReplaceRe.findAllMatchIn(sql)
-      .find(m => depthAt(sql, m.start).isDefined &&
-        isProjectionStar(sql, m.start)) match {
+    codeMatches(sql, starReplaceRe).map(_._1).find(m => isProjectionStar(sql, m.start)) match {
       case None => sql
       case Some(m) =>
-        val open = m.end - 1
-        parseArgs(sql, open) match {
+        callArgs(sql, m.end - 1) match {
           case Some((items, idxAfter)) if items.nonEmpty =>
             val parsed = items.map {
               case replaceItemRe(e, n) => (e.trim, n)
@@ -2211,32 +1855,13 @@ object DialectShim {
   private val usingSampleRe =
     """(?i)USING\s+SAMPLE\s+(\d+(?:\.\d+)?)\s*(%|PERCENT\b|ROWS?\b)?""".r
 
-  private def rewriteUsingSample(sql: String): String = {
-    var cur = sql
-    var guard = 0
-    var go = true
-    while (go) {
-      guard += 1
-      if (guard > 20) throw new IllegalArgumentException(
-        "USING SAMPLE: rewrite did not converge")
-      usingSampleRe.findAllMatchIn(cur)
-        .flatMap(m => depthAt(cur, m.start).map(d => (m, d)))
-        .to(LazyList).headOption match {
-        case None => go = false
-        case Some((m, 0)) => cur = transformUsingSample(cur)
-        case Some((m, _)) =>
-          val (open, close) = innermostSpan(cur, m.start)
-          cur = cur.substring(0, open + 1) +
-            transformUsingSample(cur.substring(open + 1, close)) +
-            cur.substring(close)
-      }
-    }
-    cur
-  }
+  private def rewriteUsingSample(sql: String): String =
+    rewriteInGroups(sql, usingSampleRe,
+      detail => throw new IllegalArgumentException(s"USING SAMPLE: $detail"))(
+      transformUsingSample)
 
   private def transformUsingSample(text: String): String = {
-    val m = usingSampleRe.findAllMatchIn(text)
-      .find(mm => depthAt(text, mm.start).contains(0))
+    val m = codeMatches(text, usingSampleRe).collectFirst { case (mm, 0) => mm }
       .getOrElse(return text)
     val unit = Option(m.group(2)).map(_.trim.toUpperCase) match {
       case Some("%") | Some("PERCENT") => "PERCENT"
@@ -2251,32 +1876,34 @@ object DialectShim {
     s"SELECT * FROM ($prefix) TABLESAMPLE (${m.group(1)} $unit)"
   }
 
+  // --- DuckDB QUALIFY ----------------------------------------------------
+  // `SELECT <sel> FROM <mid> QUALIFY <pred> [<tail>]` — Spark has no
+  // QUALIFY clause, so it rewrites to a subquery + WHERE:
+  //   - pred contains a raw window fn (`OVER`): the predicate is injected
+  //     as a boolean column INSIDE the subquery (windows are legal in a
+  //     select list, never in WHERE) and filtered outside —
+  //       SELECT * EXCEPT (__qualify) FROM
+  //         (SELECT <sel>, (<pred>) AS __qualify FROM <mid>) __graft_q
+  //       WHERE __qualify [<tail>]
+  //   - otherwise pred references select-list aliases: plain wrap —
+  //       SELECT * FROM (SELECT <sel> FROM <mid>) __graft_q
+  //       WHERE <pred> [<tail>]
+  // Catalyst collapses the adjacent projections, and a filter on a
+  // non-window alias is pushed back below the subquery boundary — the
+  // rewritten plan is the plan QUALIFY describes, with no extra exchange.
+  // Nested occurrences (in subqueries/CTEs) are handled innermost-span
+  // first; each pass eliminates one QUALIFY.
+
   private def unsupportedQualify(detail: String): Nothing =
     throw new IllegalArgumentException(
       "QUALIFY: unsupported form (" + detail + "); supported: " +
         "`SELECT … FROM … QUALIFY <predicate>` (predicate over select-list" +
         " aliases or containing the window expression itself)")
 
-  private def rewriteQualify(sql: String): String = {
-    var cur = sql
-    var guard = 0
-    while (keywordPositions(cur, "QUALIFY").nonEmpty) {
-      guard += 1
-      if (guard > 20) unsupportedQualify("rewrite did not converge")
-      val (pos, depth) = keywordPositions(cur, "QUALIFY").head
-      if (depth == 0) cur = transformQualify(cur)
-      else {
-        // recurse into the innermost enclosing paren span (shared helper —
-        // same walk rewriteDistinctOn/rewriteUsingSample use)
-        val (open, close) = innermostSpan(cur, pos)
-        if (close >= cur.length) unsupportedQualify("unbalanced parentheses")
-        cur = cur.substring(0, open + 1) +
-          transformQualify(cur.substring(open + 1, close)) +
-          cur.substring(close)
-      }
-    }
-    cur
-  }
+  private val qualifyRe = """(?i)\bQUALIFY\b""".r
+
+  private def rewriteQualify(sql: String): String =
+    rewriteInGroups(sql, qualifyRe, unsupportedQualify)(transformQualify)
 
   private val qualifyTailKeywords =
     Seq("ORDER", "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT")
@@ -2285,19 +1912,12 @@ object DialectShim {
     * comment for the two output shapes.
     */
   private def transformQualify(text: String): String = {
-    val qPos = keywordPositions(text, "QUALIFY")
-      .collectFirst { case (p, 0) => p }
-      .getOrElse(return text)
-    val selPos = keywordPositions(text, "SELECT")
-      .collect { case (p, 0) if p < qPos => p }
+    val qPos = topWords(text, "QUALIFY").headOption.getOrElse(return text)
+    val selPos = topWords(text, "SELECT").filter(_ < qPos)
       .lastOption.getOrElse(unsupportedQualify("no owning SELECT"))
-    val fromPos = keywordPositions(text, "FROM")
-      .collectFirst { case (p, 0) if p > selPos && p < qPos => p }
+    val fromPos = topWords(text, "FROM").find(p => p > selPos && p < qPos)
       .getOrElse(unsupportedQualify("no FROM clause"))
-    val predEnd = qualifyTailKeywords
-      .flatMap(k => keywordPositions(text, k).collect {
-        case (p, 0) if p > qPos => p
-      })
+    val predEnd = qualifyTailKeywords.flatMap(topWords(text, _).filter(_ > qPos))
       .minOption.getOrElse(text.length)
     val prefix = text.substring(0, selPos)
     val selList = text.substring(selPos + "SELECT".length, fromPos).trim
@@ -2305,7 +1925,7 @@ object DialectShim {
     val pred = text.substring(qPos + "QUALIFY".length, predEnd).trim
     val tail = text.substring(predEnd)
     if (pred.isEmpty) unsupportedQualify("empty predicate")
-    val hasWindow = keywordPositions(pred, "OVER").nonEmpty
+    val hasWindow = words(pred, "OVER").nonEmpty
     // DuckDB lets the QUALIFY window reference select-list ALIASES
     // (`SELECT x AS s … QUALIFY row_number() OVER (ORDER BY s) <= k`);
     // Spark rejects a lateral alias inside a window, so when the
@@ -2314,7 +1934,7 @@ object DialectShim {
     // conditional: the one-level shape stays for predicates over raw
     // columns, which may reference mid-scope columns (table-qualified or
     // unprojected) the inner projection would hide.
-    val aliasNames = splitTopLevel(selList).flatMap(item =>
+    val aliasNames = splitItems(selList).filter(_.nonEmpty).flatMap(item =>
       qualifySelAliasRe.findFirstMatchIn(item).map(_.group(1)))
     // a bare occurrence of the alias name only: `t.b` is a QUALIFIED
     // column of mid scope (the '.' boundary would otherwise match alias
@@ -2329,50 +1949,26 @@ object DialectShim {
     // decided from the neighboring tokens: a direction word after an
     // expression is the keyword; after `BY`/`,`/`(`/an operator it is a
     // column reference.
-    def isIdentChar(c: Char): Boolean = c == '_' || Character.isLetterOrDigit(c)
-    def tokenBefore(p: Int): String = {
-      var i = p - 1
-      while (i >= 0 && Character.isWhitespace(pred.charAt(i))) i -= 1
-      if (i < 0) ""
-      else if (isIdentChar(pred.charAt(i))) {
-        val e = i
-        while (i >= 0 && isIdentChar(pred.charAt(i))) i -= 1
-        pred.substring(i + 1, e + 1)
-      } else pred.charAt(i).toString
-    }
-    def tokenAfter(j0: Int): String = {
-      var j = j0
-      while (j < pred.length && Character.isWhitespace(pred.charAt(j))) j += 1
-      if (j >= pred.length) ""
-      else if (isIdentChar(pred.charAt(j))) {
-        val s = j
-        while (j < pred.length && isIdentChar(pred.charAt(j))) j += 1
-        pred.substring(s, j)
-      } else pred.charAt(j).toString
-    }
+    val predToks = lex(pred).filter(_.kind != Comment)
+    def textAt(k: Int): String = predToks.lift(k).fold("")(_.text.toLowerCase)
     val refPredecessors = Set("(", ",", "by", "where", "and", "or", "not",
       "when", "then", "else", "on", "in", "=", "<", ">", "+", "-", "*",
       "/", "%", "|")
-    def isKeywordUse(a: String, p: Int, j: Int): Boolean =
+    def isKeywordUse(a: String, k: Int): Boolean =
       a.toLowerCase match {
-        case "asc" | "desc" =>
-          !refPredecessors(tokenBefore(p).toLowerCase)
-        case "first" | "last" =>
-          Set("nulls", "ignore", "respect")(tokenBefore(p).toLowerCase)
-        case "nulls" =>
-          Set("first", "last")(tokenAfter(j).toLowerCase)
+        case "asc" | "desc" => !refPredecessors(textAt(k - 1))
+        case "first" | "last" => Set("nulls", "ignore", "respect")(textAt(k - 1))
+        case "nulls" => Set("first", "last")(textAt(k + 1))
         case "rows" | "range" | "groups" =>
-          Set("between", "unbounded", "current")(tokenAfter(j).toLowerCase)
+          Set("between", "unbounded", "current")(textAt(k + 1))
         case _ => false
       }
     def bareRef(a: String): Boolean =
-      keywordPositions(pred, a).exists { case (p, _) =>
-        val before = p > 0 && pred.charAt(p - 1) == '.'
-        var j = p + a.length
-        while (j < pred.length && Character.isWhitespace(pred.charAt(j))) j += 1
-        val after = j < pred.length &&
-          (pred.charAt(j) == '.' || pred.charAt(j) == '(')
-        !before && !after && !isKeywordUse(a, p, j)
+      predToks.indices.exists { k =>
+        val t = predToks(k)
+        val before = k > 0 && predToks(k - 1).is('.') && predToks(k - 1).end == t.start
+        val after = predToks.lift(k + 1).exists(n => n.is('.') || n.is('('))
+        t.isWord(a) && !before && !after && !isKeywordUse(a, k)
       }
     val predUsesAlias = aliasNames.exists(bareRef)
     val rewritten =
@@ -2420,22 +2016,33 @@ object DialectShim {
         "`ASOF [LEFT] JOIN <rel> [alias] ON <equi conds AND one ts inequality>`")
 
   private def rewriteAsof(sql: String): String =
-    // skip matches inside string literals (odd quote count before the
-    // match) and keep looking — a literal mentioning ASOF JOIN must not
-    // shadow a real one later in the statement
-    asofRe.findAllMatchIn(sql)
-      .find(m => sql.take(m.start).count(_ == '\'') % 2 == 0) match {
+    // a literal mentioning ASOF JOIN must not shadow a real one later on
+    codeMatches(sql, asofRe).headOption match {
       case None => sql
-      case Some(m) =>
+      case Some((m, _)) =>
         val isLeft = m.group(1) != null
-        val (rel, alias, afterRel) = parseAsofRelation(sql, m.end)
-        val onEnd = {
-          var k = afterRel
-          while (k < sql.length && Character.isWhitespace(sql.charAt(k))) k += 1
-          if (!sql.regionMatches(true, k, "ON", 0, 2)) unsupportedAsof("missing ON")
-          k + 2
+        val toks = lex(sql).filter(t => t.start >= m.end && t.kind != Comment)
+        // the right relation: a table name or parenthesized subquery, then
+        // an optional [AS] alias (a bare table name is its own alias)
+        val (source, afterRel) = sourceAt(sql, toks, 0, unsupportedAsof)
+        val rel = pivotSrcSql(source)
+        val k = if (toks.lift(afterRel).exists(_.isWord("AS"))) afterRel + 1 else afterRel
+        val (alias, onIdx) = toks.lift(k) match {
+          case Some(t) if t.kind == Word && !t.isWord("ON") => (t.text, k + 1)
+          case _ if source.isLeft =>
+            (rel.split('.').last.stripPrefix("`").stripSuffix("`"), k)
+          case _ => unsupportedAsof("subquery right side needs an alias")
         }
-        val (cond, end) = scanAsofCondition(sql, onEnd)
+        if (!toks.lift(onIdx).exists(_.isWord("ON"))) unsupportedAsof("missing ON")
+        // the condition runs to the next clause keyword at the ON's depth,
+        // an unbalanced ')', or the statement end
+        val on = toks(onIdx)
+        val end = toks.indexWhere(t => t.depth < on.depth || t.depth == on.depth &&
+          t.kind == Word && asofTerminators(t.text.toUpperCase), onIdx + 1) match {
+          case -1 => sql.length
+          case i  => toks(i).start
+        }
+        val cond = sql.substring(on.end, end).trim
         val (orderExpr, desc) = asofOrdering(cond, alias)
         val dir = if (desc) "DESC" else "ASC"
         val sub = s"(SELECT * FROM $rel AS $alias WHERE $cond " +
@@ -2448,95 +2055,18 @@ object DialectShim {
         rewriteAsof(sql.substring(0, m.start) + joined + sep + sql.substring(end))
     }
 
-  /** Parse the right relation after `ASOF … JOIN`: a parenthesized
-    * subquery or a table name, plus optional [AS] alias. Returns
-    * (relationText, alias, indexAfter).
-    */
-  private def parseAsofRelation(sql: String, from: Int): (String, String, Int) = {
-    var i = from
-    while (i < sql.length && Character.isWhitespace(sql.charAt(i))) i += 1
-    val (rel, afterRel) =
-      if (i < sql.length && sql.charAt(i) == '(') {
-        parseArgs(sql, i) match { // reuse the balanced scan; rejoin args
-          case Some((_, end)) => (sql.substring(i, end), end)
-          case None           => unsupportedAsof("unbalanced subquery parens")
-        }
-      } else {
-        var j = i
-        while (j < sql.length &&
-          (Character.isJavaIdentifierPart(sql.charAt(j)) ||
-            sql.charAt(j) == '.' || sql.charAt(j) == '`')) j += 1
-        if (j == i) unsupportedAsof("missing right relation")
-        (sql.substring(i, j), j)
-      }
-    var k = afterRel
-    while (k < sql.length && Character.isWhitespace(sql.charAt(k))) k += 1
-    // optional AS
-    if (sql.regionMatches(true, k, "AS", 0, 2) && k + 2 < sql.length &&
-        !Character.isJavaIdentifierPart(sql.charAt(k + 2))) {
-      k += 2
-      while (k < sql.length && Character.isWhitespace(sql.charAt(k))) k += 1
-    }
-    var a = k
-    while (a < sql.length && Character.isJavaIdentifierPart(sql.charAt(a))) a += 1
-    val tok = sql.substring(k, a)
-    if (tok.nonEmpty && !tok.equalsIgnoreCase("ON")) (rel, tok, a)
-    else if (!rel.startsWith("(")) // bare table, no alias: table name IS the alias
-      (rel, rel.split('.').last.stripPrefix("`").stripSuffix("`"), k)
-    else unsupportedAsof("subquery right side needs an alias")
-  }
-
-  /** Condition text from `from` to the next top-level clause keyword /
-    * unbalanced ')' / statement end. Literal-aware.
-    */
-  private def scanAsofCondition(sql: String, from: Int): (String, Int) = {
-    var i = from; var depth = 0; var inLit = false
-    var end = sql.length
-    var done = false
-    while (i < sql.length && !done) {
-      val c = sql.charAt(i)
-      if (inLit) { if (c == '\'') inLit = false; i += 1 }
-      else if (c == '\'') { inLit = true; i += 1 }
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') {
-        if (depth == 0) { end = i; done = true } else { depth -= 1; i += 1 }
-      } else if (depth == 0 && Character.isJavaIdentifierStart(c)) {
-        var j = i
-        while (j < sql.length && Character.isJavaIdentifierPart(sql.charAt(j))) j += 1
-        if (asofTerminators(sql.substring(i, j).toUpperCase)) { end = i; done = true }
-        else i = j
-      } else i += 1
-    }
-    (sql.substring(from, end).trim, end)
-  }
-
   /** Find the single top-level ts inequality in the ON condition and
     * derive the subquery ordering: the operand referencing the right
     * alias is the sort key; direction picks the closest right row on the
     * correct side (e.g. `l.ts >= r.ts` → max r.ts ≤ l.ts → DESC).
     */
   private def asofOrdering(cond: String, alias: String): (String, Boolean) = {
-    // split on top-level ANDs (literal- and paren-aware)
-    val conjuncts = Seq.newBuilder[String]
-    var i = 0; var depth = 0; var inLit = false; var start = 0
-    while (i < cond.length) {
-      val c = cond.charAt(i)
-      if (inLit) { if (c == '\'') inLit = false; i += 1 }
-      else if (c == '\'') { inLit = true; i += 1 }
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (depth == 0 && Character.isJavaIdentifierStart(c)) {
-        var j = i
-        while (j < cond.length && Character.isJavaIdentifierPart(cond.charAt(j))) j += 1
-        if (cond.substring(i, j).equalsIgnoreCase("AND")) {
-          conjuncts += cond.substring(start, i); start = j
-        }
-        i = j
-      } else i += 1
-    }
-    conjuncts += cond.substring(start)
+    // split on top-level ANDs
+    val ands = words(cond, "AND").filter(_.depth == 0)
+    val conjuncts = (0 +: ands.map(_.end)).zip(ands.map(_.start) :+ cond.length)
+      .map { case (a, b) => cond.substring(a, b) }
     val cmp = """(?s)^(.*?)(>=|<=|>|<)(.*)$""".r
-    val ineqs = conjuncts.result().map(_.trim).flatMap {
+    val ineqs = conjuncts.map(_.trim).flatMap {
       // exclude `<>` (matches as `<` + r starting with `>`)
       case cmp(l, op, r) if !r.startsWith("=") && !r.startsWith(">") =>
         Some((l.trim, op, r.trim))
@@ -2580,36 +2110,22 @@ object DialectShim {
     val kwarg = """(?i)\s*([a-z_]+)\s*=\s*(?:'([^']*)'|([^,\s]+))\s*""".r
     val listKwarg = """(?is)^\s*([a-z_]+)\s*=\s*\[(.*)\]\s*$""".r
     val dictKwarg = """(?is)^\s*([a-z_]+)\s*=\s*\{(.*)\}\s*$""".r
-    // quote/bracket/brace-aware comma split: delim=',' is the most common
-    // CSV kwarg, and names=[…]/columns={…} carry their own commas
-    val pieces = {
-      val out = Seq.newBuilder[String]; val cur = new StringBuilder
-      var inQ = false; var depth = 0
-      kwargText.foreach { c =>
-        if (inQ) { cur.append(c); if (c == '\'') inQ = false }
-        else if (c == '\'') { inQ = true; cur.append(c) }
-        else if (c == '[' || c == '{') { depth += 1; cur.append(c) }
-        else if (c == ']' || c == '}') { depth -= 1; cur.append(c) }
-        else if (c == ',' && depth == 0) { out += cur.toString; cur.clear() }
-        else cur.append(c)
-      }
-      out += cur.toString
-      out.result()
-    }
+    // delim=',' is the most common CSV kwarg, and names=[…]/columns={…}
+    // carry their own commas: split at top-level commas only
+    val pieces = splitItems(kwargText)
     var names: Option[Seq[String]] = None
     var schemaDdl: Option[String] = None
-    val quoted = """^\s*'([^']*)'\s*$""".r
     val parsed = pieces.map {
       case listKwarg(k, inner) if k.equalsIgnoreCase("names") =>
-        val items = inner.split(",").toSeq.map(_.trim)
-        if (items.forall(quoted.findFirstIn(_).isDefined)) {
-          names = Some(items.map { case quoted(n) => n })
+        val items = splitItems(inner).map(strLiteral)
+        if (items.forall(_.isDefined)) {
+          names = Some(items.flatten)
           Some(None) // consumed, contributes no reader option
         } else None
       case dictKwarg(k, inner) if k.equalsIgnoreCase("columns") =>
         // {'name': 'TYPE', …} → Spark DDL schema "name TYPE, …"
         val pairRe = """^\s*'([^']*)'\s*:\s*'([^']*)'\s*$""".r
-        val cols = inner.split(",").toSeq.map {
+        val cols = splitItems(inner).map {
           case pairRe(n, t) =>
             duckTypeMap.get(t.trim.toUpperCase).map(st => s"`$n` $st")
           case _ => None
@@ -2656,23 +2172,6 @@ object DialectShim {
     Some(name)
   }
 
-  private def replaceOutsideLiterals(sql: String): String = {
-    var inSingle = false
-    val result = new StringBuilder
-    val segs = Seq.newBuilder[(String, Boolean)] // (text, isLiteral)
-    val cur = new StringBuilder
-    sql.foreach { c =>
-      if (inSingle) { cur.append(c); if (c == '\'') { segs += ((cur.toString, true)); cur.clear(); inSingle = false } }
-      else if (c == '\'') { segs += ((cur.toString, false)); cur.clear(); cur.append(c); inSingle = true }
-      else cur.append(c)
-    }
-    segs += ((cur.toString, inSingle))
-    segs.result().foreach { case (text, isLit) =>
-      result.append(if (isLit) text else rewriteFunctions(text))
-    }
-    result.toString
-  }
-
   // DuckDB `* EXCLUDE (a, b)` / `* EXCLUDE a` → Spark `* EXCEPT (a, b)`.
   // Anchored on the preceding `*` so the EXCEPT set operator (and any
   // column named exclude) is never touched.
@@ -2683,12 +2182,8 @@ object DialectShim {
     val counted = bareCount.replaceAllIn(sql, "count(*)")
     val excluded = starExcludeBare.replaceAllIn(
       starExcludeParen.replaceAllIn(counted, "$1EXCEPT ("), "$1EXCEPT ($2)")
-    val renamed = fnRenames.foldLeft(excluded) { case (s, (re, repl)) =>
+    fnRenames.foldLeft(excluded) { case (s, (re, repl)) =>
       re.replaceAllIn(s, java.util.regex.Matcher.quoteReplacement(repl))
     }
-    // string_split spans the literal-segment boundary (its separator IS a
-    // literal), so it is handled on the full statement in rewriteImpl —
-    // nothing to do here.
-    renamed
   }
 }

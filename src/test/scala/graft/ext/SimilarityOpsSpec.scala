@@ -161,9 +161,9 @@ class SimilarityOpsSpec extends AnyFunSuite {
       .drop("label")
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.mkString(",")).sorted.toSeq
-    // tools/KnnAb asserts this on the ScaleGen corpora before timing;
-    // pinning it here keeps the equivalence under CI when either form
-    // is refactored
+    // the SCALING.md "r9 (second pass)" A/B asserted this on the ScaleGen
+    // corpora before timing; pinning it here keeps the equivalence under
+    // CI when either form is refactored
     assert(canon(SimilarityOps.knnGraphScoreOnce(e, k = 3)) ==
       canon(SimilarityOps.knnGraphPerCollision(e, k = 3)))
     assert(canon(SimilarityOps.lshNearDupPairsScoreOnce(e, minSim = 0.3)) ==

@@ -13,11 +13,13 @@ import org.scalacheck.{Gen, Prop, Properties, Test}
   * execution reproduces exactly that result, for hundreds of random
   * compositions the hand-picked DialectShimSpec cases can't enumerate.
   * A second property extends the existing idempotence guarantee
-  * (rewrite∘rewrite = rewrite) over the same generated corpus.
+  * (rewrite∘rewrite = rewrite) over the same generated corpus, and a third
+  * places DuckDB idioms inside quoted tokens and comments next to it: those
+  * bytes must come out unchanged.
   */
 object DialectShimProps extends Properties("DialectShimDiff") {
 
-  // 250 × 2 properties = 500 generated cases per run
+  // 250 × 3 properties = 750 generated cases per run
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(250)
 
@@ -293,5 +295,41 @@ object DialectShimProps extends Properties("DialectShimDiff") {
     Prop.forAll(stmtGen) { st =>
       val once = DialectShim.rewrite(st.sql)
       DialectShim.rewrite(once) == once
+    }
+
+  // --- quoting rule ------------------------------------------------------
+  /** DuckDB idioms as raw text (an apostrophe included), to be quoted or
+    * commented out.
+    */
+  private val idiomText: Gen[String] = Gen.oneOf(
+    selectItem.map(_.sql),
+    Gen.oneOf("count()", "arr[1]", "l[2:3]", "INT[]", "* EXCLUDE (a)",
+      "* REPLACE (a AS b)", "QUALIFY rn = 1", "USING SAMPLE 10%",
+      "ASOF JOIN p ON a >= b", "SELECT DISTINCT ON (k) k", "UNION ALL BY NAME",
+      "COLUMNS('x')", "read_parquet('a.parquet')", "[x for x in xs]",
+      "{'a': 1}", "it's"))
+
+  /** The idiom inside '…', "…", `…`, a line comment or a block comment. */
+  private val quotedSpan: Gen[String] = for {
+    t    <- idiomText
+    form <- Gen.choose(0, 4)
+  } yield form match {
+    case 0 => "'" + t.replace("'", "''") + "'"
+    case 1 => "\"" + t + "\""
+    case 2 => "`" + t + "`"
+    case 3 => "-- " + t + "\n"
+    case _ => "/* " + t + " */"
+  }
+
+  property("bytes inside quoted tokens and comments are never rewritten") =
+    Prop.forAll(stmtGen, quotedSpan) { (st, span) =>
+      // quoted spans become a select item, comments sit before the list
+      val at = st.sql.indexOf("SELECT ") + "SELECT ".length
+      val item = if (span.startsWith("-") || span.startsWith("/")) span + " "
+        else span + " AS q, "
+      val out = DialectShim.rewrite(st.sql.substring(0, at) + item + st.sql.substring(at))
+      val ok = out.contains(span)
+      if (!ok) println(s"REWROTE QUOTED SPAN\n  span: $span\n  out: $out")
+      ok
     }
 }

@@ -160,6 +160,23 @@ class DialectShimSpec extends AnyFunSuite {
     // a backtick-quoted identifier named `qualify` is not a QUALIFY clause
     val bq = "SELECT a AS `qualify` FROM t"
     assert(DialectShim.rewrite(bq) == bq)
+    // "…" and `…` tokens and comments are data as well
+    Seq("SELECT a AS `count()` FROM t",
+        "SELECT a AS \"count()\" FROM t",
+        "SELECT \"list_contains(x)\" AS s",
+        "SELECT \"[1, 2]\" AS s",
+        "SELECT \"QUALIFY\" AS s FROM t",
+        "SELECT x /* list_contains(a) QUALIFY */ FROM t")
+      .foreach(q => assert(DialectShim.rewrite(q) == q, q))
+    assert(DialectShim.rewrite("SELECT \"* EXCLUDE (v)\" AS s, * EXCLUDE (v) FROM t") ==
+      "SELECT \"* EXCLUDE (v)\" AS s, * EXCEPT (v) FROM t")
+    // an apostrophe inside a comment opens no literal: the subscript after
+    // it is still DuckDB's 1-based one
+    assert(DialectShim.rewrite("SELECT x FROM t -- it's\nWHERE l[1] = 2") ==
+      "SELECT x FROM t -- it's\nWHERE try_element_at(l, 1) = 2")
+    // a backtick-quoted identifier containing `[` subscripts as a whole
+    assert(DialectShim.rewrite("SELECT `c[1]`[2] FROM t") ==
+      "SELECT try_element_at(`c[1]`, 2) FROM t")
   }
 
   test("1:1 function renames apply outside string literals only") {
@@ -988,6 +1005,8 @@ class DialectShimSpec extends AnyFunSuite {
       "SELECT try_cast(s AS INT) AS i FROM nat_t",
       "SELECT string_agg(s, ',') AS agg FROM nat_t",
       "SELECT listagg(s, ',') AS agg FROM nat_t",
+      // printf is Spark's own alias of format_string
+      "SELECT printf('%d-%s', k, s) AS p FROM nat_t",
       "VALUES (1, 2), (3, 4)")
     natives.foreach { q =>
       assert(DialectShim.rewrite(q) == q, s"shim must pass through: $q")
@@ -1233,9 +1252,7 @@ class DialectShimSpec extends AnyFunSuite {
     // untranslatable codes stay verbatim
     val bad = "SELECT strptime(s, '%a %Y') FROM t"
     assert(DialectShim.rewrite(bad) == bad)
-    // printf / starts_with / ends_with renames
-    assert(DialectShim.rewrite("SELECT printf('%d-%s', a, b) FROM t") ==
-      "SELECT format_string('%d-%s', a, b) FROM t")
+    // starts_with / ends_with renames
     assert(DialectShim.rewrite("SELECT starts_with(s, 'x'), ends_with(s, 'y') FROM t") ==
       "SELECT startswith(s, 'x'), endswith(s, 'y') FROM t")
     // json_extract_string with a $-rooted path
@@ -1395,6 +1412,69 @@ class DialectShimSpec extends AnyFunSuite {
       assert(DialectShim.rewrite(once, spark) == once,
         s"not idempotent (session) for `$q`:\n 1st: $once")
     }
+  }
+
+  test("every rewrite family is needed: Spark 4 rejects its raw DuckDB form") {
+    val spark = graft.SparkTestSession.spark
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW nec_t AS SELECT id AS k, " +
+      "id * 2 AS v, array(id, id + 1) AS l, CAST(id AS STRING) AS s, " +
+      "TIMESTAMP '2024-01-01 00:00:00' AS ts, '{\"a\": 1}' AS j FROM range(3)")
+    DialectShim.rewrite("CREATE MACRO nec_inc(x) AS x + 1", spark)
+    // one raw form per family; bare `FROM nec_t` runs natively (pipe
+    // syntax), so FROM-first is pinned with a WHERE
+    val raws = Seq(
+      "SELECT nec_inc(k) FROM nec_t",
+      "FROM nec_t WHERE k > 1",
+      "SELECT k FROM nec_t UNION ALL BY NAME SELECT k FROM nec_t",
+      "SELECT COLUMNS('k') FROM nec_t",
+      "PIVOT nec_t ON k IN (1, 2) USING sum(v)",
+      "UNPIVOT nec_t ON k, v",
+      "SELECT * FROM nec_t a ASOF JOIN nec_t b ON a.k = b.k AND a.v >= b.v",
+      "SELECT k FROM nec_t QUALIFY row_number() OVER (ORDER BY k) = 1",
+      "SELECT DISTINCT ON (k) k, v FROM nec_t",
+      "SELECT * FROM nec_t USING SAMPLE 1",
+      "SELECT * REPLACE (v + 1 AS v) FROM nec_t",
+      "SELECT [x * 2 for x in l] FROM nec_t",
+      "SELECT * FROM generate_series(1, 3)",
+      "SELECT unnest(l) FROM nec_t",
+      "SELECT list_reverse_sort(l) FROM nec_t",
+      "SELECT list_unique(l) FROM nec_t",
+      "SELECT epoch(ts) FROM nec_t",
+      "SELECT list_element(l, 1) FROM nec_t",
+      "SELECT list_slice(l, 1, 2) FROM nec_t",
+      "SELECT date_diff('day', ts, ts) FROM nec_t",
+      "SELECT format('{}', k) FROM nec_t",
+      "SELECT json_extract_string(j, '$.a') FROM nec_t",
+      "SELECT * FROM read_parquet('nec.parquet')",
+      "SELECT struct_pack(a := 1)",
+      "SELECT {'a': 1}",
+      "SELECT [1, 2]",
+      "SELECT CAST(l AS INT[]) FROM nec_t",
+      "SELECT string_split(s, ',') FROM nec_t",
+      "SELECT strftime(ts, '%Y') FROM nec_t",
+      "SELECT strptime(s, '%Y') FROM nec_t",
+      "SELECT count() FROM nec_t",
+      "SELECT * EXCLUDE (k) FROM nec_t") ++
+      // every 1:1 rename
+      Seq("list_contains(l, 1)", "list_has_any(l, l)", "regexp_matches(s, '1')",
+        "epoch_ms(ts)", "list_transform(l, x -> x)", "list_filter(l, x -> x > 0)",
+        "list_value(k, v)", "list_append(l, 1)", "array_length(l)",
+        "array_to_string(l, ',')", "starts_with(s, '1')", "ends_with(s, '1')",
+        "list_sort(l)", "arg_max(k, v)", "argmax(k, v)", "arg_min(k, v)",
+        "argmin(k, v)").map(e => s"SELECT $e FROM nec_t")
+    raws.foreach { q =>
+      assert(DialectShim.rewrite(q, spark) != q, s"the shim must rewrite: $q")
+      withClue(s"Spark must reject: $q")(intercept[Exception](spark.sql(q).collect()))
+    }
+    // subscripts and 3-arg regexp_replace parse natively, with other
+    // semantics: Spark's subscript is 0-based and its replace is global
+    val sub = "SELECT l[1] AS e FROM nec_t WHERE k = 0"
+    assert(spark.sql(sub).head.getLong(0) == 1L)
+    assert(spark.sql(DialectShim.rewrite(sub)).head.getLong(0) == 0L)
+    graft.functions.GraftExtensions.register(spark)
+    val rr = "SELECT regexp_replace('aaa', 'a', 'b') AS r"
+    assert(spark.sql(rr).head.getString(0) == "bbb")
+    assert(spark.sql(DialectShim.rewrite(rr)).head.getString(0) == "baa")
   }
 
   test("literal/multiplication guards: shims leave lookalikes alone") {

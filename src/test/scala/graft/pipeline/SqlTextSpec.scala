@@ -35,6 +35,28 @@ class SqlTextSpec extends AnyFunSuite {
       Seq("""SELECT "x;y" FROM t""", "SET a=1"))
   }
 
+  test("lex: quoted tokens, comments, words and punctuation with depths") {
+    val sql = "SELECT f(a[1], 'it''s') -- x;y\n/* z */ `b c` \"d\"\"e\""
+    val toks = SqlText.lex(sql)
+    assert(toks.map(_.text) == Seq("SELECT", "f", "(", "a", "[", "1", "]", ",",
+      "'it''s'", ")", "-- x;y", "/* z */", "`b c`", "\"d\"\"e\""))
+    assert(toks.map(_.depth) == Seq(0, 0, 0, 1, 1, 2, 1, 1, 1, 0, 0, 0, 0, 0))
+    assert(toks.map(_.kind) == Seq(SqlText.Word, SqlText.Word, SqlText.Punct,
+      SqlText.Word, SqlText.Punct, SqlText.Word, SqlText.Punct, SqlText.Punct,
+      SqlText.Str, SqlText.Punct, SqlText.Comment, SqlText.Comment,
+      SqlText.BQuoted, SqlText.DQuoted))
+    // an unterminated quote or block comment runs to the end
+    assert(SqlText.lex("SELECT 'a").last.text == "'a")
+    assert(SqlText.lex("SELECT /* a").last.text == "/* a")
+  }
+
+  test("a ; or apostrophe inside a comment splits nothing") {
+    assert(SqlText.splitStatements("SELECT 1 -- it's; done\n; SELECT 2") ==
+      Seq("SELECT 1 -- it's; done", "SELECT 2"))
+    assert(SqlText.stripComments("SELECT 1 -- it's\n, '--' /* ; */ FROM t") ==
+      "SELECT 1 \n, '--'  FROM t")
+  }
+
   test("record-producing detection matches reference semantics") {
     assert(SqlText.producesRecords("SELECT 1"))
     assert(SqlText.producesRecords("  with x as (select 1) select * from x"))
