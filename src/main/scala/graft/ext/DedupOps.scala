@@ -908,8 +908,8 @@ object DedupOps {
     // the whole recipe above), and the operator reads the manifest once
     // for the histogram and once for the selection — without the cache
     // each read re-runs that lineage (measured 3× the quality pass before
-    // this, BENCH_LOCAL_r13). Only the 4-column manifest is cached
-    // (~24 B/row at any corpus size), the documents themselves never.
+    // this, bench_records/BENCH_LOCAL_r13). Only the 4-column manifest is
+    // cached (~24 B/row at any corpus size), the documents themselves never.
     val m = cachedManifest(docs
       .select(col(idCol).as("__id"), scoreCol.cast("double").as("__s"),
         nTokCol.cast("long").as("__t"))

@@ -277,18 +277,17 @@ final class PipelineSession(
             .map { case (name, _, _, _) => name.toLowerCase -> id })
       }.toMap
     if (macroDefiner.nonEmpty) {
-      def callsIn(src: String): Set[String] = {
-        // string literals can't call macros; drop them before matching
-        val noStrings = src.replaceAll("'[^']*'", "''")
-        SqlText.splitStatements(noStrings).flatMap { st =>
+      def callsIn(src: String): Set[String] =
+        SqlText.splitStatements(src).flatMap { st =>
           val definedHere = (try DialectShim.macroDefinitionAny(st)
             catch { case _: Exception => None }).map(_._1.toLowerCase)
-          macroDefiner.keySet.filter(m =>
-            !definedHere.contains(m) &&
-              s"(?i)\\b${java.util.regex.Pattern.quote(m)}\\s*\\(".r
-                .findFirstIn(st).isDefined)
+          // a call is a word followed by `(`: quoted tokens and comments
+          // never call anything
+          val toks = SqlText.lex(st).filter(_.kind != SqlText.Comment)
+          toks.zip(toks.drop(1)).collect {
+            case (w, p) if w.kind == SqlText.Word && p.is('(') => w.text.toLowerCase
+          }.filter(m => macroDefiner.contains(m) && !definedHere.contains(m))
         }.toSet
-      }
       nodeMap = nodeMap.map { case (id, node) =>
         val defs = callsIn(node.renderedSrc)
           .map(macroDefiner).filter(_ != id)

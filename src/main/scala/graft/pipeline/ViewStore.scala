@@ -114,13 +114,20 @@ object ViewStore {
   // unsynchronized read-modify-write would drop a sibling's entry.
   private def appendEntry(dbPath: String, kind: String, id: String,
                           extra: String = ""): Unit = this.synchronized {
+    val next = entries(dbPath).filterNot(_(1) == id).map(_.mkString("\t")) :+
+      s"$kind\t$id$extra"
+    Files.write(manifest(dbPath), next.asJava)
+  }
+
+  /** The manifest's entries in saved order, split on tabs: kind, id, then
+    * for a bucketed table its bucket count, bucket columns and sort
+    * columns. Lines without an id are skipped.
+    */
+  private def entries(dbPath: String): Seq[Array[String]] = {
     val m = manifest(dbPath)
-    val cur =
-      if (Files.exists(m)) Files.readAllLines(m).asScala.toSeq else Seq.empty
-    def sameId(l: String): Boolean =
-      l.split("\t", -1).lift(1).contains(id)
-    val next = cur.filterNot(sameId) :+ s"$kind\t$id$extra"
-    Files.write(m, next.asJava)
+    if (!Files.exists(m)) Seq.empty
+    else Files.readAllLines(m).asScala.toSeq.map(_.split("\t", -1))
+      .filter(_.length >= 2)
   }
 
   // --- run fingerprints (selective re-execution, `run --changed-only`) ---
@@ -147,16 +154,8 @@ object ViewStore {
     * `--changed-only` preview uses (the preview must not start a
     * session; the RUN decision still asks the live catalog).
     */
-  def manifestTables(dbPath: String): Set[String] = {
-    val m = manifest(dbPath)
-    if (!Files.exists(m)) Set.empty
-    else Files.readAllLines(m).asScala.flatMap { l =>
-      l.split("\t", -1) match {
-        case arr if arr.length >= 2 && arr(0) == "table" => Some(arr(1))
-        case _ => None
-      }
-    }.toSet
-  }
+  def manifestTables(dbPath: String): Set[String] =
+    entries(dbPath).collect { case f if f(0) == "table" => f(1) }.toSet
 
   def loadFingerprints(dbPath: String): Map[String, String] = {
     val f = fingerprintFile(dbPath)
@@ -214,32 +213,28 @@ object ViewStore {
     * an existing db_path). Returns the number restored.
     */
   def restore(spark: SparkSession, dbPath: String): Int = {
-    val m = manifest(dbPath)
-    if (!Files.exists(m)) return 0
     var n = 0
-    Files.readAllLines(m).asScala.foreach { line =>
-      line.split("\t", -1) match {
-        case Array("view", id) =>
-          try {
-            restoreViewEntry(spark, dbPath, id)
-            n += 1
-          } catch { case e: Exception =>
-            println(s"WARNING: could not restore view `$id`: ${e.getMessage}")
+    entries(dbPath).foreach {
+      case Array("view", id) =>
+        try {
+          restoreViewEntry(spark, dbPath, id)
+          n += 1
+        } catch { case e: Exception =>
+          println(s"WARNING: could not restore view `$id`: ${e.getMessage}")
+        }
+      case fields if fields(0) == "table" =>
+        val id = fields(1)
+        try {
+          if (!spark.catalog.tableExists(id)) {
+            // managed-table data written by saveAsTable lives at
+            // <warehouse>/<id>; re-register it as a parquet table
+            restoreTableEntry(spark, fields, warehouseLocation(spark, id))
+            n += 1 // count only tables this call actually registered
           }
-        case fields if fields.length >= 2 && fields(0) == "table" =>
-          val id = fields(1)
-          try {
-            if (!spark.catalog.tableExists(id)) {
-              // managed-table data written by saveAsTable lives at
-              // <warehouse>/<id>; re-register it as a parquet table
-              restoreTableEntry(spark, fields, warehouseLocation(spark, id))
-              n += 1 // count only tables this call actually registered
-            }
-          } catch { case e: Exception =>
-            println(s"WARNING: could not restore table `$id`: ${e.getMessage}")
-          }
-        case _ => ()
-      }
+        } catch { case e: Exception =>
+          println(s"WARNING: could not restore table `$id`: ${e.getMessage}")
+        }
+      case _ => ()
     }
     n
   }
@@ -256,14 +251,10 @@ object ViewStore {
     */
   def restoreDeferred(spark: SparkSession, stateDir: String,
                       ids: Set[String]): (Seq[String], Set[String]) = {
-    val m = manifest(stateDir)
-    val entries =
-      if (!Files.exists(m)) Seq.empty
-      else Files.readAllLines(m).asScala.toSeq
-        .map(_.split("\t", -1)).filter(_.length >= 2)
-    val inState = entries.map(_(1)).toSet
+    val state = entries(stateDir)
+    val inState = state.map(_(1)).toSet
     var missing = ids -- inState
-    val restored = entries.flatMap {
+    val restored = state.flatMap {
       case fields if ids(fields(1)) =>
         val id = fields(1)
         try {
@@ -308,16 +299,12 @@ object ViewStore {
                      ids: Option[Set[String]],
                      fullRefresh: Boolean = false)
       : (Seq[String], Seq[String], Set[String]) = {
-    val m = manifest(stateDir)
-    val entries =
-      if (!Files.exists(m)) Seq.empty
-      else Files.readAllLines(m).asScala.toSeq
-        .map(_.split("\t", -1)).filter(_.length >= 2)
-    val inState = entries.map(_(1)).toSet
+    val state = entries(stateDir)
+    val inState = state.map(_(1)).toSet
     val wanted = ids.getOrElse(inState)
     var missing = wanted -- inState
     val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cloned = entries.flatMap {
+    val cloned = state.flatMap {
       case fields if wanted(fields(1)) =>
         val id = fields(1)
         try {

@@ -1250,6 +1250,26 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(spark.table("bucket_counts").count() > 0)
   }
 
+  test("a macro name in a quoted token or comment is not a call") {
+    // `uses` never calls fmt: the name sits in a backtick identifier, a
+    // "…" string and a comment. An edge uses→defs would close the cycle
+    // with defs' FROM uses.
+    val (_, config) = fixture(models = Map(
+      "defs" ->
+        """CREATE MACRO fmt(x) AS upper(x);
+          |SELECT fmt(s) AS s FROM uses""".stripMargin,
+      "uses" ->
+        """SELECT 'a' AS s, 1 AS `fmt(x)`, "fmt(y)" AS q -- fmt(z)
+          |""".stripMargin))
+    val session = new PipelineSession(spark, config)
+    val (order, nodeMap) = session.buildGraph()
+    assert(nodeMap("uses").prevs.isEmpty)
+    assert(order.indexOf("uses") < order.indexOf("defs"))
+    val report = session.runNodes()
+    assert(report.errors.isEmpty, report.errors.map(_.render))
+    assert(spark.table("defs").head.getString(0) == "A")
+  }
+
   test("uppercase model ids keep their dependency edges") {
     // dep extraction lowercases (Spark resolution is case-insensitive);
     // edges must map back to the original-case ids or they vanish

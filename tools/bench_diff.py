@@ -4,40 +4,48 @@
     python3 tools/bench_diff.py OLD NEW [--threshold 1.5]
 
 Accepts either bench format:
-  - the durable record Bench.scala writes (SPARK_GRAFT_BENCH_OUT /
-    /tmp/graft_bench.json): one JSON object with a "queries" map — when the
-    file holds several JSON lines (append mode), the LAST parseable line
-    wins;
-  - a driver BENCH_rN.json whose "tail" field carries a (possibly
+  - the record graft.Bench appends to SPARK_GRAFT_BENCH_OUT (default
+    bench_records/bench_full.jsonl): one JSON line per run with a
+    "queries" map; the LAST parseable line wins, so a file of appended
+    runs reads as its newest run;
+  - an old driver BENCH_rN.json whose "tail" field carries a (possibly
     truncated) stdout capture: per-query times are recovered with a regex,
     so a record that lost its head still contributes every surviving time.
 
-Machine-drift normalization: Bench.scala also times a pinned, parquet-free
-calibration workload and records it as "calibration". When BOTH records
-carry it, the drift ratio (cal_new/cal_old) is divided out of every mover
-and of the shared-query total, and movers whose drift-adjusted ratio falls
-back inside the threshold are labeled "explained by machine drift" — the
-r6→r7 adjudication showed same-code totals swing ~1.9x on environment
-alone, so a raw ratio without this control is not evidence of a code
-regression.
+Machine-drift normalization: graft.Bench times two pinned workloads that no
+code change touches, "calibration" (a scalar hash loop) and
+"calibration_shuffle" (a shuffle + hash-aggregate job, the regime the suite
+runs in). The drift ratio is new/old of calibration_shuffle when BOTH
+records carry it, else of calibration; the report names the one it used.
+The ratio is divided out of every mover and of the shared-query total, and
+movers whose drift-adjusted ratio falls back inside the threshold are
+labeled "explained by machine drift": same-code totals have swung ~1.9x on
+environment alone, so a raw ratio without this control is not evidence of
+a code regression. The two calibrations can disagree by ~2x between the
+same pair of records. Compare records with equal "cpus": both calibrations
+split over that many partitions.
 
 Movers are queries whose new/old ratio is >= threshold or <= 1/threshold.
 Sub-second queries swing up to 3.5x between identical-code runs on this
 workload (see Bench.scala), so the report marks movers whose BOTH times
 are < 1s as inside the noise band — adjudicate those with a quiet re-run
-before touching code. Exit code is always 0: this is a triage report, not
-a gate.
+before touching code: re-time just the suspects with
+    SPARK_GRAFT_ONLY=<name,name,...> sbt "runMain graft.Bench"
+and diff the new record. Exit code is always 0: this is a triage report,
+not a gate.
 """
 import json
 import re
 import sys
 
 TIME_RE = re.compile(r'"(q\w+)":([0-9][0-9.eE+-]*)')
-CAL_RE = re.compile(r'"calibration":([0-9][0-9.eE+-]*)')
+# preferred first: the drift ratio uses the first one both records carry
+CALIBRATIONS = ("calibration_shuffle", "calibration")
+CAL_RES = {k: re.compile(f'"{k}":([0-9][0-9.eE+-]*)') for k in CALIBRATIONS}
 
 
 def load_record(path):
-    """Return (times: dict, calibration: float|None)."""
+    """Return (times: dict, calibrations: dict name -> seconds)."""
     with open(path) as f:
         text = f.read()
     # durable format: last parseable JSON line with a "queries" map
@@ -50,10 +58,10 @@ def load_record(path):
             continue
         qs = obj.get("queries")
         if isinstance(qs, dict):
-            cal = obj.get("calibration")
             return ({k: v for k, v in qs.items()
                      if isinstance(v, (int, float))},
-                    cal if isinstance(cal, (int, float)) else None)
+                    {k: obj[k] for k in CALIBRATIONS
+                     if isinstance(obj.get(k), (int, float)) and obj[k] > 0})
     # driver format: whole file is one JSON object with a "tail" capture
     try:
         obj = json.loads(text)
@@ -61,8 +69,9 @@ def load_record(path):
     except ValueError:
         blob = text
     times = {name: float(sec) for name, sec in TIME_RE.findall(blob)}
-    m = CAL_RE.search(blob)
-    return times, (float(m.group(1)) if m else None)
+    cals = {k: float(m.group(1)) for k, r in CAL_RES.items()
+            for m in [r.search(blob)] if m and float(m.group(1)) > 0}
+    return times, cals
 
 
 def main():
@@ -83,14 +92,14 @@ def main():
         i += 1
     if len(args) != 2:
         sys.exit(__doc__)
-    (old, cal_old), (new, cal_new) = load_record(args[0]), load_record(args[1])
+    (old, cals_old), (new, cals_new) = load_record(args[0]), load_record(args[1])
     shared = sorted(set(old) & set(new))
     only_old = sorted(set(old) - set(new))
     only_new = sorted(set(new) - set(old))
 
-    drift = None
-    if cal_old and cal_new and cal_old > 0:
-        drift = cal_new / cal_old
+    cal = next((k for k in CALIBRATIONS if k in cals_old and k in cals_new),
+               None)
+    drift = cals_new[cal] / cals_old[cal] if cal else None
 
     movers = []
     for q in shared:
@@ -116,16 +125,16 @@ def main():
     print(f"shared-query total: {t_old:.2f}s -> {t_new:.2f}s "
           f"({t_new / t_old:.3f}x)" if t_old else "no shared queries")
     if drift:
-        print(f"calibration: {cal_old:.3f}s -> {cal_new:.3f}s "
+        print(f"{cal}: {cals_old[cal]:.3f}s -> {cals_new[cal]:.3f}s "
               f"(machine drift {drift:.2f}x)")
         if t_old:
             print(f"drift-normalized total: {t_old:.2f}s -> "
                   f"{t_new / drift:.2f}s ({t_new / t_old / drift:.3f}x)")
     else:
-        missing = [p for p, c in ((args[0], cal_old), (args[1], cal_new))
-                   if not c]
-        print(f"calibration: absent in {', '.join(missing)} — raw ratios "
-              "include any machine drift")
+        print(f"calibration: no common calibration in {args[0]} "
+              f"({', '.join(cals_old) or 'none'}) and {args[1]} "
+              f"({', '.join(cals_new) or 'none'}) — raw ratios include any "
+              "machine drift")
     if only_new:
         print(f"new queries: {', '.join(only_new)}")
     if only_old:
