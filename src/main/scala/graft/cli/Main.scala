@@ -482,8 +482,7 @@ object Main {
         if (flags.contains("changed-only")) session.previewSkips(order, nodeMap)
         else Set.empty[String]
       runOrder.zipWithIndex.foreach { case (id, i) =>
-        val mat = nodeMap(id).materialize.getOrElse("view").toLowerCase
-        val info = s"${i + 1} of ${runOrder.size}: $id $mat model"
+        val info = s"${i + 1} of ${runOrder.size}: $id ${nodeMap(id).mat} model"
         val tail = if (skips(id)) "[would SKIP unchanged]" else "[would RUN]"
         println(info + "." * math.max(0, 80 - info.length) + tail)
       }

@@ -53,24 +53,24 @@ object DocsGen {
       val colJson = cols.getOrElse(Nil).map { case (c, t) =>
         s"""{"name":${jstr(c)},"type":${jstr(t)}}"""
       }.mkString("[", ",", "]")
-      val freshness = n.freshness.map { f =>
+      val freshness = n.cfg.freshness.map { f =>
         s"""{"warn_after_seconds":${f.warnAfterSeconds.getOrElse(-1L)},""" +
           s""""error_after_seconds":${f.errorAfterSeconds.getOrElse(-1L)}}"""
       }.getOrElse("null")
       s"""{"id":${jstr(id)},
          |"path":${jstr(n.path)},
-         |"materialize":${jstr(n.materialize.getOrElse("view"))},
+         |"materialize":${jstr(n.cfg.materialize.getOrElse("view"))},
          |"materialized":${cols.isDefined},
-         |"unique_key":${n.uniqueKey.fold("null")(jstr)},
-         |"incremental_strategy":${n.incrementalStrategy.fold("null")(jstr)},
-         |"partition_by":${n.partitionBy.fold("null")(jstr)},
-         |"on_schema_change":${n.onSchemaChange.fold("null")(jstr)},
-         |"tags":${jarr(n.tags)},
+         |"unique_key":${n.cfg.uniqueKey.fold("null")(jstr)},
+         |"incremental_strategy":${n.cfg.incrementalStrategy.fold("null")(jstr)},
+         |"partition_by":${n.cfg.partitionBy.fold("null")(jstr)},
+         |"on_schema_change":${n.cfg.onSchemaChange.fold("null")(jstr)},
+         |"tags":${jarr(n.cfg.tags)},
          |"depends_on":${jarr(n.prevs.toSeq.sorted)},
          |"referenced_by":${jarr(n.nexts.toSeq.sorted)},
-         |"tests":${jarr(n.tests.map(_.describe))},
-         |"pre_hooks":${jarr(n.preHooks)},
-         |"post_hooks":${jarr(n.postHooks)},
+         |"tests":${jarr(n.cfg.tests.map(_.describe))},
+         |"pre_hooks":${jarr(n.cfg.preHooks)},
+         |"post_hooks":${jarr(n.cfg.postHooks)},
          |"freshness":$freshness,
          |"columns":$colJson}""".stripMargin.replace("\n", "")
     }
@@ -134,17 +134,17 @@ object DocsGen {
     order.foreach { id =>
       val n = nodeMap(id)
       sb ++= s"\n## $id\n\n"
-      sb ++= s"- **materialize**: ${n.materialize.getOrElse("view")}"
-      n.uniqueKey.foreach(k => sb ++= s" (unique_key: `$k`)")
-      n.incrementalStrategy.foreach(s => sb ++= s" [strategy: $s]")
+      sb ++= s"- **materialize**: ${n.cfg.materialize.getOrElse("view")}"
+      n.cfg.uniqueKey.foreach(k => sb ++= s" (unique_key: `$k`)")
+      n.cfg.incrementalStrategy.foreach(s => sb ++= s" [strategy: $s]")
       sb ++= "\n"
       if (n.prevs.nonEmpty)
         sb ++= s"- **depends on**: ${n.prevs.toSeq.sorted.map("`" + _ + "`").mkString(", ")}\n"
-      if (n.tags.nonEmpty)
-        sb ++= s"- **tags**: ${n.tags.mkString(", ")}\n"
-      if (n.tests.nonEmpty)
-        sb ++= s"- **tests**: ${n.tests.map("`" + _.describe + "`").mkString(", ")}\n"
-      n.freshness.foreach { f =>
+      if (n.cfg.tags.nonEmpty)
+        sb ++= s"- **tags**: ${n.cfg.tags.mkString(", ")}\n"
+      if (n.cfg.tests.nonEmpty)
+        sb ++= s"- **tests**: ${n.cfg.tests.map("`" + _.describe + "`").mkString(", ")}\n"
+      n.cfg.freshness.foreach { f =>
         sb ++= s"- **freshness**: warn>" +
           s"${f.warnAfterSeconds.fold("-")(_.toString)}s, error>" +
           s"${f.errorAfterSeconds.fold("-")(_.toString)}s\n"

@@ -7,17 +7,15 @@ package graft.pipeline
   * @param id           filename stem; directory ignored (src/session.rs:87-92)
   * @param path         source file path (diagnostics)
   * @param rawSrc       file contents as read
-  * @param renderedSrc  after comment-strip + macro render + dialect shim
+  * @param renderedSrc  after comment-strip, var/incremental-context render
+  *                     and macro render; NOT shimmed (the dialect shim
+  *                     runs per statement when the node executes)
   * @param prevs        model ids this node reads FROM
   * @param nexts        model ids that read this node
-  * @param materialize  None/"view" → temp view; "table" → saved table;
-  *                      "incremental" → saved table merged by uniqueKey
-  *                      on later runs
-  * @param uniqueKey    merge key for `materialize: incremental` — fresh
-  *                      rows replace existing rows with the same key;
-  *                      absent = append-only
-  * @param tests        data tests run against the materialized result
-  *                      right after the model executes
+  * @param cfg          the model's `models.<id>` config: `materialize`
+  *                     (None/"view" → temp view; "table" → saved table;
+  *                     "incremental" → saved table merged on later runs;
+  *                     "snapshot" → SCD2 history table), tests, hooks …
   */
 final case class ModelNode(
     id: String,
@@ -26,22 +24,7 @@ final case class ModelNode(
     renderedSrc: String = "",
     prevs: Set[String] = Set.empty,
     nexts: Set[String] = Set.empty,
-    materialize: Option[String] = None,
-    uniqueKey: Option[String] = None,
-    tests: Seq[ModelTest] = Nil,
-    tags: Seq[String] = Nil,
-    incrementalStrategy: Option[String] = None,
-    partitionBy: Option[String] = None,
-    eventTime: Option[String] = None,
-    batchSize: Option[String] = None,
-    lookback: Option[Int] = None,
-    snapshotStrategy: Option[String] = None,
-    updatedAt: Option[String] = None,
-    onSchemaChange: Option[String] = None,
-    preHooks: Seq[String] = Nil,
-    postHooks: Seq[String] = Nil,
-    freshness: Option[Freshness] = None,
-    invalidateHardDeletes: Boolean = false,
-    unitTests: Seq[UnitTest] = Nil,
-    contract: Boolean = false,
-    contractColumns: Seq[ContractColumn] = Nil)
+    cfg: ModelConfig = ModelConfig()) {
+  /** The materialization, lowercased; None = view. */
+  def mat: String = cfg.materialize.getOrElse("view").toLowerCase
+}

@@ -339,6 +339,13 @@ object PipelineConfig {
                   mv != null => mv.toString }
             case _ => None
           }
+          def bool(name: String): Option[Boolean] =
+            field(name).map(v => v.toLowerCase match {
+              case "true" => true
+              case "false" => false
+              case _ => throw GenericError(
+                s"models.$id.$name: expected true|false, got `$v`")
+            })
           def list(name: String): Seq[String] = v match {
             case vm: java.util.Map[_, _] =>
               vm.asScala.collectFirst {
@@ -519,8 +526,8 @@ object PipelineConfig {
             postHooks = hookList("post_hook", "post-hook"),
             freshness = freshness,
             invalidateHardDeletes =
-              field("invalidate_hard_deletes").exists(_.toBoolean),
-            enabled = field("enabled").forall(_.toBoolean),
+              bool("invalidate_hard_deletes").getOrElse(false),
+            enabled = bool("enabled").getOrElse(true),
             unitTests = unitTests,
             contract = contract,
             contractColumns = contractColumns)

@@ -68,10 +68,9 @@ final class PipelineSession(
     * just the first violation. Only populated under `buildMode`;
     * synchronized because --parallel appends from pool threads.
     */
-  private val testLedger =
-    scala.collection.mutable.ArrayBuffer
-      .empty[(String, String, Option[GraftError], Boolean)]
-  def collectedTests: Seq[(String, String, Option[GraftError], Boolean)] =
+  type TestRow = (String, String, Option[GraftError], Boolean)
+  private val testLedger = mutable.ArrayBuffer.empty[TestRow]
+  def collectedTests: Seq[TestRow] =
     testLedger.synchronized(testLedger.toList)
 
   // --- graph build (src/session.rs:56-181) --------------------------------
@@ -159,28 +158,7 @@ final class PipelineSession(
       println(s"Found model source: $p")
       val raw = Files.readString(p)
       id -> ModelNode(id, p.toString, raw,
-        materialize = config.models.get(id).flatMap(_.materialize),
-        uniqueKey = config.models.get(id).flatMap(_.uniqueKey),
-        tests = config.models.get(id).map(_.tests).getOrElse(Nil),
-        tags = config.models.get(id).map(_.tags).getOrElse(Nil),
-        incrementalStrategy =
-          config.models.get(id).flatMap(_.incrementalStrategy),
-        partitionBy = config.models.get(id).flatMap(_.partitionBy),
-        eventTime = config.models.get(id).flatMap(_.eventTime),
-        batchSize = config.models.get(id).flatMap(_.batchSize),
-        lookback = config.models.get(id).flatMap(_.lookback),
-        snapshotStrategy = config.models.get(id).flatMap(_.snapshotStrategy),
-        updatedAt = config.models.get(id).flatMap(_.updatedAt),
-        onSchemaChange = config.models.get(id).flatMap(_.onSchemaChange),
-        preHooks = config.models.get(id).map(_.preHooks).getOrElse(Nil),
-        postHooks = config.models.get(id).map(_.postHooks).getOrElse(Nil),
-        freshness = config.models.get(id).flatMap(_.freshness),
-        invalidateHardDeletes = config.models.get(id)
-          .exists(_.invalidateHardDeletes),
-        unitTests = config.models.get(id).map(_.unitTests).getOrElse(Nil),
-        contract = config.models.get(id).exists(_.contract),
-        contractColumns = config.models.get(id)
-          .map(_.contractColumns).getOrElse(Nil))
+        cfg = config.models.getOrElse(id, ModelConfig()))
     }.toMap ++ seedPaths.map { p =>
       val fn = p.getFileName.toString
       val id = fn.substring(0, fn.lastIndexOf('.'))
@@ -196,11 +174,11 @@ final class PipelineSession(
           s"statement: $p — rename the seeds directory/file")
       // seeds are tables (dbt semantics); their "SQL" is the synthetic
       // read — header detected like DuckDB's sniffer, types inferred
+      val mc = config.models.getOrElse(id, ModelConfig())
       id -> ModelNode(id, p.toString,
         s"SELECT * FROM read_csv_auto('$p', header=true)",
-        materialize = Some("table"),
-        tests = config.models.get(id).map(_.tests).getOrElse(Nil),
-        tags = config.models.get(id).map(_.tags).getOrElse(Nil))
+        cfg = ModelConfig(materialize = Some("table"), tests = mc.tests,
+          tags = mc.tags))
     }.toMap
 
     // dbt `enabled: false` — the model is dropped from the graph at
@@ -226,8 +204,8 @@ final class PipelineSession(
       val stripped = PipelineSession.renderVars(
         SqlText.stripComments(node.rawSrc), effectiveVars, id)
       val withCtx = PipelineSession.renderIncrementalContext(stripped, id,
-        incremental = node.materialize.map(_.toLowerCase)
-          .contains("incremental") && !fullRefresh && targetTableExists(id))
+        incremental = node.mat == "incremental" && !fullRefresh &&
+          targetTableExists(id))
       val rendered = MacroRenderer.render(withCtx, fileMacros)
       val refs = DepExtractor.modelRefsInModel(rendered,
         modelIds ++ disabledIds)
@@ -248,7 +226,7 @@ final class PipelineSession(
     nodeMap = nodeMap.map { case (id, node) =>
       // severity wrappers don't change WHAT a test reads — unwrap before
       // the edge walk so a warn-level relationships test still orders
-      val relPrevs = node.tests.map(ModelTest.base).collect {
+      val relPrevs = node.cfg.tests.map(ModelTest.base).collect {
         case ModelTest.Relationships(_, to, _) =>
           byLower.getOrElse(to.toLowerCase, throw GenericError(
             s"models.$id.tests: relationships target `$to` is not a " +
@@ -334,16 +312,21 @@ final class PipelineSession(
   }
 
   /** Does the materialization target already exist? Drives the
-    * `is_incremental()` render decision: the live catalog when the
-    * session is up (run path), the db_path manifest on the Spark-free
-    * preview surfaces — the [[previewSkips]] split, same rationale.
+    * `is_incremental()` render decision, the incremental/snapshot
+    * bootstrap and the `--changed-only` table skip: the live catalog when
+    * the session is up (run path), the db_path manifest on the Spark-free
+    * preview surfaces (`viz`, `--dry-run`), which have no session to ask —
+    * so a table dropped behind the manifest's back previews as skippable
+    * but still correctly EXECUTES in the real run.
     */
   private def targetTableExists(id: String): Boolean =
     if (sparkStarted)
       try spark.catalog.tableExists(id)
       catch { case _: Exception => false }
-    else config.dbPath.map(ViewStore.manifestTables)
-      .getOrElse(Set.empty[String])(id)
+    else manifestTables(id)
+  // read once: nothing writes the manifest while the session is Spark-free
+  private lazy val manifestTables: Set[String] =
+    config.dbPath.map(ViewStore.manifestTables).getOrElse(Set.empty[String])
 
   // --- execution (src/session.rs:189-279, src/node.rs:125-207) -------------
 
@@ -360,19 +343,19 @@ final class PipelineSession(
     order.foreach { id =>
       val n = nodeMap(id)
       val own = PipelineSession.md5hex(
-        n.renderedSrc + "\u0000" + n.materialize.getOrElse("view") +
+        n.renderedSrc + "\u0000" + n.cfg.materialize.getOrElse("view") +
           // tests fold in: adding/editing a test must re-execute the
           // model under --changed-only (a skipped model never re-tests);
           // hooks fold in for the same reason (a skipped model would
           // never re-run an added/edited hook's side effects)
-          "\u0000" + n.tests.map(_.describe).mkString(",") +
+          "\u0000" + n.cfg.tests.map(_.describe).mkString(",") +
           // unit tests and contracts fold in for the same reason as
           // data tests: editing mock rows or a declared column must
           // re-execute the model under --changed-only
-          "\u0000" + n.unitTests.map(_.describe).mkString(",") +
-          "\u0000" + (if (n.contract) n.contractColumns
+          "\u0000" + n.cfg.unitTests.map(_.describe).mkString(",") +
+          "\u0000" + (if (n.cfg.contract) n.cfg.contractColumns
             .map(c => s"${c.name}:${c.dataType}").mkString(",") else "") +
-          "\u0000" + (n.preHooks ++ n.postHooks).mkString("\u0000") +
+          "\u0000" + (n.cfg.preHooks ++ n.cfg.postHooks).mkString("\u0000") +
           "\u0000" + sourceDataFp(n.renderedSrc))
       val anc = n.prevs.filter(nodeMap.contains).toSeq.sorted
         .map(p => memo.getOrElse(p, "?"))
@@ -432,26 +415,13 @@ final class PipelineSession(
 
   /** Spark-free `--changed-only` PREVIEW: which nodes WOULD skip if run
     * now — `viz --changed-only` paints these green without starting a
-    * session (the dbt `state:modified` look-before-you-run). Differs
-    * from the live [[skipSet]] in exactly one place: table existence is
-    * read from the db_path manifest instead of the live catalog (no
-    * session to ask), so a table dropped behind the manifest's back
-    * previews as skippable but still correctly EXECUTES in the real run.
+    * session (the dbt `state:modified` look-before-you-run). The live
+    * [[skipSet]] itself: off the run path, [[targetTableExists]] reads
+    * the db_path manifest instead of the catalog.
     */
   def previewSkips(order: Seq[String],
-                   nodeMap: Map[String, ModelNode]): Set[String] = {
-    val closureFps = closureFingerprints(order, nodeMap)
-    val stored = config.dbPath.map(ViewStore.loadFingerprints)
-      .getOrElse(Map.empty)
-    val tables = config.dbPath.map(ViewStore.manifestTables)
-      .getOrElse(Set.empty[String])
-    order.filter { id =>
-      val n = nodeMap(id)
-      stored.get(id).contains(closureFps(id)) &&
-        SqlText.splitStatements(n.renderedSrc).size == 1 &&
-        (n.materialize.map(_.toLowerCase).forall(_ == "view") || tables(id))
-    }.toSet
-  }
+                   nodeMap: Map[String, ModelNode]): Set[String] =
+    skipSet(order, nodeMap, closureFingerprints(order, nodeMap))
 
   /** dbt-style `--select`/`--exclude` resolution against the built graph:
     * each selector is `name` (just that model), `name+` (plus transitive
@@ -505,7 +475,7 @@ final class PipelineSession(
         else if (core.startsWith("tag:")) {
           val tag = core.stripPrefix("tag:")
           val matched = nodeMap.collect {
-            case (id, n) if n.tags.contains(tag) => id
+            case (id, n) if n.cfg.tags.contains(tag) => id
           }.toSet
           if (matched.isEmpty)
             throw GenericError(s"$flag: tag selector '$core' matches no " +
@@ -596,9 +566,7 @@ final class PipelineSession(
         SqlText.splitStatements(n.renderedSrc).size == 1 &&
         // a skipped table must already be materialized (same session,
         // or restored from db_path); otherwise execute
-        (n.materialize.map(_.toLowerCase).forall(_ == "view") ||
-          (try spark.catalog.tableExists(id)
-           catch { case _: Exception => false }))
+        (n.mat == "view" || targetTableExists(id))
     }.toSet
   }
 
@@ -782,8 +750,7 @@ final class PipelineSession(
   private def executeReported(node: ModelNode, nth: Int, total: Int,
       skip: Boolean, forcedStatus: Option[String]): NodeResult = {
     val ts = LocalDateTime.now.format(DateTimeFormatter.ofPattern("HH:mm:ss"))
-    val mat = node.materialize.getOrElse("view").toLowerCase
-    val info = s"$ts  $nth of $total: creating ${node.id} $mat model"
+    val info = s"$ts  $nth of $total: creating ${node.id} ${node.mat} model"
     val header = info + "." * math.max(0, 80 - info.length)
     // --parallel runs this from pool threads; a split
     // print(header)/println(status) pair interleaves across threads and
@@ -797,21 +764,26 @@ final class PipelineSession(
       // performs
       case Some(st) => (st, None)
       case None =>
-        try {
-          val st = if (skip) skipNode(node) else executeNode(node)
-          (st, None)
-        }
-        catch {
-          case e: GraftError => ("ERROR", Some(e))
-          case e: Exception =>
-            ("ERROR", Some(StatementExecutionError(e.getMessage, node.renderedSrc, node.path)))
-        }
+        attempt(node)(if (skip) skipNode(node) else executeNode(node))
+          .fold(e => ("ERROR", Some(e)), st => (st, None))
     }
     val ms = (System.nanoTime() - t0) / 1000000
     val tail = s"[$status in ${formatElapsed(ms)}]"
     if (parallel) println(header + tail) else println(tail)
     NodeResult(node.id, status, ms, err)
   }
+
+  /** Runs `body` for `node`; a failure comes back as the node's error —
+    * a [[GraftError]] as thrown, anything else as a
+    * [[StatementExecutionError]] attributed to the node's source.
+    */
+  private def attempt[A](node: ModelNode)(body: => A): Either[GraftError, A] =
+    try Right(body)
+    catch {
+      case e: GraftError => Left(e)
+      case e: Exception =>
+        Left(StatementExecutionError(e.getMessage, node.renderedSrc, node.path))
+    }
 
   /** `--changed-only` fast path for a fingerprint-unchanged model. A VIEW
     * is re-registered from its (identical) rendered SELECT — pure
@@ -820,7 +792,7 @@ final class PipelineSession(
     * previous run materialized it. The status string is the UX contract.
     */
   private def skipNode(node: ModelNode): String = {
-    if (node.materialize.map(_.toLowerCase).forall(_ == "view")) {
+    if (node.mat == "view") {
       val raw = SqlText.splitStatements(node.renderedSrc).head
       val select = DialectShim.rewrite(raw, spark)
       try {
@@ -886,11 +858,12 @@ final class PipelineSession(
     // BEFORE anything materializes, so a failing unit test gates the
     // node and its downstream exactly like a failing data test while
     // nothing of the broken logic publishes
-    if (buildMode && node.unitTests.nonEmpty) runUnitTestsBuild(node)
+    if (buildMode && node.cfg.unitTests.nonEmpty)
+      gateTests(node, "unit", node.cfg.unitTests.map(unitTestRow(node, _)))
     // freshness gates the node BEFORE any SQL runs: executing a model
     // over data already known stale just materializes the staleness
     checkFreshness(node)
-    runHooks(node.preHooks, "pre-hook")
+    runHooks(node.cfg.preHooks, "pre-hook")
     beforePairs.foreach { case (_, st) => runSide(st) }
 
     val select = rest.head._2
@@ -898,13 +871,13 @@ final class PipelineSession(
     // an enforced contract is checked on EVERY execution path (run,
     // build, incremental, snapshot) against the SELECT's analyzed
     // schema — analysis-only, before the swap publishes anything
-    if (node.contract) checkContract(node, select)
+    if (node.cfg.contract) checkContract(node, select)
     val status = materializeSelect(node, select, rawSelect)
     afterPairs.foreach { case (_, st) => runSide(st) }
     // post-hooks see the materialized model (dbt runs them after the
     // model builds); they run BEFORE the data tests, which must judge
     // the final state including any hook-applied mutation
-    runHooks(node.postHooks, "post-hook")
+    runHooks(node.cfg.postHooks, "post-hook")
     // data tests run against the FINAL materialized result — after the
     // tail side statements, which may mutate it. A violation fails the
     // node like a SQL error: the report names the test and its count,
@@ -1196,7 +1169,7 @@ final class PipelineSession(
     * `warn_after` prints a WARNING and continues.
     */
   private def checkFreshness(node: ModelNode): Unit =
-    node.freshness.foreach { f =>
+    node.cfg.freshness.foreach { f =>
       val rx = """(?i)read_\w+\s*\(\s*['"]([^'"]+)['"]""".r
       val targets = rx.findAllMatchIn(node.renderedSrc).map(_.group(1))
         .toSeq.distinct
@@ -1292,19 +1265,19 @@ final class PipelineSession(
     * build (the parity contract MicrobatchSpec pins bit-for-bit).
     */
   private def microbatchRun(node: ModelNode, select: String): Unit = {
-    val evCol = node.eventTime.getOrElse(throw GenericError(
+    val evCol = node.cfg.eventTime.getOrElse(throw GenericError(
       s"incremental_strategy: microbatch for `${node.id}` requires " +
         s"models.${node.id}.event_time"))
-    val unit = node.batchSize.map(_.toLowerCase).getOrElse("day") match {
+    val unit = node.cfg.batchSize.map(_.toLowerCase).getOrElse("day") match {
       case u @ ("hour" | "day" | "month" | "year") => u.toUpperCase
       case other => throw GenericError(s"models.${node.id}.batch_size: " +
         s"expected hour|day|month|year, got `$other`")
     }
-    val partCol = node.partitionBy.getOrElse(throw GenericError(
+    val partCol = node.cfg.partitionBy.getOrElse(throw GenericError(
       s"incremental_strategy: microbatch for `${node.id}` requires " +
         s"models.${node.id}.partition_by (the batch-aligned partition " +
         "column each window swaps)"))
-    val lookback = node.lookback.getOrElse(1)
+    val lookback = node.cfg.lookback.getOrElse(1)
     if (lookback < 1) throw GenericError(
       s"models.${node.id}.lookback: must be >= 1, got $lookback")
     val fresh0 = spark.sql(select)
@@ -1395,7 +1368,7 @@ final class PipelineSession(
     else {
       val added = fcols.filterNot(tcols.contains)
       val removed = tcols.filterNot(fcols.contains)
-      node.onSchemaChange.map(_.toLowerCase).getOrElse("fail") match {
+      node.cfg.onSchemaChange.map(_.toLowerCase).getOrElse("fail") match {
         case "fail" => throw GenericError(
           s"incremental `${node.id}`: the fresh SELECT's schema drifted " +
             s"from the target table (new columns: " +
@@ -1421,73 +1394,70 @@ final class PipelineSession(
     * semantics mirror dbt's: `not_null` counts null rows, `unique`
     * counts values occurring more than once, `accepted_values` counts
     * non-null rows outside the list (a null is not a value violation —
-    * declare `not_null` alongside when it should be). A `severity: warn`
-    * test's violation PRINTS and continues — the node succeeds and its
-    * fingerprint saves (dbt's warn semantics; the severity rides the
-    * test's describe, so promoting warn→error re-executes the model
-    * under --changed-only).
+    * declare `not_null` alongside when it should be). A warn-only
+    * outcome ([[dataTestRow]]) PRINTS and continues — the node succeeds
+    * and its fingerprint saves (dbt's warn semantics; the severity rides
+    * the test's describe, so promoting warn→error re-executes the model
+    * under --changed-only). `run` stops at the first hard failure and
+    * fails the node with it; `build` runs every test ([[gateTests]]).
     */
   private def runModelTests(node: ModelNode): Unit =
-    if (buildMode) runModelTestsBuild(node)
-    else node.tests.foreach {
-      case ModelTest.Warn(inner) =>
-        // warn downgrades VIOLATIONS only — a test that could not
-        // execute (missing file, typo'd column) fails the node at any
-        // severity, or the declared test would silently test nothing
-        try runModelTest(node, inner, warnSeverity = true)
-        catch {
-          case e: DataTestViolation =>
-            println(s"    WARN  ${node.id}: " +
-              PipelineSession.firstLine(e) +
-              " (severity: warn — not failing the node)")
-          case e: DataTestWarning =>
-            println(s"    WARN  ${node.id}: " +
-              PipelineSession.firstLine(e))
-        }
-      case t =>
-        // a warn_if-level result reports without failing the node at
-        // ANY severity (dbt's threshold semantics)
-        try runModelTest(node, t)
-        catch { case e: DataTestWarning =>
-          println(s"    WARN  ${node.id}: " +
-            PipelineSession.firstLine(e) +
-            " (warn_if — not failing the node)")
-        }
+    if (buildMode)
+      gateTests(node, "data", node.cfg.tests.map(dataTestRow(node, _)))
+    else node.cfg.tests.foreach { t =>
+      dataTestRow(node, t) match {
+        case (_, _, Some(e), false) => throw e
+        case (_, _, Some(e), true) =>
+          println(s"    WARN  ${node.id}: ${PipelineSession.firstLine(e)} " +
+            (e match {
+              case _: DataTestViolation => "(severity: warn — not failing the node)"
+              case _ => "(warn_if — not failing the node)"
+            }))
+        case _ => ()
+      }
     }
 
-  /** `graft build`'s test pass over a just-materialized node: EVERY
-    * declared test runs (dbt treats each test as its own DAG node —
-    * one violation must not shadow the next test's result), each
-    * outcome lands in the [[testLedger]], warn-severity violations and
-    * warn_if-level counts report without gating, and any HARD failure
-    * (error-severity violation or a test that could not execute)
-    * fails the node afterwards — so the downstream `SKIP upstream
-    * failed` / fingerprint-drop machinery fires exactly as for a SQL
-    * error, which is dbt build's test-gates-downstream semantics.
+  /** One data test's outcome row (model id, test description, failure,
+    * warn-only) — the one classification `run`, `build` and `test`
+    * share. `severity: warn` downgrades VIOLATIONS only: a warn test that
+    * could not execute (missing file, typo'd column) is a hard failure,
+    * or the declared test would silently test nothing. A warn_if-level
+    * result ([[DataTestWarning]]) is warn-only at ANY severity (dbt's
+    * threshold semantics). Only the severity wrapper is stripped: a
+    * store_failures flag must still write its store.
     */
-  private def runModelTestsBuild(node: ModelNode): Unit = {
-    val results = node.tests.map { t =>
-      val warnSev = t.isInstanceOf[ModelTest.Warn]
-      val err =
-        try { runModelTest(node, ModelTest.stripWarn(t),
-          warnSeverity = warnSev); None }
-        catch {
-          case e: GraftError => Some(e)
-          case e: Exception => Some(StatementExecutionError(
-            e.getMessage, node.renderedSrc, node.path))
-        }
-      val warnOnly = err.exists(_.isInstanceOf[DataTestWarning]) ||
-        (warnSev && err.forall(_.isInstanceOf[DataTestViolation]))
-      (node.id, t.describe, err, warnOnly)
-    }
-    testLedger.synchronized { testLedger ++= results }
-    val hard = results.filter(r => r._3.nonEmpty && !r._4)
+  private def dataTestRow(node: ModelNode, t: ModelTest): TestRow = {
+    val warnSev = t.isInstanceOf[ModelTest.Warn]
+    val err = attempt(node)(runModelTest(node, ModelTest.stripWarn(t),
+      warnSeverity = warnSev)).left.toOption
+    (node.id, t.describe, err, err.exists(_.isInstanceOf[DataTestWarning]) ||
+      (warnSev && err.forall(_.isInstanceOf[DataTestViolation])))
+  }
+
+  /** One unit test's outcome row; a unit test is never warn-only. */
+  private def unitTestRow(node: ModelNode, utst: UnitTest): TestRow =
+    (node.id, utst.describe,
+      attempt(node)(runUnitTest(node, utst)).left.toOption, false)
+
+  /** `graft build`'s gate over a node's test rows: EVERY declared test
+    * has run (dbt treats each test as its own DAG node — one failure must
+    * not shadow the next test's result), each row lands in the
+    * [[testLedger]], and any HARD failure fails the node afterwards — so
+    * the downstream `SKIP upstream failed` / fingerprint-drop machinery
+    * fires exactly as for a SQL error (dbt build's test-gates-downstream
+    * semantics). Unit tests gate BEFORE the model materializes, so
+    * nothing of broken logic publishes.
+    */
+  private def gateTests(node: ModelNode, kind: String,
+                        rows: Seq[TestRow]): Unit = {
+    testLedger.synchronized { testLedger ++= rows }
+    val hard = rows.filter(r => r._3.nonEmpty && !r._4)
     hard.foreach { case (_, desc, err, _) =>
       println(s"    FAIL  ${node.id}: $desc — " +
         PipelineSession.firstLine(err.get))
     }
     if (hard.nonEmpty) throw DataTestViolation(
-      s"${hard.size} of ${results.size} data tests failed " +
+      s"${hard.size} of ${rows.size} $kind tests failed " +
         s"(first: ${hard.head._2})",
       node.renderedSrc, node.path)
   }
@@ -1672,36 +1642,6 @@ final class PipelineSession(
       scala.jdk.CollectionConverters.SeqHasAsJava(data).asJava, schema)
   }
 
-  /** `graft build`'s unit-test pass over a node, BEFORE it
-    * materializes: every declared unit test runs (one failure must not
-    * shadow the next test's result), each outcome lands in the
-    * [[testLedger]], and any failure gates the node afterwards — the
-    * downstream `SKIP upstream failed` machinery fires and nothing of
-    * the broken logic publishes (dbt 1.8 build semantics).
-    */
-  private def runUnitTestsBuild(node: ModelNode): Unit = {
-    val results = node.unitTests.map { utst =>
-      val err =
-        try { runUnitTest(node, utst); None }
-        catch {
-          case e: GraftError => Some(e)
-          case e: Exception => Some(StatementExecutionError(
-            e.getMessage, node.renderedSrc, node.path))
-        }
-      (node.id, utst.describe, err, false)
-    }
-    testLedger.synchronized { testLedger ++= results }
-    val hard = results.filter(_._3.nonEmpty)
-    hard.foreach { case (_, desc, err, _) =>
-      println(s"    FAIL  ${node.id}: $desc — " +
-        PipelineSession.firstLine(err.get))
-    }
-    if (hard.nonEmpty) throw DataTestViolation(
-      s"${hard.size} of ${results.size} unit tests failed " +
-        s"(first: ${hard.head._2})",
-      node.renderedSrc, node.path)
-  }
-
   /** dbt model contracts: the declared columns checked against the
     * schema the SELECT actually produces — analysis-only (no job runs)
     * and BEFORE the materialization publishes, so a drifted model never
@@ -1735,11 +1675,11 @@ final class PipelineSession(
       }
     val actualByName = actual.fields
       .map(f => f.name.toLowerCase -> f).toMap
-    val declaredNames = node.contractColumns.map(_.name.toLowerCase)
+    val declaredNames = node.cfg.contractColumns.map(_.name.toLowerCase)
     val missing = declaredNames.filterNot(actualByName.contains)
     val extra = actual.fields.map(_.name.toLowerCase)
       .filterNot(declaredNames.contains)
-    val drift = node.contractColumns.flatMap { c =>
+    val drift = node.cfg.contractColumns.flatMap { c =>
       actualByName.get(c.name.toLowerCase).flatMap { f =>
         val want = norm(c)
         val got = f.dataType.simpleString
@@ -1771,7 +1711,7 @@ final class PipelineSession(
     * ERROR-severity failure — warn-level violations report but don't
     * flip the exit code (dbt's warn semantics).
     */
-  def runTestsOnly(): Seq[(String, String, Option[GraftError], Boolean)] = {
+  def runTestsOnly(): Seq[TestRow] = {
     val _ = spark
     applySettings()
     val (order, nodeMap) = buildGraph()
@@ -1781,36 +1721,7 @@ final class PipelineSession(
       val n = nodeMap(id)
       // unit tests run here too (dbt 1.8: `dbt test` includes them) —
       // they need no materialized state, only their mocks
-      val unitRows = n.unitTests.map { utst =>
-        val err =
-          try { runUnitTest(n, utst); None }
-          catch {
-            case e: GraftError => Some(e)
-            case e: Exception => Some(StatementExecutionError(
-              e.getMessage, n.renderedSrc, n.path))
-          }
-        (id, utst.describe, err, false)
-      }
-      unitRows ++ n.tests.map { t =>
-        val err =
-          // strip only the severity wrapper: warn-downgrading is decided
-          // below, while a store_failures flag must still write its store
-          try { runModelTest(n, ModelTest.stripWarn(t),
-            warnSeverity = t.isInstanceOf[ModelTest.Warn]); None }
-          catch {
-            case e: GraftError => Some(e)
-            case e: Exception => Some(StatementExecutionError(
-              e.getMessage, n.renderedSrc, n.path))
-          }
-        // warn downgrades VIOLATIONS only: a warn test that could not
-        // EXECUTE reports as a real failure (exit-code-flipping), same
-        // as the run path. A threshold-level DataTestWarning is
-        // warn-only at ANY severity.
-        val warnOnly = err.exists(_.isInstanceOf[DataTestWarning]) ||
-          (t.isInstanceOf[ModelTest.Warn] &&
-            err.forall(_.isInstanceOf[DataTestViolation]))
-        (id, t.describe, err, warnOnly)
-      }
+      n.cfg.unitTests.map(unitTestRow(n, _)) ++ n.cfg.tests.map(dataTestRow(n, _))
     }
   }
 
@@ -1861,9 +1772,8 @@ final class PipelineSession(
                            warnSeverity: Boolean = false): Unit =
     locally {
       import org.apache.spark.sql.functions.{col, count, lit}
-      // store_failures rides inside the severity wrapper; unwrap it here
-      // so both the run path (which strips Warn) and `graft test` (which
-      // keeps Warn for its own downgrade decision) persist the failures
+      // store_failures rides inside the severity wrapper, which
+      // [[dataTestRow]] strips; unwrap it here so the failures persist
       val (store, t1) = t0 match {
         case ModelTest.StoreFailures(inner) => (true, inner)
         case x => (false, x)
@@ -1992,9 +1902,8 @@ final class PipelineSession(
                    case _ => "rows" }) +
         storeDir.map(d => s" (failures stored: $d)").getOrElse("")
       if (warnSeverity) {
-        // thrown as a Violation so the Warn-severity callers' existing
-        // downgrade paths (print-and-continue; warnOnly in `graft test`)
-        // classify it the same as before thresholds existed
+        // thrown as a Violation: [[dataTestRow]] downgrades a
+        // warn-severity violation to warn-only
         if (warnIfHolds(bad))
           throw DataTestViolation(
             s"data test ${t1.describe} failed: $what",
@@ -2014,206 +1923,188 @@ final class PipelineSession(
     * postlude to the caller so post-SELECT side statements run first).
     */
   private def materializeSelect(node: ModelNode, select: String,
-                                rawSelect: String): String = {
-    node.materialize.map(_.toLowerCase) match {
-      case None | Some("view") =>
-        try {
-          spark.sql(select).createOrReplaceTempView(node.id)
-          // persist the rendered definition so later sessions over the
-          // same db_path see the view (reference node.rs:157-165 parity)
-          ViewStore.saveView(config.dbPath, node.id, select, Some(rawSelect))
-          "CREATE VIEW"
-        } catch { case e: Exception =>
-          throw StatementExecutionError(e.getMessage, select, node.path) }
-      case Some("table") =>
-        try {
-          // a restored view with this name (e.g. the model switched from
-          // view to table materialization) would otherwise SHADOW the new
-          // table — temp views win single-part name resolution
-          spark.catalog.dropTempView(node.id)
-          // drop + clear the leftover warehouse dir (a restored table is
-          // external; see ViewStore.dropTableClearingLocation)
-          ViewStore.dropTableClearingLocation(spark, node.id)
-          spark.sql(select).write.mode("overwrite").saveAsTable(node.id)
-          ViewStore.saveTable(spark, config.dbPath, node.id)
-          "SELECT" // row-count postlude runs after the tail statements
-        } catch {
-          case e: GraftError => throw e
-          case e: Exception =>
-            throw StatementExecutionError(e.getMessage, select, node.path)
-        }
-      case Some("incremental") =>
-        try {
-          spark.catalog.dropTempView(node.id)
-          // --full-refresh: rebuild from scratch — the escape hatch when
-          // the guard predicate or the model's shape changed and the
-          // accumulated table would be wrong to merge into (dbt parity);
-          // is_incremental() rendered false above for the same reason
-          val exists = !fullRefresh &&
-            (try spark.catalog.tableExists(node.id)
-             catch { case _: Exception => false })
-          if (!exists) {
-            // bootstrap run: identical to a table build — is_incremental()
-            // rendered false, so the SELECT covers the full history;
-            // partition_by lays the table out for the insert_overwrite
-            // strategy (and for partition-pruned consumers either way)
-            ViewStore.dropTableClearingLocation(spark, node.id)
-            val w = spark.sql(select).write.mode("overwrite")
-            node.partitionBy.fold(w)(c => w.partitionBy(c))
-              .saveAsTable(node.id)
-          } else node.incrementalStrategy.map(_.toLowerCase) match {
-            case Some("insert_overwrite") =>
-              // Spark's native big-data incremental: DYNAMIC partition
-              // overwrite — partitions present in the fresh slice are
-              // replaced wholesale, untouched partitions never move, no
-              // key join and no history rewrite at all. The right
-              // strategy when the model is late-arriving-data-by-
-              // partition (recompute the last N days) rather than
-              // row-keyed.
-              val partCol = node.partitionBy.getOrElse(throw GenericError(
-                s"incremental_strategy: insert_overwrite for " +
-                  s"`${node.id}` requires models.${node.id}.partition_by"))
-              require(spark.table(node.id).columns.contains(partCol),
-                s"partition_by `$partCol` is not a column of `${node.id}`")
-              val fresh = spark.sql(select)
-              val target = spark.table(node.id)
-              // schema drift has no insert_overwrite story (partitions
-              // are replaced positionally into the existing layout):
-              // fail NAMED rather than let the positional align below
-              // throw an unattributed analysis error
-              if (fresh.columns.toSet != target.columns.toSet)
-                throw GenericError(
-                  s"incremental `${node.id}` (insert_overwrite): the " +
-                    s"fresh SELECT's schema (${fresh.columns.mkString(", ")})" +
-                    s" differs from the table's " +
-                    s"(${target.columns.mkString(", ")}) — " +
-                    "insert_overwrite cannot evolve a schema; rebuild " +
-                    "with --full-refresh")
-              val key = "spark.sql.sources.partitionOverwriteMode"
-              val prev = spark.conf.getOption(key)
-              try {
-                spark.conf.set(key, "dynamic")
-                // insertInto is POSITION-based: align the fresh slice to
-                // the table's column order (partition columns last)
-                fresh.select(target.columns
-                    .map(c => fresh(c)).toIndexedSeq: _*)
-                  .write.mode("overwrite").insertInto(node.id)
-              } finally {
-                prev match {
-                  case Some(v) => spark.conf.set(key, v)
-                  case None    => spark.conf.unset(key)
-                }
+                                rawSelect: String): String = node.mat match {
+    case "view" =>
+      try {
+        spark.sql(select).createOrReplaceTempView(node.id)
+        // persist the rendered definition so later sessions over the
+        // same db_path see the view (reference node.rs:157-165 parity)
+        ViewStore.saveView(config.dbPath, node.id, select, Some(rawSelect))
+        "CREATE VIEW"
+      } catch { case e: Exception =>
+        throw StatementExecutionError(e.getMessage, select, node.path) }
+    case mat @ ("table" | "incremental" | "snapshot") =>
+      try {
+        // a restored view with this name (e.g. the model switched from
+        // view to table materialization) would otherwise SHADOW the new
+        // table — temp views win single-part name resolution
+        spark.catalog.dropTempView(node.id)
+        // --full-refresh: rebuild from scratch — the escape hatch when
+        // the guard predicate or the model's shape changed and the
+        // accumulated table would be wrong to merge into (dbt parity);
+        // is_incremental() rendered false for the same reason
+        lazy val exists = !fullRefresh && targetTableExists(node.id)
+        if (mat == "snapshot") materializeSnapshot(node, select, exists)
+        else if (mat == "table" || !exists)
+          // a table build, or an incremental bootstrap (is_incremental()
+          // rendered false, so the SELECT covers the full history);
+          // partition_by lays the table out for the insert_overwrite
+          // strategy and for partition-pruned consumers
+          replaceTable(node.id, spark.sql(select), node.cfg.partitionBy)
+        else node.cfg.incrementalStrategy.map(_.toLowerCase) match {
+          case Some("insert_overwrite") =>
+            // Spark's native big-data incremental: DYNAMIC partition
+            // overwrite — partitions present in the fresh slice are
+            // replaced wholesale, untouched partitions never move, no
+            // key join and no history rewrite at all. The right
+            // strategy when the model is late-arriving-data-by-
+            // partition (recompute the last N days) rather than
+            // row-keyed.
+            val partCol = node.cfg.partitionBy.getOrElse(throw GenericError(
+              s"incremental_strategy: insert_overwrite for " +
+                s"`${node.id}` requires models.${node.id}.partition_by"))
+            require(spark.table(node.id).columns.contains(partCol),
+              s"partition_by `$partCol` is not a column of `${node.id}`")
+            val fresh = spark.sql(select)
+            val target = spark.table(node.id)
+            // schema drift has no insert_overwrite story (partitions
+            // are replaced positionally into the existing layout):
+            // fail NAMED rather than let the positional align below
+            // throw an unattributed analysis error
+            if (fresh.columns.toSet != target.columns.toSet)
+              throw GenericError(
+                s"incremental `${node.id}` (insert_overwrite): the " +
+                  s"fresh SELECT's schema (${fresh.columns.mkString(", ")})" +
+                  s" differs from the table's " +
+                  s"(${target.columns.mkString(", ")}) — " +
+                  "insert_overwrite cannot evolve a schema; rebuild " +
+                  "with --full-refresh")
+            val key = "spark.sql.sources.partitionOverwriteMode"
+            val prev = spark.conf.getOption(key)
+            try {
+              spark.conf.set(key, "dynamic")
+              // insertInto is POSITION-based: align the fresh slice to
+              // the table's column order (partition columns last)
+              fresh.select(target.columns
+                  .map(c => fresh(c)).toIndexedSeq: _*)
+                .write.mode("overwrite").insertInto(node.id)
+            } finally {
+              prev match {
+                case Some(v) => spark.conf.set(key, v)
+                case None    => spark.conf.unset(key)
               }
-            case Some("microbatch") =>
-              microbatchRun(node, select)
-            case None | Some("merge") | Some("delete+insert") =>
-              // merge run: is_incremental() rendered true, so the SELECT
-              // is the user-restricted fresh slice (typically `WHERE ts >
-              // (SELECT max(ts) FROM {{ this }})`) — the full-history
-              // scan never happens again. Delete+insert by unique_key:
-              // existing rows whose key reappears are replaced; no key =
-              // append-only (the dbt default). The merged snapshot is
-              // written to a staging table first (Spark cannot overwrite
-              // a table it is reading), then swapped in by rename.
-              val existing = spark.table(node.id)
-              val (fresh, widen) =
-                alignIncrementalSchema(node, spark.sql(select), existing)
-              val merged = node.uniqueKey match {
-                case Some(k) =>
-                  existing.join(fresh.select(fresh.col(k)).distinct(),
-                      Seq(k), "left_anti")
-                    .unionByName(fresh, allowMissingColumns = widen)
-                case None =>
-                  existing.unionByName(fresh, allowMissingColumns = widen)
-              }
-              overwriteViaStaging(node.id, merged, node.partitionBy)
-            case Some(other) =>
-              throw GenericError(s"Unknown incremental_strategy for " +
-                s"`${node.id}`: $other (supported: merge, " +
-                "insert_overwrite, microbatch)")
-          }
-          ViewStore.saveTable(spark, config.dbPath, node.id)
-          "SELECT" // row-count postlude runs after the tail statements
-        } catch {
-          case e: GraftError => throw e
-          case e: Exception =>
-            throw StatementExecutionError(e.getMessage, select, node.path)
-        }
-      case Some("snapshot") =>
-        try {
-          spark.catalog.dropTempView(node.id)
-          val key = node.uniqueKey.getOrElse(throw GenericError(
-            s"materialize: snapshot for `${node.id}` requires " +
-              s"models.${node.id}.unique_key"))
-          val fresh = spark.sql(select)
-          require(fresh.columns.contains(key),
-            s"snapshot `${node.id}`: unique_key `$key` is not a column " +
-              s"of the SELECT (${fresh.columns.mkString(", ")})")
-          val ts = java.sql.Timestamp.from(java.time.Instant.now())
-          val strategy = node.snapshotStrategy.map(_.toLowerCase)
-            .getOrElse("check")
-          val updatedAt = strategy match {
-            case "check" => None
-            case "timestamp" => Some(node.updatedAt.getOrElse(
-              throw GenericError(s"snapshot `${node.id}` with " +
-                s"strategy: timestamp requires models.${node.id}" +
-                ".updated_at")))
-            case other => throw GenericError(s"Unknown snapshot strategy " +
-              s"for `${node.id}`: $other (supported: check, timestamp)")
-          }
-          updatedAt.foreach { ua =>
-            require(fresh.columns.contains(ua),
-              s"snapshot `${node.id}`: updated_at `$ua` is not a column " +
-                s"of the SELECT (${fresh.columns.mkString(", ")})")
-          }
-          // --full-refresh restarts the history from a fresh bootstrap
-          val exists = !fullRefresh &&
-            (try spark.catalog.tableExists(node.id)
-             catch { case _: Exception => false })
-          if (!exists) {
-            import org.apache.spark.sql.functions.{col, lit, sum, when}
-            requireUniqueFreshKeys(node.id, fresh, key)
-            // check-strategy bootstrap opens at the RUN clock; the
-            // timestamp strategy opens each row at its own source-system
-            // update time (dbt semantics) — and a NULL there can never be
-            // versioned, so it fails loudly up front
-            val validFrom = updatedAt match {
-              case None => lit(ts)
-              case Some(ua) =>
-                val nNull = fresh.filter(col(ua).isNull).count()
-                if (nNull > 0)
-                  throw GenericError(s"snapshot `${node.id}` (strategy: " +
-                    s"timestamp): $nNull fresh rows have NULL `$ua` — a " +
-                    "null update time cannot be versioned")
-                col(ua).cast("timestamp")
             }
-            ViewStore.dropTableClearingLocation(spark, node.id)
-            val w0 = fresh
-              .withColumn("valid_from", validFrom)
-              .withColumn("valid_to", org.apache.spark.sql.functions
-                .lit(null).cast("timestamp"))
-              .write.mode("overwrite")
-            node.partitionBy.fold(w0)(c => w0.partitionBy(c))
-              .saveAsTable(node.id)
-          } else {
-            val merged = updatedAt match {
-              case None => snapshotMerge(node.id, fresh, key, ts,
-                node.invalidateHardDeletes)
-              case Some(ua) =>
-                snapshotMergeByTimestamp(node.id, fresh, key, ua, ts,
-                  node.invalidateHardDeletes)
+          case Some("microbatch") =>
+            microbatchRun(node, select)
+          case None | Some("merge") | Some("delete+insert") =>
+            // merge run: is_incremental() rendered true, so the SELECT
+            // is the user-restricted fresh slice (typically `WHERE ts >
+            // (SELECT max(ts) FROM {{ this }})`) — the full-history
+            // scan never happens again. Delete+insert by unique_key:
+            // existing rows whose key reappears are replaced; no key =
+            // append-only (the dbt default). The merged snapshot is
+            // written to a staging table first (Spark cannot overwrite
+            // a table it is reading), then swapped in by rename.
+            val existing = spark.table(node.id)
+            val (fresh, widen) =
+              alignIncrementalSchema(node, spark.sql(select), existing)
+            val merged = node.cfg.uniqueKey match {
+              case Some(k) =>
+                existing.join(fresh.select(fresh.col(k)).distinct(),
+                    Seq(k), "left_anti")
+                  .unionByName(fresh, allowMissingColumns = widen)
+              case None =>
+                existing.unionByName(fresh, allowMissingColumns = widen)
             }
-            overwriteViaStaging(node.id, merged, node.partitionBy)
-          }
-          ViewStore.saveTable(spark, config.dbPath, node.id)
-          "SELECT" // row-count postlude runs after the tail statements
-        } catch {
-          case e: GraftError => throw e
-          case e: Exception =>
-            throw StatementExecutionError(e.getMessage, select, node.path)
+            overwriteViaStaging(node.id, merged, node.cfg.partitionBy)
+          case Some(other) =>
+            throw GenericError(s"Unknown incremental_strategy for " +
+              s"`${node.id}`: $other (supported: merge, " +
+              "insert_overwrite, microbatch)")
         }
-      case Some(other) =>
-        throw GenericError(s"Unknown materialization type: $other")
+        ViewStore.saveTable(spark, config.dbPath, node.id)
+        "SELECT" // row-count postlude runs after the tail statements
+      } catch {
+        case e: GraftError => throw e
+        case e: Exception =>
+          throw StatementExecutionError(e.getMessage, select, node.path)
+      }
+    case other =>
+      throw GenericError(s"Unknown materialization type: $other")
+  }
+
+  /** Drop table `id` and clear its leftover warehouse dir (a restored
+    * table is external; see ViewStore.dropTableClearingLocation), then
+    * save `df` as `id`, partitioned by `partitionBy` when declared: the
+    * table build and the incremental/snapshot bootstrap. `df` is built
+    * after the drop.
+    */
+  private def replaceTable(id: String, df: => org.apache.spark.sql.DataFrame,
+                           partitionBy: Option[String]): Unit = {
+    ViewStore.dropTableClearingLocation(spark, id)
+    val w = df.write.mode("overwrite")
+    partitionBy.fold(w)(c => w.partitionBy(c)).saveAsTable(id)
+  }
+
+  /** `materialize: snapshot` — SCD2 history under the dbt `check` or
+    * `timestamp` strategy: the first run (or --full-refresh) opens every
+    * fresh row, later runs merge through [[overwriteViaStaging]].
+    */
+  private def materializeSnapshot(node: ModelNode, select: String,
+                                  exists: Boolean): Unit = {
+    val key = node.cfg.uniqueKey.getOrElse(throw GenericError(
+      s"materialize: snapshot for `${node.id}` requires " +
+        s"models.${node.id}.unique_key"))
+    val fresh = spark.sql(select)
+    require(fresh.columns.contains(key),
+      s"snapshot `${node.id}`: unique_key `$key` is not a column " +
+        s"of the SELECT (${fresh.columns.mkString(", ")})")
+    val ts = java.sql.Timestamp.from(java.time.Instant.now())
+    val strategy = node.cfg.snapshotStrategy.map(_.toLowerCase)
+      .getOrElse("check")
+    val updatedAt = strategy match {
+      case "check" => None
+      case "timestamp" => Some(node.cfg.updatedAt.getOrElse(
+        throw GenericError(s"snapshot `${node.id}` with " +
+          s"strategy: timestamp requires models.${node.id}" +
+          ".updated_at")))
+      case other => throw GenericError(s"Unknown snapshot strategy " +
+        s"for `${node.id}`: $other (supported: check, timestamp)")
+    }
+    updatedAt.foreach { ua =>
+      require(fresh.columns.contains(ua),
+        s"snapshot `${node.id}`: updated_at `$ua` is not a column " +
+          s"of the SELECT (${fresh.columns.mkString(", ")})")
+    }
+    if (!exists) {
+      import org.apache.spark.sql.functions.{col, lit}
+      requireUniqueFreshKeys(node.id, fresh, key)
+      // check-strategy bootstrap opens at the RUN clock; the
+      // timestamp strategy opens each row at its own source-system
+      // update time (dbt semantics) — and a NULL there can never be
+      // versioned, so it fails loudly up front
+      val validFrom = updatedAt match {
+        case None => lit(ts)
+        case Some(ua) =>
+          val nNull = fresh.filter(col(ua).isNull).count()
+          if (nNull > 0)
+            throw GenericError(s"snapshot `${node.id}` (strategy: " +
+              s"timestamp): $nNull fresh rows have NULL `$ua` — a " +
+              "null update time cannot be versioned")
+          col(ua).cast("timestamp")
+      }
+      replaceTable(node.id, fresh.withColumn("valid_from", validFrom)
+        .withColumn("valid_to", lit(null).cast("timestamp")),
+        node.cfg.partitionBy)
+    } else {
+      val merged = updatedAt match {
+        case None => snapshotMerge(node.id, fresh, key, ts,
+          node.cfg.invalidateHardDeletes)
+        case Some(ua) =>
+          snapshotMergeByTimestamp(node.id, fresh, key, ua, ts,
+            node.cfg.invalidateHardDeletes)
+      }
+      overwriteViaStaging(node.id, merged, node.cfg.partitionBy)
     }
   }
 

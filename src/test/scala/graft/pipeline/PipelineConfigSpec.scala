@@ -61,6 +61,27 @@ class PipelineConfigSpec extends AnyFunSuite {
     assert(e.getMessage.contains("mapping"))
   }
 
+  test("a non-boolean enabled: fails named with the model and the key") {
+    val e = intercept[GenericError](PipelineConfig.fromYaml(
+      "models:\n  m1:\n    enabled: maybe\n"))
+    assert(e.getMessage ==
+      "models.m1.enabled: expected true|false, got `maybe`", e.getMessage)
+    assert(!PipelineConfig.fromYaml("models:\n  m1:\n    enabled: false\n")
+      .models("m1").enabled)
+  }
+
+  test("a non-boolean invalidate_hard_deletes: fails named with the model " +
+      "and the key") {
+    val e = intercept[GenericError](PipelineConfig.fromYaml(
+      "models:\n  s1:\n    invalidate_hard_deletes: 2\n"))
+    assert(e.getMessage ==
+      "models.s1.invalidate_hard_deletes: expected true|false, got `2`",
+      e.getMessage)
+    assert(PipelineConfig.fromYaml(
+      "models:\n  s1:\n    invalidate_hard_deletes: true\n")
+      .models("s1").invalidateHardDeletes)
+  }
+
   test("empty yaml yields defaults") {
     assert(PipelineConfig.fromYaml("") == PipelineConfig())
   }

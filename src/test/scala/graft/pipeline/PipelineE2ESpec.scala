@@ -861,7 +861,7 @@ class PipelineE2ESpec extends AnyFunSuite {
     // ordinary dependency extraction
     assert(order == Seq("country_codes", "by_code"))
     assert(nodeMap("by_code").prevs == Set("country_codes"))
-    assert(nodeMap("country_codes").materialize.contains("table"))
+    assert(nodeMap("country_codes").cfg.materialize.contains("table"))
     val r1 = s1.runNodes()
     assert(r1.errors.isEmpty, r1.errors.mkString("; "))
     assert(spark.table("country_codes").count() == 2)
@@ -2930,5 +2930,89 @@ class PipelineE2ESpec extends AnyFunSuite {
       .listFiles().map(_.getName).toSeq
     assert(stores == Seq("sql_tests_chk"), stores)
     assert(spark.table("slug_m__failures__sql_tests_chk").count() == 1)
+  }
+
+  test("materialize: table honours partition_by: day= directories, a " +
+      "partition column in the catalog, every row back after restore") {
+    val db = Files.createTempDirectory("graft-tpart-db")
+    val (_, config) = fixture(
+      models = Map("tp_daily" ->
+        "SELECT * FROM VALUES (1, 'd1'), (2, 'd1'), (3, 'd2') AS t(k, day)"),
+      configExtra =
+        s"""db_path: $db
+           |models:
+           |  tp_daily:
+           |    materialize: table
+           |    partition_by: day""".stripMargin)
+    val report = new PipelineSession(spark, config).runNodes()
+    assert(report.errors.isEmpty, report.errors.map(_.render))
+    val loc = ViewStore.warehouseLocation(spark, "tp_daily")
+    val dirs = {
+      import scala.jdk.CollectionConverters._
+      val s = Files.list(loc)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("day=")).toSet
+      finally s.close()
+    }
+    assert(dirs == Set("day=d1", "day=d2"), dirs)
+    assert(spark.catalog.listColumns("tp_daily").collect()
+      .filter(_.isPartition).map(_.name).toSeq == Seq("day"))
+    // a new process: the data stays on disk, the catalog entry is gone
+    val aside = loc.resolveSibling("tp_daily.aside")
+    Files.move(loc, aside)
+    spark.sql("DROP TABLE IF EXISTS tp_daily")
+    Files.move(aside, loc)
+    val s2 = spark.newSession()
+    assert(ViewStore.restore(s2, db.toString) == 1)
+    val rows = s2.table("tp_daily").collect()
+      .map(r => (r.getInt(r.fieldIndex("k")), r.getString(r.fieldIndex("day"))))
+      .sorted.toSeq
+    assert(rows == Seq((1, "d1"), (2, "d1"), (3, "d2")), rows)
+  }
+
+  test("one test classification: `test`, `build` and `run` agree on " +
+      "hard / warn-only / pass for every test") {
+    val db = Files.createTempDirectory("graft-cls-db")
+    // flag: 2 nulls; grp: 'a' x4 + 'z' x1
+    val model = Map("cls_m" -> ("SELECT id, CASE WHEN id < 4 THEN id END " +
+      "AS flag, CASE WHEN id = 5 THEN 'z' ELSE 'a' END AS grp " +
+      "FROM range(1, 6) t(id)"))
+    val tests = Seq(
+      "- not_null: flag" -> "hard", // error-severity violation
+      "- accepted_values: { column: grp, values: [\"a\"] }\n  severity: warn"
+        -> "warn", // warn-severity violation
+      "- unique: grp\n  error_if: '> 5'" -> "warn", // warn_if-level count
+      "- not_null: no_such_col\n  severity: warn" -> "hard") // cannot execute
+    def cfgWith(ts: Seq[String]): PipelineConfig = fixture(model,
+      configExtra = s"""db_path: $db
+        |models:
+        |  cls_m:
+        |    materialize: table
+        |    tests:
+        |""".stripMargin + ts.flatMap(_.split("\n"))
+          .map("      " + _).mkString("\n"))._2
+    def cls(r: (String, String, Option[GraftError], Boolean)): String =
+      if (r._3.isEmpty) "pass" else if (r._4) "warn" else "hard"
+    val all = cfgWith(tests.map(_._1))
+    val sb = new PipelineSession(spark, all, buildMode = true)
+    val rb = sb.runNodes()
+    val built = sb.collectedTests.map(r => (r._2, cls(r)))
+    assert(built.map(_._2) == tests.map(_._2), built)
+    assert(rb.results.head.status == "ERROR" &&
+      rb.errors.head.render.contains("2 of 4 data tests failed"),
+      rb.errors.map(_.render))
+    val tested = new PipelineSession(spark, all).runTestsOnly()
+      .map(r => (r._2, cls(r)))
+    assert(tested == built)
+    // run: the node fails exactly when a hard row exists, with the first
+    // hard test's own error
+    val rr = new PipelineSession(spark, all).runNodes()
+    assert(rr.results.head.status == "ERROR" &&
+      rr.errors.head.isInstanceOf[DataTestViolation] &&
+      rr.errors.head.getMessage.contains(built.head._1), rr.errors)
+    tests.foreach { case (t, want) =>
+      val r = new PipelineSession(spark, cfgWith(Seq(t))).runNodes()
+      assert(r.errors.nonEmpty == (want == "hard"), s"$t: ${r.results}")
+    }
   }
 }

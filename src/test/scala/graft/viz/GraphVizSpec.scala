@@ -24,7 +24,8 @@ class GraphVizSpec extends AnyFunSuite {
     // non-view materializations annotate the node; views stay bare
     locally {
       val withMat = nodeMap.map { case (id, n) =>
-        id -> (if (id == order.head) n.copy(materialize = Some("snapshot"))
+        id -> (if (id == order.head)
+                 n.copy(cfg = n.cfg.copy(materialize = Some("snapshot")))
                else n)
       }
       val d2 = GraphViz.renderDot(order, withMat)

@@ -17,8 +17,26 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns), kind="mergesort", na_position="first")
     return df.reset_index(drop=True)
 
+def mem_total_bytes():
+    """MemTotal from /proc/meminfo; None where the file does not exist."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
 def main(sf_dir, out_dir):
     con = duckdb.connect()
+    # DuckDB's default limit (80% of RAM) let a heavy oracle query (q167)
+    # die out of memory on a 15 GiB host; half of RAM plus a spill
+    # directory lets it finish on disk instead
+    total = mem_total_bytes()
+    if total:
+        con.execute(f"SET memory_limit = '{total // 2 // 2**20}MB'")
+    con.execute(f"SET temp_directory = '{os.path.join(out_dir, '_duckdb_spill')}'")
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
