@@ -21,12 +21,10 @@ import graft.viz.GraphViz
 object Main {
 
   def main(args: Array[String]): Unit = args.toList match {
-    case "run" :: rest =>
+    case (cmd @ ("run" | "build")) :: rest =>
       val flags = parseArgs(rest)._1
-      if (flags.contains("dry-run")) dryRun(flags) else runPipeline(flags)
-    case "build" :: rest =>
-      val flags = parseArgs(rest)._1
-      if (flags.contains("dry-run")) dryRun(flags) else buildPipeline(flags)
+      if (flags.contains("dry-run")) dryRun(flags)
+      else runPipeline(flags, buildMode = cmd == "build")
     case "test" :: rest =>
       testPipeline(parseArgs(rest)._1)
     case "retry" :: rest =>
@@ -118,7 +116,20 @@ object Main {
     spark
   }
 
-  private def runPipeline(flags: Map[String, String]): Unit = {
+  /** `run`, and dbt `build` (`buildMode`) — the daily driver: seeds,
+    * models, snapshots and ALL their data tests interleaved in one
+    * DAG-ordered invocation (they are all graph nodes here, so the
+    * engine's DAG scheduler already orders them); a node whose
+    * error-severity test fails forces `SKIP upstream failed` on its
+    * downstream, warn severity reports without gating, and every
+    * declared test runs and prints its own PASS/WARN/FAIL row (run's
+    * fail-on-first would shadow sibling tests). Exit 1 on any node
+    * error (an error-severity test failure IS one), 0 when only
+    * warn-level results occurred. Every other flag composes the same
+    * way for both.
+    */
+  private def runPipeline(flags: Map[String, String],
+                          buildMode: Boolean): Unit = {
     val config = loadConfig(flags)
     val spark = buildSpark(config)
     spark.sparkContext.setLogLevel("WARN")
@@ -134,11 +145,13 @@ object Main {
         fullRefresh = flags.contains("full-refresh"),
         cliVars = varsOf(flags),
         failFast = flags.contains("fail-fast"),
+        buildMode = buildMode,
         deferEnabled = deferOf(flags),
         stateDir = flags.get("state"),
         eventTimeStart = flags.get("event-time-start"),
         eventTimeEnd = flags.get("event-time-end"))
       val report = session.runNodes()
+      if (buildMode) printDataTests(session.collectedTests)
       if (report.errors.nonEmpty) sys.exit(1)
     } catch {
       case e: GraftError => System.err.println(e.render); sys.exit(1)
@@ -150,52 +163,12 @@ object Main {
     }
   }
 
-  /** dbt `build` — the daily driver: seeds, models, snapshots and ALL
-    * their data tests interleaved in one DAG-ordered invocation (they
-    * are all graph nodes here, so the engine's DAG scheduler already
-    * orders them); a node whose error-severity test fails forces `SKIP
-    * upstream failed` on its downstream, warn severity reports without
-    * gating, and every declared test runs and prints its own
-    * PASS/WARN/FAIL row (run's fail-on-first would shadow sibling
-    * tests). Exit codes compose run's and test's: 1 on any node error
-    * (an error-severity test failure IS one), 0 when only warn-level
-    * results occurred. --select/--exclude/--vars/--parallel/
-    * --fail-fast/--changed-only/--full-refresh compose exactly as for
-    * `run`.
+  /** The per-test report of `build`, `test` and build-mode retry;
+    * returns the number of error-severity failures.
     */
-  private def buildPipeline(flags: Map[String, String]): Unit = {
-    val config = loadConfig(flags)
-    val spark = buildSpark(config)
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      config.dbPath.foreach(ViewStore.restore(spark, _))
-      val session = new PipelineSession(spark, config,
-        parallel = flags.contains("parallel"),
-        changedOnly = flags.contains("changed-only"),
-        selectors = selectorsOf(flags),
-        excludes = excludesOf(flags),
-        fullRefresh = flags.contains("full-refresh"),
-        cliVars = varsOf(flags),
-        failFast = flags.contains("fail-fast"),
-        buildMode = true,
-        deferEnabled = deferOf(flags),
-        stateDir = flags.get("state"),
-        eventTimeStart = flags.get("event-time-start"),
-        eventTimeEnd = flags.get("event-time-end"))
-      val report = session.runNodes()
-      printDataTests(session)
-      if (report.errors.nonEmpty) sys.exit(1)
-    } catch {
-      case e: GraftError => System.err.println(e.render); sys.exit(1)
-    } finally {
-      graft.ext.DedupOps.releaseManifests()
-      spark.stop()
-    }
-  }
-
-  /** The `graft build` per-test report (shared with build-mode retry). */
-  private def printDataTests(session: PipelineSession): Unit = {
-    val tests = session.collectedTests
+  private def printDataTests(
+      tests: Seq[(String, String, Option[GraftError], Boolean)]): Int = {
+    val nFail = tests.count(r => r._3.nonEmpty && !r._4)
     if (tests.nonEmpty) {
       println("\nData tests:")
       tests.foreach { case (id, desc, err, warnOnly) =>
@@ -205,11 +178,11 @@ object Main {
         err.foreach(e => println(e.render.linesIterator
           .map("      " + _).mkString("\n")))
       }
-      val nFail = tests.count(r => r._3.nonEmpty && !r._4)
       val nWarn = tests.count(r => r._3.nonEmpty && r._4)
       println(s"${tests.size - nFail - nWarn} passed, " +
         s"$nWarn warned, $nFail failed")
     }
+    nFail
   }
 
   /** dbt 1.6 `clone`: copy the --state dir's relations into the local
@@ -304,7 +277,7 @@ object Main {
           config.dbPath.foreach(ViewStore.restore(spark, _))
           val session = Retry.session(spark, config, p)
           val report = session.runNodes()
-          printDataTests(session)
+          printDataTests(session.collectedTests)
           if (report.errors.nonEmpty) sys.exit(1)
         } catch {
           case e: GraftError => System.err.println(e.render); sys.exit(1)
@@ -329,18 +302,7 @@ object Main {
         selectors = selectorsOf(flags),
         excludes = excludesOf(flags),
         cliVars = varsOf(flags))
-      val results = session.runTestsOnly()
-      results.foreach { case (id, desc, err, warnOnly) =>
-        val status =
-          if (err.isEmpty) "PASS" else if (warnOnly) "WARN" else "FAIL"
-        println(s"$status  $id: $desc")
-        err.foreach(e => println(e.render.linesIterator
-          .map("      " + _).mkString("\n")))
-      }
-      val nFail = results.count(r => r._3.nonEmpty && !r._4)
-      val nWarn = results.count(r => r._3.nonEmpty && r._4)
-      println(s"\n${results.size - nFail - nWarn} passed, " +
-        s"$nWarn warned, $nFail failed")
+      val nFail = printDataTests(session.runTestsOnly())
       // warn-level violations report but only ERROR severity flips the
       // exit code (dbt's warn semantics)
       if (nFail > 0) sys.exit(1)
@@ -397,14 +359,6 @@ object Main {
       }
     }
 
-  /** `run --dry-run`: print the would-run / would-skip split in execution
-    * order WITHOUT starting Spark or executing any SQL — the
-    * look-before-you-run twin of `viz --changed-only` on the terminal
-    * surface. With `--changed-only` the split comes from the stored
-    * closure fingerprints ([[PipelineSession.previewSkips]], manifest-based
-    * table existence); without it every model reports `would RUN`. Exits 0
-    * always (nothing executed, nothing can fail but graph building).
-    */
   /** `--defer` requires `--state` (there is nothing to defer TO without
     * a prior state's artifacts) — dbt's own contract, failed loudly at
     * parse time rather than as a missing-ref error mid-run. `--state`
@@ -468,6 +422,14 @@ object Main {
     }.toMap
   }
 
+  /** `run --dry-run`: print the would-run / would-skip split in execution
+    * order WITHOUT starting Spark or executing any SQL — the
+    * look-before-you-run twin of `viz --changed-only` on the terminal
+    * surface. With `--changed-only` the split comes from the stored
+    * closure fingerprints ([[PipelineSession.previewSkips]], manifest-based
+    * table existence); without it every model reports `would RUN`. Exits 0
+    * always (nothing executed, nothing can fail but graph building).
+    */
   private[cli] def dryRun(flags: Map[String, String]): Unit = {
     val config = loadConfig(flags)
     try {

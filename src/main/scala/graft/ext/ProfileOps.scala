@@ -283,9 +283,10 @@ object ProfileOps {
     def ratio6(numExpr: String): Column =
       (expr(numExpr).cast("double") / 1000000.0)
     // ONE pass emits the per-bucket rows AND the −1 summary row (r19):
-    // the former per∪summary union referenced `per` twice, and runtime
-    // exchange reuse did not deduplicate the branches (ExecDump:
-    // reused=0 — the corpus was scanned and re-scored once per branch).
+    // the former per∪summary union referenced `per` twice, so whatever
+    // of the second branch runtime exchange reuse did not cover ran
+    // again (r19's "reused=0" reading came from a plan that never
+    // executed; plans/r21 holds the executed census).
     // Instead each bucket row explodes into its own group plus the −1
     // group (≤ 2·nBuckets rows) and ONE re-aggregate serves both:
     // per-bucket groups are singletons, so their sums are exactly the

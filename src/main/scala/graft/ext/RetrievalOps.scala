@@ -757,16 +757,17 @@ object RetrievalOps {
           "ELSE (2000000 + CAST(__frk AS BIGINT)) div " +
           "(2 * CAST(__frk AS BIGINT)) END"))
     // ONE pass emits the per-query rows AND the −1 mean row (r19): the
-    // former per∪mean union referenced `per` twice, and runtime exchange
-    // reuse did not deduplicate the branches (ExecDump: reused=0 — every
-    // consumer paid the run's whole retrieval lineage twice, q172 ran 14
-    // executed scans). Each per-query row explodes into its own group
-    // plus the −1 group and ONE re-aggregate serves both: per-query
-    // groups are singletons (max() returns the row's own metric), the −1
-    // group gets the mean formulas. The mean's 6-dp rounding stays in
-    // INTEGER space (round-half-up long division, then ONE exact /10⁶ —
-    // a float round() here can land exactly on a .5 decimal boundary and
-    // split engines). queryCol = −1 stays reserved for the mean row.
+    // former per∪mean union referenced `per` twice, so whatever of the
+    // second branch runtime exchange reuse did not cover ran again
+    // (r19's "reused=0" reading came from a plan that never executed;
+    // plans/r21 holds q172's executed census). Each per-query row
+    // explodes into its own group plus the −1 group and ONE
+    // re-aggregate serves both: per-query groups are singletons (max()
+    // returns the row's own metric), the −1 group gets the mean formulas.
+    // The mean's 6-dp rounding stays in INTEGER space (round-half-up long
+    // division, then ONE exact /10⁶ — a float round() here can land
+    // exactly on a .5 decimal boundary and split engines). queryCol = −1
+    // stays reserved for the mean row.
     val qType = per.schema(queryCol).dataType
     // the −1 sentinel is LOAD-BEARING since the one-pass rewrite: a
     // genuine query id of −1 would silently aggregate INTO the mean

@@ -687,10 +687,10 @@ object SimilarityOps {
     val p = scoreOncePairs(vecs, nBands, bitsPerBand, seed, dim = -1)
     // both orientations via ONE explode over the scored pairs, not a
     // union of two selects: a self-union references the band-join +
-    // distinct + score lineage twice, and runtime exchange reuse does
-    // not collapse the copies (the r19/r20 ExecDump finding), so the
-    // union form executed the whole pair derivation twice. Same row
-    // multiset — the per-source top-k downstream is order-free.
+    // distinct + score lineage twice, and only the exchanges runtime
+    // reuse shares between the copies run once; the explode needs no
+    // reuse at all. Same row multiset — the per-source top-k downstream
+    // is order-free.
     val both = p.select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst"), col("sim")),
         struct(col("id_b").as("src"), col("id_a").as("dst"), col("sim"))))

@@ -960,10 +960,9 @@ object TextOps {
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     // the scored-row count the quantiles divide is the histogram's own
     // mass — a whole-frame sum over the SAME tiny single-partition
-    // window, not a separate count branch that would re-execute the
-    // whole LM-scoring lineage a third time (r20: ExecDump measured
-    // q110 at 15 executed scans; runtime exchange reuse never fires
-    // across the branches)
+    // window, not a separate count branch: a third reference to the
+    // LM-scoring lineage that would rely on runtime exchange reuse to
+    // not run again (q110's executed census: plans/r21)
     val cum = hist.withColumn("__cum", sum(col("__c")).over(wCum))
       .withColumn("__n", sum(col("__c")).over(wAll))
     // disc quantile: smallest score value whose cumulative count reaches

@@ -387,30 +387,43 @@ final class PipelineSession(
     */
   private val runNonce = java.util.UUID.randomUUID().toString
   private def sourceDataFp(renderedSql: String): String = {
-    val rx = """(?i)read_\w+\s*\(\s*['"]([^'"]+)['"]""".r
-    val targets = rx.findAllMatchIn(renderedSql).map(_.group(1))
-      .toSeq.distinct.sorted
-      .filterNot(p => p.startsWith("http://") || p.startsWith("https://"))
+    val targets = statTargets(renderedSql)
     if (targets.isEmpty) ""
     else targets.map { p =>
-      try {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val conf =
-          if (sparkStarted) spark.sparkContext.hadoopConfiguration
-          else new org.apache.hadoop.conf.Configuration()
-        val fs = hp.getFileSystem(conf)
-        val matched = Option(fs.globStatus(hp))
-          .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-        if (matched.isEmpty) s"$p:missing"
-        else matched.flatMap { st =>
-          if (st.isDirectory)
-            fs.listStatus(st.getPath).filterNot(_.isDirectory)
-          else Array(st)
-        }.sortBy(_.getPath.toString)
-          .map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
-          .mkString(",")
+      try targetFiles(p) match {
+        case None => s"$p:missing"
+        case Some(files) =>
+          files.sortBy(_.getPath.toString)
+            .map(st => s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
+            .mkString(",")
       } catch { case _: Exception => s"$p:unstat:$runNonce" }
     }.mkString("\n")
+  }
+
+  /** The stat-able `read_*('…')` targets of a model, distinct and sorted
+    * (shared by [[sourceDataFp]] and [[checkFreshness]], so the skip
+    * fingerprint and the freshness gate read the same files). http(s)
+    * targets have no cheap stat and are left out.
+    */
+  private def statTargets(renderedSql: String): Seq[String] =
+    """(?i)read_\w+\s*\(\s*['"]([^'"]+)['"]""".r
+      .findAllMatchIn(renderedSql).map(_.group(1)).toSeq.distinct.sorted
+      .filterNot(p => p.startsWith("http://") || p.startsWith("https://"))
+
+  /** The files behind one target: each glob match that is a file, and the
+    * direct files of each matched directory. None when nothing matches.
+    */
+  private def targetFiles(p: String)
+      : Option[Seq[org.apache.hadoop.fs.FileStatus]] = {
+    val hp = new org.apache.hadoop.fs.Path(p)
+    val conf =
+      if (sparkStarted) spark.sparkContext.hadoopConfiguration
+      else new org.apache.hadoop.conf.Configuration()
+    val fs = hp.getFileSystem(conf)
+    Option(fs.globStatus(hp)).filter(_.nonEmpty).map(_.toSeq.flatMap { st =>
+      if (st.isDirectory) fs.listStatus(st.getPath).filterNot(_.isDirectory).toSeq
+      else Seq(st)
+    })
   }
 
   /** Spark-free `--changed-only` PREVIEW: which nodes WOULD skip if run
@@ -952,13 +965,7 @@ final class PipelineSession(
         // the stage's catalog entry now points at a moved (absent)
         // directory; dropping it is metadata-only
         spark.sql(s"DROP TABLE IF EXISTS `$stage`")
-        spark.catalog.createTable(id, tgtLoc.toString, "parquet")
-        // datasource tables track partitions IN THE CATALOG
-        // (manageFilesourcePartitions): a freshly path-registered
-        // partitioned table has none registered and reads zero rows
-        // until they are recovered from the directory layout
-        spark.sql(s"MSCK REPAIR TABLE `$id`")
-        ()
+        ViewStore.registerTable(spark, id, tgtLoc)
     }
     ViewStore.dropTableClearingLocation(spark, backup)
     ()
@@ -974,7 +981,8 @@ final class PipelineSession(
     * directory is missing, adopt the stage if its write COMPLETED
     * (`_SUCCESS` present — the swap had begun, so the stage holds the
     * finished merge), else restore the backup (the pre-swap table); in
-    * both cases re-register the adopted directory. Leftover staging
+    * both cases re-register the adopted directory (partitions
+    * included). Leftover staging
     * machinery is then dropped either way. Idempotent and cheap (two
     * directory stats) when nothing crashed.
     */
@@ -995,8 +1003,7 @@ final class PipelineSession(
         // move the surviving data in, then (re-)register it
         spark.sql(s"DROP TABLE IF EXISTS `$id`")
         Files.move(loc, tgtLoc)
-        spark.catalog.createTable(id, tgtLoc.toString, "parquet")
-        ()
+        ViewStore.registerTable(spark, id, tgtLoc)
       }
     }
     ViewStore.dropTableClearingLocation(spark, stage)
@@ -1170,37 +1177,23 @@ final class PipelineSession(
     */
   private def checkFreshness(node: ModelNode): Unit =
     node.cfg.freshness.foreach { f =>
-      val rx = """(?i)read_\w+\s*\(\s*['"]([^'"]+)['"]""".r
-      val targets = rx.findAllMatchIn(node.renderedSrc).map(_.group(1))
-        .toSeq.distinct
-        .filterNot(p => p.startsWith("http://") || p.startsWith("https://"))
+      val targets = statTargets(node.renderedSrc)
       if (targets.isEmpty)
         throw StatementExecutionError(
           "freshness declared but the model reads no stat-able " +
             "read_* source (http(s) sources have no modification time)",
           node.renderedSrc, node.path)
       val mtimes: Seq[Long] = targets.flatMap { p =>
-        try {
-          val hp = new org.apache.hadoop.fs.Path(p)
-          val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val matched = Option(fs.globStatus(hp))
-            .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-          if (matched.isEmpty)
-            throw StatementExecutionError(
-              s"freshness check: source `$p` does not exist — a missing " +
-                "source is staler than any threshold",
-              node.renderedSrc, node.path)
-          matched.flatMap { st =>
-            if (st.isDirectory)
-              fs.listStatus(st.getPath).filterNot(_.isDirectory)
-            else Array(st)
-          }.map(_.getModificationTime).toSeq
-        } catch {
-          case e: GraftError => throw e
-          case e: Exception => throw StatementExecutionError(
+        val files =
+          try targetFiles(p)
+          catch { case e: Exception => throw StatementExecutionError(
             s"freshness check: cannot stat `$p`: ${e.getMessage}",
             node.renderedSrc, node.path)
-        }
+          }
+        files.getOrElse(throw StatementExecutionError(
+          s"freshness check: source `$p` does not exist — a missing " +
+            "source is staler than any threshold",
+          node.renderedSrc, node.path)).map(_.getModificationTime)
       }
       if (mtimes.nonEmpty) {
         val ageSec =
@@ -1220,24 +1213,6 @@ final class PipelineSession(
       }
     }
 
-  /** dbt's `on_schema_change` contract for incremental merges: when the
-    * fresh slice's column SET differs from the target table's, the
-    * declared policy decides —
-    *   fail (the default)   — loud, named, with the drifted columns; an
-    *                          undeclared schema drift merging silently
-    *                          is how incremental tables rot;
-    *   append_new_columns   — the merge widens to the union: new fresh
-    *                          columns back-fill NULL on historical rows,
-    *                          columns the fresh slice stopped producing
-    *                          stay, NULL on the new rows;
-    *   ignore               — dbt parity: new fresh columns are NOT
-    *                          written (projected away); columns the
-    *                          fresh slice stopped producing stay, NULL
-    *                          on the new rows.
-    * Returns the (possibly projected) fresh frame plus whether the
-    * union must tolerate missing columns. Type changes on SAME-named
-    * columns are left to unionByName's own loud analysis error.
-    */
   /** dbt 1.9 `incremental_strategy: microbatch` (VERDICT r18 task 5):
     * the model's full-history SELECT is processed as independent
     * event-time WINDOWS, each swapped into the table as a dynamic
@@ -1358,6 +1333,24 @@ final class PipelineSession(
     }
   }
 
+  /** dbt's `on_schema_change` contract for incremental merges: when the
+    * fresh slice's column SET differs from the target table's, the
+    * declared policy decides —
+    *   fail (the default)   — loud, named, with the drifted columns; an
+    *                          undeclared schema drift merging silently
+    *                          is how incremental tables rot;
+    *   append_new_columns   — the merge widens to the union: new fresh
+    *                          columns back-fill NULL on historical rows,
+    *                          columns the fresh slice stopped producing
+    *                          stay, NULL on the new rows;
+    *   ignore               — dbt parity: new fresh columns are NOT
+    *                          written (projected away); columns the
+    *                          fresh slice stopped producing stay, NULL
+    *                          on the new rows.
+    * Returns the (possibly projected) fresh frame plus whether the
+    * union must tolerate missing columns. Type changes on SAME-named
+    * columns are left to unionByName's own loud analysis error.
+    */
   private def alignIncrementalSchema(node: ModelNode,
                                      fresh: org.apache.spark.sql.DataFrame,
                                      existing: org.apache.spark.sql.DataFrame)

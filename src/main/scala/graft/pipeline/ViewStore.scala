@@ -389,6 +389,22 @@ object ViewStore {
     }
   }
 
+  /** Register the parquet directory `loc` as table `id`. A partitioned
+    * table's partitions are catalog-tracked (manageFilesourcePartitions)
+    * and a path registration starts with none, so they are recovered from
+    * the directory layout, or the table reads zero rows. An MSCK failure
+    * propagates: a registered table that silently reads zero rows must
+    * not pass as restored.
+    */
+  def registerTable(spark: SparkSession, id: String, loc: Path): Unit = {
+    spark.catalog.createTable(id, loc.toString, "parquet")
+    if (spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(id))
+        .partitionColumnNames.nonEmpty)
+      spark.sql(s"MSCK REPAIR TABLE `$id`")
+    ()
+  }
+
   /** One table manifest entry → catalog registration at `loc` (shared
     * by [[restore]] and [[restoreDeferred]]).
     */
@@ -396,53 +412,23 @@ object ViewStore {
                                 fields: Array[String],
                                 loc: Path): Unit = {
     val id = fields(1)
-    locally {
-      if (fields.length >= 4) {
-                // bucketed: re-register with the recorded CLUSTERED BY so
-                // the bucketed-scan distribution (zero-exchange joins)
-                // survives the session boundary. saveAsTable encodes the
-                // bucket id in each file name, which the bucketed scan
-                // reads back — the data needs no rewrite.
-                val nBuckets = fields(2).toInt
-                val bcols = fields(3).split(",").filter(_.nonEmpty)
-                  .map(c => s"`$c`").mkString(", ")
-                val scols = fields.lift(4).getOrElse("")
-                  .split(",").filter(_.nonEmpty).map(c => s"`$c`").mkString(", ")
-                val sorted = if (scols.nonEmpty) s"SORTED BY ($scols) " else ""
-                val schemaDDL = spark.read.parquet(loc.toString).schema.toDDL
-                spark.sql(s"CREATE TABLE `$id` ($schemaDDL) USING parquet " +
-                  s"CLUSTERED BY ($bcols) ${sorted}INTO $nBuckets BUCKETS " +
-                  s"LOCATION '${loc.toString}'")
-              } else {
-                spark.catalog.createTable(id, loc.toString, "parquet")
-                // a PARTITIONED table's partitions are catalog-tracked
-                // (manageFilesourcePartitions) and a path registration
-                // starts with none — recover them from the directory
-                // layout or the restored table reads zero rows. MSCK on
-                // an unpartitioned table errors; that error is the
-                // common no-op case here — but a GENUINE repair failure
-                // on a partitioned table would leave a registered table
-                // that silently reads zero rows, so it must be visible
-                // (ADVICE r15): log anything that isn't the
-                // not-partitioned no-op.
-                try { spark.sql(s"MSCK REPAIR TABLE `$id`"); () }
-                catch { case e: Exception =>
-                  // the common no-op is the NOT_A_PARTITIONED_TABLE
-                  // error condition — gate on the error CLASS (stable
-                  // API), with the message phrase as a fallback for
-                  // engines that don't carry conditions
-                  val noOp = (e match {
-                    case st: org.apache.spark.SparkThrowable =>
-                      st.getCondition == "NOT_A_PARTITIONED_TABLE"
-                    case _ => false
-                  }) || String.valueOf(e.getMessage).toLowerCase
-                    .contains("not a partitioned table")
-                  if (!noOp)
-                    println(s"WARNING: MSCK REPAIR failed for restored " +
-                      s"table `$id` — if it is partitioned it may read " +
-                      s"zero rows: ${e.getMessage}")
-                }
-              }
-    }
+    if (fields.length >= 4) {
+      // bucketed: re-register with the recorded CLUSTERED BY so the
+      // bucketed-scan distribution (zero-exchange joins) survives the
+      // session boundary. saveAsTable encodes the bucket id in each file
+      // name, which the bucketed scan reads back — the data needs no
+      // rewrite.
+      val nBuckets = fields(2).toInt
+      val bcols = fields(3).split(",").filter(_.nonEmpty)
+        .map(c => s"`$c`").mkString(", ")
+      val scols = fields.lift(4).getOrElse("")
+        .split(",").filter(_.nonEmpty).map(c => s"`$c`").mkString(", ")
+      val sorted = if (scols.nonEmpty) s"SORTED BY ($scols) " else ""
+      val schemaDDL = spark.read.parquet(loc.toString).schema.toDDL
+      spark.sql(s"CREATE TABLE `$id` ($schemaDDL) USING parquet " +
+        s"CLUSTERED BY ($bcols) ${sorted}INTO $nBuckets BUCKETS " +
+        s"LOCATION '${loc.toString}'")
+      ()
+    } else registerTable(spark, id, loc)
   }
 }

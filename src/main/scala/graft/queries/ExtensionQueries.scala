@@ -2317,9 +2317,10 @@ object ExtensionQueries {
     "q196_fusion_delta_significance" -> ((s, dir) => {
       import s.implicits._
       // both compared configs fuse the SAME two legs — pay each leg's
-      // corpus-touching retrieval once (r19): without this the BM25 and
-      // exact-cosine legs re-ran per config per permutation branch
-      // (ExecDump: 28 executed scans, 75 shuffles). hybridLegs returns
+      // corpus-touching retrieval once (r19): without this each config
+      // and permutation branch referenced the BM25 and exact-cosine legs
+      // again (r19's 28-scan reading came from a plan that never
+      // executed; plans/r21 holds the executed census). hybridLegs returns
       // both legs lazily (top-5-bounded); only the vec leg is
       // materialized, by the one eager localCheckpoint below.
       val (lex0, vec) = hybridLegs(s, dir)
@@ -2527,13 +2528,13 @@ object ExtensionQueries {
       val e = t(s, dir, "embeddings").drop("label")
       val probes = e.filter(col("vec_id") < MmrProbeCount)
       // the pool is "paid ONCE" by design — made true at runtime too
-      // (r19): the three λ branches each re-ran the pool ranking, the
-      // unit-vec join, and the pairwise expansion, and exchange reuse
-      // did not collapse them (ExecDump: 27 executed scans). The swept
-      // walk pays all of that once and re-runs only the per-probe
-      // greedy loop per λ; the bounded sweep output (|λ|·probes·4
-      // rows) materializes once and each λ's quality judgment reads
-      // its slice.
+      // (r19): the three λ branches each referenced the pool ranking,
+      // the unit-vec join and the pairwise expansion (r19's 27-scan
+      // reading came from a plan that never executed; plans/r21 holds
+      // the executed census). The swept walk pays all of that once and
+      // re-runs only the per-probe greedy loop per λ; the bounded sweep
+      // output (|λ|·probes·4 rows) materializes once and each λ's
+      // quality judgment reads its slice.
       val pool = SimilarityOps.bruteForceTopK(probes, e, k = 8)
         .select(col("probe_id"), col("cand_id"), col("sim").as("rel"))
       val qrels = mmrQrels.toDF("probe_id", "cand_id", "rel")
@@ -2955,8 +2956,8 @@ object ExtensionQueries {
         dim = dim)
       // both endpoints via ONE explode, not a self-union: the union form
       // referenced the whole pair lineage (banded self-join over the
-      // anti-joined survivors) twice, and runtime exchange reuse never
-      // collapses the copies (ExecDump r19: q75 at 15 executed scans)
+      // anti-joined survivors) twice, and only the exchanges runtime
+      // reuse shares between the copies run once
       val deg = prs.select(explode(array(col("id_a"), col("id_b")))
           .as("vec_id"))
         .groupBy(col("vec_id")).agg(count(lit(1)).as("density"))

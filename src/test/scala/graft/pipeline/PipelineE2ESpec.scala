@@ -2033,6 +2033,46 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(cleared.errors.isEmpty)
     assert(!java.nio.file.Files.exists(stageLoc))
     assert(spark.table("crash_snap").count() == 3)
+
+    // WINDOW 2/3 on a PARTITIONED incremental: the adopted stage must be
+    // re-registered with its partitions, or the next run cannot read it
+    val pDb = Files.createTempDirectory("graft-crash-part-db")
+    val pDir = Files.createTempDirectory("graft-crash-part")
+    val pParq = dataDir.resolve("ev.parquet").toString
+    val evRows = Seq((1L, "d1"), (2L, "d1"), (3L, "d2"), (4L, "d3"))
+    spark.createDataFrame(evRows).toDF("id", "day")
+      .write.mode("overwrite").parquet(pParq)
+    val pModels = pDir.resolve("models"); Files.createDirectories(pModels)
+    Files.writeString(pModels.resolve("crash_part.sql"),
+      s"""SELECT * FROM read_parquet('$pParq')
+         |{% if is_incremental() %} WHERE id > (SELECT max(id) FROM {{ this }}) {% endif %}""".stripMargin)
+    Files.writeString(pDir.resolve("config.yaml"),
+      s"""models_dir: $pModels
+         |db_path: $pDb
+         |models:
+         |  crash_part:
+         |    materialize: incremental
+         |    unique_key: id
+         |    partition_by: day""".stripMargin)
+    val pConfig = PipelineConfig.load(pDir.resolve("config.yaml"))
+    assert(new PipelineSession(spark, pConfig).runNodes().errors.isEmpty)
+    val pTgt = ViewStore.warehouseLocation(spark, "crash_part")
+    val pStage = ViewStore.warehouseLocation(spark, "crash_part__graft_stage")
+    val pBackup = ViewStore.warehouseLocation(spark,
+      "crash_part__graft_backup")
+    spark.table("crash_part").write.mode("overwrite").partitionBy("day")
+      .saveAsTable("crash_part__graft_stage")
+    java.nio.file.Files.move(pTgt, pBackup)
+    spark.sql("DROP TABLE IF EXISTS `crash_part`")
+    spark.sql("DROP TABLE IF EXISTS `crash_part__graft_stage`")
+    val pRecovered = new PipelineSession(spark, pConfig).runNodes()
+    assert(pRecovered.errors.isEmpty,
+      pRecovered.errors.map(_.render).mkString("; "))
+    assert(spark.table("crash_part").collect()
+      .map(r => (r.getAs[Long]("id"), r.getAs[String]("day")))
+      .sortBy(_._1).toSeq == evRows)
+    assert(!java.nio.file.Files.exists(pStage) &&
+      !java.nio.file.Files.exists(pBackup))
   }
 
   test("runNodes releases every cached operator manifest at end-of-run " +

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkTestSession}
+import graft.tools.PlanCensus
 import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -192,22 +193,11 @@ class QueryPlanSpec extends AnyFunSuite {
     val df = SparkEntry.queries("q119_span_pipeline")(spark, dir)
     df.collect()
     val exec = df.queryExecution.executedPlan
-    def count(p: org.apache.spark.sql.execution.SparkPlan)
-             (pred: org.apache.spark.sql.execution.SparkPlan => Boolean)
-        : Int = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        count(a.executedPlan)(pred)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        count(q.plan)(pred)
-      case _: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => 0
-      case other =>
-        (if (pred(other)) 1 else 0) + other.children.map(count(_)(pred)).sum
-    }
-    val scans = count(exec) {
+    val scans = PlanCensus.count(exec) {
       case _: org.apache.spark.sql.execution.FileSourceScanExec => true
       case _ => false
     }
-    val shuffles = count(exec) {
+    val shuffles = PlanCensus.count(exec) {
       case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec |
            _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
         true
@@ -229,22 +219,11 @@ class QueryPlanSpec extends AnyFunSuite {
     val df = SparkEntry.queries("q124_contrastive_triples")(spark, dir)
     df.collect()
     val exec = df.queryExecution.executedPlan
-    def count(p: org.apache.spark.sql.execution.SparkPlan)
-             (pred: org.apache.spark.sql.execution.SparkPlan => Boolean)
-        : Int = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        count(a.executedPlan)(pred)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        count(q.plan)(pred)
-      case _: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => 0
-      case other =>
-        (if (pred(other)) 1 else 0) + other.children.map(count(_)(pred)).sum
-    }
-    val scans = count(exec) {
+    val scans = PlanCensus.count(exec) {
       case _: org.apache.spark.sql.execution.FileSourceScanExec => true
       case _ => false
     }
-    val hashShuffles = count(exec) {
+    val hashShuffles = PlanCensus.count(exec) {
       case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
         s.outputPartitioning
           .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.HashPartitioning]
@@ -460,21 +439,10 @@ class QueryPlanSpec extends AnyFunSuite {
       s"ratio join must broadcast:\n$exec")
   }
 
-  /** Count Generate (explode) operators the executed adaptive plan will
-    * actually RUN: reused exchanges are stubs, not re-executions.
-    */
+  /** Generate (explode) operators the executed adaptive plan RAN. */
   private def executedGenerates(
       p: org.apache.spark.sql.execution.SparkPlan): Int =
-    p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        executedGenerates(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        executedGenerates(q.plan)
-      case _: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => 0
-      case g: org.apache.spark.sql.execution.GenerateExec =>
-        1 + g.children.map(executedGenerates).sum
-      case other => other.children.map(executedGenerates).sum
-    }
+    PlanCensus.count(p)(_.isInstanceOf[org.apache.spark.sql.execution.GenerateExec])
 
   test("q116: BM25 tokenizes ONCE (tf, doc length, idf, and the token " +
       "total all ride one reused collapsed-count exchange) and ranks via " +
