@@ -12,20 +12,9 @@ object Bench {
       "SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_ONLY, SPARK_GRAFT_REPS, " +
       s"SPARK_GRAFT_BENCH_OUT); got '${args.mkString(" ")}'")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val cpus = LocalSpark.cpus
+    val spark = LocalSpark.session()
     spark.sparkContext.setLogLevel("WARN")
-    // same SQL function surface the CLI session gets (shim-based queries
-    // may reference any registered native fn, e.g. date_diff_boundary)
-    graft.functions.GraftExtensions.register(spark)
     // Untimed warmup: JIT the scheduler/parquet/codegen machinery and read
     // every table's footer once, so the first timed query doesn't absorb
     // ~5s of session start-up cost. sf0.01 (not the smallest SF) so AQE

@@ -20,7 +20,7 @@ object Tables {
     // Spark reads as TimestampNTZType (≙ DuckDB's naive TIMESTAMP) — that
     // passes through unchanged. The branch below is DEFENSIVE, for a
     // TIMESTAMP(NANOS) fixture: Spark reads that as LongType under
-    // spark.sql.legacy.parquet.nanosAsLong (set in Verify/Bench), and we
+    // spark.sql.legacy.parquet.nanosAsLong (set by LocalSpark), and we
     // normalize to a microsecond TimestampType, FLOORING like DuckDB's
     // TIMESTAMP_NS cast does: `ts div 1000` alone truncates toward zero,
     // which disagrees by 1µs for pre-1970 sub-µs timestamps.

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -22,22 +21,8 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long, Tables.load
-      // converts to a micros TimestampType.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = LocalSpark.session()
     spark.sparkContext.setLogLevel("WARN")
-    // same SQL function surface the CLI session gets (q84 needs
-    // date_diff_boundary; shim output may reference any registered fn)
-    graft.functions.GraftExtensions.register(spark)
     new java.io.File(outDir).mkdirs()
     // dev knob, mirrors Bench's: comma-separated substrings to subset the
     // dump (iterating on one query shouldn't re-run 96). The driver never

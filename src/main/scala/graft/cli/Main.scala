@@ -96,25 +96,9 @@ object Main {
       dbPath = flags.get("db-path").orElse(base.dbPath))
   }
 
-  def buildSpark(config: PipelineConfig): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val warehouse = config.dbPath.getOrElse(
-      Files.createTempDirectory("graft-warehouse").toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // model SQL can call graft's native functions (len, cosine_sim, …)
-    graft.functions.GraftExtensions.register(spark)
-    spark
-  }
+  def buildSpark(config: PipelineConfig): SparkSession =
+    graft.LocalSpark.session("spark.sql.warehouse.dir" -> config.dbPath
+      .getOrElse(Files.createTempDirectory("graft-warehouse").toString))
 
   /** `run`, and dbt `build` (`buildMode`) — the daily driver: seeds,
     * models, snapshots and ALL their data tests interleaved in one

@@ -282,18 +282,14 @@ object ProfileOps {
         abs(col("__su") - lit(1000000L) * col("n_pos")))
     def ratio6(numExpr: String): Column =
       (expr(numExpr).cast("double") / 1000000.0)
-    // ONE pass emits the per-bucket rows AND the −1 summary row (r19):
-    // the former per∪summary union referenced `per` twice, so whatever
-    // of the second branch runtime exchange reuse did not cover ran
-    // again (r19's "reused=0" reading came from a plan that never
-    // executed; plans/r21 holds the executed census).
-    // Instead each bucket row explodes into its own group plus the −1
-    // group (≤ 2·nBuckets rows) and ONE re-aggregate serves both:
-    // per-bucket groups are singletons, so their sums are exactly the
-    // row values, and the summary group's sums are the old summary's —
-    // the ratio formulas below are shared verbatim (the ECE identity:
-    // Σ_b (n_b/N)·gap_b = (Σ_b gap_u_b) / (10⁶·N)). No second corpus
-    // pass, no materialization barrier.
+    // ONE re-aggregate emits the per-bucket rows AND the −1 summary
+    // row: each bucket row explodes into its own group plus the −1 group
+    // (≤ 2·nBuckets rows). Per-bucket groups are singletons, so their
+    // sums are exactly the row values, and the −1 group's sums are the
+    // summary's — so the three ratio formulas below serve both (the ECE
+    // identity: Σ_b (n_b/N)·gap_b = (Σ_b gap_u_b) / (10⁶·N)). The form
+    // is kept because it is the shorter one: a per ∪ summary union
+    // would state each formula twice.
     per.select(explode(array(col("bucket"), lit(-1))).as("bucket"),
         col("n"), col("n_pos"), col("__su"), col("__gap_u"))
       .groupBy(col("bucket"))

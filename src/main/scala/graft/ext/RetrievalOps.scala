@@ -756,57 +756,41 @@ object RetrievalOps {
         "CASE WHEN __frk IS NULL THEN 0L " +
           "ELSE (2000000 + CAST(__frk AS BIGINT)) div " +
           "(2 * CAST(__frk AS BIGINT)) END"))
-    // ONE pass emits the per-query rows AND the −1 mean row (r19): the
-    // former per∪mean union referenced `per` twice, so whatever of the
-    // second branch runtime exchange reuse did not cover ran again
-    // (r19's "reused=0" reading came from a plan that never executed;
-    // plans/r21 holds q172's executed census). Each per-query row
-    // explodes into its own group plus the −1 group and ONE
-    // re-aggregate serves both: per-query groups are singletons (max()
-    // returns the row's own metric), the −1 group gets the mean formulas.
-    // The mean's 6-dp rounding stays in INTEGER space (round-half-up long
-    // division, then ONE exact /10⁶ — a float round() here can land
-    // exactly on a .5 decimal boundary and split engines). queryCol = −1
-    // stays reserved for the mean row.
     val qType = per.schema(queryCol).dataType
-    // the −1 sentinel is LOAD-BEARING since the one-pass rewrite: a
-    // genuine query id of −1 would silently aggregate INTO the mean
-    // group (ADVICE r19) — fail NAMED instead. Evaluated per PER-QUERY
-    // row (qrels-bounded), not per corpus row.
+    // queryCol = −1 is reserved for the mean row: a genuine query id of
+    // −1 would be indistinguishable from it downstream, so it fails
+    // NAMED. Evaluated per per-query row (qrels-bounded).
     val qGuarded = when(col(queryCol) <=> lit(-1).cast(qType),
         raise_error(lit("rankingQuality: query id -1 is reserved for " +
           "the mean row — re-key the offending run/qrels query"))
           .cast(qType))
       .otherwise(col(queryCol).cast(qType))
-    per.select(
-        explode(array(qGuarded, lit(-1).cast(qType)))
-          .as("__oq"),
-        col("n_rel"), col("n_rel_at_k"), col("recall_at_k"),
-        col("ndcg_at_k"), col("rr"),
-        col("__rec_u"), col("__ndcg_u"), col("__rr_u"))
-      .groupBy(col("__oq"))
-      .agg(count(lit(1)).as("__q"),
+    // the mean's 6-dp rounding happens in INTEGER space (round-half-up
+    // long division), then ONE exact division by 10⁶ — a float round()
+    // here can land exactly on a .5 decimal boundary and split engines.
+    // An evaluation with no query emits no mean row (an ungrouped
+    // aggregate over nothing would be an all-NULL row).
+    // per ∪ mean reads `per` twice; runtime exchange reuse serves the
+    // second read (plans/r22).
+    val mean = per.agg(
+        count(lit(1)).as("__q"),
         sum(col("n_rel")).as("n_rel"),
         sum(col("n_rel_at_k")).as("n_rel_at_k"),
-        max(col("recall_at_k")).as("__rec1"),
-        max(col("ndcg_at_k")).as("__ndcg1"),
-        max(col("rr")).as("__rr1"),
         sum(col("__rec_u")).as("__ru"),
         sum(col("__ndcg_u")).as("__nu"),
         sum(col("__rr_u")).as("__mu"))
-      .select(col("__oq").as(queryCol), col("n_rel"), col("n_rel_at_k"),
-        when(col("__oq") === lit(-1).cast(qType),
-            expr("(2 * __ru + __q) div (2 * __q)").cast("double") /
-              1000000.0)
-          .otherwise(col("__rec1")).as("recall_at_k"),
-        when(col("__oq") === lit(-1).cast(qType),
-            expr("(2 * __nu + __q) div (2 * __q)").cast("double") /
-              1000000.0)
-          .otherwise(col("__ndcg1")).as("ndcg_at_k"),
-        when(col("__oq") === lit(-1).cast(qType),
-            expr("(2 * __mu + __q) div (2 * __q)").cast("double") /
-              1000000.0)
-          .otherwise(col("__rr1")).as("rr"))
+      .filter(col("__q") > 0)
+      .select(lit(-1).cast(qType).as(queryCol),
+        col("n_rel"), col("n_rel_at_k"),
+        (expr("(2 * __ru + __q) div (2 * __q)").cast("double") /
+          1000000.0).as("recall_at_k"),
+        (expr("(2 * __nu + __q) div (2 * __q)").cast("double") /
+          1000000.0).as("ndcg_at_k"),
+        (expr("(2 * __mu + __q) div (2 * __q)").cast("double") /
+          1000000.0).as("rr"))
+    per.select(qGuarded.as(queryCol), col("n_rel"), col("n_rel_at_k"),
+        col("recall_at_k"), col("ndcg_at_k"), col("rr"))
+      .unionAll(mean)
   }
 
   /** [[rrfFuse]] quality over a (kRrf × lexical-weight) tuning grid in

@@ -228,8 +228,10 @@ object ExtensionQueries {
     // exchange and materializes; the LSH stage re-attaches raw text by
     // id instead of re-running the scorer for every downstream branch
     // (guide §8: decide with small rows, move heavy bytes once — the
-    // old form re-evaluated the gate in each of its ~4 consumers, and
-    // runtime exchange reuse never deduplicated them).
+    // old form re-evaluated the gate in each of its ~4 consumers). The
+    // barrier keeps the keep set single-computed: runtime exchange reuse
+    // does not cover its consumers, and without it q59 scans the corpus
+    // 3 times instead of 2 (plans/r22).
     val keep = docs0
       .withColumn("quality", TextOps.qualityScore(col("text")))
       .filter(col("quality") >= 0.5)
@@ -2338,9 +2340,10 @@ object ExtensionQueries {
       // leg's weight differs per config (1.0 vs 2.0), so it enters as
       // two rrfFuse legs and keeps the r19 checkpoint to stay
       // single-computed — one barrier job instead of two serialized
-      // ones. (8-core A/B, cal-normalized: one-pass 1.016 vs two-branch
-      // 1.092; the lazy-checkpoint variant was rejected at 4.28 s vs
-      // eager 3.38 s — consumer stages race on block locks.)
+      // ones; without it the query scans 6 times instead of 4
+      // (plans/r22). (8-core A/B, cal-normalized: one-pass 1.016 vs
+      // two-branch 1.092; the lazy-checkpoint variant was rejected at
+      // 4.28 s vs eager 3.38 s — consumer stages race on block locks.)
       val lexBoth = lex0.select(explode(array(
           (col("query_id") * 2).as("k0"),
           (col("query_id") * 2 + 1).as("k1"))).as("query_id"),
@@ -2498,7 +2501,9 @@ object ExtensionQueries {
       // top-k prefix property (same (sim DESC, cand_id) window order),
       // bruteForceTopK(k=4) ≡ bruteForceTopK(k=8).filter(rk ≤ 4), so
       // the corpus-wide exact scoring pass runs once, not twice.
-      // Materialized per invocation (bounded: probes × 8 rows).
+      // Materialized per invocation (bounded: probes × 8 rows): without
+      // the barrier exchange reuse does not cover the second arm, and
+      // the query scans 4 times instead of 3 (plans/r22).
       val pool = SimilarityOps.bruteForceTopK(probes, e, k = 8)
         .localCheckpoint(true)
       val mmr = SimilarityOps.mmrRerankPool(
@@ -2527,20 +2532,11 @@ object ExtensionQueries {
       import s.implicits._
       val e = t(s, dir, "embeddings").drop("label")
       val probes = e.filter(col("vec_id") < MmrProbeCount)
-      // the pool is "paid ONCE" by design — made true at runtime too
-      // (r19): the three λ branches each referenced the pool ranking,
-      // the unit-vec join and the pairwise expansion (r19's 27-scan
-      // reading came from a plan that never executed; plans/r21 holds
-      // the executed census). The swept walk pays all of that once and
-      // re-runs only the per-probe greedy loop per λ; the bounded sweep
-      // output (|λ|·probes·4 rows) materializes once and each λ's
-      // quality judgment reads its slice.
       val pool = SimilarityOps.bruteForceTopK(probes, e, k = 8)
         .select(col("probe_id"), col("cand_id"), col("sim").as("rel"))
       val qrels = mmrQrels.toDF("probe_id", "cand_id", "rel")
       val sweep = SimilarityOps.mmrRerankPoolSweep(pool, e, k = 4,
           lambdas = Seq(0.25, 0.5, 0.75))
-        .localCheckpoint(true)
       Seq(0.25, 0.5, 0.75).map { lam =>
         RetrievalOps.rankingQuality(
             sweep.filter(col("lambda") === lam)
@@ -2636,6 +2632,7 @@ object ExtensionQueries {
       val qrels = mmrQrels.toDF("probe_id", "cand_id", "rel")
       // same one-pool discipline as q178 (r19): the plain arm is the
       // top-8 pool's rk ≤ 4 prefix — one exact scoring pass, not two
+      // (5 scans instead of 3 without the barrier, plans/r22)
       val pool = SimilarityOps.bruteForceTopK(probes, e, k = 8)
         .localCheckpoint(true)
       val mmr = SimilarityOps.mmrRerankPool(
@@ -4381,12 +4378,16 @@ object ExtensionQueries {
     * that compose the walk into a LARGER chain (q178 judges it against
     * qrels; q182 runs THREE walks at different λ — `tag` keeps their
     * CTE names distinct, `lambda` must be exact-binary so both engines
-    * carry the identical literal).
+    * carry the identical literal). Each step reads the previous
+    * `selu` twice, so every `selu` but the last is `AS MATERIALIZED`:
+    * DuckDB would otherwise inline the chain and re-expand it per
+    * reference (q167's oracle ran out of memory that way).
     */
   private def mmrGreedyCtes(k: Int, lambda: Double = 0.5,
                             tag: String = ""): String = {
     val lam = s"CAST($lambda AS DOUBLE)"
     val inv = s"CAST(${1.0 - lambda} AS DOUBLE)"
+    def selu(i: Int) = s"selu$i$tag AS${if (i < k) " MATERIALIZED" else ""}"
     val head =
       s"""sel1$tag AS (SELECT probe_id, cand_id,
          |    $lam * rel AS score, 1 AS mmr_rank FROM (
@@ -4394,7 +4395,7 @@ object ExtensionQueries {
          |      PARTITION BY probe_id ORDER BY rel DESC, cand_id) AS rn
          |    FROM rel) t
          |  WHERE rn = 1),
-         |selu1$tag AS (SELECT * FROM sel1$tag)""".stripMargin
+         |${selu(1)} (SELECT * FROM sel1$tag)""".stripMargin
     val steps = (2 to k).map { i =>
       s"""cand$i$tag AS (SELECT c.probe_id, c.cand_id,
          |    $lam * c.rel - $inv * m.mx
@@ -4414,7 +4415,7 @@ object ExtensionQueries {
          |      PARTITION BY probe_id ORDER BY score DESC, cand_id) AS rn
          |    FROM cand$i$tag) t
          |  WHERE rn = 1),
-         |selu$i$tag AS (SELECT * FROM selu${i - 1}$tag
+         |${selu(i)} (SELECT * FROM selu${i - 1}$tag
          |  UNION ALL SELECT * FROM sel$i$tag)""".stripMargin
     }
     (head +: steps).mkString(",\n")
@@ -4562,6 +4563,8 @@ object ExtensionQueries {
     * greedy steps are the shared q164 unroll at the COMMITTED serving
     * λ ([[graft.ext.ServingConfig.mmrLambda]] — the q182 sweep winner,
     * carried here as the same exact-binary literal the query serves).
+    * `rel` and `pp` are `AS MATERIALIZED` for the reason the walk's
+    * `selu` steps are: each is read by every step.
     */
   private lazy val mmrFromStoreOracleSql: String =
     ivfPqChainSql(k = 8,
@@ -4569,9 +4572,10 @@ object ExtensionQueries {
         nprobe = graft.ext.ServingConfig.annNprobe) + s""",
       |me AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
       |  FROM embeddings),
-      |rel AS (SELECT probe_id, cand_id, sim AS rel FROM rk
-      |  WHERE rk <= 8),
-      |pp AS (SELECT r1.probe_id, r1.cand_id AS a, r2.cand_id AS b,
+      |rel AS MATERIALIZED (SELECT probe_id, cand_id, sim AS rel
+      |  FROM rk WHERE rk <= 8),
+      |pp AS MATERIALIZED (SELECT r1.probe_id, r1.cand_id AS a,
+      |    r2.cand_id AS b,
       |    round(list_cosine_similarity(ea.emb, eb.emb), 6) AS psim
       |  FROM rel r1 JOIN rel r2 ON r1.probe_id = r2.probe_id
       |    AND r1.cand_id <> r2.cand_id

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -216,6 +216,45 @@ object EventStreams {
       .drop("__rk")
   }
 
+  /** The at-least-once replay contract every `foreachBatch` ingest here
+    * shares (Spark redelivers a micro-batch whose commit it did not
+    * record, e.g. after a crash). A processed batch leaves a marker,
+    * `<markerRoot>.appended/batch-N`, and a redelivered batch that finds
+    * it is skipped wholesale. Otherwise `body` runs over the batch,
+    * persisted so its writes read one materialization, and the marker is
+    * created LAST, after every write of `body` has returned. So the one
+    * crash window is "writes done, marker not": the batch replays whole,
+    * and each caller states what that replay can leave behind and what
+    * heals it. `body` gets the session, the batch and its id.
+    */
+  private def replayMarked(stream: DataFrame, markerRoot: String,
+                           checkpoint: String)(
+      body: (SparkSession, DataFrame, Long) => Unit) = {
+    import org.apache.hadoop.fs.Path
+    stream.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val spark = batch.sparkSession
+        val marker = new Path(s"$markerRoot.appended", s"batch-$batchId")
+        val mfs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (!mfs.exists(marker)) {
+          val b = batch.persist()
+          try {
+            body(spark, b, batchId)
+            mfs.mkdirs(marker.getParent)
+            mfs.create(marker, true).close()
+          } finally { b.unpersist(); () }
+        }
+      }
+      .start()
+  }
+
+  private def exists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   /** Streaming ingest dedup: each micro-batch of documents flags against
     * the persisted signature store ([[graft.ext.DedupOps.signatureStore]]
     * semantics), writes its decisions to `outPath/batch_id=N`, and
@@ -233,15 +272,14 @@ object EventStreams {
     * existence is always a deliberate publish, never an accidental
     * side effect of the first append.
     *
-    * Retry contract (foreachBatch is at-least-once): replays are made
-    * harmless by construction. A processed batch leaves a marker
-    * (`<storePath>.appended/batch-N`) and is skipped wholesale; an
-    * unmarked replay (1) OVERWRITES its own decisions partition — never
-    * appends rows beside stale ones — and (2) flags against the store
-    * with its OWN doc ids anti-joined out, so signatures a half-finished
-    * earlier attempt already appended can't self-collide a unique doc
-    * into `dup=true` (doc ids are assumed globally unique — the same
-    * contract every dedup operator here carries). The one surviving
+    * Replays follow [[replayMarked]] (markers beside `storePath`) and are
+    * harmless by construction: an unmarked replay (1) OVERWRITES its own
+    * decisions partition — never appends rows beside stale ones — and
+    * (2) flags against the store with its OWN doc ids anti-joined out,
+    * so signatures a half-finished earlier attempt already appended
+    * can't self-collide a unique doc into `dup=true` (doc ids are
+    * assumed globally unique — the same contract every dedup operator
+    * here carries). The one surviving
     * window — crash after the append, before the marker — can duplicate
     * signature ROWS in the store on replay; that inflates a future
     * collision's `n_dups` count but can never flip a `dup` boolean,
@@ -256,52 +294,33 @@ object EventStreams {
                      k: Int = 3, numBands: Int = 8, rowsPerBand: Int = 2,
                      minJaccard: Double = 0.8) = {
     import graft.ext.DedupOps
-    import org.apache.hadoop.fs.Path
-    docStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val marker = new Path(s"$storePath.appended", s"batch-$batchId")
-        val mfs = marker.getFileSystem(hconf)
-        if (!mfs.exists(marker)) {
-          val b = batch.persist() // one materialization: flags + accept join
-          try {
-            val storeDir = new Path(storePath)
-            if (!storeDir.getFileSystem(hconf).exists(storeDir)) {
-              // fresh crawl: publish an explicit EMPTY store (atomic,
-              // _SUCCESS-marked) rather than letting the first append
-              // implicitly create one — the appendToSignatureStore
-              // contract, so a later signatureStore(corpus) on this
-              // path is a visible first-writer-wins event, not a
-              // silent skip over an accidental store
-              graft.ext.DedupOps.signatureStore(spark, b.limit(0),
-                storePath, k, numBands, rowsPerBand)
-              ()
-            }
-            val store = spark.read.parquet(storePath)
-            val corpus = store.join(b.select("doc_id"), Seq("doc_id"),
-              "left_anti") // replay self-exclusion
-            val dir = s"$outPath/batch_id=$batchId"
-            DedupOps.incrementalNearDupFlags(b, corpus, k, numBands,
-                rowsPerBand, minJaccard)
-              .write.mode("overwrite").parquet(dir) // idempotent partition
-            // re-read the decisions just written: the accept join must not
-            // re-execute the whole dedup pipeline a second time
-            val decisions = spark.read.parquet(dir)
-            val accepted = b.join(
-              decisions.filter(!col("dup")).select("doc_id"), "doc_id")
-            DedupOps.appendToSignatureStore(spark, accepted, storePath,
-              k, numBands, rowsPerBand)
-            mfs.mkdirs(marker.getParent)
-            mfs.create(marker, true).close()
-            ()
-          } finally { b.unpersist(); () }
-        }
+    replayMarked(docStream, storePath, checkpoint) { (spark, b, batchId) =>
+      if (!exists(spark, storePath)) {
+        // fresh crawl: publish an explicit EMPTY store (atomic,
+        // _SUCCESS-marked) rather than letting the first append
+        // implicitly create one — the appendToSignatureStore contract,
+        // so a later signatureStore(corpus) on this path is a visible
+        // first-writer-wins event, not a silent skip over an accidental
+        // store
+        DedupOps.signatureStore(spark, b.limit(0), storePath, k,
+          numBands, rowsPerBand)
+        ()
       }
-      .start()
+      val store = spark.read.parquet(storePath)
+      val corpus = store.join(b.select("doc_id"), Seq("doc_id"),
+        "left_anti") // replay self-exclusion
+      val dir = s"$outPath/batch_id=$batchId"
+      DedupOps.incrementalNearDupFlags(b, corpus, k, numBands,
+          rowsPerBand, minJaccard)
+        .write.mode("overwrite").parquet(dir) // idempotent partition
+      // re-read the decisions just written: the accept join must not
+      // re-execute the whole dedup pipeline a second time
+      val decisions = spark.read.parquet(dir)
+      val accepted = b.join(
+        decisions.filter(!col("dup")).select("doc_id"), "doc_id")
+      DedupOps.appendToSignatureStore(spark, accepted, storePath,
+        k, numBands, rowsPerBand)
+    }
   }
 
   /** Streaming SEMANTIC ingest dedup — [[runIngestDedup]]'s embedding
@@ -313,8 +332,8 @@ object EventStreams {
     * dynamic partition pruning keeps untouched cell dirs unread), writes
     * decisions to `outPath/batch_id=N`, and appends the accepted rows'
     * unit vectors — so a later micro-batch dedups against an earlier
-    * one. Same retry contract as the text flavor, for the same reasons:
-    * marker-skipped replays, overwrite-own-partition decisions, store
+    * one. Same replay contract as the text flavor, for the same reasons:
+    * [[replayMarked]], overwrite-own-partition decisions, store
     * anti-joined on the batch's own vec_ids so a half-finished earlier
     * attempt can't self-collide; the one surviving crash window
     * (append done, marker not) duplicates store ROWS, which inflates
@@ -329,48 +348,27 @@ object EventStreams {
                              cents: Array[Array[Double]],
                              minSim: Double) = {
     import graft.ext.SimilarityOps
-    import org.apache.hadoop.fs.Path
-    vecStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val marker = new Path(s"$storePath.appended", s"batch-$batchId")
-        val mfs = marker.getFileSystem(hconf)
-        if (!mfs.exists(marker)) {
-          val b = batch.persist()
-          try {
-            val storeDir = new Path(storePath)
-            if (!storeDir.getFileSystem(hconf).exists(storeDir)) {
-              // fresh crawl: publish an explicit EMPTY store (atomic,
-              // _SUCCESS-marked) — the appendToEmbeddingStore contract
-              SimilarityOps.embeddingStore(spark, b.limit(0), storePath,
-                cents)
-              ()
-            }
-            // schema-stated read: the bootstrap's empty store has no
-            // data files, so inference would fail on batch 0
-            val store = SimilarityOps.readEmbeddingStore(spark, storePath)
-            val corpus = store.join(b.select("vec_id"), Seq("vec_id"),
-              "left_anti") // replay self-exclusion
-            val dir = s"$outPath/batch_id=$batchId"
-            SimilarityOps.incrementalSemanticDupFlags(b, corpus, cents,
-                minSim)
-              .write.mode("overwrite").parquet(dir) // idempotent partition
-            val decisions = spark.read.parquet(dir)
-            val accepted = b.join(
-              decisions.filter(!col("dup")).select("vec_id"), "vec_id")
-            SimilarityOps.appendToEmbeddingStore(spark, accepted,
-              storePath, cents)
-            mfs.mkdirs(marker.getParent)
-            mfs.create(marker, true).close()
-            ()
-          } finally { b.unpersist(); () }
-        }
+    replayMarked(vecStream, storePath, checkpoint) { (spark, b, batchId) =>
+      if (!exists(spark, storePath)) {
+        // fresh crawl: publish an explicit EMPTY store (atomic,
+        // _SUCCESS-marked) — the appendToEmbeddingStore contract
+        SimilarityOps.embeddingStore(spark, b.limit(0), storePath, cents)
+        ()
       }
-      .start()
+      // schema-stated read: the bootstrap's empty store has no data
+      // files, so inference would fail on batch 0
+      val store = SimilarityOps.readEmbeddingStore(spark, storePath)
+      val corpus = store.join(b.select("vec_id"), Seq("vec_id"),
+        "left_anti") // replay self-exclusion
+      val dir = s"$outPath/batch_id=$batchId"
+      SimilarityOps.incrementalSemanticDupFlags(b, corpus, cents, minSim)
+        .write.mode("overwrite").parquet(dir) // idempotent partition
+      val decisions = spark.read.parquet(dir)
+      val accepted = b.join(
+        decisions.filter(!col("dup")).select("vec_id"), "vec_id")
+      SimilarityOps.appendToEmbeddingStore(spark, accepted, storePath,
+        cents)
+    }
   }
 
   /** Streaming ANN-INDEX ingest — keep the
@@ -381,10 +379,9 @@ object EventStreams {
     * [[graft.ext.SimilarityOps.ivfPqTopKFromStore]] the moment a batch
     * lands — no rebuild job between crawl and query. Composes with
     * [[runSemanticIngestDedup]] the way a curation pipeline runs them:
-    * gate the batch there first, feed the ACCEPTED rows here. Retry
-    * contract mirrors the store ingests: a marker under
-    * `indexPath.appended/batch-N` makes replays whole-batch no-ops, an
-    * absent index bootstraps as an explicit empty published store, and
+    * gate the batch there first, feed the ACCEPTED rows here. Replays
+    * follow [[replayMarked]] (markers beside `indexPath`), an absent
+    * index bootstraps as an explicit empty published store, and
     * the one surviving crash window (append done, marker not) duplicates
     * index ROWS — which cannot change any top-k answer beyond duplicate
     * candidates that [[graft.ext.SimilarityOps.compactAnnIndex]]'s
@@ -395,33 +392,14 @@ object EventStreams {
                         checkpoint: String, cents: Array[Array[Double]],
                         cbs: Array[Array[Array[Double]]]) = {
     import graft.ext.SimilarityOps
-    import org.apache.hadoop.fs.Path
-    vecStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val marker = new Path(s"$indexPath.appended", s"batch-$batchId")
-        val mfs = marker.getFileSystem(hconf)
-        if (!mfs.exists(marker)) {
-          val b = batch.persist()
-          try {
-            val dir = new Path(indexPath)
-            if (!dir.getFileSystem(hconf).exists(dir)) {
-              SimilarityOps.annIndexStore(spark, b.limit(0), indexPath,
-                cents, cbs)
-              ()
-            }
-            SimilarityOps.appendToAnnIndex(spark, b, indexPath, cents, cbs)
-            mfs.mkdirs(marker.getParent)
-            mfs.create(marker, true).close()
-            ()
-          } finally { b.unpersist(); () }
-        }
+    replayMarked(vecStream, indexPath, checkpoint) { (spark, b, _) =>
+      if (!exists(spark, indexPath)) {
+        SimilarityOps.annIndexStore(spark, b.limit(0), indexPath, cents,
+          cbs)
+        ()
       }
-      .start()
+      SimilarityOps.appendToAnnIndex(spark, b, indexPath, cents, cbs)
+    }
   }
 
   /** Streaming VECTOR-SERVING ingest (VERDICT r16 task 5 — closes the
@@ -435,10 +413,10 @@ object EventStreams {
     * already could via [[runLexicalStatsIngest]]. Per-batch cost is
     * batch-bound: each micro-batch encodes/assigns ONLY its own rows.
     *
-    * Replay contract (foreachBatch is at-least-once): ONE batch-id
-    * marker beside the VECTOR store, created after BOTH appends, makes
-    * redelivered batches no-ops; both stores bootstrap from an explicit
-    * empty publish when absent, so the stream can start first. The
+    * Replays follow [[replayMarked]] with ONE marker beside the VECTOR
+    * store, created after BOTH appends; both stores bootstrap from an
+    * explicit empty publish when absent, so the stream can start first.
+    * The
     * crash windows re-append at most one batch into one or both stores
     * as EXACT duplicate rows — the same residue contract as
     * [[runAnnIndexIngest]]: a duplicated candidate can occupy two
@@ -452,40 +430,19 @@ object EventStreams {
                              cbs: Array[Array[Array[Double]]],
                              nBuckets: Int = 64) = {
     import graft.ext.SimilarityOps
-    import org.apache.hadoop.fs.Path
-    vecStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val marker = new Path(s"$vecPath.appended", s"batch-$batchId")
-        val mfs = marker.getFileSystem(hconf)
-        if (!mfs.exists(marker)) {
-          val b = batch.persist()
-          try {
-            val idxDir = new Path(indexPath)
-            if (!idxDir.getFileSystem(hconf).exists(idxDir)) {
-              SimilarityOps.annIndexStore(spark, b.limit(0), indexPath,
-                cents, cbs)
-              ()
-            }
-            val vecSuccess = new Path(vecPath, "_SUCCESS")
-            if (!vecSuccess.getFileSystem(hconf).exists(vecSuccess)) {
-              SimilarityOps.vectorStore(spark, b.limit(0), vecPath,
-                nBuckets)
-              ()
-            }
-            SimilarityOps.appendToAnnIndex(spark, b, indexPath, cents, cbs)
-            SimilarityOps.appendToVectorStore(spark, b, vecPath, nBuckets)
-            mfs.mkdirs(marker.getParent)
-            mfs.create(marker, true).close()
-            ()
-          } finally { b.unpersist(); () }
-        }
+    replayMarked(vecStream, vecPath, checkpoint) { (spark, b, _) =>
+      if (!exists(spark, indexPath)) {
+        SimilarityOps.annIndexStore(spark, b.limit(0), indexPath, cents,
+          cbs)
+        ()
       }
-      .start()
+      if (!exists(spark, s"$vecPath/_SUCCESS")) {
+        SimilarityOps.vectorStore(spark, b.limit(0), vecPath, nBuckets)
+        ()
+      }
+      SimilarityOps.appendToAnnIndex(spark, b, indexPath, cents, cbs)
+      SimilarityOps.appendToVectorStore(spark, b, vecPath, nBuckets)
+    }
   }
 
   /** Streaming lexical-stats ingest — keeps a
@@ -494,9 +451,8 @@ object EventStreams {
     * without ever re-tokenizing the accumulated corpus: each micro-batch
     * tokenizes ONLY itself and appends its (doc, term, tf, dl) rows and
     * docs rows ([[graft.ext.RetrievalOps.appendToLexicalStats]] — per-
-    * batch cost is batch-bound). Same replay contract as
-    * [[runAnnIndexIngest]]: a batch-id marker created AFTER the append
-    * makes redelivered batches no-ops, and an absent store bootstraps
+    * batch cost is batch-bound). Replays follow [[replayMarked]]
+    * (markers beside `statsPath`), and an absent store bootstraps
     * from an empty publish so the stream can start before any batch
     * corpus exists. Streamed ≡ batch-built store (spec-pinned).
     *
@@ -512,35 +468,15 @@ object EventStreams {
                             checkpoint: String, idCol: String,
                             textCol: String, nBuckets: Int = 64) = {
     import graft.ext.RetrievalOps
-    import org.apache.hadoop.fs.Path
-    docStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val marker = new Path(s"$statsPath.appended", s"batch-$batchId")
-        val mfs = marker.getFileSystem(hconf)
-        if (!mfs.exists(marker)) {
-          val b = batch.persist()
-          try {
-            val terms = new Path(s"$statsPath/terms")
-            if (!terms.getFileSystem(hconf)
-                .exists(new Path(terms, "_SUCCESS"))) {
-              RetrievalOps.lexicalStatsStore(spark, b.limit(0), statsPath,
-                idCol, textCol, nBuckets)
-              ()
-            }
-            RetrievalOps.appendToLexicalStats(spark, b, statsPath, idCol,
-              textCol, nBuckets)
-            mfs.mkdirs(marker.getParent)
-            mfs.create(marker, true).close()
-            ()
-          } finally { b.unpersist(); () }
-        }
+    replayMarked(docStream, statsPath, checkpoint) { (spark, b, _) =>
+      if (!exists(spark, s"$statsPath/terms/_SUCCESS")) {
+        RetrievalOps.lexicalStatsStore(spark, b.limit(0), statsPath,
+          idCol, textCol, nBuckets)
+        ()
       }
-      .start()
+      RetrievalOps.appendToLexicalStats(spark, b, statsPath, idCol,
+        textCol, nBuckets)
+    }
   }
 
   case class DriftRow(batch_id: Long, cell: Int, n_before: Option[Long],
@@ -558,16 +494,17 @@ object EventStreams {
     * nCells-row bounded probe — and folds into an nCells-row state store.
     * Per-batch cost ∝ batch + nCells; state never grows.
     *
-    * Replay contract (foreachBatch is at-least-once): the state store
-    * publishes via [[graft.ext.StoreSwap]] (write-new + atomic swap) and
-    * records the batch id it last folded, which makes the fold
-    * IDEMPOTENT: a replay that finds the state already at this batch id
-    * (crash between state-swap and drift-append) re-derives the
-    * pre-batch state by subtraction instead of double-folding. The one
+    * Replays follow [[replayMarked]] (markers beside `outPath`). The
+    * state store publishes via [[graft.ext.StoreSwap]] (write-new +
+    * atomic swap) and records the batch id it last folded, which makes
+    * the fold IDEMPOTENT: a replay that finds the state already at
+    * this batch id (crash between state-swap and drift-append)
+    * re-derives the pre-batch state by subtraction instead of
+    * double-folding. The one
     * surviving crash window (drift appended, marker not) duplicates
     * drift ROWS — monitoring output, dedupable by (batch_id, cell),
     * with at most last-ULP cohesion differences from the subtraction
-    * path — and can never corrupt the state. Marker is created LAST.
+    * path — and can never corrupt the state.
     */
   def runDriftMonitor(vecStream: DataFrame, embCol: String,
                       cents: Array[Array[Double]], statePath: String,
@@ -577,80 +514,66 @@ object EventStreams {
     import scala.math.BigDecimal.RoundingMode
     def r(x: Double, n: Int): Double =
       BigDecimal(x).setScale(n, RoundingMode.HALF_UP).toDouble
-    vecStream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val marker = new Path(s"$outPath.appended", s"batch-$batchId")
-        val mfs = marker.getFileSystem(hconf)
-        if (!mfs.exists(marker)) {
-          val bAgg: Map[Int, (Long, Double)] = SimilarityOps
-            .withUnitVec(batch.toDF(), embCol, "__u")
-            .withColumn("cell", SimilarityOps.cellOf(col("__u"), cents))
-            .filter(col("cell").isNotNull)
-            .withColumn("__d", org.apache.spark.sql.graft.VectorFunctions
-              .dotProduct(col("__u"), element_at(
-                typedLit(cents.map(_.toSeq).toSeq), col("cell") + 1)))
-            .groupBy(col("cell"))
-            .agg(count(lit(1)).as("n"), sum(col("__d")).as("coh"))
+    replayMarked(vecStream, outPath, checkpoint) { (spark, b, batchId) =>
+      import spark.implicits._
+      val bAgg: Map[Int, (Long, Double)] = SimilarityOps
+        .withUnitVec(b, embCol, "__u")
+        .withColumn("cell", SimilarityOps.cellOf(col("__u"), cents))
+        .filter(col("cell").isNotNull)
+        .withColumn("__d", org.apache.spark.sql.graft.VectorFunctions
+          .dotProduct(col("__u"), element_at(
+            typedLit(cents.map(_.toSeq).toSeq), col("cell") + 1)))
+        .groupBy(col("cell"))
+        .agg(count(lit(1)).as("n"), sum(col("__d")).as("coh"))
+        .collect()
+        .map(x => x.getInt(0) -> (x.getLong(1), x.getDouble(2))).toMap
+      val sPath = new Path(statePath)
+      val sfs = sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      StoreSwap.recoverIfInterrupted(sfs, sPath)
+      val (stateBid, state0) =
+        if (sfs.exists(sPath)) {
+          val rows = spark.read.parquet(statePath).as[DriftState]
             .collect()
-            .map(x => x.getInt(0) -> (x.getLong(1), x.getDouble(2))).toMap
-          val sPath = new Path(statePath)
-          val sfs = sPath.getFileSystem(hconf)
-          StoreSwap.recoverIfInterrupted(sfs, sPath)
-          val (stateBid, state0) =
-            if (sfs.exists(sPath)) {
-              val rows = spark.read.parquet(statePath).as[DriftState]
-                .collect()
-              (rows.headOption.fold(-1L)(_.batch_id),
-                rows.map(s => s.cell -> (s.n, s.coh)).toMap)
-            } else (-1L, Map.empty[Int, (Long, Double)])
-          val alreadyFolded = stateBid >= batchId
-          val pre: Map[Int, (Long, Double)] =
-            if (!alreadyFolded) state0
-            else state0.flatMap { case (c, (n0, d0)) =>
-              val (nb, db) = bAgg.getOrElse(c, (0L, 0.0))
-              val n = n0 - nb
-              if (n > 0) Some(c -> (n, d0 - db)) else None
-            }
-          val after: Map[Int, (Long, Double)] =
-            (pre.keySet ++ bAgg.keySet).map { c =>
-              val (n0, d0) = pre.getOrElse(c, (0L, 0.0))
-              val (nb, db) = bAgg.getOrElse(c, (0L, 0.0))
-              c -> (n0 + nb, d0 + db)
-            }.toMap
-          val totB = pre.values.map(_._1).sum
-          val totA = after.values.map(_._1).sum
-          val drift = after.keys.toSeq.sorted.map { c =>
-            val b = pre.get(c)
-            val (na, da) = after(c)
-            val qB = b.map(_._1.toDouble / totB)
-            val qA = na.toDouble / totA
-            DriftRow(batchId, c, b.map(_._1), na, qB.map(r(_, 6)),
-              r(qA, 6), r(qA - qB.getOrElse(0.0), 6),
-              b.map(x => r(x._2, 4)), r(da, 4))
-          }
-          if (!alreadyFolded) {
-            val tmp = new Path(sPath.getParent,
-              s".${sPath.getName}.tmp-${java.util.UUID.randomUUID()}")
-            after.toSeq.sortBy(_._1)
-              .map { case (c, (n, d)) => DriftState(c, n, d, batchId) }
-              .toDF().coalesce(1)
-              .write.mode("overwrite").parquet(tmp.toString)
-            StoreSwap.swapIn(sfs, sPath, tmp, "runDriftMonitor state")
-          }
-          if (drift.nonEmpty)
-            drift.toDF().coalesce(1).write.mode("append").parquet(outPath)
-          mfs.mkdirs(marker.getParent)
-          mfs.create(marker, true).close()
-          ()
+          (rows.headOption.fold(-1L)(_.batch_id),
+            rows.map(s => s.cell -> (s.n, s.coh)).toMap)
+        } else (-1L, Map.empty[Int, (Long, Double)])
+      val alreadyFolded = stateBid >= batchId
+      val pre: Map[Int, (Long, Double)] =
+        if (!alreadyFolded) state0
+        else state0.flatMap { case (c, (n0, d0)) =>
+          val (nb, db) = bAgg.getOrElse(c, (0L, 0.0))
+          val n = n0 - nb
+          if (n > 0) Some(c -> (n, d0 - db)) else None
         }
+      val after: Map[Int, (Long, Double)] =
+        (pre.keySet ++ bAgg.keySet).map { c =>
+          val (n0, d0) = pre.getOrElse(c, (0L, 0.0))
+          val (nb, db) = bAgg.getOrElse(c, (0L, 0.0))
+          c -> (n0 + nb, d0 + db)
+        }.toMap
+      val totB = pre.values.map(_._1).sum
+      val totA = after.values.map(_._1).sum
+      val drift = after.keys.toSeq.sorted.map { c =>
+        val before = pre.get(c)
+        val (na, da) = after(c)
+        val qB = before.map(_._1.toDouble / totB)
+        val qA = na.toDouble / totA
+        DriftRow(batchId, c, before.map(_._1), na, qB.map(r(_, 6)),
+          r(qA, 6), r(qA - qB.getOrElse(0.0), 6),
+          before.map(x => r(x._2, 4)), r(da, 4))
       }
-      .start()
+      if (!alreadyFolded) {
+        val tmp = new Path(sPath.getParent,
+          s".${sPath.getName}.tmp-${java.util.UUID.randomUUID()}")
+        after.toSeq.sortBy(_._1)
+          .map { case (c, (n, d)) => DriftState(c, n, d, batchId) }
+          .toDF().coalesce(1)
+          .write.mode("overwrite").parquet(tmp.toString)
+        StoreSwap.swapIn(sfs, sPath, tmp, "runDriftMonitor state")
+      }
+      if (drift.nonEmpty)
+        drift.toDF().coalesce(1).write.mode("append").parquet(outPath)
+    }
   }
 
   /** End-to-end streaming pipeline wiring: file source → windowed agg →

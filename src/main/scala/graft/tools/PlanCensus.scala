@@ -88,17 +88,8 @@ object PlanCensus {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PlanCensus <query-substring> ...")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.LocalSpark.session()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftExtensions.register(spark)
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => args.exists(n.contains))
     require(names.nonEmpty, s"no query matches ${args.mkString(",")}")

@@ -68,15 +68,7 @@ object ScaleCurve {
       if (args.length > 2) args(2).split(",").map(_.trim.toInt).toSeq
       else Seq(1, 10)
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.LocalSpark.session()
     spark.sparkContext.setLogLevel("WARN")
 
     val dirs: Map[Int, String] = scales.map { n =>

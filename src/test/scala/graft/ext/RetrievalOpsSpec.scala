@@ -414,7 +414,7 @@ class RetrievalOpsSpec extends AnyFunSuite {
   }
 
   test("rankingQuality validates k; qrels with no positive judgments " +
-      "yield only the (empty) mean row") {
+      "yield no rows, not even a mean row") {
     val run = leg((1, 10L, 1))
     val qrels = Seq((1, 10L, 0)).toDF("query_id", "id", "rel")
     def msg(f: => Any): String =
@@ -423,6 +423,18 @@ class RetrievalOpsSpec extends AnyFunSuite {
       "rank", "rel", k = 0)).contains("not in 1..1000"))
     assert(msg(RetrievalOps.rankingQuality(run, qrels, "query_id", "id",
       "rank", "rel", k = 1001)).contains("not in 1..1000"))
+    val rows = RetrievalOps.rankingQuality(run, qrels, "query_id", "id",
+      "rank", "rel", k = 1).collect()
+    assert(rows.isEmpty, rows.mkString(", "))
+  }
+
+  test("rankingQuality: query id -1 is reserved for the mean row and " +
+      "fails named") {
+    val run = leg((-1, 10L, 1), (1, 10L, 1))
+    val qrels = Seq((-1, 10L, 1), (1, 10L, 1)).toDF("query_id", "id", "rel")
+    val e = intercept[Exception](RetrievalOps.rankingQuality(run, qrels,
+      "query_id", "id", "rank", "rel", k = 1).collect())
+    assert(e.getMessage.contains("query id -1 is reserved"), e.getMessage)
   }
 
   test("rrfQualityGrid at a single config equals rankingQuality over " +

@@ -41,4 +41,10 @@ class PlanCensusSpec extends AnyFunSuite {
     assert(runs.last.funcName == "overwrite", runs.map(_.funcName))
     assert(runs.init.forall(_.funcName != "overwrite"), runs.map(_.funcName))
   }
+
+  test("q182: the λ sweep runs in one execution, the write — no barrier " +
+      "before it") {
+    val runs = noopWrite("q182_mmr_lambda_sweep")
+    assert(runs.map(_.funcName) == Seq("overwrite"), runs.map(_.funcName))
+  }
 }
