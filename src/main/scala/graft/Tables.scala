@@ -9,10 +9,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * data fits on the driver.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     // ts contract (DIALECT.md "Timestamps"): the driver fixtures store
@@ -34,10 +30,4 @@ object Tables {
           .expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)"))
     else df
   }
-
-  /** Register every table as a temp view named after itself, so both the
-    * DataFrame API and spark.sql can reach them.
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

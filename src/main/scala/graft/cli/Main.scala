@@ -100,6 +100,33 @@ object Main {
     graft.LocalSpark.session("spark.sql.warehouse.dir" -> config.dbPath
       .getOrElse(Files.createTempDirectory("graft-warehouse").toString))
 
+  /** Every subcommand runs inside this: a [[GraftError]] — a malformed
+    * config.yaml included, since config loading runs inside it too —
+    * prints its rendered message and exits 1 instead of a stack trace.
+    */
+  private def exitOnGraftError(body: => Unit): Unit =
+    try body
+    catch { case e: GraftError => System.err.println(e.render); sys.exit(1) }
+
+  /** The one Spark lifecycle of the executing subcommands: build the
+    * session, restore db_path's views/tables into it before anything
+    * executes (reference .duckdb parity), run `body`, then — the
+    * cachedManifest lifecycle contract: the CLI owns this session — drop
+    * any operator manifest caches and stop Spark.
+    */
+  private def withSession(config: PipelineConfig)
+                         (body: SparkSession => Unit): Unit = {
+    val spark = buildSpark(config)
+    spark.sparkContext.setLogLevel("WARN")
+    try {
+      config.dbPath.foreach(ViewStore.restore(spark, _))
+      body(spark)
+    } finally {
+      graft.ext.DedupOps.releaseManifests()
+      spark.stop()
+    }
+  }
+
   /** `run`, and dbt `build` (`buildMode`) — the daily driver: seeds,
     * models, snapshots and ALL their data tests interleaved in one
     * DAG-ordered invocation (they are all graph nodes here, so the
@@ -113,14 +140,9 @@ object Main {
     * way for both.
     */
   private def runPipeline(flags: Map[String, String],
-                          buildMode: Boolean): Unit = {
+                          buildMode: Boolean): Unit = exitOnGraftError {
     val config = loadConfig(flags)
-    val spark = buildSpark(config)
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      // a persistent db_path carries the previous run's views/tables into
-      // this session before anything executes (reference .duckdb parity)
-      config.dbPath.foreach(ViewStore.restore(spark, _))
+    withSession(config) { spark =>
       val session = new PipelineSession(spark, config,
         parallel = flags.contains("parallel"),
         changedOnly = flags.contains("changed-only"),
@@ -137,13 +159,6 @@ object Main {
       val report = session.runNodes()
       if (buildMode) printDataTests(session.collectedTests)
       if (report.errors.nonEmpty) sys.exit(1)
-    } catch {
-      case e: GraftError => System.err.println(e.render); sys.exit(1)
-    } finally {
-      // the cachedManifest lifecycle contract: the CLI owns this session,
-      // so it drops any operator manifest caches before tearing it down
-      graft.ext.DedupOps.releaseManifests()
-      spark.stop()
     }
   }
 
@@ -179,7 +194,7 @@ object Main {
     * rule). Exits 1 when a wanted id is absent from the state or fails
     * to clone.
     */
-  private def clonePipeline(flags: Map[String, String]): Unit = {
+  private def clonePipeline(flags: Map[String, String]): Unit = exitOnGraftError {
     val config = loadConfig(flags)
     val state = flags.get("state").getOrElse {
       System.err.println("graft clone requires --state <dir> (the " +
@@ -191,12 +206,9 @@ object Main {
         "clones are materialized there)")
       sys.exit(2)
     }
-    val spark = buildSpark(config)
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      // local registrations first: the skip-existing rule judges
-      // against what the target ALREADY has
-      config.dbPath.foreach(ViewStore.restore(spark, _))
+    // withSession restores the local registrations first: the
+    // skip-existing rule judges against what the target ALREADY has
+    withSession(config) { spark =>
       val ids = flags.get("select").map(
         _.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       val (cloned, skipped, missing) = ViewStore.cloneFromState(
@@ -213,9 +225,6 @@ object Main {
           missing.toSeq.sorted.mkString(", "))
         sys.exit(1)
       }
-    } finally {
-      graft.ext.DedupOps.releaseManifests()
-      spark.stop()
     }
   }
 
@@ -226,7 +235,7 @@ object Main {
     * no run was ever recorded (nothing to retry FROM) or the retry
     * itself fails.
     */
-  private def retryPipeline(flags: Map[String, String]): Unit = {
+  private def retryPipeline(flags: Map[String, String]): Unit = exitOnGraftError {
     // retry REPLAYS the recorded invocation — accepting fresh
     // selection/vars/mode flags here would silently contradict that
     // contract, so anything beyond the config/db-path pointers is a
@@ -240,11 +249,7 @@ object Main {
       sys.exit(2)
     }
     val config = loadConfig(flags)
-    val planned =
-      try Retry.plan(config)
-      catch { case e: GraftError =>
-        System.err.println(e.render); sys.exit(1) }
-    planned match {
+    Retry.plan(config) match {
       case None =>
         System.err.println("graft retry: no previous run recorded " +
           s"against db_path ${config.dbPath.getOrElse("(none)")}")
@@ -255,19 +260,11 @@ object Main {
       case Some(p) =>
         println(s"Retrying ${p.ids.size} node(s) from the last run: " +
           p.ids.mkString(", "))
-        val spark = buildSpark(config)
-        spark.sparkContext.setLogLevel("WARN")
-        try {
-          config.dbPath.foreach(ViewStore.restore(spark, _))
+        withSession(config) { spark =>
           val session = Retry.session(spark, config, p)
           val report = session.runNodes()
           printDataTests(session.collectedTests)
           if (report.errors.nonEmpty) sys.exit(1)
-        } catch {
-          case e: GraftError => System.err.println(e.render); sys.exit(1)
-        } finally {
-          graft.ext.DedupOps.releaseManifests()
-          spark.stop()
         }
     }
   }
@@ -276,12 +273,9 @@ object Main {
     * (restored from db_path) without executing any model — verify
     * yesterday's build before reading it. Exit 1 on any failure.
     */
-  private def testPipeline(flags: Map[String, String]): Unit = {
+  private def testPipeline(flags: Map[String, String]): Unit = exitOnGraftError {
     val config = loadConfig(flags)
-    val spark = buildSpark(config)
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      config.dbPath.foreach(ViewStore.restore(spark, _))
+    withSession(config) { spark =>
       val session = new PipelineSession(spark, config,
         selectors = selectorsOf(flags),
         excludes = excludesOf(flags),
@@ -290,11 +284,6 @@ object Main {
       // warn-level violations report but only ERROR severity flips the
       // exit code (dbt's warn semantics)
       if (nFail > 0) sys.exit(1)
-    } catch {
-      case e: GraftError => System.err.println(e.render); sys.exit(1)
-    } finally {
-      graft.ext.DedupOps.releaseManifests()
-      spark.stop()
     }
   }
 
@@ -306,17 +295,11 @@ object Main {
     * views/tables.
     */
   private def runFiles(flags: Map[String, String],
-                       paths: List[String]): Unit = {
+                       paths: List[String]): Unit = exitOnGraftError {
     if (paths.isEmpty) { System.err.println("run-file: no scripts given"); sys.exit(2) }
     val config = loadConfig(flags)
-    val spark = buildSpark(config)
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      config.dbPath.foreach(ViewStore.restore(spark, _))
+    withSession(config) { spark =>
       runFilesOn(spark, paths).foreach { case (_, status) => println(status) }
-    } finally {
-      graft.ext.DedupOps.releaseManifests()
-      spark.stop()
     }
   }
 
@@ -414,30 +397,26 @@ object Main {
     * table existence); without it every model reports `would RUN`. Exits 0
     * always (nothing executed, nothing can fail but graph building).
     */
-  private[cli] def dryRun(flags: Map[String, String]): Unit = {
+  private[cli] def dryRun(flags: Map[String, String]): Unit = exitOnGraftError {
     val config = loadConfig(flags)
-    try {
-      val session = new PipelineSession(
-        throw new IllegalStateException("dry-run does not execute SQL"),
-        config, selectors = selectorsOf(flags),
-        excludes = excludesOf(flags), cliVars = varsOf(flags))
-      val (order, nodeMap) = session.buildGraph()
-      val runOrder = session.selectionSet(order, nodeMap)
-        .fold(order)(s => order.filter(s))
-      val skips =
-        if (flags.contains("changed-only")) session.previewSkips(order, nodeMap)
-        else Set.empty[String]
-      runOrder.zipWithIndex.foreach { case (id, i) =>
-        val info = s"${i + 1} of ${runOrder.size}: $id ${nodeMap(id).mat} model"
-        val tail = if (skips(id)) "[would SKIP unchanged]" else "[would RUN]"
-        println(info + "." * math.max(0, 80 - info.length) + tail)
-      }
-      val nSkip = runOrder.count(skips)
-      println(s"\nDry run: ${runOrder.size - nSkip} would run, " +
-        s"$nSkip would skip; no SQL executed")
-    } catch {
-      case e: GraftError => System.err.println(e.render); sys.exit(1)
+    val session = new PipelineSession(
+      throw new IllegalStateException("dry-run does not execute SQL"),
+      config, selectors = selectorsOf(flags),
+      excludes = excludesOf(flags), cliVars = varsOf(flags))
+    val (order, nodeMap) = session.buildGraph()
+    val runOrder = session.selectionSet(order, nodeMap)
+      .fold(order)(s => order.filter(s))
+    val skips =
+      if (flags.contains("changed-only")) session.previewSkips(order, nodeMap)
+      else Set.empty[String]
+    runOrder.zipWithIndex.foreach { case (id, i) =>
+      val info = s"${i + 1} of ${runOrder.size}: $id ${nodeMap(id).mat} model"
+      val tail = if (skips(id)) "[would SKIP unchanged]" else "[would RUN]"
+      println(info + "." * math.max(0, 80 - info.length) + tail)
     }
+    val nSkip = runOrder.count(skips)
+    println(s"\nDry run: ${runOrder.size - nSkip} would run, " +
+      s"$nSkip would skip; no SQL executed")
   }
 
   /** dbt `docs generate`: catalog.json + catalog.md into `outDir` from
@@ -447,12 +426,9 @@ object Main {
     * generation. Respects --select/--exclude so a team can publish a
     * subproject's catalog.
     */
-  private def docs(outDir: String, flags: Map[String, String]): Unit = {
+  private def docs(outDir: String, flags: Map[String, String]): Unit = exitOnGraftError {
     val config = loadConfig(flags)
-    val spark = buildSpark(config)
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      config.dbPath.foreach(ViewStore.restore(spark, _))
+    withSession(config) { spark =>
       val session = new PipelineSession(spark, config,
         selectors = selectorsOf(flags), excludes = excludesOf(flags),
         cliVars = varsOf(flags))
@@ -470,49 +446,40 @@ object Main {
         DocsGen.catalogMarkdown(dOrder, dMap, cols, dEx))
       println(s"Catalog saved to $outDir/catalog.json and " +
         s"$outDir/catalog.md (${dOrder.size} models)")
-    } catch {
-      case e: GraftError => System.err.println(e.render); sys.exit(1)
-    } finally {
-      graft.ext.DedupOps.releaseManifests()
-      spark.stop()
     }
   }
 
   /** Build the graph (no SQL execution) and write DOT-derived SVG; `.svg`
     * suffix auto-appended (src/main.rs:63-84).
     */
-  private def viz(out: String, flags: Map[String, String]): Unit = {
+  private def viz(out: String, flags: Map[String, String]): Unit = exitOnGraftError {
     val config = loadConfig(flags)
-    try {
-      // graph building is a pure driver-side text transform — the session
-      // parameter is by-name/lazy and never touched, so viz skips the
-      // multi-second Spark startup entirely
-      val session = new PipelineSession(
-        throw new IllegalStateException("viz does not execute SQL"), config,
-        selectors = selectorsOf(flags), excludes = excludesOf(flags),
-        cliVars = varsOf(flags))
-      val (order, nodeMap) = session.buildGraph()
-      // --changed-only preview: paint would-skip nodes green, would-run
-      // red, against the stored fingerprints — still entirely Spark-free
-      val preview =
-        if (flags.contains("changed-only"))
-          Some(session.previewSkips(order, nodeMap))
-        else None
-      // --select: render only the selected subgraph (edges to unselected
-      // nodes dropped — no dangling DOT nodes), mirroring what `run
-      // --select` would execute
-      val (vOrder, vMap) = session.restrictToSelection(order, nodeMap)
-      val target = if (out.endsWith(".svg")) out else out + ".svg"
-      Files.writeString(Paths.get(target),
-        GraphViz.renderSvg(vOrder, vMap, preview, config.exposures))
-      Files.writeString(Paths.get(target.stripSuffix(".svg") + ".dot"),
-        GraphViz.renderDot(vOrder, vMap, preview, config.exposures))
-      preview.foreach(p => println(
-        s"Preview: ${vOrder.count(p)} of ${vOrder.size} models would " +
-          "skip unchanged"))
-      println(s"Visualization saved to $target")
-    } catch {
-      case e: GraftError => System.err.println(e.render); sys.exit(1)
-    }
+    // graph building is a pure driver-side text transform — the session
+    // parameter is by-name/lazy and never touched, so viz skips the
+    // multi-second Spark startup entirely
+    val session = new PipelineSession(
+      throw new IllegalStateException("viz does not execute SQL"), config,
+      selectors = selectorsOf(flags), excludes = excludesOf(flags),
+      cliVars = varsOf(flags))
+    val (order, nodeMap) = session.buildGraph()
+    // --changed-only preview: paint would-skip nodes green, would-run
+    // red, against the stored fingerprints — still entirely Spark-free
+    val preview =
+      if (flags.contains("changed-only"))
+        Some(session.previewSkips(order, nodeMap))
+      else None
+    // --select: render only the selected subgraph (edges to unselected
+    // nodes dropped — no dangling DOT nodes), mirroring what `run
+    // --select` would execute
+    val (vOrder, vMap) = session.restrictToSelection(order, nodeMap)
+    val target = if (out.endsWith(".svg")) out else out + ".svg"
+    Files.writeString(Paths.get(target),
+      GraphViz.renderSvg(vOrder, vMap, preview, config.exposures))
+    Files.writeString(Paths.get(target.stripSuffix(".svg") + ".dot"),
+      GraphViz.renderDot(vOrder, vMap, preview, config.exposures))
+    preview.foreach(p => println(
+      s"Preview: ${vOrder.count(p)} of ${vOrder.size} models would " +
+        "skip unchanged"))
+    println(s"Visualization saved to $target")
   }
 }

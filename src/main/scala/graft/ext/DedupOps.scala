@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data curation (SURVEY.md §2.C):
-  * exact, n-gram Jaccard, SimHash, and MinHash-LSH (see [[MinHashDedup]]).
+  * exact, n-gram Jaccard, SimHash, and MinHash-LSH.
   * Shared design rule: the only shuffles are on uniformly-distributed hash
   * keys (md5 / xxhash64 / band values), so no operator has a skew problem at
   * 100 TB, and nothing unbounded ever collects to the driver (the bounded
@@ -84,8 +84,8 @@ object DedupOps {
   /** MinHash signature: numHashes independent permutations simulated as
     * xxhash64(i, shingle); signature[i] = min over shingles. Pure codegen'd
     * expression — contrast with Spark ML's MinHashLSH, which routes every
-    * row through a ScalaUDF + VectorUDT (10× slower on the same corpus, see
-    * [[MinHashDedup]]).
+    * row through a ScalaUDF + VectorUDT (3× slower on the same corpus,
+    * COVERAGE.md).
     */
   def minHashSignature(sh: Column, numHashes: Int): Column =
     array((0 until numHashes).map(i =>

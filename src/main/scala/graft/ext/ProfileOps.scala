@@ -216,17 +216,6 @@ object ProfileOps {
           .otherwise(lit("unchanged")).as("status"))
   }
 
-  /** Numeric-only profile, kept for callers that want the narrow schema.
-    * Coerces every column to double first (the original contract: a
-    * numeric-string column profiles as its parsed values).
-    */
-  def profileNumeric(df: DataFrame, cols: Seq[String]): DataFrame =
-    profile(df.select(cols.map(c => col(s"`$c`").cast("double").as(c)): _*),
-        cols)
-      .select(col("col_name"), col("n_rows"), col("n_null"),
-        col("n_distinct"), col("min_num").as("min_v"),
-        col("max_num").as("max_v"), col("mean_v"))
-
   /** Classifier calibration report (q175 — VERDICT r16 task 6): does a
     * predicted probability MEAN anything — is "0.7" an empirical 0.7?
     * Buckets `scoreCol` (a probability pre-rounded at 6, e.g.

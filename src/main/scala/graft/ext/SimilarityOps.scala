@@ -609,16 +609,6 @@ object SimilarityOps {
     topKPerGroup(scored, "probe_id", "cand_id", k)
   }
 
-  /** Label-free embedding near-dup pairs: LSH band buckets replace
-    * [[blockedNearDupPairs]]'s blocking column, so the operator runs on any
-    * corpus. Each vector lands in nBands buckets of expected size
-    * |V| / 2^bitsPerBand; the self-join shuffles on the uniform
-    * (band_idx, band_val) key and only bucket-mates pay the exact native
-    * dot product — sum(bucket²) work, never |V|². High-cosine pairs agree
-    * on some band with probability (1-θ/π)^bits per band, so recall is
-    * tunable via nBands (more bands = more recall, more candidate volume).
-    * Pairs surface once (distinct over multi-band collisions).
-    */
   /** (band_idx, band_val, vec_id, u) rows: each vector exploded into its
     * nBands sign-bit buckets over the seed-derived planes — the shared
     * front half of [[lshNearDupPairs]] and [[knnGraph]]. `dim` < 1 infers
@@ -637,6 +627,20 @@ object SimilarityOps {
       .select(col("band_idx"), col("band_val"), col("vec_id"), col("u"))
   }
 
+  /** Label-free embedding near-dup pairs: LSH band buckets replace
+    * [[blockedNearDupPairs]]'s blocking column, so the operator runs on any
+    * corpus. Each vector lands in nBands buckets of expected size
+    * |V| / 2^bitsPerBand; the self-join shuffles on the uniform
+    * (band_idx, band_val) key and only bucket-mates pay the exact native
+    * dot product — sum(bucket²) work, never |V|². High-cosine pairs agree
+    * on some band with probability (1-θ/π)^bits per band, so recall is
+    * tunable via nBands (more bands = more recall, more candidate volume).
+    * Pairs surface once (distinct over multi-band collisions). Scores
+    * per collision, unlike [[knnGraph]]: the `sim >= minSim` filter runs
+    * before the distinct, so only the few surviving pairs shuffle (the
+    * score-once form measured 0.45× at 10× here, SCALING.md "r9 (second
+    * pass)").
+    */
   def lshNearDupPairs(vecs: DataFrame, minSim: Double,
                       nBands: Int = 8, bitsPerBand: Int = 4,
                       seed: Long = 42L, dim: Int = -1): DataFrame = {
@@ -653,60 +657,13 @@ object SimilarityOps {
       .distinct()
   }
 
-  /** Score-once formulation of the banded self-join: the band collision
-    * join carries ONLY ids (the exchange sheds the 8·dim-byte unit
-    * vectors — with the default 8 bands that is nBands·dim·8 ≈ 4 KB of
-    * shuffle per vector per side in the score-per-collision form above),
-    * pairs de-duplicate BEFORE scoring (a pair colliding in b bands is
-    * dotted once, not b times, and the distinct's shuffle rows are two
-    * longs, not two longs + a double scored b times), and the unit
-    * vectors join back once per side afterwards. The trade is two extra
-    * narrow joins — and for THIS operator the trade loses (SCALING.md
-    * "r9 (second pass)": 0.45× at 10×): lshNearDupPairs filters
-    * `sim >= minSim` before its distinct, so the per-collision form only
-    * shuffles the few surviving pairs, while score-once drags EVERY
-    * candidate pair through distinct and two joins before the filter can
-    * run. Kept as the measured
-    * counter-example (and A/B baseline); [[knnGraph]], which has no
-    * pre-distinct filter, defaults to score-once for the mirrored
-    * reason. Emits exactly [[lshNearDupPairs]]'s rows.
-    */
-  private[graft] def lshNearDupPairsScoreOnce(
-      vecs: DataFrame, minSim: Double, nBands: Int = 8, bitsPerBand: Int = 4,
-      seed: Long = 42L, dim: Int = -1): DataFrame =
-    scoreOncePairs(vecs, nBands, bitsPerBand, seed, dim)
-      .filter(col("sim") >= minSim)
-
-  /** [[knnGraph]] in the score-once formulation: undirected distinct
-    * pairs (half the distinct shuffle and half the dots of the directed
-    * form), scored once, then both orientations restored for the
-    * per-source top-k. Emits exactly [[knnGraph]]'s rows.
-    */
-  private[graft] def knnGraphScoreOnce(vecs: DataFrame, k: Int,
-      nBands: Int = 8, bitsPerBand: Int = 4, seed: Long = 42L): DataFrame = {
-    val p = scoreOncePairs(vecs, nBands, bitsPerBand, seed, dim = -1)
-    // both orientations via ONE explode over the scored pairs, not a
-    // union of two selects: a self-union references the band-join +
-    // distinct + score lineage twice, and only the exchanges runtime
-    // reuse shares between the copies run once; the explode needs no
-    // reuse at all. Same row multiset — the per-source top-k downstream
-    // is order-free.
-    val both = p.select(explode(array(
-        struct(col("id_a").as("src"), col("id_b").as("dst"), col("sim")),
-        struct(col("id_b").as("src"), col("id_a").as("dst"), col("sim"))))
-        .as("__e"))
-      .select(col("__e.src").as("src"), col("__e.dst").as("dst"),
-        col("__e.sim").as("sim"))
-    topKPerGroup(both, "src", "dst", k)
-  }
-
-  /** Shared back half of the score-once variants: id-only band collision
+  /** The score-once back half of [[knnGraph]]: id-only band collision
     * join → distinct (id_a < id_b) pairs → unit vectors joined back once
     * per side → one dot per pair.
     */
   private def scoreOncePairs(vecs: DataFrame, nBands: Int, bitsPerBand: Int,
-                             seed: Long, dim: Int): DataFrame = {
-    val ids = bandedVectors(vecs, nBands, bitsPerBand, seed, dim)
+                             seed: Long): DataFrame = {
+    val ids = bandedVectors(vecs, nBands, bitsPerBand, seed, dim = -1)
       .select(col("band_idx"), col("band_val"), col("vec_id"))
     val pairs = ids
       .join(ids.select(col("band_idx"), col("band_val"),
@@ -747,39 +704,31 @@ object SimilarityOps {
     *
     * Default form is SCORE-ONCE (SCALING.md "r9 (second pass)", measured
     * interleaved in one JVM: 2.45× at 1×, 1.51× at 10× over the
-    * per-collision form kept as [[knnGraphPerCollision]]): the band join
+    * per-collision form): the band join
     * shuffles ids only, the UNDIRECTED pair set de-duplicates before any
     * dot is computed, unit vectors join back once per side, then both
     * orientations are restored for the top-k. knnGraph has no
     * pre-distinct filter to exploit — every bucket-mate's sim is ranking
     * input — so paying the two narrow join shuffles beats scoring per
     * collision and shuffling scored duplicates into distinct.
-    * [[lshNearDupPairs]] keeps the opposite
-    * default for the mirrored reason: its `sim >= minSim` filter runs
-    * BEFORE its distinct, collapsing the shuffle to the few survivors
-    * (score-once measured 0.45× THERE — slower — at 10×).
+    * [[lshNearDupPairs]] scores per collision for the mirrored reason.
     */
   def knnGraph(vecs: DataFrame, k: Int, nBands: Int = 8,
-               bitsPerBand: Int = 4, seed: Long = 42L): DataFrame =
-    knnGraphScoreOnce(vecs, k, nBands, bitsPerBand, seed)
-
-  /** The score-per-collision [[knnGraph]] formulation — kept as the
-    * baseline of the SCALING.md "r9 (second pass)" rows; emits exactly the
-    * same rows as the default.
-    */
-  private[graft] def knnGraphPerCollision(vecs: DataFrame, k: Int,
-      nBands: Int = 8, bitsPerBand: Int = 4, seed: Long = 42L): DataFrame = {
-    val banded = bandedVectors(vecs, nBands, bitsPerBand, seed, dim = -1)
-    val src = banded.select(col("band_idx"), col("band_val"),
-      col("vec_id").as("src"), col("u").as("u_s"))
-    val dst = banded.select(col("band_idx"), col("band_val"),
-      col("vec_id").as("dst"), col("u").as("u_d"))
-    src.join(dst, Seq("band_idx", "band_val"))
-      .filter(col("src") =!= col("dst"))
-      .select(col("src"), col("dst"),
-        round(VectorFunctions.dotProduct(col("u_s"), col("u_d")), 6).as("sim"))
-      .distinct()
-      .transform(topKPerGroup(_, "src", "dst", k))
+               bitsPerBand: Int = 4, seed: Long = 42L): DataFrame = {
+    val p = scoreOncePairs(vecs, nBands, bitsPerBand, seed)
+    // both orientations via ONE explode over the scored pairs, not a
+    // union of two selects: a self-union references the band-join +
+    // distinct + score lineage twice, and only the exchanges runtime
+    // reuse shares between the copies run once; the explode needs no
+    // reuse at all. Same row multiset — the per-source top-k downstream
+    // is order-free.
+    val both = p.select(explode(array(
+        struct(col("id_a").as("src"), col("id_b").as("dst"), col("sim")),
+        struct(col("id_b").as("src"), col("id_a").as("dst"), col("sim"))))
+        .as("__e"))
+      .select(col("__e.src").as("src"), col("__e.dst").as("dst"),
+        col("__e.sim").as("sim"))
+    topKPerGroup(both, "src", "dst", k)
   }
 
   /** Fit-then-query in one call. `sampleOneIn` is the 100 TB fit knob: the
@@ -1257,8 +1206,10 @@ object SimilarityOps {
     * [[appendToAnnIndex]] keeps working against the swapped-in result —
     * callers re-version the store path's model suffix to match the new
     * fit. Returns the migrated row count (a metadata-scale count of the
-    * published store, not a second encode pass). Centroid-only re-fits
-    * have a cheaper path: [[reencodeAnnIndexCells]].
+    * published store, not a second encode pass). A centroid-only re-fit
+    * runs the same full re-encode: an id-keyed reconcile that keeps the
+    * stored codes lost to it at every measured size (SCALING.md "r14:
+    * ANN migration A/B").
     */
   def reencodeAnnIndex(spark: org.apache.spark.sql.SparkSession,
                        rawVecs: DataFrame, path: String,
@@ -1266,51 +1217,6 @@ object SimilarityOps {
                        cbs: Array[Array[Array[Double]]]): Long =
     publishReencodedIndex(spark, path,
       encodeForAnnIndex(rawVecs, cents, cbs), "reencodeAnnIndex")
-
-  /** The centroid-only migration fast path: when ONLY the coarse
-    * centroids were re-fit and the codebooks are the ones the store was
-    * encoded with (PASSING RE-FIT CODEBOOKS HERE SILENTLY CORRUPTS THE
-    * STORE — a code cannot be validated against its fit after the fact;
-    * use [[reencodeAnnIndex]] when the codebooks moved), the stored PQ
-    * codes are still valid — a code is a function of the vector and the
-    * codebooks alone, never of the cell — so the migration is an
-    * id-keyed RECONCILE, not a re-encode: rows present in both sides
-    * keep their stored codes under the NEW expected cell (whether it
-    * moved or not), corpus rows the index lacks encode fresh (the only
-    * PQ work in the pass), and index rows whose id left the corpus drop
-    * — the staleness report's `n_missing`/`n_orphaned` remediated in the
-    * same swap. Cost: one map-only [[cellOf]] pass over the corpus, one
-    * id-keyed exchange of narrow (id, codes)/(id, cell) rows, PQ encode
-    * of the missing batch only — vs the full path's m NearestCell codes
-    * per corpus row. MEASURED (SCALING.md "r14: ANN migration A/B", 1×→30×):
-    * at the committed fixture geometry (m·ksub·dsub = 1,024 multiplies
-    * per vector) this path LOSES to [[reencodeAnnIndex]] — the skipped
-    * encode is cheaper than the reconcile join it buys. Use it when the
-    * encode term is production-shaped (m·ksub·dsub ≳ 1e5, e.g. 768-dim
-    * m=96 ksub=256); below that, full re-encode is simpler AND faster.
-    * Result is bitwise the full re-encode under the same (cents,
-    * original cbs) — spec-pinned.
-    */
-  def reencodeAnnIndexCells(spark: org.apache.spark.sql.SparkSession,
-                            rawVecs: DataFrame, path: String,
-                            cents: Array[Array[Double]],
-                            cbs: Array[Array[Array[Double]]]): Long = {
-    val index = readAnnIndexStore(spark, path)
-    // dropDuplicates: crash-replay residue between an append and its
-    // marker duplicates full rows (the compactAnnIndex collapse); codes
-    // are deterministic under one codebook fit, so exact dedup is exact
-    val storedCodes = index.select(col("cand_id"), col("codes"))
-      .dropDuplicates()
-    val expected = withUnitVec(rawVecs, "embedding", "u")
-      .select(col("vec_id").as("cand_id"), cellOf(col("u"), cents).as("cell"))
-    val kept = expected.join(storedCodes, Seq("cand_id"))
-      .select(col("cand_id"), col("codes"), col("cell"))
-    val missing = rawVecs.join(
-      index.select(col("cand_id").as("vec_id")), Seq("vec_id"), "left_anti")
-    publishReencodedIndex(spark, path,
-      kept.unionByName(encodeForAnnIndex(missing, cents, cbs)),
-      "reencodeAnnIndexCells")
-  }
 
   /** Shared publish tail of the migration paths: write the migrated rows
     * one file per cell to a hidden sibling, [[StoreSwap]] them in, count

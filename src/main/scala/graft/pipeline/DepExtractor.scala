@@ -71,14 +71,10 @@ object DepExtractor {
     }
   }
 
-  /** References restricted to known model ids (the reference's
-    * false-positive filter, src/node.rs:94-98).
-    */
-  def modelRefs(sql: String, modelIds: Set[String]): Set[String] =
-    tableRefs(sql).intersect(modelIds.map(_.toLowerCase))
-
-  /** Model-level extraction: statements are split and LEXICALLY shimmed
-    * first, so a multi-statement model — or one written in DuckDB dialect
+  /** Model-level extraction, restricted to known model ids (the
+    * reference's false-positive filter, src/node.rs:94-98). Statements
+    * are split and LEXICALLY shimmed first, so a multi-statement model —
+    * or one written in DuckDB dialect
     * (count(), read_parquet, ASOF JOIN) — still yields its edges instead
     * of failing the whole-source parse and silently scheduling as
     * independent. Statements only the session-aware shim can rewrite

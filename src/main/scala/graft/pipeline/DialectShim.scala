@@ -393,13 +393,6 @@ object DialectShim {
   def macroDefinitionAny(st: String): Option[(String, Seq[String], String, Boolean)] =
     macroDefinitionFull(st).map(m => (m.name, m.allParams, m.body, m.isTable))
 
-  /** Parse a scalar CREATE MACRO definition: Some((name, allParamNames,
-    * body)) — defaulted param names are included in the name list — or
-    * None for the table form / anything unhandled.
-    */
-  def macroDefinition(st: String): Option[(String, Seq[String], String)] =
-    macroDefinitionAny(st).collect { case (n, p, b, false) => (n, p, b) }
-
   // session-scoped, like DuckDB TEMP macros; weak keys so a stopped
   // session's registry is collectable (a long-lived driver may build many
   // sessions)

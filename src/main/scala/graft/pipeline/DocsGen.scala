@@ -40,13 +40,9 @@ object DocsGen {
                  order: Seq[String]): Map[String, Option[Seq[(String, String)]]] =
     order.map(id => id -> columnsOf(spark, id)).toMap
 
-  def catalogJson(spark: SparkSession, order: Seq[String],
-                  nodeMap: Map[String, ModelNode]): String =
-    catalogJson(order, nodeMap, columnsMap(spark, order))
-
   def catalogJson(order: Seq[String], nodeMap: Map[String, ModelNode],
-                  colsMap: Map[String, Option[Seq[(String, String)]]])
-      : String = {
+                  colsMap: Map[String, Option[Seq[(String, String)]]],
+                  exposures: Seq[Exposure]): String = {
     val models = order.map { id =>
       val n = nodeMap(id)
       val cols = colsMap.getOrElse(id, None)
@@ -59,7 +55,7 @@ object DocsGen {
       }.getOrElse("null")
       s"""{"id":${jstr(id)},
          |"path":${jstr(n.path)},
-         |"materialize":${jstr(n.cfg.materialize.getOrElse("view"))},
+         |"materialize":${jstr(n.mat)},
          |"materialized":${cols.isDefined},
          |"unique_key":${n.cfg.uniqueKey.fold("null")(jstr)},
          |"incremental_strategy":${n.cfg.incrementalStrategy.fold("null")(jstr)},
@@ -74,59 +70,19 @@ object DocsGen {
          |"freshness":$freshness,
          |"columns":$colJson}""".stripMargin.replace("\n", "")
     }
-    s"""{"models":${models.mkString("[", ",", "]")},""" +
-      s""""n_models":${order.size}}"""
-  }
-
-  def catalogJson(spark: SparkSession, order: Seq[String],
-                  nodeMap: Map[String, ModelNode],
-                  exposures: Seq[Exposure]): String =
-    catalogJson(order, nodeMap, columnsMap(spark, order), exposures)
-
-  def catalogJson(order: Seq[String], nodeMap: Map[String, ModelNode],
-                  colsMap: Map[String, Option[Seq[(String, String)]]],
-                  exposures: Seq[Exposure]): String = {
-    val base = catalogJson(order, nodeMap, colsMap)
     val exJson = exposures.map { ex =>
       s"""{"name":${jstr(ex.name)},"type":${jstr(ex.exposureType)},""" +
         s""""owner":${ex.owner.fold("null")(jstr)},""" +
         s""""url":${ex.url.fold("null")(jstr)},""" +
         s""""depends_on":${jarr(ex.dependsOn)}}"""
     }.mkString("[", ",", "]")
-    base.dropRight(1) + s""","exposures":$exJson}"""
+    s"""{"models":${models.mkString("[", ",", "]")},""" +
+      s""""n_models":${order.size},"exposures":$exJson}"""
   }
-
-  def catalogMarkdown(spark: SparkSession, order: Seq[String],
-                      nodeMap: Map[String, ModelNode],
-                      exposures: Seq[Exposure]): String =
-    catalogMarkdown(order, nodeMap, columnsMap(spark, order), exposures)
 
   def catalogMarkdown(order: Seq[String], nodeMap: Map[String, ModelNode],
                       colsMap: Map[String, Option[Seq[(String, String)]]],
                       exposures: Seq[Exposure]): String = {
-    val base = catalogMarkdown(order, nodeMap, colsMap)
-    if (exposures.isEmpty) base
-    else {
-      val sb = new StringBuilder(base)
-      sb ++= "\n# Exposures\n"
-      exposures.foreach { ex =>
-        sb ++= s"\n## ${ex.name} (${ex.exposureType})\n\n"
-        ex.owner.foreach(o => sb ++= s"- **owner**: $o\n")
-        ex.url.foreach(u => sb ++= s"- **url**: $u\n")
-        sb ++= s"- **depends on**: ${ex.dependsOn
-          .map("`" + _ + "`").mkString(", ")}\n"
-      }
-      sb.result()
-    }
-  }
-
-  def catalogMarkdown(spark: SparkSession, order: Seq[String],
-                      nodeMap: Map[String, ModelNode]): String =
-    catalogMarkdown(order, nodeMap, columnsMap(spark, order))
-
-  def catalogMarkdown(order: Seq[String], nodeMap: Map[String, ModelNode],
-                      colsMap: Map[String, Option[Seq[(String, String)]]])
-      : String = {
     val sb = new StringBuilder
     sb ++= s"# Project catalog\n\n${order.size} models in execution " +
       "order. Columns reflect the warehouse as restored/built in the " +
@@ -134,7 +90,7 @@ object DocsGen {
     order.foreach { id =>
       val n = nodeMap(id)
       sb ++= s"\n## $id\n\n"
-      sb ++= s"- **materialize**: ${n.cfg.materialize.getOrElse("view")}"
+      sb ++= s"- **materialize**: ${n.mat}"
       n.cfg.uniqueKey.foreach(k => sb ++= s" (unique_key: `$k`)")
       n.cfg.incrementalStrategy.foreach(s => sb ++= s" [strategy: $s]")
       sb ++= "\n"
@@ -156,6 +112,16 @@ object DocsGen {
         case Some(_) => sb ++= "\n(zero columns)\n"
         case None => sb ++= "\n(not materialized — run the project to " +
           "populate columns)\n"
+      }
+    }
+    if (exposures.nonEmpty) {
+      sb ++= "\n# Exposures\n"
+      exposures.foreach { ex =>
+        sb ++= s"\n## ${ex.name} (${ex.exposureType})\n\n"
+        ex.owner.foreach(o => sb ++= s"- **owner**: $o\n")
+        ex.url.foreach(u => sb ++= s"- **url**: $u\n")
+        sb ++= s"- **depends on**: ${ex.dependsOn
+          .map("`" + _ + "`").mkString(", ")}\n"
       }
     }
     sb.result()

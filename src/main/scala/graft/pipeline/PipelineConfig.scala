@@ -307,9 +307,14 @@ object PipelineConfig {
 
   def fromYaml(text: String): PipelineConfig = {
     val yaml = new org.yaml.snakeyaml.Yaml()
-    // a non-mapping document (stray scalar, top-level list) must name the
-    // problem, not surface as a bare ClassCastException downstream
-    val root = Option(yaml.load[Object](text)) match {
+    // malformed YAML names the file instead of escaping as a raw snakeyaml
+    // exception; a non-mapping document (stray scalar, top-level list)
+    // must name the problem, not surface as a ClassCastException downstream
+    val doc =
+      try yaml.load[Object](text)
+      catch { case e: org.yaml.snakeyaml.error.YAMLException =>
+        throw GenericError(s"config.yaml: ${e.getMessage}") }
+    val root = Option(doc) match {
       case None => Map.empty[String, Object]
       case Some(m: java.util.Map[_, _]) =>
         m.asScala.map { case (k, v) => String.valueOf(k) -> v }.toMap
@@ -781,7 +786,4 @@ object PipelineConfig {
       s"models.$modelId.tests: each entry must be a single-key mapping, " +
         s"got ${String.valueOf(other)}")
   }
-
-  def loadFromDir(dir: String): PipelineConfig =
-    load(Paths.get(dir, "config.yaml"))
 }

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-/** Error taxonomy mirroring the reference's three variants
+/** Error taxonomy after the reference's
   * (/root/reference/src/errors.rs:1-10, Display impl src/main.rs:51-61).
+  * Its unknown-model-type variant has no counterpart: discovery only
+  * reads `.sql` files, so no model can have an unknown type.
   */
 sealed trait GraftError extends Exception {
   def render: String
@@ -25,11 +27,6 @@ final case class StatementExecutionError(msg: String, sql: String, path: String)
        |
        |$sql
        |(found in $path)""".stripMargin
-}
-
-final case class UnknownModelType(ext: String) extends GraftError {
-  override def getMessage: String = s"Unknown model type: $ext"
-  def render: String = s"Error: unknown model type `$ext`"
 }
 
 /** A data test's VIOLATION — rows failed the declared constraint — as

@@ -195,14 +195,11 @@ object ScaleCurve {
     }
     if (wanted("q108_pruned_scan")) zonePath
 
-    // ANN migration A/B (r14): one store per variant per scale, built
-    // under a PRIOR fit (negated centroids; the cells-only variant keeps
-    // the committed codebooks — its validity precondition). Builds are
-    // untimed (the drift event is one-time); the timed unit is the whole
-    // migration incl. its StoreSwap publish. Reps re-migrate an
-    // already-clean store — same work both times for the full path, and
-    // the reconcile path's cost is drift-insensitive by construction
-    // (codes are never re-encoded either way), so rep stability holds.
+    // ANN migration (r14): one store per scale, built under a PRIOR fit
+    // (negated centroids, reversed codebooks). Builds are untimed (the
+    // drift event is one-time); the timed unit is the whole migration
+    // incl. its StoreSwap publish. Reps re-migrate an already-clean
+    // store — the same full re-encode work both times.
     val annCents = graft.ext.IvfCentroids.centroids
     val annCbs = graft.ext.PqCodebooks.codebooks
     val oldAnnCents = annCents.map(_.map(-_))
@@ -212,14 +209,7 @@ object ScaleCurve {
         oldAnnCents, annCbs.map(_.reverse))
       n -> p
     }
-    lazy val reencCellsPath: Map[Int, String] = dirs.map { case (n, d) =>
-      val p = s"$d/reenc_cells.parquet"
-      SimilarityOps.annIndexStore(spark, embs(spark, d), p,
-        oldAnnCents, annCbs)
-      n -> p
-    }
     if (wanted("q143_reencode_full")) reencFullPath
-    if (wanted("q143_reencode_cells")) reencCellsPath
 
     // Lexical-stats A/B (r14): the store build is untimed (paid once per
     // corpus, amortized over every retrieval call); the timed A/B is the
@@ -475,12 +465,6 @@ object ScaleCurve {
       "q143_reencode_full" -> { n =>
         val c = SimilarityOps.reencodeAnnIndex(spark, embs(spark, dirs(n)),
           reencFullPath(n), annCents, annCbs)
-        import spark.implicits._
-        Seq(c).toDF("n")
-      },
-      "q143_reencode_cells" -> { n =>
-        val c = SimilarityOps.reencodeAnnIndexCells(spark,
-          embs(spark, dirs(n)), reencCellsPath(n), annCents, annCbs)
         import spark.implicits._
         Seq(c).toDF("n")
       },

@@ -32,8 +32,7 @@ object GraphViz {
       // tag) — a pipeline mixing views/tables/incremental/snapshot reads
       // its persistence boundaries straight off the graph; plain views
       // stay the reference's bare-node DOT
-      val mat = nodeMap.get(s).flatMap(_.cfg.materialize)
-        .map(_.toLowerCase).filterNot(_ == "view")
+      val mat = nodeMap.get(s).map(_.mat).filterNot(_ == "view")
       val prevTag = preview.map(skips => if (skips(s)) "skip" else "run")
       val attrs =
         prevTag.map(t =>

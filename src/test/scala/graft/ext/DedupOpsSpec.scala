@@ -57,19 +57,6 @@ class DedupOpsSpec extends AnyFunSuite {
       .get.getInt(2) == 0)
   }
 
-  test("minhash near-dup (ML variant) finds planted duplicate") {
-    val docs = Seq(
-      (1L, "spark catalyst tungsten shuffle partition broadcast join agg"),
-      (2L, "spark catalyst tungsten shuffle partition broadcast join scan"),
-      (3L, "completely unrelated vocabulary nothing shared at all ever"))
-      .toDF("doc_id", "text")
-    val pairs = MinHashDedup.nearDupPairs(docs, k = 1, numHashTables = 8,
-      maxDistance = 0.5).collect()
-    val ids = pairs.map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(ids.contains((1L, 2L)))
-    assert(!ids.exists(p => p._2 == 3L))
-  }
-
   test("minHashLshPairs (native) finds planted duplicate with exact Jaccard") {
     val docs = Seq(
       (1L, "spark catalyst tungsten shuffle partition broadcast join agg"),

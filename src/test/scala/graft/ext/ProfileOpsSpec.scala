@@ -63,24 +63,6 @@ class ProfileOpsSpec extends AnyFunSuite {
     assert(r.getAs[Long]("n_distinct") == 2)
   }
 
-  test("profileNumeric keeps the narrow legacy schema") {
-    import spark.implicits._
-    val df = Seq((1, 10.0), (2, 30.0)).toDF("k", "x")
-    val r = ProfileOps.profileNumeric(df, Seq("x")).collect().head
-    assert(r.schema.fieldNames.toSeq ==
-      Seq("col_name", "n_rows", "n_null", "n_distinct", "min_v", "max_v", "mean_v"))
-    assert(r.getAs[Double]("min_v") == 10.0 && r.getAs[Double]("max_v") == 30.0)
-    assert(r.getAs[Double]("mean_v") == 20.0)
-  }
-
-  test("profileNumeric coerces numeric strings (original contract)") {
-    import spark.implicits._
-    val df = Seq("1", "2", "2.0").toDF("amount")
-    val r = ProfileOps.profileNumeric(df, Seq("amount")).collect().head
-    assert(r.getAs[Double]("min_v") == 1.0 && r.getAs[Double]("max_v") == 2.0)
-    assert(r.getAs[Long]("n_distinct") == 2) // "2" and "2.0" parse equal
-  }
-
   test("bigint distinct counts are exact beyond double precision") {
     import spark.implicits._
     // 2^53 and 2^53+1 collapse to one double; the long slot keeps them apart

@@ -155,21 +155,6 @@ class SimilarityOpsSpec extends AnyFunSuite {
     assert(graph == topk)
   }
 
-  test("score-once and per-collision banded forms emit identical rows " +
-      "(knnGraph default swap is result-invisible)") {
-    val e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-      .drop("label")
-    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.mkString(",")).sorted.toSeq
-    // the SCALING.md "r9 (second pass)" A/B asserted this on the ScaleGen
-    // corpora before timing; pinning it here keeps the equivalence under
-    // CI when either form is refactored
-    assert(canon(SimilarityOps.knnGraphScoreOnce(e, k = 3)) ==
-      canon(SimilarityOps.knnGraphPerCollision(e, k = 3)))
-    assert(canon(SimilarityOps.lshNearDupPairsScoreOnce(e, minSim = 0.3)) ==
-      canon(SimilarityOps.lshNearDupPairs(e, minSim = 0.3)))
-  }
-
   test("two-stage int8 IVF scoring is bit-identical to exact scoring of " +
       "the same probed cells (driver-side oracle, coarse filter pruning)") {
     val rnd = new scala.util.Random(7)
@@ -557,13 +542,15 @@ class SimilarityOpsSpec extends AnyFunSuite {
   test("reencodeAnnIndex: migrating a store built under a prior fit to " +
       "new literals leaves staleness clean and answers exactly the " +
       "inline chain under the NEW literals") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-annreenc").resolve("idx").toString
-    val corpus = vecs((1L, Seq(1f, 0f), 0), (2L, Seq(0.9f, 0.1f), 0),
+    val base = java.nio.file.Files.createTempDirectory("graft-annreenc")
+    val path = base.resolve("idx").toString
+    val all = vecs((1L, Seq(1f, 0f), 0), (2L, Seq(0.9f, 0.1f), 0),
       (3L, Seq(0f, 1f), 0), (4L, Seq(0.1f, 0.9f), 0),
-      (5L, Seq(0.6f, 0.8f), 0)).drop("label")
-    // prior fit: swapped centroids, reversed codebooks — every cell and
-    // every code disagrees with the committed fixture fit
+      (5L, Seq(0.6f, 0.8f), 0), (6L, Seq(0.8f, 0.6f), 0)).drop("label")
+    // yesterday's corpus (no id 6), indexed under a prior fit: swapped
+    // centroids, reversed codebooks — every cell and every code disagrees
+    // with the committed fixture fit
+    val corpus = all.filter(col("vec_id") <= 5L)
     val oldCents = annCents.reverse
     val oldCbs = annCbs.map(_.reverse)
     SimilarityOps.annIndexStore(spark,
@@ -576,72 +563,44 @@ class SimilarityOpsSpec extends AnyFunSuite {
       .agg(sum("n_cell_mismatch")).head.getLong(0)
     assert(preMism > 0L, "fixture must actually drift")
 
-    val n = SimilarityOps.reencodeAnnIndex(spark, corpus, path,
+    // today's corpus: id 1 left (orphan), id 6 arrived (missing)
+    val current = all.filter(col("vec_id") >= 2L)
+    val n = SimilarityOps.reencodeAnnIndex(spark, current, path,
       annCents, annCbs)
     assert(n == 5L)
     // post-migration staleness: ZERO missing / orphaned / mismatched
-    val post = SimilarityOps.annIndexStaleness(corpus,
+    val post = SimilarityOps.annIndexStaleness(current,
         SimilarityOps.readAnnIndexStore(spark, path), annCents)
       .agg(sum("n_missing"), sum("n_orphaned"), sum("n_cell_mismatch"))
       .head
     assert((post.getLong(0), post.getLong(1), post.getLong(2)) ==
       ((0L, 0L, 0L)), s"staleness not clean after migration: $post")
+    // the migrated store is bitwise a fresh build of today's corpus
+    val fresh = base.resolve("fresh").toString
+    SimilarityOps.annIndexStore(spark, current, fresh, annCents, annCbs)
+    def rows(p: String) = SimilarityOps.readAnnIndexStore(spark, p)
+      .collect().map(r => (r.getLong(0), r.getSeq[Int](1), r.getInt(2)))
+      .sortBy(_._1).toSeq
+    assert(rows(path) == rows(fresh), "migration diverged from a fresh build")
     // the migrated store answers exactly the inline chain under the NEW
     // literals (the q143 identity), and appends keep working against it
-    val probes = corpus.filter(col("vec_id") <= 2L)
+    val probes = current.filter(col("vec_id") <= 3L)
     def run(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("probe_id", "rk").collect().toSeq
     assert(run(SimilarityOps.ivfPqTopKFromStore(probes,
-        SimilarityOps.readAnnIndexStore(spark, path), corpus, annCents,
+        SimilarityOps.readAnnIndexStore(spark, path), current, annCents,
         annCbs, k = 3, nprobe = 2, refineFactor = 2)) ==
-      run(SimilarityOps.ivfPqTopK(probes, corpus, annCents, annCbs,
+      run(SimilarityOps.ivfPqTopK(probes, current, annCents, annCbs,
         k = 3, nprobe = 2, refineFactor = 2)))
     assert(SimilarityOps.appendToAnnIndex(spark,
       vecs((9L, Seq(0.5f, 0.5f), 0)).drop("label"), path,
       annCents, annCbs) == 1L)
     // an unpublished path refuses loudly
     val e = intercept[IllegalArgumentException](
-      SimilarityOps.reencodeAnnIndex(spark, corpus,
+      SimilarityOps.reencodeAnnIndex(spark, current,
         java.nio.file.Files.createTempDirectory("graft-noreenc")
           .resolve("x").toString, annCents, annCbs))
     assert(e.getMessage.contains("no published store"))
-  }
-
-  test("reencodeAnnIndexCells: a centroid-only re-fit migrates by " +
-      "reconcile — bitwise the full re-encode, with corpus churn " +
-      "(missing + orphaned) remediated in the same swap") {
-    val base = java.nio.file.Files.createTempDirectory("graft-reenccells")
-    val pathA = base.resolve("cells_only").toString
-    val pathB = base.resolve("full").toString
-    val all = vecs((1L, Seq(1f, 0f), 0), (2L, Seq(0.9f, 0.1f), 0),
-      (3L, Seq(0f, 1f), 0), (4L, Seq(0.1f, 0.9f), 0),
-      (5L, Seq(0.6f, 0.8f), 0), (6L, Seq(0.8f, 0.6f), 0)).drop("label")
-    // both stores built under SWAPPED centroids but the CURRENT codebooks
-    // (the centroid-only drift case), over yesterday's corpus (no id 6)
-    val oldCents = annCents.reverse
-    SimilarityOps.annIndexStore(spark,
-      all.filter(col("vec_id") <= 5L), pathA, oldCents, annCbs)
-    SimilarityOps.annIndexStore(spark,
-      all.filter(col("vec_id") <= 5L), pathB, oldCents, annCbs)
-    // today's corpus: id 1 left (orphan), id 6 arrived (missing)
-    val current = all.filter(col("vec_id") >= 2L)
-    val nA = SimilarityOps.reencodeAnnIndexCells(spark, current, pathA,
-      annCents, annCbs)
-    val nB = SimilarityOps.reencodeAnnIndex(spark, current, pathB,
-      annCents, annCbs)
-    assert(nA == 5L && nB == 5L)
-    def rows(p: String) = SimilarityOps.readAnnIndexStore(spark, p)
-      .collect().map(r => (r.getLong(0), r.getSeq[Int](1), r.getInt(2)))
-      .sortBy(_._1).toSeq
-    assert(rows(pathA) == rows(pathB),
-      "reconcile path diverged from the full re-encode")
-    // staleness clean on the reconcile path too
-    val post = SimilarityOps.annIndexStaleness(current,
-        SimilarityOps.readAnnIndexStore(spark, pathA), annCents)
-      .agg(sum("n_missing"), sum("n_orphaned"), sum("n_cell_mismatch"))
-      .head
-    assert((post.getLong(0), post.getLong(1), post.getLong(2)) ==
-      ((0L, 0L, 0L)))
   }
 
   test("reassignEmbeddingStore: a centroid-only re-fit of the semantic " +

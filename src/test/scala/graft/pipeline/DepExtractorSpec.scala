@@ -34,8 +34,8 @@ class DepExtractorSpec extends AnyFunSuite {
     assert(DepExtractor.tableRefs(sql) == Set("x", "y"))
   }
 
-  test("modelRefs filters to known ids") {
-    assert(DepExtractor.modelRefs(
+  test("modelRefsInModel filters to known ids") {
+    assert(DepExtractor.modelRefsInModel(
       "SELECT * FROM model_a JOIN external_tbl USING (id)",
       Set("model_a", "model_b")) == Set("model_a"))
   }

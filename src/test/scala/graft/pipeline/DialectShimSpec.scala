@@ -266,26 +266,29 @@ class DialectShimSpec extends AnyFunSuite {
   }
 
   test("scalar CREATE MACRO parses; table form and defaults do not") {
-    assert(DialectShim.macroDefinition(
-      "CREATE MACRO add_one(x) AS x + 1") == Some(("add_one", Seq("x"), "x + 1")))
-    assert(DialectShim.macroDefinition(
-      "CREATE OR REPLACE TEMP MACRO f() AS 41 + 1") == Some(("f", Seq.empty, "41 + 1")))
-    // the scalar API rejects the table form (it parses via macroDefinitionAny)
-    assert(DialectShim.macroDefinition(
-      "CREATE MACRO t1() AS TABLE SELECT 1").isEmpty)
+    assert(DialectShim.macroDefinitionAny(
+      "CREATE MACRO add_one(x) AS x + 1") ==
+      Some(("add_one", Seq("x"), "x + 1", false)))
+    assert(DialectShim.macroDefinitionAny(
+      "CREATE OR REPLACE TEMP MACRO f() AS 41 + 1") ==
+      Some(("f", Seq.empty, "41 + 1", false)))
+    // the table form parses as a table macro, never as a scalar one
+    assert(DialectShim.macroDefinitionAny(
+      "CREATE MACRO t1() AS TABLE SELECT 1") ==
+      Some(("t1", Seq.empty, "SELECT 1", true)))
     assert(DialectShim.macroDefinitionAny(
       "CREATE MACRO t1(n) AS TABLE SELECT n AS x") ==
       Some(("t1", Seq("n"), "SELECT n AS x", true)))
     // literal parameter defaults parse (default names after positionals)
-    assert(DialectShim.macroDefinition(
+    assert(DialectShim.macroDefinitionAny(
       "CREATE MACRO g(a, x := 1) AS a + x") ==
-      Some(("g", Seq("a", "x"), "a + x")))
+      Some(("g", Seq("a", "x"), "a + x", false)))
     // non-literal default / positional after defaulted: verbatim
-    assert(DialectShim.macroDefinition(
+    assert(DialectShim.macroDefinitionAny(
       "CREATE MACRO h(a, x := f(1)) AS a + x").isEmpty)
-    assert(DialectShim.macroDefinition(
+    assert(DialectShim.macroDefinitionAny(
       "CREATE MACRO k(x := 1, a) AS a + x").isEmpty)
-    assert(DialectShim.macroDefinition("CREATE TABLE x AS SELECT 1").isEmpty)
+    assert(DialectShim.macroDefinitionAny("CREATE TABLE x AS SELECT 1").isEmpty)
   }
 
   test("macro parameter defaults bind like DuckDB's binder") {
@@ -315,7 +318,7 @@ class DialectShimSpec extends AnyFunSuite {
       "SELECT incr(a := 5) AS v")
     // duplicated parameter names don't register (default would silently
     // override the positional binding)
-    assert(DialectShim.macroDefinition(
+    assert(DialectShim.macroDefinitionAny(
       "CREATE MACRO dup(a, a := 1) AS a").isEmpty)
     // a string-literal default may contain commas and '' escapes
     DialectShim.rewrite(

@@ -42,7 +42,8 @@ class DocsGenSpec extends AnyFunSuite {
     val r = session.runNodes()
     assert(r.errors.isEmpty, r.errors.map(_.render).mkString("\n"))
     val (order, nodeMap) = session.buildGraph()
-    val json = DocsGen.catalogJson(spark, order, nodeMap)
+    val json = DocsGen.catalogJson(order, nodeMap,
+      DocsGen.columnsMap(spark, order), Nil)
     assert(json.contains("\"n_models\":2"), json)
     assert(json.contains("\"id\":\"dg_base\""))
     assert(json.contains("\"materialize\":\"table\""))
@@ -57,7 +58,8 @@ class DocsGenSpec extends AnyFunSuite {
     assert(json.contains("\"materialized\":true"))
     assert(json.contains("{\"name\":\"id\",\"type\":\"int\"}"), json)
     assert(json.contains("{\"name\":\"n\",\"type\":\"bigint\"}"), json)
-    val md = DocsGen.catalogMarkdown(spark, order, nodeMap)
+    val md = DocsGen.catalogMarkdown(order, nodeMap,
+      DocsGen.columnsMap(spark, order), Nil)
     assert(md.contains("## dg_base") && md.contains("## dg_leaf"))
     assert(md.contains("| id | int |"), md)
     assert(md.contains("**tags**: core, nightly"))
@@ -79,10 +81,35 @@ class DocsGenSpec extends AnyFunSuite {
     val cfg2 = PipelineConfig.load(dir.resolve("config.yaml"))
     val session = new PipelineSession(spark, cfg2)
     val (order, nodeMap) = session.buildGraph()
-    val json = DocsGen.catalogJson(spark, order, nodeMap)
+    val json = DocsGen.catalogJson(order, nodeMap,
+      DocsGen.columnsMap(spark, order), Nil)
     assert(json.contains("\"materialized\":false"), json)
     assert(json.contains("\"columns\":[]"), json)
-    val md = DocsGen.catalogMarkdown(spark, order, nodeMap)
+    val md = DocsGen.catalogMarkdown(order, nodeMap,
+      DocsGen.columnsMap(spark, order), Nil)
     assert(md.contains("not materialized"), md)
+  }
+
+  test("a mixed-case materialize documents as the lowercase " +
+      "materialization the engine runs") {
+    val db = Files.createTempDirectory("graft-docs3-db")
+    val dir = Files.createTempDirectory("graft-docs3")
+    val modelsDir = dir.resolve("models"); Files.createDirectories(modelsDir)
+    Files.writeString(modelsDir.resolve("dg3_mixed.sql"), "SELECT 1 AS id")
+    Files.writeString(dir.resolve("config.yaml"),
+      s"""models_dir: $modelsDir
+         |db_path: $db
+         |models:
+         |  dg3_mixed:
+         |    materialize: Table
+         |""".stripMargin)
+    val session = new PipelineSession(spark,
+      PipelineConfig.load(dir.resolve("config.yaml")))
+    val (order, nodeMap) = session.buildGraph()
+    val cols = DocsGen.columnsMap(spark, order)
+    val json = DocsGen.catalogJson(order, nodeMap, cols, Nil)
+    assert(json.contains("\"materialize\":\"table\""), json)
+    val md = DocsGen.catalogMarkdown(order, nodeMap, cols, Nil)
+    assert(md.contains("- **materialize**: table\n"), md)
   }
 }

@@ -128,11 +128,12 @@ class ExposuresSpec extends AnyFunSuite {
     val cfg = project(dashYaml)
     val session = new PipelineSession(spark, cfg)
     val (order, nodeMap) = session.buildGraph()
-    val json = DocsGen.catalogJson(spark, order, nodeMap, cfg.exposures)
+    val cols = DocsGen.columnsMap(spark, order)
+    val json = DocsGen.catalogJson(order, nodeMap, cols, cfg.exposures)
     assert(json.contains("\"exposures\":[{\"name\":\"weekly_dash\"," +
       "\"type\":\"dashboard\",\"owner\":\"data-team\""), json)
     assert(json.contains("\"depends_on\":[\"ex_mart\"]"))
-    val md = DocsGen.catalogMarkdown(spark, order, nodeMap, cfg.exposures)
+    val md = DocsGen.catalogMarkdown(order, nodeMap, cols, cfg.exposures)
     assert(md.contains("## weekly_dash (dashboard)"), md)
     assert(md.contains("**owner**: data-team"))
   }

@@ -61,6 +61,17 @@ class PipelineConfigSpec extends AnyFunSuite {
     assert(e.getMessage.contains("mapping"))
   }
 
+  test("malformed YAML fails named with the config file, not as a raw " +
+      "parser exception") {
+    // an unclosed flow sequence and a tab-indented key: snakeyaml throws
+    // a scanner/parser exception for each
+    Seq("models_dir: [m\n", "models:\n\ta: 1\n").foreach { text =>
+      val e = intercept[GenericError](PipelineConfig.fromYaml(text))
+      assert(e.getMessage.startsWith("config.yaml: "), e.getMessage)
+      assert(e.render.startsWith("Error: config.yaml: "), e.render)
+    }
+  }
+
   test("a non-boolean enabled: fails named with the model and the key") {
     val e = intercept[GenericError](PipelineConfig.fromYaml(
       "models:\n  m1:\n    enabled: maybe\n"))
