@@ -3,21 +3,61 @@ package graft.pipeline
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Pipeline configuration, the analog of the reference's `config.yaml`
-  * (/root/reference/src/session.rs:22-40, examples/basic/config.yaml).
+/** Pipeline configuration: the typed form of `config.yaml`, the analog
+  * of the reference's config struct (`src/session.rs:22-40`). This
+  * header is the one key reference. A blank value (`db_path:`) means the key is absent; a
+  * value of the wrong shape, or an unknown key under `models.<id>`, fails
+  * the load with a [[GenericError]] naming its key path, for example
+  * models.m1.tags: expected a list, got `nightly`.
   *
-  * Keys (reference name kept; Spark-flavored alias also accepted):
-  *   models_dir       — root scanned recursively for *.sql models
-  *   db_path          — reference: DuckDB file. Ours: warehouse directory
-  *                      for `table` materializations; absent → in-memory
-  *                      (temp views only), mirroring DuckDB's in-memory mode
-  *   macro_path       — directory of macro files
-  *   seeds_dir        — directory of *.csv seed files (dbt seeds): each
-  *                      becomes a TABLE node named by its filename stem,
-  *                      participating in the DAG/selection/changed-only
-  *                      machinery like any model
-  *   duckdb_settings / spark_settings — engine key/value pass-through
-  *   models.<id>.materialize — "view" (default) | "table" | "incremental"
+  * Top level (relative paths resolve against the config file's directory):
+  *   models_dir        scalar, default `.` — scanned recursively for *.sql
+  *                     models, each named by its file stem
+  *   db_path           scalar, default absent — warehouse directory of the
+  *                     persisted materializations (the reference's DuckDB
+  *                     file); absent → in-memory, temp views only
+  *   macro_path        scalar, default absent — directory of macro files
+  *   seeds_dir         scalar, default absent — *.csv seeds, each a TABLE
+  *                     node named by its file stem
+  *   duckdb_settings   mapping of scalars, default empty — settings applied
+  *     (or spark_settings)  to the Spark session
+  *   vars              mapping of scalars, default empty — `{{ var('k') }}`
+  *                     values; the CLI's `--vars` overlays them
+  *   models            mapping of model id → the model keys below
+  *   exposures         list of mappings, default empty — downstream
+  *                     consumers: `name`, `type` (dashboard | notebook |
+  *                     analysis | ml | application), optional `owner`
+  *                     and `url`, `depends_on` (non-empty list of models)
+  *
+  * `models.<id>` (a blank `<id>:` is all defaults):
+  *   materialize             view (default) | table | incremental | snapshot
+  *   unique_key              scalar, default none — the incremental merge
+  *                           key / the snapshot row key
+  *   incremental_strategy    merge (default) | delete+insert |
+  *                           insert_overwrite | microbatch
+  *   partition_by            scalar column, default none — table layout;
+  *                           required by insert_overwrite and microbatch
+  *   on_schema_change        fail (default) | append_new_columns | ignore
+  *   event_time              scalar column — microbatch's event clock
+  *   batch_size              hour | day (default) | month | year
+  *   lookback                integer ≥ 1, default 1 — how many of the latest
+  *                           materialized batches microbatch reprocesses
+  *   strategy                check (default) | timestamp — snapshot
+  *   updated_at              scalar column — the timestamp snapshot's clock
+  *   invalidate_hard_deletes true|false, default false — a snapshot closes
+  *                           rows whose key left the source
+  *   pre_hook / pre-hook     string or list of strings, default none
+  *   post_hook / post-hook   string or list of strings, default none
+  *   tags                    list of scalars, default none
+  *   tests                   list of data tests (shapes: `parseTest`)
+  *   unit_tests              list of unit tests (shape: `parseUnitTest`)
+  *   freshness               mapping `warn_after_seconds` and/or
+  *                           `error_after_seconds` (integers), default none
+  *   enabled                 true|false, default true
+  *   contract                `enforced` or `{enforced: true|false}`,
+  *                           default not enforced
+  *   columns                 list of mappings `name`, `data_type` (required
+  *                           under an enforced contract), default none
   */
 final case class PipelineConfig(
     modelsDir: String = ".",
@@ -27,12 +67,7 @@ final case class PipelineConfig(
     settings: Map[String, String] = Map.empty,
     models: Map[String, ModelConfig] = Map.empty,
     vars: Map[String, String] = Map.empty,
-    exposures: Seq[Exposure] = Nil,
-    // the config file's directory (set by `load`) — the anchor for
-    // machine-independent identities like the custom-SQL test slug
-    // (ADVICE r16: an absolute-path slug embeds the mount point, so
-    // relocating the project orphans failure stores and renames views)
-    baseDir: Option[String] = None)
+    exposures: Seq[Exposure] = Nil)
 
 /** A dbt exposure: a named DOWNSTREAM consumer of models (a dashboard,
   * an ML job, an application) declared in config so the dependency is
@@ -142,8 +177,12 @@ object ModelTest {
     * into [[describe]] (and therefore the model's closure fingerprint),
     * so editing the test re-executes the model under `--changed-only`;
     * a missing file describes as such and fails loudly at run time.
+    * `id` names the test in [[describe]] and in its failure-store slug:
+    * the path relative to the config file's directory (absolute when
+    * the file lies outside it), so relocating the project changes
+    * neither the closure fingerprint nor the store's name.
     */
-  final case class CustomSql(path: String) extends ModelTest {
+  final case class CustomSql(path: String, id: String) extends ModelTest {
     def content: Option[String] =
       try Some(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
       catch { case _: Exception => None }
@@ -153,7 +192,7 @@ object ModelTest {
           .digest(c.getBytes("UTF-8")).map(b => f"$b%02x").mkString
         case None => "missing"
       }
-      s"sql($path#$fp)"
+      s"sql($id#$fp)"
     }
   }
   /** dbt's `severity: warn`: the wrapped test runs identically, but a
@@ -282,7 +321,15 @@ object PipelineConfig {
     // StoreFailures(CustomSql) and Configured(CustomSql) combinations,
     // leaving cwd-relative paths that fingerprint as `#missing`
     def rebaseTest(t: ModelTest): ModelTest = t match {
-      case ModelTest.CustomSql(p) => ModelTest.CustomSql(rebase(p))
+      case ModelTest.CustomSql(p, _) =>
+        val path = rebase(p)
+        val abs = Paths.get(path)
+        // the identity is config-relative, so it survives relocating or
+        // re-cloning the project; a file outside it keeps its absolute
+        // path (unique either way, and honest about it)
+        val id = baseDir.filter(b => abs.startsWith(b))
+          .fold(path)(_.relativize(abs).toString)
+        ModelTest.CustomSql(path, id)
       case ModelTest.Warn(i) => ModelTest.Warn(rebaseTest(i))
       case ModelTest.StoreFailures(i) =>
         ModelTest.StoreFailures(rebaseTest(i))
@@ -301,297 +348,167 @@ object PipelineConfig {
       dbPath = loaded.dbPath.map(rebase),
       models = loaded.models.view.mapValues { mc =>
         mc.copy(tests = mc.tests.map(rebaseTest))
-      }.toMap,
-      baseDir = baseDir.map(_.toString))
+      }.toMap)
+  }
+
+  /** One YAML mapping of config.yaml, read by key path: `path` is the
+    * prefix its keys print under (`models.m1.`). Its values are converted
+    * once, on construction. Every accessor treats a missing or blank
+    * (null) value as absent, and fails a value of the wrong shape with
+    * `<path><key>: expected <shape>, got <value>`.
+    */
+  private final class YamlMap(path: String, raw: Map[String, Any]) {
+    private val fields = raw.map { case (k, v) => k -> YamlMap.plain(v) }
+    def keys: Iterable[String] = fields.keys
+    /** The entries as they are, values YAML scalars (unit-test rows). */
+    def toMap: Map[String, Any] = fields
+
+    def fail(key: String, shape: String, got: Any): Nothing =
+      throw GenericError(
+        s"$path$key: expected $shape, got ${YamlMap.show(got)}")
+
+    def get(key: String): Option[Any] = fields.get(key).flatMap(Option(_))
+
+    def scalar(key: String): Option[String] = get(key).map {
+      case v @ (_: Map[_, _] | _: Seq[_]) => fail(key, "a scalar", v)
+      case v => v.toString
+    }
+
+    def bool(key: String): Option[Boolean] = get(key).map { v =>
+      String.valueOf(v).toLowerCase match {
+        case "true" => true
+        case "false" => false
+        case _ => fail(key, "true|false", v)
+      }
+    }
+
+    def int(key: String, shape: String): Option[Int] =
+      number(key, shape)(_.toInt)
+    def long(key: String, shape: String): Option[Long] =
+      number(key, shape)(_.toLong)
+    private def number[T](key: String, shape: String)(
+        parse: String => T): Option[T] =
+      get(key).map { v =>
+        try parse(String.valueOf(v))
+        catch { case _: NumberFormatException => fail(key, shape, v) }
+      }
+
+    def list(key: String): Seq[Any] = get(key) match {
+      case None => Nil
+      case Some(l: Seq[_]) => l.map(YamlMap.plain)
+      case Some(v) => fail(key, "a list", v)
+    }
+
+    def strings(key: String): Seq[String] = list(key).zipWithIndex.map {
+      case (v @ (null | _: Map[_, _] | _: Seq[_]), i) =>
+        fail(s"$key[$i]", "a scalar", v)
+      case (v, _) => v.toString
+    }
+
+    /** A hook: one statement or a list of them. */
+    def stringOrList(key: String): Seq[String] = get(key) match {
+      case None => Nil
+      case Some(_: Seq[_]) => strings(key)
+      case Some(v: Map[_, _]) => fail(key, "a string or a list", v)
+      case Some(v) => Seq(v.toString)
+    }
+
+    def map(key: String): Option[YamlMap] =
+      get(key).map(YamlMap.of(s"$path$key", _))
+
+    def maps(key: String): Seq[YamlMap] = list(key).zipWithIndex.map {
+      case (v, i) => YamlMap.of(s"$path$key[$i]", v)
+    }
+
+    /** Every value a scalar, blank values dropped (settings, vars). */
+    def scalars: Map[String, String] =
+      fields.keys.flatMap(k => scalar(k).map(k -> _)).toMap
+
+    def requireKnown(known: Set[String]): Unit = {
+      val unknown = fields.keys.filterNot(known).toSeq.sorted
+      if (unknown.nonEmpty) throw GenericError(
+        s"${path.stripSuffix(".")}: unknown key " +
+          unknown.mkString("`", "`, `", "`") +
+          s" (known: ${known.toSeq.sorted.mkString(", ")})")
+    }
+  }
+
+  private object YamlMap {
+    /** The one conversion from snakeyaml's `java.util` shapes, one level
+      * deep (so a recursive alias is never walked): a mapping becomes a
+      * Map with string keys, a list a Seq.
+      */
+    def plain(v: Any): Any = v match {
+      case m: java.util.Map[_, _] =>
+        m.asScala.map { case (k, x) => String.valueOf(k) -> x }.toMap
+      case l: java.util.List[_] => l.asScala.toSeq
+      case x => x
+    }
+
+    def show(v: Any): String = v match {
+      case null => "nothing"
+      case _: Map[_, _] => "a mapping"
+      case _: Seq[_] => "a list"
+      case x => s"`$x`"
+    }
+
+    /** `v`, already [[plain]], as the mapping at key path `at`. */
+    def of(at: String, v: Any): YamlMap = v match {
+      case m: Map[_, _] =>
+        new YamlMap(s"$at.", m.asInstanceOf[Map[String, Any]])
+      case other => throw GenericError(
+        s"$at: expected a mapping, got ${show(other)}")
+    }
   }
 
   def fromYaml(text: String): PipelineConfig = {
-    val yaml = new org.yaml.snakeyaml.Yaml()
     // malformed YAML names the file instead of escaping as a raw snakeyaml
     // exception; a non-mapping document (stray scalar, top-level list)
     // must name the problem, not surface as a ClassCastException downstream
     val doc =
-      try yaml.load[Object](text)
+      try new org.yaml.snakeyaml.Yaml().load[Object](text)
       catch { case e: org.yaml.snakeyaml.error.YAMLException =>
         throw GenericError(s"config.yaml: ${e.getMessage}") }
-    val root = Option(doc) match {
-      case None => Map.empty[String, Object]
-      case Some(m: java.util.Map[_, _]) =>
-        m.asScala.map { case (k, v) => String.valueOf(k) -> v }.toMap
-      case Some(other) => throw GenericError(
-        s"config.yaml: expected a key: value mapping at the top level, " +
-          s"got ${other.getClass.getSimpleName}")
+    val root = YamlMap.plain(doc) match {
+      case null => new YamlMap("", Map.empty)
+      case m: Map[_, _] =>
+        new YamlMap("", m.asInstanceOf[Map[String, Any]])
+      case other => throw GenericError(
+        "config.yaml: expected a key: value mapping at the top level, " +
+          s"got ${YamlMap.show(other)}")
     }
-
-    // a key left blank while editing (`db_path:`) parses as null — treat
-    // it as absent instead of NPE-ing on toString
-    def str(k: String): Option[String] =
-      root.get(k).flatMap(Option(_)).map(_.toString)
-    val settings = root.get("duckdb_settings").orElse(root.get("spark_settings"))
-      .flatMap(Option(_))
-      .collect { case m: java.util.Map[_, _] =>
-        m.asScala.collect { case (k, v) if v != null =>
-          String.valueOf(k) -> v.toString }.toMap }
-      .getOrElse(Map.empty[String, String])
-    val models = root.get("models").flatMap(Option(_))
-      .collect { case m: java.util.Map[_, _] =>
-        m.asScala.map { case (k, v) =>
-          val id = String.valueOf(k)
-          def field(name: String): Option[String] = v match {
-            case vm: java.util.Map[_, _] =>
-              vm.asScala.collectFirst {
-                case (mk, mv) if String.valueOf(mk) == name &&
-                  mv != null => mv.toString }
-            case _ => None
-          }
-          def bool(name: String): Option[Boolean] =
-            field(name).map(v => v.toLowerCase match {
-              case "true" => true
-              case "false" => false
-              case _ => throw GenericError(
-                s"models.$id.$name: expected true|false, got `$v`")
-            })
-          def list(name: String): Seq[String] = v match {
-            case vm: java.util.Map[_, _] =>
-              vm.asScala.collectFirst {
-                case (mk, mv: java.util.List[_])
-                    if String.valueOf(mk) == name =>
-                  mv.asScala.toSeq.map(String.valueOf(_))
-              }.getOrElse(Nil)
-            case _ => Nil
-          }
-          val tests: Seq[ModelTest] = v match {
-            case vm: java.util.Map[_, _] =>
-              vm.asScala.collectFirst {
-                case (mk, mv: java.util.List[_])
-                    if String.valueOf(mk) == "tests" =>
-                  mv.asScala.toSeq.map(parseTest(id, _))
-              }.getOrElse(Nil)
-            case _ => Nil
-          }
-          // hooks accept a single string or a list; both dbt spellings
-          // (pre-hook / pre_hook) are read
-          def hookList(names: String*): Seq[String] = v match {
-            case vm: java.util.Map[_, _] =>
-              vm.asScala.collectFirst {
-                case (mk, mv) if names.contains(String.valueOf(mk)) &&
-                  mv != null => mv
-              } match {
-                case Some(l: java.util.List[_]) =>
-                  l.asScala.toSeq.map(String.valueOf(_))
-                case Some(s) => Seq(s.toString)
-                case None => Nil
-              }
-            case _ => Nil
-          }
-          // freshness: { warn_after_seconds: N, error_after_seconds: M }
-          // — either bound optional, but an empty mapping is a loud
-          // error (a freshness block that checks nothing is a typo)
-          val freshness: Option[Freshness] = v match {
-            case vm: java.util.Map[_, _] =>
-              vm.asScala.collectFirst {
-                case (mk, fm: java.util.Map[_, _])
-                    if String.valueOf(mk) == "freshness" =>
-                  val fields = fm.asScala.map { case (fk, fv) =>
-                    String.valueOf(fk) -> fv }.toMap
-                  def sec(name: String): Option[Long] =
-                    fields.get(name).flatMap(Option(_))
-                      .map(x => try x.toString.toLong
-                        catch { case _: NumberFormatException =>
-                          throw GenericError(s"models.$id.freshness." +
-                            s"$name: expected seconds, got `$x`") })
-                  val f = Freshness(sec("warn_after_seconds"),
-                    sec("error_after_seconds"))
-                  if (f.warnAfterSeconds.isEmpty &&
-                      f.errorAfterSeconds.isEmpty)
-                    throw GenericError(s"models.$id.freshness: declare " +
-                      "warn_after_seconds and/or error_after_seconds")
-                  f
-              }
-            case _ => None
-          }
-          // dbt 1.8 unit tests: name + given (input/rows) + expect rows
-          val unitTests: Seq[UnitTest] = v match {
-            case vm: java.util.Map[_, _] =>
-              vm.asScala.collectFirst {
-                case (mk, mv) if String.valueOf(mk) == "unit_tests" &&
-                    mv != null =>
-                  mv match {
-                    case l: java.util.List[_] =>
-                      l.asScala.toSeq.map(parseUnitTest(id, _))
-                    case other => throw GenericError(
-                      s"models.$id.unit_tests: must be a list, got " +
-                        other.getClass.getSimpleName)
-                  }
-              }.getOrElse(Nil)
-            case _ => Nil
-          }
-          locally {
-            val dup = unitTests.groupBy(_.name).filter(_._2.size > 1).keys
-            if (dup.nonEmpty) throw GenericError(
-              s"models.$id.unit_tests: duplicate names " +
-                dup.toSeq.sorted.mkString(", "))
-          }
-          // dbt model contracts: `contract: enforced` (also the dbt
-          // mapping spelling `contract: {enforced: true}`) + declared
-          // columns with data types
-          val contract: Boolean = v match {
-            case vm: java.util.Map[_, _] =>
-              vm.asScala.collectFirst {
-                case (mk, mv) if String.valueOf(mk) == "contract" &&
-                    mv != null =>
-                  mv match {
-                    case s: String if s == "enforced" => true
-                    case cm: java.util.Map[_, _] =>
-                      cm.asScala.collectFirst {
-                        case (ck, cv) if String.valueOf(ck) == "enforced" =>
-                          cv match {
-                            case b: java.lang.Boolean => b.booleanValue()
-                            case s: String if s == "true" => true
-                            case s: String if s == "false" => false
-                            case other => throw GenericError(
-                              s"models.$id.contract.enforced: expected " +
-                                s"true|false, got `$other`")
-                          }
-                      }.getOrElse(throw GenericError(
-                        s"models.$id.contract: mapping form needs " +
-                          "`enforced: true|false`"))
-                    case other => throw GenericError(
-                      s"models.$id.contract: expected `enforced` or " +
-                        s"`{enforced: true}`, got `$other`")
-                  }
-              }.getOrElse(false)
-            case _ => false
-          }
-          val contractColumns: Seq[ContractColumn] = v match {
-            case vm: java.util.Map[_, _] =>
-              vm.asScala.collectFirst {
-                case (mk, mv) if String.valueOf(mk) == "columns" &&
-                    mv != null =>
-                  mv match {
-                    case l: java.util.List[_] => l.asScala.toSeq.flatMap {
-                      case cm: java.util.Map[_, _] =>
-                        val fs = cm.asScala.map { case (k2, v2) =>
-                          String.valueOf(k2) -> v2 }.toMap
-                        def opt2(k2: String): Option[String] =
-                          fs.get(k2).flatMap(Option(_)).map(_.toString)
-                        val name = opt2("name").getOrElse(
-                          throw GenericError(
-                            s"models.$id.columns: each entry needs " +
-                              "`name`"))
-                        opt2("data_type") match {
-                          case Some(dt) => Some(ContractColumn(name, dt))
-                          // a documentation-only column (dbt's common
-                          // `- name: x` + description blocks) carries
-                          // no contract obligation UNLESS the contract
-                          // is enforced, where every column must be
-                          // typed (dbt's own rule)
-                          case None if contract => throw GenericError(
-                            s"models.$id.columns: `$name` needs a " +
-                              "data_type under contract: enforced")
-                          case None => None
-                        }
-                      case other => throw GenericError(
-                        s"models.$id.columns: each entry must be a " +
-                          s"mapping, got ${String.valueOf(other)}")
-                    }
-                    case other => throw GenericError(
-                      s"models.$id.columns: must be a list, got " +
-                        other.getClass.getSimpleName)
-                  }
-              }.getOrElse(Nil)
-            case _ => Nil
-          }
-          locally {
-            val dup = contractColumns.groupBy(_.name.toLowerCase)
-              .filter(_._2.size > 1).keys
-            if (dup.nonEmpty) throw GenericError(
-              s"models.$id.columns: duplicate column names " +
-                dup.toSeq.sorted.mkString(", "))
-            if (contract && contractColumns.isEmpty) throw GenericError(
-              s"models.$id: contract: enforced requires a non-empty " +
-                "`columns:` list (a contract that declares nothing " +
-                "enforces nothing)")
-          }
-          id -> ModelConfig(field("materialize"), field("unique_key"),
-            tests, tags = list("tags"),
-            incrementalStrategy = field("incremental_strategy"),
-            partitionBy = field("partition_by"),
-            eventTime = field("event_time"),
-            batchSize = field("batch_size"),
-            lookback = field("lookback").map { v =>
-              try v.toInt catch { case _: NumberFormatException =>
-                throw GenericError(s"models.$id.lookback: expected an " +
-                  s"integer batch count, got `$v`") }
-            },
-            snapshotStrategy = field("strategy"),
-            updatedAt = field("updated_at"),
-            onSchemaChange = field("on_schema_change"),
-            preHooks = hookList("pre_hook", "pre-hook"),
-            postHooks = hookList("post_hook", "post-hook"),
-            freshness = freshness,
-            invalidateHardDeletes =
-              bool("invalidate_hard_deletes").getOrElse(false),
-            enabled = bool("enabled").getOrElse(true),
-            unitTests = unitTests,
-            contract = contract,
-            contractColumns = contractColumns)
-        }.toMap }
-      .getOrElse(Map.empty[String, ModelConfig])
-
-    // dbt vars: a top-level `vars:` mapping of project-wide values the
-    // models reference as {{ var('name') }}; the CLI --vars overlay is
-    // applied by the session, not here
-    val vars = root.get("vars").flatMap(Option(_))
-      .collect { case m: java.util.Map[_, _] =>
-        m.asScala.collect { case (k, v) if v != null =>
-          String.valueOf(k) -> v.toString }.toMap }
-      .getOrElse(Map.empty[String, String])
-
+    // a blank `<id>:` is a model with every default
+    val models = root.map("models").fold(Map.empty[String, ModelConfig]) {
+      ms => ms.keys.map { id =>
+        id -> parseModel(id,
+          ms.map(id).getOrElse(new YamlMap(s"models.$id.", Map.empty)))
+      }.toMap
+    }
     // dbt exposures: named downstream consumers with declared model
     // dependencies — validated structurally here (name/type/depends_on),
     // against the actual model set at graph build
     val exposureTypes =
       Set("dashboard", "notebook", "analysis", "ml", "application")
-    // ADVICE r16: a present-but-not-a-list `exposures:` (mapping,
-    // scalar) must fail loudly like every other malformed shape, not
-    // silently parse as zero exposures
-    root.get("exposures").flatMap(Option(_)).foreach {
-      case _: java.util.List[_] => ()
-      case other => throw GenericError(
-        "exposures: must be a list of mappings, got " +
-          other.getClass.getSimpleName)
+    val exposures: Seq[Exposure] = root.get("exposures") match {
+      case None => Nil
+      case Some(_: Seq[_]) => root.maps("exposures").map { e =>
+        val name = e.scalar("name").getOrElse(throw GenericError(
+          "exposures: each entry needs a `name`"))
+        val tpe = e.scalar("type").getOrElse(throw GenericError(
+          s"exposures.$name: needs a `type` (one of " +
+            s"${exposureTypes.toSeq.sorted.mkString(", ")})"))
+        if (!exposureTypes(tpe)) throw GenericError(
+          s"exposures.$name: unknown type `$tpe` (one of " +
+            s"${exposureTypes.toSeq.sorted.mkString(", ")})")
+        val deps = e.strings("depends_on")
+        if (deps.isEmpty) throw GenericError(
+          s"exposures.$name: needs a non-empty `depends_on` model " +
+            "list (an exposure that reads nothing is a typo)")
+        Exposure(name, tpe, e.scalar("owner"), e.scalar("url"), deps)
+      }
+      case Some(other) => throw GenericError(
+        s"exposures: must be a list of mappings, got ${YamlMap.show(other)}")
     }
-    val exposures: Seq[Exposure] = root.get("exposures").flatMap(Option(_))
-      .collect { case l: java.util.List[_] =>
-        l.asScala.toSeq.map {
-          case m: java.util.Map[_, _] =>
-            val fields = m.asScala.map { case (k, v) =>
-              String.valueOf(k) -> v }.toMap
-            def opt(k: String): Option[String] =
-              fields.get(k).flatMap(Option(_)).map(_.toString)
-            val name = opt("name").getOrElse(throw GenericError(
-              "exposures: each entry needs a `name`"))
-            val tpe = opt("type").getOrElse(throw GenericError(
-              s"exposures.$name: needs a `type` (one of " +
-                s"${exposureTypes.toSeq.sorted.mkString(", ")})"))
-            if (!exposureTypes(tpe)) throw GenericError(
-              s"exposures.$name: unknown type `$tpe` (one of " +
-                s"${exposureTypes.toSeq.sorted.mkString(", ")})")
-            val deps = fields.get("depends_on").flatMap(Option(_)) match {
-              case Some(dl: java.util.List[_]) =>
-                dl.asScala.toSeq.map(String.valueOf(_))
-              case _ => Nil
-            }
-            if (deps.isEmpty) throw GenericError(
-              s"exposures.$name: needs a non-empty `depends_on` model " +
-                "list (an exposure that reads nothing is a typo)")
-            Exposure(name, tpe, opt("owner"), opt("url"), deps)
-          case other => throw GenericError(
-            s"exposures: each entry must be a mapping, got " +
-              String.valueOf(other))
-        }
-      }.getOrElse(Nil)
     locally {
       val dup = exposures.groupBy(_.name).filter(_._2.size > 1).keys
       if (dup.nonEmpty) throw GenericError(
@@ -599,14 +516,110 @@ object PipelineConfig {
     }
 
     PipelineConfig(
-      modelsDir = str("models_dir").getOrElse("."),
-      dbPath = str("db_path"),
-      macroPath = str("macro_path"),
-      seedsDir = str("seeds_dir"),
-      settings = settings,
+      modelsDir = root.scalar("models_dir").getOrElse("."),
+      dbPath = root.scalar("db_path"),
+      macroPath = root.scalar("macro_path"),
+      seedsDir = root.scalar("seeds_dir"),
+      settings = root.map("duckdb_settings")
+        .orElse(root.map("spark_settings"))
+        .fold(Map.empty[String, String])(_.scalars),
       models = models,
-      vars = vars,
+      // dbt vars: project-wide values the models reference as
+      // {{ var('name') }}; the CLI --vars overlay is applied by the
+      // session, not here
+      vars = root.map("vars").fold(Map.empty[String, String])(_.scalars),
       exposures = exposures)
+  }
+
+  /** Every key `models.<id>` may hold (the header lists each one's shape). */
+  private val modelKeys = Set("materialize", "unique_key",
+    "incremental_strategy", "partition_by", "on_schema_change",
+    "event_time", "batch_size", "lookback", "strategy", "updated_at",
+    "invalidate_hard_deletes", "pre_hook", "pre-hook", "post_hook",
+    "post-hook", "tags", "tests", "unit_tests", "freshness", "enabled",
+    "contract", "columns")
+
+  private def parseModel(id: String, m: YamlMap): ModelConfig = {
+    m.requireKnown(modelKeys)
+    // freshness: either bound optional, but an empty mapping is a loud
+    // error (a freshness block that checks nothing is a typo)
+    val freshness = m.map("freshness").map { f =>
+      val fr = Freshness(f.long("warn_after_seconds", "seconds"),
+        f.long("error_after_seconds", "seconds"))
+      if (fr.warnAfterSeconds.isEmpty && fr.errorAfterSeconds.isEmpty)
+        throw GenericError(s"models.$id.freshness: declare " +
+          "warn_after_seconds and/or error_after_seconds")
+      fr
+    }
+    val unitTests = m.maps("unit_tests").map(parseUnitTest(id, _))
+    locally {
+      val dup = unitTests.groupBy(_.name).filter(_._2.size > 1).keys
+      if (dup.nonEmpty) throw GenericError(
+        s"models.$id.unit_tests: duplicate names " +
+          dup.toSeq.sorted.mkString(", "))
+    }
+    // dbt model contracts: `contract: enforced` (also the dbt mapping
+    // spelling `contract: {enforced: true}`) + declared columns with
+    // data types
+    val contract = m.get("contract") match {
+      case None => false
+      case Some("enforced") => true
+      case Some(_: Map[_, _]) =>
+        m.map("contract").flatMap(_.bool("enforced")).getOrElse(
+          throw GenericError(s"models.$id.contract: mapping form needs " +
+            "`enforced: true|false`"))
+      case Some(other) =>
+        m.fail("contract", "`enforced` or `{enforced: true}`", other)
+    }
+    val contractColumns = m.maps("columns").flatMap { c =>
+      val name = c.scalar("name").getOrElse(throw GenericError(
+        s"models.$id.columns: each entry needs `name`"))
+      c.scalar("data_type") match {
+        case Some(dt) => Some(ContractColumn(name, dt))
+        // a documentation-only column (dbt's common `- name: x` +
+        // description blocks) carries no contract obligation UNLESS the
+        // contract is enforced, where every column must be typed (dbt's
+        // own rule)
+        case None if contract => throw GenericError(
+          s"models.$id.columns: `$name` needs a data_type under " +
+            "contract: enforced")
+        case None => None
+      }
+    }
+    locally {
+      val dup = contractColumns.groupBy(_.name.toLowerCase)
+        .filter(_._2.size > 1).keys
+      if (dup.nonEmpty) throw GenericError(
+        s"models.$id.columns: duplicate column names " +
+          dup.toSeq.sorted.mkString(", "))
+      if (contract && contractColumns.isEmpty) throw GenericError(
+        s"models.$id: contract: enforced requires a non-empty " +
+          "`columns:` list (a contract that declares nothing " +
+          "enforces nothing)")
+    }
+    ModelConfig(
+      materialize = m.scalar("materialize"),
+      uniqueKey = m.scalar("unique_key"),
+      tests = m.maps("tests").map(parseTest(id, _)),
+      tags = m.strings("tags"),
+      incrementalStrategy = m.scalar("incremental_strategy"),
+      partitionBy = m.scalar("partition_by"),
+      eventTime = m.scalar("event_time"),
+      batchSize = m.scalar("batch_size"),
+      lookback = m.int("lookback", "an integer batch count"),
+      snapshotStrategy = m.scalar("strategy"),
+      updatedAt = m.scalar("updated_at"),
+      onSchemaChange = m.scalar("on_schema_change"),
+      // both dbt spellings (pre_hook / pre-hook) are read
+      preHooks = m.stringOrList("pre_hook") ++ m.stringOrList("pre-hook"),
+      postHooks = m.stringOrList("post_hook") ++ m.stringOrList("post-hook"),
+      freshness = freshness,
+      invalidateHardDeletes =
+        m.bool("invalidate_hard_deletes").getOrElse(false),
+      enabled = m.bool("enabled").getOrElse(true),
+      unitTests = unitTests,
+      contract = contract,
+      contractColumns = contractColumns)
   }
 
   /** One `tests:` list element. Accepted shapes (dbt's common forms):
@@ -621,6 +634,75 @@ object PipelineConfig {
     * config load — a typo'd test silently testing nothing would defeat
     * the point of declaring it.
     */
+  private def parseTest(modelId: String, t: YamlMap): ModelTest = {
+    val severity = t.scalar("severity").map(_.toLowerCase)
+    severity.foreach { s =>
+      if (s != "warn" && s != "error") throw GenericError(
+        s"models.$modelId.tests: severity must be `warn` or `error`, " +
+          s"got `$s`")
+    }
+    val storeFailures = t.scalar("store_failures").exists {
+      _.toLowerCase match {
+        case "true" => true
+        case "false" => false
+        case other => throw GenericError(
+          s"models.$modelId.tests: store_failures must be true or " +
+            s"false, got `$other`")
+      }
+    }
+    val where = t.scalar("where")
+    val warnIf = t.scalar("warn_if")
+    val errorIf = t.scalar("error_if")
+    // validate condition syntax at LOAD, not first execution
+    warnIf.foreach(ModelTest.parseCondition(modelId, "warn_if", _))
+    errorIf.foreach(ModelTest.parseCondition(modelId, "error_if", _))
+    val rest = t.keys.toSet -- Seq("severity", "store_failures", "where",
+      "warn_if", "error_if")
+    if (rest.size != 1) throw GenericError(
+      s"models.$modelId.tests: each entry must be one test key plus " +
+        s"optional `severity`/`store_failures`/`where`/`warn_if`/" +
+        s"`error_if`, got keys " +
+        s"${t.keys.toSeq.sorted.mkString("[", ", ", "]")}")
+    val k = rest.head
+    def arg: String = t.scalar(k).getOrElse(t.fail(k, "a scalar", null))
+    def args: YamlMap = t.map(k).getOrElse(t.fail(k, "a mapping", null))
+    val parsed = k match {
+      case "not_null" => ModelTest.NotNull(arg)
+      case "unique" => ModelTest.Unique(arg)
+      case "accepted_values" =>
+        val av = args
+        val colName = av.scalar("column").getOrElse(throw GenericError(
+          s"models.$modelId.tests: accepted_values needs a `column`"))
+        if (av.get("values").isEmpty) throw GenericError(
+          s"models.$modelId.tests: accepted_values needs a `values` list")
+        ModelTest.AcceptedValues(colName, av.strings("values"))
+      case "relationships" =>
+        val rm = args
+        def req(name: String): String =
+          rm.scalar(name).getOrElse(throw GenericError(
+            s"models.$modelId.tests: relationships needs `$name` " +
+              "(column, to, field)"))
+        ModelTest.Relationships(req("column"), req("to"), req("field"))
+      case "sql" => val p = arg; ModelTest.CustomSql(p, p)
+      case other => throw GenericError(
+        s"models.$modelId.tests: unknown test `$other` " +
+          "(supported: not_null, unique, accepted_values, " +
+          "relationships, sql)")
+    }
+    if (where.isDefined && parsed.isInstanceOf[ModelTest.CustomSql])
+      throw GenericError(
+        s"models.$modelId.tests: `where` does not apply to a custom " +
+          "SQL test — its query already owns its own WHERE clause")
+    val configured =
+      if (where.isDefined || warnIf.isDefined || errorIf.isDefined)
+        ModelTest.Configured(parsed, where, warnIf, errorIf)
+      else parsed
+    val stored =
+      if (storeFailures) ModelTest.StoreFailures(configured)
+      else configured
+    if (severity.contains("warn")) ModelTest.Warn(stored) else stored
+  }
+
   /** One `unit_tests:` list element (dbt 1.8's shape):
     *   - name: distinct_ids
     *     given:
@@ -635,155 +717,32 @@ object PipelineConfig {
     * `expect.rows` are compared on exactly the columns they declare.
     * Malformed shapes fail NAMED at config load.
     */
-  private def parseUnitTest(modelId: String, raw: Any): UnitTest = {
-    def rows(where: String, v: Any): Seq[Map[String, Any]] = v match {
-      case l: java.util.List[_] => l.asScala.toSeq.map {
-        case rm: java.util.Map[_, _] =>
-          rm.asScala.map { case (k, rv) => String.valueOf(k) -> rv }.toMap
-        case other => throw GenericError(
-          s"models.$modelId.unit_tests: $where rows must be mappings, " +
-            s"got ${String.valueOf(other)}")
-      }
-      case other => throw GenericError(
+  private def parseUnitTest(modelId: String, u: YamlMap): UnitTest = {
+    // an explicit `rows: []` is a legitimate expectation (the logic must
+    // produce NOTHING from these inputs); only a missing `rows:` errors
+    def rows(where: String, m: YamlMap): Seq[Map[String, Any]] = {
+      if (m.get("rows").isEmpty) throw GenericError(
         s"models.$modelId.unit_tests: $where needs a `rows:` list, " +
-          s"got ${if (other == null) "nothing" else other.getClass.getSimpleName}")
+          "got nothing")
+      m.maps("rows").map(_.toMap)
     }
-    raw match {
-      case m: java.util.Map[_, _] =>
-        val fields = m.asScala.map { case (k, v) =>
-          String.valueOf(k) -> v }.toMap
-        val name = fields.get("name").flatMap(Option(_)).map(_.toString)
-          .getOrElse(throw GenericError(
-            s"models.$modelId.unit_tests: each entry needs a `name`"))
-        val given: Seq[(String, Seq[Map[String, Any]])] =
-          fields.get("given").flatMap(Option(_)) match {
-            case Some(l: java.util.List[_]) => l.asScala.toSeq.map {
-              case gm: java.util.Map[_, _] =>
-                val gf = gm.asScala.map { case (k, v) =>
-                  String.valueOf(k) -> v }.toMap
-                val input = gf.get("input").flatMap(Option(_))
-                  .map(_.toString).getOrElse(throw GenericError(
-                    s"models.$modelId.unit_tests.$name: each given " +
-                      "entry needs an `input` model name"))
-                input -> rows(s"given.$input", gf.get("rows").orNull)
-              case other => throw GenericError(
-                s"models.$modelId.unit_tests.$name: given entries must " +
-                  s"be mappings, got ${String.valueOf(other)}")
-            }
-            case Some(other) => throw GenericError(
-              s"models.$modelId.unit_tests.$name: given must be a " +
-                s"list, got ${other.getClass.getSimpleName}")
-            case None => Nil
-          }
-        locally {
-          val dup = given.groupBy(_._1).filter(_._2.size > 1).keys
-          if (dup.nonEmpty) throw GenericError(
-            s"models.$modelId.unit_tests.$name: duplicate given " +
-              s"inputs ${dup.toSeq.sorted.mkString(", ")}")
-        }
-        val expect = fields.get("expect").flatMap(Option(_)) match {
-          case Some(em: java.util.Map[_, _]) =>
-            val ef = em.asScala.map { case (k, v) =>
-              String.valueOf(k) -> v }.toMap
-            rows("expect", ef.get("rows").orNull)
-          case _ => throw GenericError(
-            s"models.$modelId.unit_tests.$name: needs an `expect:` " +
-              "mapping with a `rows:` list")
-        }
-        // an explicit `rows: []` is a legitimate expectation (the
-        // logic must produce NOTHING from these inputs); only a
-        // missing `rows:` key errors (in rows() above)
-        UnitTest(name, given, expect)
-      case other => throw GenericError(
-        s"models.$modelId.unit_tests: each entry must be a mapping, " +
-          s"got ${String.valueOf(other)}")
+    val name = u.scalar("name").getOrElse(throw GenericError(
+      s"models.$modelId.unit_tests: each entry needs a `name`"))
+    val given = u.maps("given").map { g =>
+      val input = g.scalar("input").getOrElse(throw GenericError(
+        s"models.$modelId.unit_tests.$name: each given entry needs an " +
+          "`input` model name"))
+      input -> rows(s"given.$input", g)
     }
-  }
-
-  private def parseTest(modelId: String, raw: Any): ModelTest = raw match {
-    case m0: java.util.Map[_, _] if m0.size >= 1 =>
-      val fields = m0.asScala.map { case (fk, fv) =>
-        String.valueOf(fk) -> fv }.toMap
-      val severity = fields.get("severity").map(s =>
-        String.valueOf(s).toLowerCase)
-      severity.foreach { s =>
-        if (s != "warn" && s != "error") throw GenericError(
-          s"models.$modelId.tests: severity must be `warn` or `error`, " +
-            s"got `$s`")
-      }
-      val storeFailures = fields.get("store_failures").map { s =>
-        String.valueOf(s).toLowerCase match {
-          case "true" => true
-          case "false" => false
-          case other => throw GenericError(
-            s"models.$modelId.tests: store_failures must be true or " +
-              s"false, got `$other`")
-        }
-      }.getOrElse(false)
-      def opt(k: String): Option[String] =
-        fields.get(k).flatMap(Option(_)).map(_.toString)
-      val where = opt("where")
-      val warnIf = opt("warn_if")
-      val errorIf = opt("error_if")
-      // validate condition syntax at LOAD, not first execution
-      warnIf.foreach(ModelTest.parseCondition(modelId, "warn_if", _))
-      errorIf.foreach(ModelTest.parseCondition(modelId, "error_if", _))
-      val rest = fields -- Seq("severity", "store_failures", "where",
-        "warn_if", "error_if")
-      if (rest.size != 1) throw GenericError(
-        s"models.$modelId.tests: each entry must be one test key plus " +
-          s"optional `severity`/`store_failures`/`where`/`warn_if`/" +
-          s"`error_if`, got keys " +
-          s"${fields.keys.toSeq.sorted.mkString("[", ", ", "]")}")
-      val (k, v) = rest.head
-      val parsed = (k, v) match {
-        case ("not_null", c) if c != null =>
-          ModelTest.NotNull(c.toString)
-        case ("unique", c) if c != null =>
-          ModelTest.Unique(c.toString)
-        case ("accepted_values", av: java.util.Map[_, _]) =>
-          val fields = av.asScala.map { case (ak, avv) =>
-            String.valueOf(ak) -> avv }.toMap
-          val colName = fields.get("column").flatMap(Option(_)).map(_.toString)
-            .getOrElse(throw GenericError(
-              s"models.$modelId.tests: accepted_values needs a `column`"))
-          val values = fields.get("values").flatMap(Option(_)) match {
-            case Some(l: java.util.List[_]) =>
-              l.asScala.toSeq.map(String.valueOf(_))
-            case _ => throw GenericError(
-              s"models.$modelId.tests: accepted_values needs a `values` list")
-          }
-          ModelTest.AcceptedValues(colName, values)
-        case ("relationships", rm: java.util.Map[_, _]) =>
-          val fields = rm.asScala.map { case (rk, rv) =>
-            String.valueOf(rk) -> rv }.toMap
-          def req(name: String): String =
-            fields.get(name).flatMap(Option(_)).map(_.toString)
-              .getOrElse(throw GenericError(
-                s"models.$modelId.tests: relationships needs `$name` " +
-                  "(column, to, field)"))
-          ModelTest.Relationships(req("column"), req("to"), req("field"))
-        case ("sql", p) if p != null =>
-          ModelTest.CustomSql(p.toString)
-        case (other, _) => throw GenericError(
-          s"models.$modelId.tests: unknown test `$other` " +
-            "(supported: not_null, unique, accepted_values, " +
-            "relationships, sql)")
-      }
-      if (where.isDefined && parsed.isInstanceOf[ModelTest.CustomSql])
-        throw GenericError(
-          s"models.$modelId.tests: `where` does not apply to a custom " +
-            "SQL test — its query already owns its own WHERE clause")
-      val configured =
-        if (where.isDefined || warnIf.isDefined || errorIf.isDefined)
-          ModelTest.Configured(parsed, where, warnIf, errorIf)
-        else parsed
-      val stored =
-        if (storeFailures) ModelTest.StoreFailures(configured)
-        else configured
-      if (severity.contains("warn")) ModelTest.Warn(stored) else stored
-    case other => throw GenericError(
-      s"models.$modelId.tests: each entry must be a single-key mapping, " +
-        s"got ${String.valueOf(other)}")
+    locally {
+      val dup = given.groupBy(_._1).filter(_._2.size > 1).keys
+      if (dup.nonEmpty) throw GenericError(
+        s"models.$modelId.unit_tests.$name: duplicate given " +
+          s"inputs ${dup.toSeq.sorted.mkString(", ")}")
+    }
+    val expect = u.map("expect").getOrElse(throw GenericError(
+      s"models.$modelId.unit_tests.$name: needs an `expect:` mapping " +
+        "with a `rows:` list"))
+    UnitTest(name, given, rows("expect", expect))
   }
 }

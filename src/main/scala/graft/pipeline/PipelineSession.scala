@@ -1259,77 +1259,93 @@ final class PipelineSession(
     if (!fresh0.columns.contains(evCol)) throw GenericError(
       s"microbatch `${node.id}`: event_time `$evCol` is not a column " +
         s"of the SELECT (${fresh0.columns.mkString(", ")})")
-    val target = spark.table(node.id)
-    if (fresh0.columns.toSet != target.columns.toSet) throw GenericError(
-      s"incremental `${node.id}` (microbatch): the fresh SELECT's " +
-        s"schema (${fresh0.columns.mkString(", ")}) differs from the " +
-        s"table's (${target.columns.mkString(", ")}) — microbatch " +
-        "cannot evolve a schema; rebuild with --full-refresh")
-    def tsLit(v: String, flag: String): String = {
-      // shape-check BEFORE interpolating into SQL: a stray quote (or
-      // anything non-timestamp-shaped) must fail NAMED like every
-      // other misconfig, not as a bare parser exception
-      if (!v.matches("[0-9TtZz+\\-:. ]{4,40}")) throw GenericError(
-        s"$flag: cannot parse '$v' as a timestamp")
-      val r = spark.sql(s"SELECT CAST('$v' AS TIMESTAMP)").collect()(0)
-      if (r.isNullAt(0)) throw GenericError(
-        s"$flag: cannot parse '$v' as a timestamp")
-      s"TIMESTAMP '${r.getTimestamp(0)}'"
-    }
-    val startLit: Option[String] =
-      eventTimeStart.map(tsLit(_, "--event-time-start")).orElse {
-        val r = spark.sql(s"SELECT date_trunc('$unit', max(`$evCol`)) " +
-          s"- INTERVAL ${lookback - 1} $unit FROM `${node.id}`")
-          .collect()(0)
-        if (r.isNullAt(0)) None // empty target: process everything
-        else Some(s"TIMESTAMP '${r.getTimestamp(0)}'")
+    overwritePartitions(node.id, "microbatch", fresh0) { write =>
+      def tsLit(v: String, flag: String): String = {
+        // shape-check BEFORE interpolating into SQL: a stray quote (or
+        // anything non-timestamp-shaped) must fail NAMED like every
+        // other misconfig, not as a bare parser exception
+        if (!v.matches("[0-9TtZz+\\-:. ]{4,40}")) throw GenericError(
+          s"$flag: cannot parse '$v' as a timestamp")
+        val r = spark.sql(s"SELECT CAST('$v' AS TIMESTAMP)").collect()(0)
+        if (r.isNullAt(0)) throw GenericError(
+          s"$flag: cannot parse '$v' as a timestamp")
+        s"TIMESTAMP '${r.getTimestamp(0)}'"
       }
-    val endLit: Option[String] =
-      eventTimeEnd.map(tsLit(_, "--event-time-end"))
-    val windowCond = (startLit.map(s => s"`$evCol` >= $s") ++
-      endLit.map(e => s"`$evCol` < $e")).mkString(" AND ")
-    def windowed(df: org.apache.spark.sql.DataFrame) =
-      if (windowCond.isEmpty) df else df.where(windowCond)
-    val bexpr = s"date_trunc('$unit', `$evCol`)"
-    def batchesOf(df: org.apache.spark.sql.DataFrame): Seq[java.sql.Timestamp] =
-      windowed(df).selectExpr(s"$bexpr AS __b").where("__b IS NOT NULL")
-        .distinct().collect().map(_.getTimestamp(0)).toSeq
-    // both sets BEFORE any write: the swaps below mutate the target
-    val freshBatches = batchesOf(fresh0).sortBy(_.getTime)
-    val staleBatches = (batchesOf(target).toSet -- freshBatches)
-      .toSeq.sortBy(_.getTime)
+      val startLit: Option[String] =
+        eventTimeStart.map(tsLit(_, "--event-time-start")).orElse {
+          val r = spark.sql(s"SELECT date_trunc('$unit', max(`$evCol`)) " +
+            s"- INTERVAL ${lookback - 1} $unit FROM `${node.id}`")
+            .collect()(0)
+          if (r.isNullAt(0)) None // empty target: process everything
+          else Some(s"TIMESTAMP '${r.getTimestamp(0)}'")
+        }
+      val endLit: Option[String] =
+        eventTimeEnd.map(tsLit(_, "--event-time-end"))
+      val windowCond = (startLit.map(s => s"`$evCol` >= $s") ++
+        endLit.map(e => s"`$evCol` < $e")).mkString(" AND ")
+      def windowed(df: org.apache.spark.sql.DataFrame) =
+        if (windowCond.isEmpty) df else df.where(windowCond)
+      val bexpr = s"date_trunc('$unit', `$evCol`)"
+      def batchesOf(df: org.apache.spark.sql.DataFrame): Seq[java.sql.Timestamp] =
+        windowed(df).selectExpr(s"$bexpr AS __b").where("__b IS NOT NULL")
+          .distinct().collect().map(_.getTimestamp(0)).toSeq
+      // both sets BEFORE any write: the swaps below mutate the target
+      val freshBatches = batchesOf(fresh0).sortBy(_.getTime)
+      val staleBatches = (batchesOf(spark.table(node.id)).toSet -- freshBatches)
+        .toSeq.sortBy(_.getTime)
+      freshBatches.foreach { b =>
+        // each window is its own bounded job (dbt's batch independence:
+        // a wide backfill progresses window by window)
+        write(fresh0.where(s"$bexpr = TIMESTAMP '$b'"))
+        println(s"    microbatch ${unit.toLowerCase} $b: swapped")
+      }
+      // disappeared windows: in-window target batches with no fresh rows
+      // drop their (batch-aligned) partitions, converging on the
+      // full-refresh result
+      staleBatches.foreach { b =>
+        val vals = spark.table(node.id)
+          .where(s"$bexpr = TIMESTAMP '$b'")
+          .selectExpr(s"CAST(`$partCol` AS STRING) AS __p")
+          .distinct().collect().map(_.getString(0))
+        vals.foreach { v =>
+          spark.sql(s"ALTER TABLE `${node.id}` DROP IF EXISTS " +
+            s"PARTITION (`$partCol` = '$v')")
+        }
+        println(s"    microbatch ${unit.toLowerCase} $b: dropped " +
+          s"(no fresh rows in window)")
+      }
+    }
+  }
+
+  /** The dynamic-partition overwrite insert_overwrite and microbatch
+    * share. A fresh SELECT whose column set differs from the table's
+    * fails NAMED (partitions are replaced positionally into the
+    * existing layout, so there is no schema-evolution story). `body`
+    * then runs with `partitionOverwriteMode=dynamic` and gets a writer
+    * that aligns a slice to the table's column order (`insertInto` is
+    * position-based, partition columns last) and replaces exactly the
+    * partitions the slice holds; the session's mode is restored after.
+    */
+  private def overwritePartitions(id: String, strategy: String,
+      fresh: org.apache.spark.sql.DataFrame)(
+      body: (org.apache.spark.sql.DataFrame => Unit) => Unit): Unit = {
+    val target = spark.table(id)
+    if (fresh.columns.toSet != target.columns.toSet) throw GenericError(
+      s"incremental `$id` ($strategy): the fresh SELECT's schema " +
+        s"(${fresh.columns.mkString(", ")}) differs from the table's " +
+        s"(${target.columns.mkString(", ")}) — $strategy cannot evolve " +
+        "a schema; rebuild with --full-refresh")
     val key = "spark.sql.sources.partitionOverwriteMode"
     val prev = spark.conf.getOption(key)
     try {
       spark.conf.set(key, "dynamic")
-      freshBatches.foreach { b =>
-        // each window is its own bounded job (dbt's batch independence:
-        // a wide backfill progresses window by window)
-        val bslice = fresh0.where(s"$bexpr = TIMESTAMP '$b'")
-        bslice.select(target.columns.map(c => bslice(c)).toIndexedSeq: _*)
-          .write.mode("overwrite").insertInto(node.id)
-        println(s"    microbatch ${unit.toLowerCase} $b: swapped")
-      }
+      body(slice => slice.select(target.columns.map(c => slice(c))
+        .toIndexedSeq: _*).write.mode("overwrite").insertInto(id))
     } finally {
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None    => spark.conf.unset(key)
       }
-    }
-    // disappeared windows: in-window target batches with no fresh rows
-    // drop their (batch-aligned) partitions, converging on the
-    // full-refresh result
-    staleBatches.foreach { b =>
-      val vals = spark.table(node.id)
-        .where(s"$bexpr = TIMESTAMP '$b'")
-        .selectExpr(s"CAST(`$partCol` AS STRING) AS __p")
-        .distinct().collect().map(_.getString(0))
-      vals.foreach { v =>
-        spark.sql(s"ALTER TABLE `${node.id}` DROP IF EXISTS " +
-          s"PARTITION (`$partCol` = '$v')")
-      }
-      println(s"    microbatch ${unit.toLowerCase} $b: dropped " +
-        s"(no fresh rows in window)")
     }
   }
 
@@ -1722,8 +1738,9 @@ final class PipelineSession(
     * UNIQUE per distinct test on a model, stable across runs:
     * accepted_values folds a short hash of its value list (two lists on
     * one column are two different tests and must not share a store);
-    * custom SQL slugs from the full path, not the basename (tests/a/x.sql
-    * vs tests/b/x.sql). The remaining shapes are fully keyed by their
+    * custom SQL slugs from its config-relative id, not the basename
+    * (tests/a/x.sql vs tests/b/x.sql), so the store survives relocating
+    * the project. The remaining shapes are fully keyed by their
     * column/target — declaring one twice is the same test twice.
     */
   private def testSlug(t: ModelTest): String = (t match {
@@ -1733,20 +1750,7 @@ final class PipelineSession(
       // NUL-joined so ["a b"] and ["a","b"] hash differently
       s"accepted_values_${c}_${md5Hex8(vs.mkString("\u0000"))}"
     case ModelTest.Relationships(c, to, f) => s"relationships_${c}_${to}_$f"
-    // ADVICE r16: slug from the CONFIG-RELATIVE path (still unique
-    // across tests/a/x.sql vs tests/b/x.sql) so the failure-store
-    // directory and `__failures__` view name survive relocating the
-    // project or mounting it elsewhere; a path outside the project
-    // keeps its absolute form (unique either way, and honest about it)
-    case ModelTest.CustomSql(p) =>
-      val rel = config.baseDir.map { b =>
-        val bp = java.nio.file.Paths.get(b)
-        val pp = java.nio.file.Paths.get(p)
-        if (pp.isAbsolute && pp.startsWith(bp))
-          bp.relativize(pp).toString
-        else p
-      }.getOrElse(p)
-      s"sql_${rel.stripSuffix(".sql")}"
+    case ModelTest.CustomSql(_, id) => s"sql_${id.stripSuffix(".sql")}"
     // a configured (where/threshold) variant is a DIFFERENT test from
     // its unscoped sibling — fold the config into the slug
     case c @ ModelTest.Configured(i, _, _, _) =>
@@ -1822,7 +1826,7 @@ final class PipelineSession(
                   s"`$to`: ${e.getMessage}", node.renderedSrc, node.path) }
           df.filter(col(c).isNotNull)
             .join(target.select(col(field).as(c)), Seq(c), "left_anti")
-        case tc @ ModelTest.CustomSql(p) =>
+        case tc @ ModelTest.CustomSql(p, _) =>
           val sql = tc.content.getOrElse(throw StatementExecutionError(
             s"test ${t.describe}: cannot read test file $p",
             node.renderedSrc, node.path))
@@ -1959,34 +1963,8 @@ final class PipelineSession(
             require(spark.table(node.id).columns.contains(partCol),
               s"partition_by `$partCol` is not a column of `${node.id}`")
             val fresh = spark.sql(select)
-            val target = spark.table(node.id)
-            // schema drift has no insert_overwrite story (partitions
-            // are replaced positionally into the existing layout):
-            // fail NAMED rather than let the positional align below
-            // throw an unattributed analysis error
-            if (fresh.columns.toSet != target.columns.toSet)
-              throw GenericError(
-                s"incremental `${node.id}` (insert_overwrite): the " +
-                  s"fresh SELECT's schema (${fresh.columns.mkString(", ")})" +
-                  s" differs from the table's " +
-                  s"(${target.columns.mkString(", ")}) — " +
-                  "insert_overwrite cannot evolve a schema; rebuild " +
-                  "with --full-refresh")
-            val key = "spark.sql.sources.partitionOverwriteMode"
-            val prev = spark.conf.getOption(key)
-            try {
-              spark.conf.set(key, "dynamic")
-              // insertInto is POSITION-based: align the fresh slice to
-              // the table's column order (partition columns last)
-              fresh.select(target.columns
-                  .map(c => fresh(c)).toIndexedSeq: _*)
-                .write.mode("overwrite").insertInto(node.id)
-            } finally {
-              prev match {
-                case Some(v) => spark.conf.set(key, v)
-                case None    => spark.conf.unset(key)
-              }
-            }
+            overwritePartitions(node.id, "insert_overwrite", fresh)(
+              write => write(fresh))
           case Some("microbatch") =>
             microbatchRun(node, select)
           case None | Some("merge") | Some("delete+insert") =>

@@ -93,6 +93,70 @@ class PipelineConfigSpec extends AnyFunSuite {
       .models("s1").invalidateHardDeletes)
   }
 
+  test("a value of the wrong shape fails named with its key path") {
+    def model(kv: String) = s"models:\n  m1:\n    $kv\n"
+    Seq(
+      "models: [m1, m2]\n" -> "models: expected a mapping, got a list",
+      "duckdb_settings: [threads]\n" ->
+        "duckdb_settings: expected a mapping, got a list",
+      "vars: [min_qty]\n" -> "vars: expected a mapping, got a list",
+      "models:\n  m1: table\n" -> "models.m1: expected a mapping, got `table`",
+      model("tags: nightly") -> "models.m1.tags: expected a list, got `nightly`",
+      model("tests: not_null") ->
+        "models.m1.tests: expected a list, got `not_null`",
+      model("freshness: 3600") ->
+        "models.m1.freshness: expected a mapping, got `3600`",
+      model("unique_key: [a, b]") ->
+        "models.m1.unique_key: expected a scalar, got a list",
+      model("pre_hook: {k: v}") ->
+        "models.m1.pre_hook: expected a string or a list, got a mapping"
+    ).foreach { case (yaml, msg) =>
+      val e = intercept[GenericError](PipelineConfig.fromYaml(yaml))
+      assert(e.getMessage == msg, yaml)
+    }
+    // a blank value still means absent, at the top level and per model
+    val c = PipelineConfig.fromYaml("models:\n  m1:\nvars:\n")
+    assert(c.models("m1") == ModelConfig() && c.vars.isEmpty)
+  }
+
+  test("an unknown key under models.<id> fails named, listing the known " +
+      "keys") {
+    // dbt's spelling `materialized` would otherwise run the model as a view
+    val e = intercept[GenericError](PipelineConfig.fromYaml(
+      "models:\n  m1:\n    materialized: table\n"))
+    assert(e.getMessage.startsWith(
+      "models.m1: unknown key `materialized` (known: batch_size, "),
+      e.getMessage)
+    assert(e.getMessage.contains(" materialize, "), e.getMessage)
+  }
+
+  test("a project built from two directories has one closure " +
+      "fingerprint and one catalog test id per model") {
+    def project(): (Map[String, String], String) = {
+      val dir = Files.createTempDirectory("graft-reloc")
+      Files.createDirectories(dir.resolve("models"))
+      Files.createDirectories(dir.resolve("tests"))
+      Files.writeString(dir.resolve("models/rl_m.sql"), "SELECT 1 AS id")
+      Files.writeString(dir.resolve("tests/no_neg.sql"),
+        "SELECT * FROM {{ this }} WHERE id < 0")
+      Files.writeString(dir.resolve("config.yaml"),
+        "models_dir: models\nmodels:\n  rl_m:\n    tests:\n" +
+          "      - sql: tests/no_neg.sql\n")
+      val session = new PipelineSession(
+        throw new IllegalStateException("fingerprints must stay Spark-free"),
+        PipelineConfig.load(dir.resolve("config.yaml")))
+      val (order, nodeMap) = session.buildGraph()
+      val catalog = DocsGen.catalogJson(order, nodeMap, Map.empty, Nil)
+      (session.closureFingerprints(order, nodeMap),
+        "\"tests\":\\[[^\\]]*\\]".r.findFirstIn(catalog).get)
+    }
+    val (fpA, testsA) = project()
+    val (fpB, testsB) = project()
+    assert(testsA.startsWith("\"tests\":[\"sql(tests/no_neg.sql#"), testsA)
+    assert(testsA == testsB)
+    assert(fpA == fpB)
+  }
+
   test("empty yaml yields defaults") {
     assert(PipelineConfig.fromYaml("") == PipelineConfig())
   }

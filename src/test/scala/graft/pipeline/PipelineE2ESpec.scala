@@ -3055,4 +3055,49 @@ class PipelineE2ESpec extends AnyFunSuite {
       assert(r.errors.nonEmpty == (want == "hard"), s"$t: ${r.results}")
     }
   }
+
+  test("insert_overwrite and microbatch both refuse a changed column " +
+      "set NAMED, leaving the table as it was") {
+    val db = Files.createTempDirectory("graft-drift-db")
+    val dir = Files.createTempDirectory("graft-drift")
+    val modelsDir = dir.resolve("models"); Files.createDirectories(modelsDir)
+    Files.writeString(dir.resolve("config.yaml"),
+      s"""models_dir: $modelsDir
+         |db_path: $db
+         |models:
+         |  drift_iow:
+         |    materialize: incremental
+         |    incremental_strategy: insert_overwrite
+         |    partition_by: day
+         |  drift_mb:
+         |    materialize: incremental
+         |    incremental_strategy: microbatch
+         |    event_time: ts
+         |    partition_by: d""".stripMargin)
+    def writeModels(extra: String): Unit = {
+      Files.writeString(modelsDir.resolve("drift_iow.sql"),
+        s"SELECT 'd1' AS day, 1 AS n$extra")
+      Files.writeString(modelsDir.resolve("drift_mb.sql"),
+        "SELECT 1 AS id, TIMESTAMP '2026-01-01 08:00:00' AS ts, " +
+          s"DATE '2026-01-01' AS d$extra"); ()
+    }
+    def run() = new PipelineSession(spark,
+      PipelineConfig.load(dir.resolve("config.yaml"))).runNodes()
+    writeModels("")
+    val boot = run() // bootstrap: both tables built from scratch
+    assert(boot.errors.isEmpty, boot.errors.map(_.render))
+    writeModels(", 2 AS extra")
+    val drifted = run().errors.map(_.render)
+    Seq(
+      "incremental `drift_iow` (insert_overwrite): the fresh SELECT's " +
+        "schema (day, n, extra) differs from the table's (n, day) — " +
+        "insert_overwrite cannot evolve a schema; rebuild with " +
+        "--full-refresh",
+      "incremental `drift_mb` (microbatch): the fresh SELECT's schema " +
+        "(id, ts, d, extra) differs from the table's (id, ts, d) — " +
+        "microbatch cannot evolve a schema; rebuild with --full-refresh"
+    ).foreach(msg => assert(drifted.exists(_.contains(msg)), drifted))
+    assert(spark.table("drift_iow").columns.toSeq == Seq("n", "day"))
+    assert(spark.table("drift_mb").columns.toSeq == Seq("id", "ts", "d"))
+  }
 }
